@@ -68,16 +68,14 @@ object Bench {
     val samples = (1 to Passes).flatMap { _ =>
       passStarts += System.currentTimeMillis() / 1000L
       passLoads += GraftSession.loadAvg1m()
-      // Session-lifetime memos (the shared near-dup pair frame, ANN
-      // index layouts) are cleared at the START of every pass: otherwise
-      // only the first sample of the first consumer pays the pipeline,
-      // and the median silently reports checkpoint-read time as the
-      // query's cost. With a per-pass clear, the first consumer in EVERY
+      // Session memos (the shared near-dup pair frame, ANN index
+      // layouts, corpus counts) are cleared at the START of every pass:
+      // otherwise only the first sample of the first consumer pays the
+      // pipeline, and the median silently reports checkpoint-read time as
+      // the query's cost. With a per-pass clear, the first consumer in EVERY
       // pass computes the real pipeline (its median is honest) while the
       // later consumers still measure the intended shared-frame shape.
-      graft.operators.Dedup.invalidateSharedPairs(spark)
-      graft.operators.Similarity.invalidateIndexes(spark)
-      graft.operators.Corpus.invalidateSharedCounts(spark)
+      graft.operators.Scratch.invalidate(spark)
       names.map { name =>
         val fn = SparkEntry.queries(name)
         val t0 = System.nanoTime()
@@ -130,9 +128,13 @@ object Bench {
       val xs = samples.collect { case (`name`, t) => t }
       s"\"" + name + "\":" + xs.mkString("[", ",", "]")
     }.mkString("{", ",", "}")
+    // JVM-wide memo hits/misses per kind (warmup included)
+    val memoJson = graft.operators.Scratch.memoCounts.toSeq.sorted
+      .map { case (k, (h, m)) => s""""$k":{"hits":$h,"misses":$m}""" }
+      .mkString("{", ",", "}")
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
-      s"""{"result":$line,"passes":$Passes,"samples":$perPass}""" + "\n")
+      s"""{"result":$line,"passes":$Passes,"samples":$perPass,"memo":$memoJson}""" + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $out: ${e.getMessage}")
     }
@@ -142,29 +144,18 @@ object Bench {
     // and 2-decimal seconds) overflows it — five rounds of BENCH_r*.json
     // carried "parsed: null" because the line was truncated from the
     // front. So the LAST thing printed (after spark.stop, so no shutdown
-    // logging can displace it) is a TOTALS-ONLY line (~300 chars — fits
-    // the tail whole with room to spare) plus the 5 slowest entries for
-    // at-a-glance diagnosis. The complete per-query medians and raw
-    // samples live in bench_full.json, and the full line printed above
-    // remains in the process log.
+    // logging can displace it) is a compact line: the totals plus the
+    // slowest 25 medians with full names at 2 decimals, marked
+    // "partial":"slowest25" (failed queries, -1, are excluded like
+    // everywhere else). Even the 25 longest registered names keep the
+    // line near 1.2k chars, so the tail always holds it whole. The
+    // complete per-query medians and raw samples live in bench_full.json,
+    // and the full line printed above remains in the process log.
     def r2(v: Double): String =
       if (v < 0) "-1" else BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP).toString
-    // Per-query visibility for the driver (additive, round 18): the full
-    // per-query line above never survives the ~2000-char tail, so the
-    // driver's PERF per-query/scaling blocks have been empty for rounds.
-    // This SECOND compact line carries the slowest 25 medians with full
-    // names at 2 decimals (~800 chars — it and the final totals line fit
-    // the tail together), mirroring the full line's schema so the same
-    // parser reads it; "partial" marks it as a slowest-25 subset, and
-    // failed queries (-1) are excluded like everywhere else. The final
-    // totals-only line below stays LAST and unchanged.
     val slow25 = results.filter(_._2 >= 0).sortBy(-_._2).take(25)
       .map { case (k, v) => "\"" + k + "\":" + r2(v) }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${r2(total)},"value_min":${r2(totalMin)},"builds_total":${r2(buildsTotal)},"unit":"sec","queries":$slow25,"partial":"slowest25","sf":"$sfDir"}""")
-    val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(5)
-      .map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + r2(v) }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${r2(total)},"value_min":${r2(totalMin)},"builds_total":${r2(buildsTotal)},"unit":"sec","sf":"$sfDir","n":${results.size},"n_err":${results.count(_._2 < 0)},"load_1m":$loadJson,"slowest":$slowest,"queries_in":"bench_full.json"}""")
+    println(s"""{"metric":"total","value":${r2(total)},"value_min":${r2(totalMin)},"builds_total":${r2(buildsTotal)},"unit":"sec","sf":"$sfDir","n":${results.size},"n_err":${results.count(_._2 < 0)},"load_1m":$loadJson,"queries":$slow25,"partial":"slowest25","queries_in":"bench_full.json"}""")
   }
 }

@@ -53,9 +53,7 @@ object Soak {
     val loads = scala.collection.mutable.ArrayBuffer.empty[Double]
     val samples = (1 to passes).flatMap { _ =>
       loads += GraftSession.loadAvg1m()
-      graft.operators.Dedup.invalidateSharedPairs(spark)
-      graft.operators.Similarity.invalidateIndexes(spark)
-      graft.operators.Corpus.invalidateSharedCounts(spark)
+      graft.operators.Scratch.invalidate(spark)
       names.map { name =>
         val t0 = System.nanoTime()
         val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }

@@ -49,10 +49,11 @@ object Corpus {
     * tokenize+explode+count shuffle is paid once per session instead of
     * once per consumer (8 corpus scans → 1 at any corpus size — at the
     * 100 TB point that is the difference between reading the text eight
-    * times and once). Keyed by (session, kind, datasetKey); an entry
-    * lives until [[invalidateSharedCounts]] — a caller rewriting the
-    * dataset mid-session must invalidate, the pair-memo contract.
-    * Without a key the frame is built per call, exactly as before.
+    * times and once). A [[Scratch.memo]] keyed by (session, kind,
+    * datasetKey); an entry lives until [[Scratch.invalidate]] — a caller
+    * rewriting the dataset mid-session must invalidate, the pair-memo
+    * contract. Without a key the frame is built per call, exactly as
+    * before.
     *
     * The key is TRUSTED and the docs frame is otherwise ignored on a
     * hit, so `datasetKey` must uniquely identify the EXACT docs frame —
@@ -68,10 +69,6 @@ object Corpus {
     * semantically match the memoized entry's fails fast instead of
     * silently returning another frame's counts.
     */
-  private val countsMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, String),
-      (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame)]
-
   private def sharedCounts(docs: DataFrame, kind: String,
       datasetKey: Option[String])(build: DataFrame => DataFrame): DataFrame =
     datasetKey match {
@@ -82,16 +79,15 @@ object Corpus {
         // retained plan is an analyzed tree (columns + source paths),
         // driver-heap noise next to the memoized frame's blocks.
         val docsPlan = docs.queryExecution.analyzed
-        val (memoPlan, frame) = countsMemo.getOrElseUpdate(
-          (docs.sparkSession, kind, k),
-          (docsPlan,
-            build(Par.ensure(docs)).transform(Scratch.stageShared)))
+        val (memoPlan, frame) = Scratch.memo(docs.sparkSession,
+          "corpusCounts", (kind, k))(
+          (docsPlan, build(Par.ensure(docs)).transform(Scratch.stageShared)))
         require(memoPlan.sameResult(docsPlan),
           s"shared counts memo for datasetKey='$k' (kind=$kind) was built " +
             "from a semantically different docs frame — a datasetKey must " +
             "uniquely identify the exact docs frame; pass None (or a " +
             "distinct key) for filtered/derived frames, or " +
-            "invalidateSharedCounts first if the dataset was rewritten")
+            "Scratch.invalidate first if the dataset was rewritten")
         frame
       case None =>
         Scratch.register(build(Par.ensure(docs)).transform(Scratch.stage))
@@ -109,19 +105,12 @@ object Corpus {
       datasetKey: Option[String] = None): DataFrame =
     sharedCounts(docs, "bg", datasetKey)(bigramCounts)
 
-  /** Drop every memoized counts frame of `spark`, unpersisting the
-    * checkpoint blocks each holds — the [[Dedup.invalidateSharedPairs]]
-    * contract; benchmarks call it per pass so every pass pays the real
-    * build cost. */
+  /** Forwards to [[Scratch.invalidate]], which drops EVERY memo kind of
+    * `spark`, not only the counts frames — that can only force a
+    * rebuild, never change a result. */
   def invalidateSharedCounts(
       spark: org.apache.spark.sql.SparkSession): Unit =
-    countsMemo.keys.filter(_._1 eq spark).foreach { k =>
-      countsMemo.remove(k).foreach { case (_, df) =>
-        df.queryExecution.logical.collect {
-          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-        }.foreach(_.unpersist(blocking = false))
-      }
-    }
+    Scratch.invalidate(spark)
 
   /** Gopher-style per-document repetition metrics and a keep flag:
     *   - dup_ratio: 1 - distinct/total tokens (repeated-token mass);

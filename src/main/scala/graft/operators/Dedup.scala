@@ -104,43 +104,24 @@ object Dedup {
     * with localCheckpoint (MEMORY_AND_DISK) and every later consumer
     * reads the checkpointed blocks instead of recomputing lineage.
     *
-    * Keyed by (session, dataset path): a new session or dataset computes
-    * fresh; the map never grows unboundedly — one entry per dataset the
-    * session touches. The key is the CALLER-SUPPLIED path and is trusted:
-    * an entry lives until [[invalidateSharedPairs]] — if the data under
-    * `datasetKey` is rewritten mid-session, the caller must invalidate or
-    * every consumer reads stale pairs. Only the DEFAULT-parameter pipeline
-    * is memoized; callers with custom banding use [[minhashPairs]].
+    * A [[Scratch.memo]] keyed by (session, dataset path): a new session
+    * or dataset computes fresh. The key is the CALLER-SUPPLIED path and
+    * is trusted: an entry lives until [[Scratch.invalidate]] — if the
+    * data under `datasetKey` is rewritten mid-session, the caller must
+    * invalidate or every consumer reads stale pairs. Only the
+    * DEFAULT-parameter pipeline is memoized; callers with custom banding
+    * use [[minhashPairs]].
     */
-  private val pairsMemo =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
-
   def minhashPairsShared(docs: DataFrame, datasetKey: String): DataFrame =
-    pairsMemo.getOrElseUpdate((docs.sparkSession, datasetKey),
+    Scratch.memo(docs.sparkSession, "minhashPairs", datasetKey)(
       minhashPairs(docs).transform(Scratch.stageShared))
 
-  /** Drop every memoized pair frame of `spark`, explicitly unpersisting
-    * the localCheckpoint blocks each one holds (ContextCleaner would
-    * eventually reclaim them by GC, but a caller rewriting a dataset —
-    * or a benchmark wanting each pass to pay the real pipeline cost —
-    * needs the release deterministic). Next [[minhashPairsShared]] call
-    * recomputes from the data.
+  /** Forwards to [[Scratch.invalidate]], which drops EVERY memo kind of
+    * `spark`, not only the pair frames — that can only force a rebuild,
+    * never change a result.
     */
-  def invalidateSharedPairs(spark: org.apache.spark.sql.SparkSession): Unit = {
-    def release(df: DataFrame): Unit =
-      df.queryExecution.logical.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }.foreach(_.unpersist(blocking = false))
-    pairsMemo.keys.filter(_._1 eq spark).foreach { k =>
-      pairsMemo.remove(k).foreach(release)
-    }
-    joinIndexMemo.keys.filter(_._1 eq spark).foreach { k =>
-      joinIndexMemo.remove(k).foreach(idx => release(idx.sh))
-    }
-    interMemo.keys.filter(_._1 eq spark).foreach { k =>
-      interMemo.remove(k).foreach(release)
-    }
-  }
+  def invalidateSharedPairs(spark: org.apache.spark.sql.SparkSession): Unit =
+    Scratch.invalidate(spark)
 
   /** Distinct (idA < idB) pairs of ids sharing a bucket: ONE aggregation
     * per bucket with in-bucket pair expansion via higher-order functions.
@@ -272,16 +253,13 @@ object Dedup {
     * of all four — is paid once per session instead of once per
     * consumer. The checkpointed frame is one row per CANDIDATE pair
     * (intersection ≥ 1 post-cap), bounded by the same maxDf cap that
-    * bounds the join itself; [[invalidateSharedPairs]] releases it.
+    * bounds the join itself; [[Scratch.invalidate]] releases it.
     */
-  private val interMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Int, Int), DataFrame]
-
   private def pairIntersections(docs: DataFrame, shingleN: Int,
       maxDf: Int, datasetKey: Option[String] = None): DataFrame =
     datasetKey match {
-      case Some(k) => interMemo.getOrElseUpdate(
-        (docs.sparkSession, k, shingleN, maxDf),
+      case Some(k) => Scratch.memo(docs.sparkSession, "pairIntersections",
+          (k, shingleN, maxDf))(
         computePairIntersections(docs, shingleN, maxDf)
           .transform(Scratch.stageShared))
       case None => computePairIntersections(docs, shingleN, maxDf)
@@ -435,7 +413,7 @@ object Dedup {
   /** Shingle + band-hash one side of the bipartite join. `scratch` frames
     * are per-query intermediates (drained at the query boundary);
     * session-lifetime indexes pass scratch=false and own their release
-    * via [[invalidateSharedPairs]].
+    * via [[Scratch.invalidate]].
     */
   private def keyedSide(df: DataFrame, idAs: String, shAs: String,
       shingleN: Int, numPerms: Int, bands: Int,
@@ -456,30 +434,19 @@ object Dedup {
     MinhashJoinIndex(withSh, ex, shingleN, numPerms, bands)
   }
 
-  // Corpus-side join indexes are session-lifetime, one per (session,
-  // dataset): build once — the full corpus scan + shingle + 64 minhash
-  // passes, the expensive amortized step — probe many. This is what an
-  // ONLINE admission gate (q123) needs: a per-trigger rebuild of the
-  // static side is a full-corpus scan per micro-batch, precisely the
-  // cost an unbounded stream cannot pay. Same memo discipline as
-  // [[pairsMemo]]; [[invalidateSharedPairs]] releases the blocks.
-  private val joinIndexMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), MinhashJoinIndex]
-  private val joinIndexBuilds = new java.util.concurrent.atomic.AtomicLong
-  /** How many corpus-side join indexes were ever BUILT (memo misses) —
-    * lets tests pin that probing N triggers builds the static side once.
-    */
-  private[graft] def joinIndexBuildCount: Long = joinIndexBuilds.get
-
   /** Build (once per session+dataset) the corpus side of
     * [[minhashJoin]] for repeated probing — default banding only, like
     * [[minhashPairsShared]]; custom families go through [[minhashJoin]].
+    * Build once — the full corpus scan + shingle + 64 minhash passes, the
+    * expensive amortized step — probe many. This is what an ONLINE
+    * admission gate (q123) needs: a per-trigger rebuild of the static
+    * side is a full-corpus scan per micro-batch, precisely the cost an
+    * unbounded stream cannot pay. [[Scratch.invalidate]] releases the
+    * blocks.
     */
   def minhashJoinIndexShared(right: DataFrame, datasetKey: String): MinhashJoinIndex =
-    joinIndexMemo.getOrElseUpdate((right.sparkSession, datasetKey), {
-      joinIndexBuilds.incrementAndGet()
-      keyedSide(right, "match_id", "sh_b", 3, 64, 16, scratch = false)
-    })
+    Scratch.memo(right.sparkSession, "minhashJoinIndex", datasetKey)(
+      keyedSide(right, "match_id", "sh_b", 3, 64, 16, scratch = false))
 
   /** Probe a pre-built corpus index with `left`: the per-trigger cost of
     * the streaming gate — the probe batch's own shingles plus the

@@ -56,7 +56,7 @@ object Graph {
     // Materialize the final ranks (localCheckpoint is eager), then release
     // the per-call caches — repeated invocations in one session must not
     // accumulate orphaned cached RDDs (same deterministic-release
-    // discipline as [[Dedup.invalidateSharedPairs]]).
+    // discipline as [[Scratch.invalidate]]).
     val out = ranks.transform(Scratch.stage)
     e.unpersist()
     nodes.unpersist()

@@ -2,23 +2,27 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session-scoped registry of SCRATCH checkpoint frames — big
-  * intermediates an operator materializes with localCheckpoint for reuse
-  * WITHIN one query (exploded token-counts frames, shingle frames,
-  * label-propagation rounds) but that nothing needs once the query's
-  * result is consumed. Without an explicit release those MEMORY_AND_DISK
-  * blocks stay pinned until the driver happens to GC the plan references
-  * (ContextCleaner), which on a long-lived session means every later
-  * query runs against a storage pool full of dead blocks — exactly the
-  * eviction pressure a 100 TB deployment cannot afford.
+/** The one owner of session-scoped state, in two scopes.
   *
-  * Contract: operators register each scratch frame as they checkpoint
-  * it; the HARNESS (Verify / Bench / a production pipeline driver) calls
-  * [[releaseAll]] at each query boundary, after the result is
-  * materialized to its sink. Session-LIFETIME frames — the shared
-  * near-dup pair memos, the ANN index layouts — are deliberately NOT
-  * scratch: they have their own invalidation entry points
-  * ([[Dedup.invalidateSharedPairs]], [[Similarity.invalidateIndexes]]).
+  * QUERY scope — SCRATCH checkpoint frames: big intermediates an
+  * operator materializes with localCheckpoint for reuse WITHIN one query
+  * (exploded token-counts frames, shingle frames, label-propagation
+  * rounds) but that nothing needs once the query's result is consumed.
+  * Without an explicit release those MEMORY_AND_DISK blocks stay pinned
+  * until the driver happens to GC the plan references (ContextCleaner),
+  * which on a long-lived session means every later query runs against a
+  * storage pool full of dead blocks — exactly the eviction pressure a
+  * 100 TB deployment cannot afford. Operators [[register]] each scratch
+  * frame as they checkpoint it; the HARNESS (Verify / Bench / a
+  * production pipeline driver) calls [[releaseAll]] at each query
+  * boundary, after the result is materialized to its sink.
+  *
+  * SESSION scope — [[memo]]ized values (the shared near-dup pair and
+  * postings frames, the corpus counts frames, the ANN index layouts)
+  * and the checkpoint blocks their builds [[stageShared]]. They survive
+  * [[releaseAll]] and live until [[invalidate]] — after a dataset
+  * rewrite, or per bench pass so timings include the build — or until
+  * the session is stopped.
   *
   * LOCAL vs RELIABLE checkpoints — the decision, made once here, in
   * [[stage]], the ONLY checkpoint call site in the engine (lint-gated by
@@ -44,6 +48,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * is on (recommended alongside the flag) or at context stop.
   */
 object Scratch {
+  import scala.collection.concurrent.TrieMap
+
+  private val QueryScope = "query"
+  private val SessionScope = "session"
+
   // The registry records RDD IDs, never object references: a strong
   // DataFrame registry would pin every scratch frame for the session's
   // lifetime if a library caller (outside Verify/Bench) never drains it
@@ -52,9 +61,20 @@ object Scratch {
   // drain, making the release nondeterministic. An Int survives until
   // drained, holds nothing alive, and resolves through the context's
   // persistent-RDD map at release time; an id the ContextCleaner
-  // already reclaimed simply resolves to nothing.
-  private val reg = scala.collection.concurrent.TrieMap
-    .empty[SparkSession, scala.collection.mutable.ArrayBuffer[Int]]
+  // already reclaimed simply resolves to nothing. Keyed by (session,
+  // scope).
+  private val reg = TrieMap
+    .empty[(SparkSession, String), scala.collection.mutable.ArrayBuffer[Int]]
+
+  // Session-scope memo values, keyed by (session, kind, key). The kind
+  // is part of the key so two operators' keys cannot collide. A
+  // TrieMap's getOrElseUpdate runs the build outside any lock, so builds
+  // may nest (ConcurrentHashMap.computeIfAbsent throws on that).
+  private val memos = TrieMap.empty[(SparkSession, String, Any), Any]
+
+  // JVM-wide [hits, misses] per memo kind.
+  private val counts =
+    TrieMap.empty[String, java.util.concurrent.atomic.AtomicLongArray]
 
   /** Truncate `df`'s lineage with an EAGER checkpoint — the engine's
     * single checkpoint chokepoint. `spark.graft.reliableCheckpoint=false`
@@ -84,20 +104,20 @@ object Scratch {
     */
   def staged(df: DataFrame): DataFrame = register(stage(df))
 
-  /** [[stage]] for SESSION-MEMOIZED multi-consumer frames (the shared
-    * pair/postings/counts memos). Identical to [[stage]] in the default
-    * localCheckpoint mode (the blocks are already MEMORY_AND_DISK). In
-    * the reliable mode, `checkpoint()` leaves the frame backed by FILES
-    * only — every consumer of the memo then re-reads the whole frame
-    * from the checkpoint dir (measured: q139 1.36 s → 4.08 s, q191
-    * 1.28 s → 4.05 s at the 10× fixture, SCALE_r14.json `x10.reliable`),
-    * which defeats the point of memoizing. This variant additionally
-    * persists the checkpointed RDD MEMORY_AND_DISK so consumers read
-    * blocks while the durable files still back recovery: a lost block
-    * recomputes by re-reading its checkpoint file, never by re-running
-    * corpus lineage. The memo invalidation entry points unpersist these
-    * RDDs exactly as in the default mode, and the ContextCleaner
-    * reclaims the files when the RDDs are GC'd
+  /** [[stage]] for [[memo]]ized multi-consumer frames (the shared
+    * pair/postings/counts memos), recorded in the SESSION scope so
+    * [[invalidate]] releases the blocks. Identical to [[stage]] in the
+    * default localCheckpoint mode (the blocks are already
+    * MEMORY_AND_DISK). In the reliable mode, `checkpoint()` leaves the
+    * frame backed by FILES only — every consumer of the memo then
+    * re-reads the whole frame from the checkpoint dir (measured: q139
+    * 1.36 s → 4.08 s, q191 1.28 s → 4.05 s at the 10× fixture,
+    * SCALE_r14.json `x10.reliable`), which defeats the point of
+    * memoizing. This variant additionally persists the checkpointed RDD
+    * MEMORY_AND_DISK so consumers read blocks while the durable files
+    * still back recovery: a lost block recomputes by re-reading its
+    * checkpoint file, never by re-running corpus lineage. The
+    * ContextCleaner reclaims the files when the RDDs are GC'd
     * (`spark.cleaner.referenceTracking.cleanCheckpoints`).
     */
   def stageShared(df: DataFrame): DataFrame = {
@@ -107,53 +127,96 @@ object Scratch {
     if (reliable) ck.queryExecution.logical.collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }.foreach(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    ck
+    record(ck, SessionScope)
   }
 
   /** Register an already-[[stage]]d intermediate for release at
     * the next query boundary. Returns the frame, so call sites stay
     * one-liners: `Scratch.register(Scratch.stage(df))`.
     */
-  def register(df: DataFrame): DataFrame = {
+  def register(df: DataFrame): DataFrame = record(df, QueryScope)
+
+  private def record(df: DataFrame, scope: String): DataFrame = {
     pruneStopped(_.sparkContext.isStopped)
     val ids = df.queryExecution.logical.collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
     }
-    val buf = reg.getOrElseUpdate(df.sparkSession,
+    val buf = reg.getOrElseUpdate((df.sparkSession, scope),
       scala.collection.mutable.ArrayBuffer.empty[Int])
     buf.synchronized { buf ++= ids }
     df
   }
 
-  /** Drop registry entries whose session is dead — without this, the
-    * map keys strongly retain every stopped SparkSession (and its id
-    * buffer) for the driver's lifetime, so a long-lived driver cycling
-    * sessions leaks them through the hygiene mechanism itself. A stopped
-    * context has already torn down its block manager, so there is
-    * nothing left to unpersist — dropping the entry is the release.
-    * Runs at both entry points ([[register]]/[[releaseAll]]); the
-    * predicate is injectable so tests can exercise the prune without
-    * stopping the JVM-wide shared context. Returns how many sessions
-    * were pruned.
+  /** The value memoized for `spark` under (`kind`, `key`), building it on
+    * the first call. `key` carries every field that makes two builds
+    * differ (dataset key, index parameters); the caller-supplied dataset
+    * key is trusted, so a caller that rewrites the data under it must
+    * [[invalidate]]. Builds may nest (a build may memo another kind or
+    * key). Hits and misses are counted per kind ([[memoCounts]]).
+    */
+  def memo[V](spark: SparkSession, kind: String, key: Any)(build: => V): V = {
+    pruneStopped(_.sparkContext.isStopped)
+    var missed = false
+    val v = memos.getOrElseUpdate((spark, kind, key), { missed = true; build })
+    counts.getOrElseUpdate(kind, new java.util.concurrent.atomic.AtomicLongArray(2))
+      .incrementAndGet(if (missed) 1 else 0)
+    v.asInstanceOf[V]
+  }
+
+  /** JVM-wide (hits, misses) of [[memo]] per kind since the driver
+    * started.
+    */
+  def memoCounts: Map[String, (Long, Long)] =
+    counts.map { case (k, c) => k -> (c.get(0), c.get(1)) }.toMap
+
+  /** Drop registry entries and memos whose session is dead — without
+    * this, the map keys strongly retain every stopped SparkSession (and
+    * its ids and memoized frames) for the driver's lifetime, so a
+    * long-lived driver cycling sessions leaks them through the hygiene
+    * mechanism itself. A stopped context has already torn down its block
+    * manager, so there is nothing left to unpersist — dropping the entry
+    * is the release. Runs at every entry point; the predicate is
+    * injectable so tests can exercise the prune without stopping the
+    * JVM-wide shared context. Returns how many sessions were pruned.
     */
   private[operators] def pruneStopped(
-      isStopped: SparkSession => Boolean): Int =
-    reg.keys.count(s => isStopped(s) && reg.remove(s).isDefined)
+      isStopped: SparkSession => Boolean): Int = {
+    val dead = (reg.keys.map(_._1) ++ memos.keys.map(_._1)).toSet.filter(isStopped)
+    reg.keys.filter(k => dead(k._1)).foreach(reg.remove)
+    memos.keys.filter(k => dead(k._1)).foreach(memos.remove)
+    dead.size
+  }
 
-  /** Unpersist every registered scratch frame of `spark` that is still
+  /** Unpersist every id `spark` recorded in `scope` that is still
     * persisted (non-blocking — the block manager drops the blocks
     * asynchronously, but they leave the storage pool's accounting
     * immediately); ids the ContextCleaner already reclaimed are skipped.
-    * Returns how many registered ids were drained, so harnesses and
-    * tests can assert operators actually registered their scratch.
+    * Returns how many recorded ids were drained.
     */
-  def releaseAll(spark: SparkSession): Int = {
+  private def drain(spark: SparkSession, scope: String): Int = {
     pruneStopped(_.sparkContext.isStopped)
-    reg.remove(spark).map { buf =>
+    reg.remove((spark, scope)).map { buf =>
       val ids = buf.synchronized { buf.toList }
       val persistent = spark.sparkContext.getPersistentRDDs
       ids.foreach(id => persistent.get(id).foreach(_.unpersist(blocking = false)))
       ids.size
     }.getOrElse(0)
+  }
+
+  /** Release every registered scratch frame of `spark` — the query
+    * boundary. Returns how many registered ids were drained, so harnesses
+    * and tests can assert operators actually registered their scratch.
+    */
+  def releaseAll(spark: SparkSession): Int = drain(spark, QueryScope)
+
+  /** Drop every [[memo]] entry of `spark` and release the blocks its
+    * builds [[stageShared]]; the next [[memo]] call of each kind
+    * rebuilds from the data. Call it after rewriting a dataset under a
+    * live key, or per bench pass so each pass pays the real build cost.
+    * Returns how many session-scope ids were drained.
+    */
+  def invalidate(spark: SparkSession): Int = {
+    memos.keys.filter(_._1 eq spark).foreach(memos.remove)
+    drain(spark, SessionScope)
   }
 }

@@ -248,31 +248,19 @@ object Similarity {
     */
   final case class IvfIndex(path: String, centroids: Array[(Int, Array[Double])])
 
-  // Index layouts are session-lifetime, one per (session, dataset,
-  // index parameters) like Dedup.pairsMemo: build once (a full-corpus
+  // Index layouts are session-lifetime [[Scratch.memo]]s, one per
+  // (session, dataset, index parameters): build once (a full-corpus
   // write — the expensive, amortized step), probe many. The parameters
   // MUST be part of the key: two queries over the same dataset with
   // different nlist/planes are different physical layouts, and silently
-  // sharing one turns an exhaustive probe into a partial one. The
-  // caller-supplied dataset key is trusted; invalidateIndexes drops all
-  // entries (e.g. after a dataset rewrite, or per bench pass so timings
-  // include the build).
-  private val ivfMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Int, Int), IvfIndex]
-  private val lshMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Int, Int, Int), LshLayout]
+  // sharing one turns an exhaustive probe into a partial one.
 
-  def invalidateIndexes(spark: org.apache.spark.sql.SparkSession): Unit = {
-    ivfMemo.keys.filter(_._1 eq spark).foreach(ivfMemo.remove)
-    lshMemo.keys.filter(_._1 eq spark).foreach(lshMemo.remove)
-    embPairsMemo.keys.filter(_._1 eq spark).foreach { k =>
-      embPairsMemo.remove(k).foreach { df =>
-        df.queryExecution.logical.collect {
-          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-        }.foreach(_.unpersist(blocking = false))
-      }
-    }
-  }
+  /** Forwards to [[Scratch.invalidate]], which drops EVERY memo kind of
+    * `spark`, not only the index layouts — that can only force a
+    * rebuild, never change a result.
+    */
+  def invalidateIndexes(spark: org.apache.spark.sql.SparkSession): Unit =
+    Scratch.invalidate(spark)
 
   /** Session-lifetime memo for the verified embedding near-dup pair
     * frame — the embedding-space twin of [[Dedup.minhashPairsShared]]:
@@ -280,16 +268,13 @@ object Similarity {
     * the same frame, and recomputing it means re-bucketing and re-scoring
     * the whole embedding store per consumer. The frame is one row per
     * verified pair (tiny next to the corpus), so it is localCheckpoint'ed;
-    * [[invalidateIndexes]] releases the blocks deterministically. Only
+    * [[Scratch.invalidate]] releases the blocks deterministically. Only
     * the default-parameter pipeline is memoized (key = session, dataset,
     * threshold); custom bandings call [[lshNearDupPairs]] directly.
     */
-  private val embPairsMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String, Double), DataFrame]
-
   def lshNearDupPairsShared(emb: DataFrame, datasetKey: String,
       threshold: Double = 0.3): DataFrame =
-    embPairsMemo.getOrElseUpdate((emb.sparkSession, datasetKey, threshold),
+    Scratch.memo(emb.sparkSession, "lshNearDupPairs", (datasetKey, threshold))(
       lshNearDupPairs(emb, threshold).transform(Scratch.stageShared))
 
   /** Root directory for index layouts: `spark.graft.indexDir` if set
@@ -353,13 +338,13 @@ object Similarity {
     */
   def lshIndex(emb: DataFrame, datasetKey: String,
       planes: Int = 8, dim: Int = 64, tables: Int = DefaultLshTables): LshLayout =
-    lshMemo.getOrElseUpdate((emb.sparkSession, datasetKey, tables, planes, dim), {
+    Scratch.memo(emb.sparkSession, "lshIndex", (datasetKey, tables, planes, dim)) {
       val path = indexPath(emb.sparkSession, s"lsh${tables}t${planes}x$dim", datasetKey)
       val shift = lshDirShift(emb.count(), planes)
       graft.sources.Sink.writePartitioned(
         lshLayoutRows(emb, planes, dim, tables, shift), path, Seq("tbl", "bpfx"))
       LshLayout(path, shift)
-    })
+    }
 
   /** The banded layout relation both the build and the incremental
     * append write: every vector exploded into its `tables` (tbl, bucket)
@@ -430,8 +415,8 @@ object Similarity {
   def lshIndexIncremental(base: DataFrame, delta: DataFrame,
       datasetKey: String, planes: Int = 8, dim: Int = 64,
       tables: Int = DefaultLshTables): LshLayout =
-    lshMemo.getOrElseUpdate(
-      (base.sparkSession, s"${datasetKey}_incr", tables, planes, dim), {
+    Scratch.memo(base.sparkSession, "lshIndex",
+        (s"${datasetKey}_incr", tables, planes, dim)) {
         val spark = base.sparkSession
         val path = indexPath(spark, s"lsh${tables}t${planes}x$dim",
           s"${datasetKey}_incr")
@@ -453,7 +438,7 @@ object Similarity {
           lshLayoutRows(delta, planes, dim, tables, shift),
           s"$path/gen=delta", Seq("tbl", "bpfx"))
         LshLayout(path, shift)
-      })
+      }
 
   /** Top-k probe through the incrementally-appended LSH layout: exactly
     * [[lshTopK]]'s multi-probe read against the appended path. Because
@@ -662,7 +647,7 @@ object Similarity {
     */
   def ivfIndex(emb: DataFrame, datasetKey: String,
       nlist: Int = 16, iters: Int = 5): IvfIndex =
-    ivfMemo.getOrElseUpdate((emb.sparkSession, datasetKey, nlist, iters), {
+    Scratch.memo(emb.sparkSession, "ivfIndex", (datasetKey, nlist, iters)) {
       val centroids = kmeans(emb, nlist, iters).collect()
         .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
       val path = indexPath(emb.sparkSession, s"ivf${nlist}i$iters", datasetKey)
@@ -674,7 +659,7 @@ object Similarity {
           .repartition(layoutParallelism(emb), col("cid")),
         path, Seq("cid"))
       IvfIndex(path, centroids)
-    })
+    }
 
   /** IVF (inverted-file) approximate top-k through the cid-partitioned
     * index: the query's `nprobe` nearest cells (chosen driver-side
@@ -736,7 +721,7 @@ object Similarity {
     *
     * Memoized like [[ivfIndex]] under a derived dataset key, so a
     * session appends the delta exactly once; after
-    * [[invalidateIndexes]] the base build's Overwrite write clears the
+    * [[Scratch.invalidate]] the base build's Overwrite write clears the
     * layout before the append re-runs — the on-disk state converges to
     * base ∪ delta no matter how the memo and the files interleave.
     * (That truncation relies on the default STATIC
@@ -751,14 +736,14 @@ object Similarity {
     // derived keys use '_' (never '#'/':' — dataset keys feed path
     // basenames, and URI-fragment parsing would silently collide the
     // base layout with the plain index of the same dataset)
-    ivfMemo.getOrElseUpdate((base.sparkSession, s"${datasetKey}_incr", nlist, iters), {
+    Scratch.memo(base.sparkSession, "ivfIndex", (s"${datasetKey}_incr", nlist, iters)) {
       val idx = ivfIndex(base, s"${datasetKey}_incrbase", nlist, iters)
       assignToCentroids(delta, idx.centroids)
         .repartition(layoutParallelism(delta), col("cid"))
         .write.mode(org.apache.spark.sql.SaveMode.Append)
         .partitionBy("cid").parquet(idx.path)
       idx
-    })
+    }
 
   /** Top-k probe through the incrementally-appended layout
     * ([[ivfIndexIncremental]]). At nprobe = nlist this is provably the

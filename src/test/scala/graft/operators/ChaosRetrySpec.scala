@@ -97,7 +97,7 @@ class ChaosRetrySpec extends SparkFunSuite {
     assert(chaotic == clean,
       "ivfTopK diverged after a task retry — k-means init or assignment " +
         "is attempt-dependent")
-    Similarity.invalidateIndexes(s2)
+    Scratch.invalidate(s2)
   }
 
   test("semantic decontam census is identical when a task fails and retries") {

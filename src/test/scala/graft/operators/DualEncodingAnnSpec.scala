@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Similarity
+import graft.operators.{Scratch, Similarity}
 
 /** End-to-end ANN paths under BOTH embedding encodings: a fixture
   * generation that ships list<double> instead of list<float> must
@@ -38,6 +38,6 @@ class DualEncodingAnnSpec extends SparkFunSuite {
     val d = Similarity.lshTopK(embD, 3L, 5,
       datasetKey = "dualenc_d").collect().toSeq
     assert(f == d, "probe results diverged across index encodings")
-    Similarity.invalidateIndexes(spark)
+    Scratch.invalidate(spark)
   }
 }

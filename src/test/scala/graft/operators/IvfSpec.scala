@@ -265,16 +265,16 @@ class IvfSpec extends SparkFunSuite {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val a = Similarity.ivfIndex(emb, "ivfspec-invalidate", nlist = 4)
     assert(Similarity.ivfIndex(emb, "ivfspec-invalidate", nlist = 4) eq a)
-    Similarity.invalidateIndexes(spark)
+    Scratch.invalidate(spark)
     val b = Similarity.ivfIndex(emb, "ivfspec-invalidate", nlist = 4)
-    assert(!(b eq a), "invalidateIndexes must force a rebuild")
+    assert(!(b eq a), "invalidate must force a rebuild")
   }
 
   test("index layouts honor spark.graft.indexDir and the probe still answers") {
     val root = java.nio.file.Files.createTempDirectory("graft_idx_root").toString
     spark.conf.set("spark.graft.indexDir", root)
     try {
-      Similarity.invalidateIndexes(spark)
+      Scratch.invalidate(spark)
       val path = Similarity.lshIndex(clustered, "lshspec-configured-root",
         planes = 4, dim = 16, tables = 2).path
       assert(path.startsWith(root),
@@ -284,7 +284,7 @@ class IvfSpec extends SparkFunSuite {
       assert(got.nonEmpty, "probe against the configured root returned nothing")
     } finally {
       spark.conf.unset("spark.graft.indexDir")
-      Similarity.invalidateIndexes(spark)
+      Scratch.invalidate(spark)
     }
   }
 
@@ -364,7 +364,7 @@ class IvfSpec extends SparkFunSuite {
     // memo cleared (the bench's per-pass policy): the cold call must
     // NOT rewrite the base subtree — only the delta Overwrite re-runs —
     // and the layout stays exactly base ∪ delta (no double-append)
-    Similarity.invalidateIndexes(spark)
+    Scratch.invalidate(spark)
     val path2 = Similarity.lshIndexIncremental(base, delta, "lshspec-amort").path
     assert(path2 == path)
     assert(fs.getFileStatus(marker).getModificationTime == t0,
@@ -393,7 +393,7 @@ class IvfSpec extends SparkFunSuite {
     assert(spark.read.parquet(idx.path).count() == n)
     // after invalidation the base rebuild Overwrites, then the append
     // re-runs: the on-disk state converges to base ∪ delta either way
-    Similarity.invalidateIndexes(spark)
+    Scratch.invalidate(spark)
     val idx2 = Similarity.ivfIndexIncremental(base, delta,
       datasetKey = "ivfspec-incr2", nlist = 4)
     assert(spark.read.parquet(idx2.path).count() == n)

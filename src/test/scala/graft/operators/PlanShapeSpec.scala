@@ -381,8 +381,7 @@ class PlanShapeSpec extends SparkFunSuite {
         case Some(v) => conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", v)
         case None => conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
       }
-      graft.operators.Dedup.invalidateSharedPairs(spark)
-      graft.operators.Similarity.invalidateIndexes(spark)
+      graft.operators.Scratch.invalidate(spark)
     }
   }
 

@@ -34,7 +34,7 @@ class ScratchSpec extends SparkFunSuite {
     assert(released >= 1, "the shingle frame behind the pair memo is scratch")
     // the memoized pair frame itself must still be alive and correct
     assert(Dedup.minhashPairsShared(docs, key).count() == 1)
-    Dedup.invalidateSharedPairs(s2)
+    Scratch.invalidate(s2)
   }
 
   test("registry entries of stopped sessions are pruned, not retained forever") {
@@ -45,12 +45,25 @@ class ScratchSpec extends SparkFunSuite {
     import s2.implicits._
     val docs = Seq((1L, "a b c d e f"), (2L, "g h i j k l")).toDF("doc_id", "text")
     Corpus.unigramSurprisal(docs).collect()
+    // a session memo too: the prune must drop memo entries, not only ids
+    val key = s"prunespec_${System.nanoTime()}"
+    Dedup.minhashPairsShared(docs, key)
+    def misses = Scratch.memoCounts.get("minhashPairs").fold(0L)(_._2)
+    val misses0 = misses
+    Dedup.minhashPairsShared(docs, key)
+    assert(misses == misses0, "a live memo entry is a hit")
     // simulate s2's context being stopped: the prune drops its entry...
     assert(Scratch.pruneStopped(_ eq s2) == 1,
       "a stopped session's registry entry must be pruned")
     assert(Scratch.pruneStopped(_ eq s2) == 0, "prune is idempotent")
     // ...so a later drain has nothing to release for it
     assert(Scratch.releaseAll(s2) == 0)
+    assert(Scratch.invalidate(s2) == 0)
+    // ...and the memo entry is gone: the next call rebuilds
+    Dedup.minhashPairsShared(docs, key)
+    assert(misses == misses0 + 1, "a pruned session's memo must be a miss")
+    Scratch.releaseAll(s2)
+    Scratch.invalidate(s2)
     // live sessions are untouched by the prune
     val s3 = spark.newSession()
     val docs3 = { import s3.implicits._
@@ -83,10 +96,10 @@ class ScratchSpec extends SparkFunSuite {
     val biPlain = sorted(Corpus.bigramSurprisal(docs).collect())
     Scratch.releaseAll(s2)
     assert(sorted(Corpus.bigramSurprisal(docs, Some(key)).collect()) == biPlain)
-    Corpus.invalidateSharedCounts(s2)
+    Scratch.invalidate(s2)
     // after invalidation a fresh build still answers correctly
     assert(sorted(Corpus.unigramSurprisal(docs, Some(key)).collect()) == plain)
-    Corpus.invalidateSharedCounts(s2)
+    Scratch.invalidate(s2)
   }
 
   test("shared counts memo rejects a different docs frame under the same key") {
@@ -106,7 +119,22 @@ class ScratchSpec extends SparkFunSuite {
     // the same frame re-built identically still hits the memo
     val again = Seq((1L, "a b a"), (2L, "c d")).toDF("doc_id", "text")
     assert(Corpus.unigramSurprisal(again, Some(key)).count() > 0)
-    Corpus.invalidateSharedCounts(s2)
+    Scratch.invalidate(s2)
+  }
+
+  test("q106 then q29 through the registry share one LSH layout build") {
+    // the operator_pipeline sharing: the index-build query populates the
+    // layout memo, the probe query reads it
+    val s2 = spark.newSession()
+    Scratch.invalidate(s2)
+    def lsh = Scratch.memoCounts.getOrElse("lshIndex", (0L, 0L))
+    val (hits0, misses0) = lsh
+    graft.SparkEntry.queries("q106_lsh_index_build")(s2, sf).collect()
+    graft.SparkEntry.queries("q29_embed_lsh_topk")(s2, sf).collect()
+    assert(lsh == ((hits0 + 1, misses0 + 1)),
+      "q106 must build the layout once and q29 must hit it")
+    Scratch.releaseAll(s2)
+    Scratch.invalidate(s2)
   }
 
   test("cluster iteration frames are scratch, released after the consumer drains") {

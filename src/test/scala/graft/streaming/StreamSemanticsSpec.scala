@@ -272,7 +272,9 @@ class StreamSemanticsSpec extends SparkFunSuite {
     val corpus = Seq((200L, base),
       (201L, "established corpus text nothing like the probes own words"))
       .toDF("doc_id", "text")
-    val builds0 = graft.operators.Dedup.joinIndexBuildCount
+    def builds = graft.operators.Scratch.memoCounts
+      .get("minhashJoinIndex").fold(0L)(_._2)
+    val builds0 = builds
     val idx = graft.operators.Dedup.minhashJoinIndexShared(corpus, "semspec-gate")
     val probeText = Map(
       100L -> base,                                          // dup of 200
@@ -306,11 +308,11 @@ class StreamSemanticsSpec extends SparkFunSuite {
     // one build for the whole multi-trigger run, and a re-request of the
     // same (session, dataset) is a memo hit — the static side never
     // recomputes with trigger count
-    assert(graft.operators.Dedup.joinIndexBuildCount == builds0 + 1,
+    assert(builds == builds0 + 1,
       "corpus-side index must be built exactly once across all triggers")
     val again = graft.operators.Dedup.minhashJoinIndexShared(corpus, "semspec-gate")
     assert(again.sh eq idx.sh, "shared index must be a memo hit")
-    assert(graft.operators.Dedup.joinIndexBuildCount == builds0 + 1)
+    assert(builds == builds0 + 1)
   }
 
   test("drained gate and ANN enrichment read a durable sink — plan depth constant in triggers") {
