@@ -26,8 +26,10 @@ import org.apache.spark.sql.SparkSession
   *     core count locally. (The streaming mains further cap stateful
   *     partitions — see `streaming.EventsStream`.)
   *
-  * Also registers the engine's SQL functions (cosine_similarity,
-  * dot_product) so pure-SQL users get the native codegen expressions.
+  * Applies [[GraftExtensions]]: the engine's SQL functions
+  * (cosine_similarity, dot_product, ...) so pure-SQL users get the native
+  * codegen expressions, and the width rule for heavy per-row stages
+  * (`operators.Par`).
   */
 object GraftSession {
 
@@ -51,6 +53,7 @@ object GraftSession {
     // override the correctness-critical pins.
     extraConf.foreach { case (k, v) => b0.config(k, v) }
     b0
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
@@ -150,7 +153,6 @@ object GraftSession {
       spark.conf.set("spark.graft.reliableCheckpoint", "true")
       spark.sparkContext.setCheckpointDir(dir)
     }
-    graft.functions.VectorExpressions.register(spark)
     spark
   }
 

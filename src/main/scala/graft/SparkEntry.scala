@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.cube.{CubeQuery, Engine}
 import graft.functions.TextAnalysis
 import graft.multimodal.Multimodal
-import graft.operators.{AsOf, Corpus, Dedup, EventAnalytics, Fuzzy, Graph, Merge, Par, Quality, RangeJoin, Relational, RuntimeFilter, Similarity, Skew}
+import graft.operators.{AsOf, Corpus, Dedup, EventAnalytics, Fuzzy, Graph, Merge, Quality, RangeJoin, Relational, RuntimeFilter, Similarity, Skew}
 import graft.sources.Sink
 import graft.streaming.EventsStream
 
@@ -134,7 +134,10 @@ object SparkEntry {
     "q22_token_stats" -> ((s, d) => eng(s, d).table("documents")
       .groupBy(col("lang"))
       .agg(sum(TextAnalysis.tokenCount(col("text"))).as("total_tokens"),
-        round(avg(TextAnalysis.typeTokenRatio(col("text"))), 4).as("avg_ttr"),
+        // mean of 4dp ratios from exact integer units: a float avg
+        // depends on the partial-sum order, which follows the partitioning
+        (round(sum(round(TextAnalysis.typeTokenRatio(col("text")) * 1e4)
+          .cast("long")).cast("double") / count(lit(1))) / 1e4).as("avg_ttr"),
         count(lit(1)).as("doc_count"))
       .orderBy(col("lang"))),
     "q23_doc_quality" -> ((s, d) => eng(s, d).table("documents")
@@ -994,14 +997,7 @@ object SparkEntry {
         datasetKey = Some(d))),
     // langid eval: labeled lang vs q24's predicted lang, the confusion
     // matrix of the heuristic classifier
-    // Par.ensure: langId is the suite's most expensive per-row text
-    // kernel and the confusion rollup cannot be column-pruned past it —
-    // without the guard it runs at the documents SCAN's width (1 split
-    // at sf0.1, 5 row groups at the 100× fixture; measured 16.6 s at
-    // 100× on ~5 cores). The q309/q118 width lesson; counts below are
-    // order-free so the round-robin is hash-safe.
-    "q150_langid_confusion" -> ((s, d) => Par
-      .ensure(eng(s, d).table("documents").select(col("lang"), col("text")))
+    "q150_langid_confusion" -> ((s, d) => eng(s, d).table("documents")
       .select(col("lang"),
         graft.functions.TextAnalysis.langId(col("text")).as("predicted"))
       .groupBy(col("lang"), col("predicted"))
@@ -1336,6 +1332,17 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. Lazy:
     * some entries read private vals declared further down.
     */
+  /** DuckDB twin of `TextAnalysis.shingles(text, 3)` as a `(doc_id, sh)`
+    * select over `documents` — the term space of every shingle-family
+    * oracle. Margin-prefixed: interpolate it into a `stripMargin` string.
+    */
+  private val shinglesSql =
+    """ SELECT doc_id, list_distinct(list_transform(
+      |   generate_series(1, len(string_split(text, ' ')) - 2),
+      |   i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]
+      |        || ' ' || string_split(text, ' ')[i+2])) AS sh
+      | FROM documents"""
+
   lazy val oracleSql: Map[String, String] = Map(
     "q01_year_nation" ->
       """SELECT CAST(year(o_orderdate) AS INTEGER) AS year, n_name AS nation,
@@ -1498,8 +1505,9 @@ object SparkEntry {
     "q22_token_stats" ->
       """SELECT lang,
         | CAST(sum(length(text) - length(replace(text, ' ', '')) + 1) AS BIGINT) AS total_tokens,
-        | round(avg(round(CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-        |   / len(string_split(text, ' ')), 4)), 4) AS avg_ttr,
+        | round(CAST(CAST(sum(CAST(round(round(CAST(len(list_distinct(
+        |   string_split(text, ' '))) AS DOUBLE) / len(string_split(text, ' ')), 4)
+        |   * 10000, 0) AS BIGINT)) AS BIGINT) AS DOUBLE) / count(*)) / 10000 AS avg_ttr,
         | count(*) AS doc_count
         |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
     "q23_doc_quality" ->
@@ -1559,12 +1567,8 @@ object SparkEntry {
         |   AS min_shingle_hash
         |FROM t ORDER BY doc_id""".stripMargin,
     "q26_minhash_pairs" ->
-      """WITH s AS (
-        | SELECT doc_id, list_distinct(list_transform(
-        |   generate_series(1, len(string_split(text, ' ')) - 2),
-        |   i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]
-        |        || ' ' || string_split(text, ' ')[i+2])) AS sh
-        | FROM documents)
+      s"""WITH s AS (
+        |$shinglesSql)
         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
         | round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
         |   / len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
@@ -1576,12 +1580,8 @@ object SparkEntry {
     // postings, df cap, pairwise intersect counts, size join — so the
     // contract stays exact even if the cap ever bites
     "q136_jaccard_pairs" ->
-      """WITH s AS (
-        | SELECT doc_id, list_distinct(list_transform(
-        |   generate_series(1, len(string_split(text, ' ')) - 2),
-        |   i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]
-        |        || ' ' || string_split(text, ' ')[i+2])) AS sh
-        | FROM documents),
+      s"""WITH s AS (
+        |$shinglesSql),
         |p AS (SELECT doc_id, unnest(sh) AS g FROM s),
         |keep AS (SELECT g FROM p GROUP BY g HAVING count(*) <= 256),
         |kp AS (SELECT p.doc_id, p.g FROM p JOIN keep USING (g)),
@@ -1599,12 +1599,8 @@ object SparkEntry {
     // containment pairs: same postings-index oracle as q136 with the
     // overlap-coefficient numerator/denominator; emits both coefficients
     "q137_containment_pairs" ->
-      """WITH s AS (
-        | SELECT doc_id, list_distinct(list_transform(
-        |   generate_series(1, len(string_split(text, ' ')) - 2),
-        |   i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]
-        |        || ' ' || string_split(text, ' ')[i+2])) AS sh
-        | FROM documents),
+      s"""WITH s AS (
+        |$shinglesSql),
         |p AS (SELECT doc_id, unnest(sh) AS g FROM s),
         |keep AS (SELECT g FROM p GROUP BY g HAVING count(*) <= 256),
         |kp AS (SELECT p.doc_id, p.g FROM p JOIN keep USING (g)),
@@ -1623,12 +1619,8 @@ object SparkEntry {
     // near-dup degree: the q136 pair relation unpivoted to endpoints and
     // aggregated per doc — count of partners + strongest similarity
     "q139_dup_degree" ->
-      """WITH s AS (
-        | SELECT doc_id, list_distinct(list_transform(
-        |   generate_series(1, len(string_split(text, ' ')) - 2),
-        |   i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]
-        |        || ' ' || string_split(text, ' ')[i+2])) AS sh
-        | FROM documents),
+      s"""WITH s AS (
+        |$shinglesSql),
         |p AS (SELECT doc_id, unnest(sh) AS g FROM s),
         |keep AS (SELECT g FROM p GROUP BY g HAVING count(*) <= 256),
         |kp AS (SELECT p.doc_id, p.g FROM p JOIN keep USING (g)),
@@ -2025,12 +2017,8 @@ object SparkEntry {
         |      (CAST(n_b + 1 AS DOUBLE) / (tb + 10))), 6) AS psi_term
         |FROM counts CROSS JOIN tot ORDER BY bin""".stripMargin,
     "q191_jaccard_sweep" ->
-      """WITH s AS (
-        | SELECT doc_id, list_distinct(list_transform(
-        |   generate_series(1, len(string_split(text, ' ')) - 2),
-        |   i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]
-        |        || ' ' || string_split(text, ' ')[i+2])) AS sh
-        | FROM documents),
+      s"""WITH s AS (
+        |$shinglesSql),
         |p AS (SELECT doc_id, unnest(sh) AS g FROM s),
         |keep AS (SELECT g FROM p GROUP BY g HAVING count(*) <= 256),
         |kp AS (SELECT p.doc_id, p.g FROM p JOIN keep USING (g)),
@@ -2054,12 +2042,8 @@ object SparkEntry {
         |      GROUP BY 1) d2 USING (threshold)
         |ORDER BY threshold""".stripMargin,
     "q192_cluster_sizes" ->
-      """WITH s AS (
-        | SELECT doc_id, list_distinct(list_transform(
-        |   generate_series(1, len(string_split(text, ' ')) - 2),
-        |   i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]
-        |        || ' ' || string_split(text, ' ')[i+2])) AS sh
-        | FROM documents),
+      s"""WITH s AS (
+        |$shinglesSql),
         |pairs AS (
         | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
         | FROM s a JOIN s b ON a.doc_id < b.doc_id
@@ -2480,12 +2464,8 @@ object SparkEntry {
         |    CAST(n AS DOUBLE)), 6) AS eta2
         |FROM g""".stripMargin,
     "q217_dedup_savings" ->
-      """WITH s AS (
-        | SELECT doc_id, list_distinct(list_transform(
-        |   generate_series(1, len(string_split(text, ' ')) - 2),
-        |   i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]
-        |        || ' ' || string_split(text, ' ')[i+2])) AS sh
-        | FROM documents),
+      s"""WITH s AS (
+        |$shinglesSql),
         |pairs AS (
         | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
         | FROM s a JOIN s b ON a.doc_id < b.doc_id
@@ -2788,12 +2768,8 @@ object SparkEntry {
         | count(*) AS n_users
         |FROM m GROUP BY 1 ORDER BY 1""".stripMargin,
     "q233_assortativity" ->
-      """WITH s AS (
-        | SELECT doc_id, list_distinct(list_transform(
-        |   generate_series(1, len(string_split(text, ' ')) - 2),
-        |   i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]
-        |        || ' ' || string_split(text, ' ')[i+2])) AS sh
-        | FROM documents),
+      s"""WITH s AS (
+        |$shinglesSql),
         |pairs AS (
         | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
         | FROM s a JOIN s b ON a.doc_id < b.doc_id
@@ -2976,13 +2952,9 @@ object SparkEntry {
         |   AS revenue_calibration
         |FROM pr, t ORDER BY rate_permille""".stripMargin,
     "q240_heaps_curve" ->
-      """WITH b AS (SELECT max(doc_id) + 1 AS nid FROM documents),
+      s"""WITH b AS (SELECT max(doc_id) + 1 AS nid FROM documents),
         |s AS (
-        | SELECT doc_id, list_distinct(list_transform(
-        |   generate_series(1, len(string_split(text, ' ')) - 2),
-        |   i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]
-        |        || ' ' || string_split(text, ' ')[i+2])) AS sh
-        | FROM documents),
+        |$shinglesSql),
         |fs AS (
         | SELECT tok, min(doc_id) AS first_doc FROM (
         |  SELECT doc_id, unnest(sh) AS tok FROM s) GROUP BY 1),
@@ -3148,12 +3120,8 @@ object SparkEntry {
         |   CAST(sum(nb) AS DOUBLE), 6) AS bytes_share
         |FROM a GROUP BY 1 ORDER BY 1""".stripMargin,
     "q250_dedup_funnel" ->
-      """WITH s AS (
-        | SELECT doc_id, list_distinct(list_transform(
-        |   generate_series(1, len(string_split(text, ' ')) - 2),
-        |   i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]
-        |        || ' ' || string_split(text, ' ')[i+2])) AS sh
-        | FROM documents),
+      s"""WITH s AS (
+        |$shinglesSql),
         |pairs AS (
         | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
         | FROM s a JOIN s b ON a.doc_id < b.doc_id
@@ -4380,12 +4348,8 @@ object SparkEntry {
         |   AS mean_top_bigram_ratio
         |FROM uni JOIN bi USING (doc_id) GROUP BY 1 ORDER BY 1""".stripMargin,
     "q315_kcore_peel" ->
-      """WITH s AS (
-        | SELECT doc_id, list_distinct(list_transform(
-        |   generate_series(1, len(string_split(text, ' ')) - 2),
-        |   i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]
-        |        || ' ' || string_split(text, ' ')[i+2])) AS sh
-        | FROM documents),
+      s"""WITH s AS (
+        |$shinglesSql),
         |pairs AS (
         | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
         | FROM s a JOIN s b ON a.doc_id < b.doc_id
@@ -4996,12 +4960,8 @@ object SparkEntry {
         | FROM documents)
         |GROUP BY token ORDER BY df DESC, tf DESC, token LIMIT 20""".stripMargin,
     "q41_dedup_clusters" ->
-      """WITH s AS (
-        | SELECT doc_id, list_distinct(list_transform(
-        |   generate_series(1, len(string_split(text, ' ')) - 2),
-        |   i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]
-        |        || ' ' || string_split(text, ' ')[i+2])) AS sh
-        | FROM documents),
+      s"""WITH s AS (
+        |$shinglesSql),
         |pairs AS (
         | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
         | FROM s a JOIN s b ON a.doc_id < b.doc_id
@@ -5019,12 +4979,8 @@ object SparkEntry {
         |SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
         |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin,
     "q42_dedup_keep" ->
-      """WITH s AS (
-        | SELECT doc_id, list_distinct(list_transform(
-        |   generate_series(1, len(string_split(text, ' ')) - 2),
-        |   i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]
-        |        || ' ' || string_split(text, ' ')[i+2])) AS sh
-        | FROM documents),
+      s"""WITH s AS (
+        |$shinglesSql),
         |pairs AS (
         | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
         | FROM s a JOIN s b ON a.doc_id < b.doc_id
@@ -5049,12 +5005,8 @@ object SparkEntry {
     // quality score; per-cluster argmax (qs DESC, doc_id tie-break),
     // unclustered docs keep themselves
     "q142_keep_best" ->
-      """WITH s AS (
-        | SELECT doc_id, list_distinct(list_transform(
-        |   generate_series(1, len(string_split(text, ' ')) - 2),
-        |   i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]
-        |        || ' ' || string_split(text, ' ')[i+2])) AS sh
-        | FROM documents),
+      s"""WITH s AS (
+        |$shinglesSql),
         |pairs AS (
         | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
         | FROM s a JOIN s b ON a.doc_id < b.doc_id
@@ -5255,7 +5207,7 @@ object SparkEntry {
         |SELECT doc_id, lang FROM ranked WHERE rn <= 50
         |ORDER BY doc_id""".stripMargin,
     "q56_curation" ->
-      """WITH tc AS (
+      s"""WITH tc AS (
         | SELECT doc_id, tok, count(*) AS cnt
         | FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
         |       FROM documents)
@@ -5270,11 +5222,7 @@ object SparkEntry {
         |  AND 1.0 - CAST(distinct_tokens AS DOUBLE) / n_tokens < 0.6
         |  AND CAST(top_count AS DOUBLE) / n_tokens < 0.15),
         |s AS (
-        | SELECT doc_id, list_distinct(list_transform(
-        |   generate_series(1, len(string_split(text, ' ')) - 2),
-        |   i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]
-        |        || ' ' || string_split(text, ' ')[i+2])) AS sh
-        | FROM documents),
+        |$shinglesSql),
         |pairs AS (
         | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
         | FROM s a JOIN s b ON a.doc_id < b.doc_id
@@ -5564,7 +5512,7 @@ object SparkEntry {
         |WHERE abs(value - mu) > 3 * sd
         |ORDER BY event_id""".stripMargin,
     "q80_datacard" ->
-      """WITH tc AS (
+      s"""WITH tc AS (
         | SELECT doc_id, tok, count(*) AS cnt
         | FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
         |       FROM documents)
@@ -5579,11 +5527,7 @@ object SparkEntry {
         |  AND 1.0 - CAST(distinct_tokens AS DOUBLE) / n_tokens < 0.6
         |  AND CAST(top_count AS DOUBLE) / n_tokens < 0.15),
         |s AS (
-        | SELECT doc_id, list_distinct(list_transform(
-        |   generate_series(1, len(string_split(text, ' ')) - 2),
-        |   i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]
-        |        || ' ' || string_split(text, ' ')[i+2])) AS sh
-        | FROM documents),
+        |$shinglesSql),
         |pairs AS (
         | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
         | FROM s a JOIN s b ON a.doc_id < b.doc_id
@@ -5749,12 +5693,8 @@ object SparkEntry {
            |            JOIN edges e ON e.src = d.src) c
            |  ON n.node = c.node
            | GROUP BY n.node, nn.n)""".stripMargin
-      """WITH sh AS (
-        | SELECT doc_id, list_distinct(list_transform(
-        |   generate_series(1, len(string_split(text, ' ')) - 2),
-        |   i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]
-        |        || ' ' || string_split(text, ' ')[i+2])) AS sh
-        | FROM documents),
+      s"""WITH sh AS (
+        |$shinglesSql),
         |pairs AS (
         | SELECT a.doc_id AS da, b.doc_id AS db
         | FROM sh a JOIN sh b ON a.doc_id < b.doc_id
@@ -6114,12 +6054,8 @@ object SparkEntry {
     // as pairs (a,b), (b,c), (a,c); the engine's degree-ordered census
     // must produce identical per-node counts
     "q102_triangles" ->
-      """WITH s AS (
-        | SELECT doc_id, list_distinct(list_transform(
-        |   generate_series(1, len(string_split(text, ' ')) - 2),
-        |   i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]
-        |        || ' ' || string_split(text, ' ')[i+2])) AS sh
-        | FROM documents),
+      s"""WITH s AS (
+        |$shinglesSql),
         |pairs AS (
         | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
         | FROM s a JOIN s b ON a.doc_id < b.doc_id
@@ -6139,12 +6075,8 @@ object SparkEntry {
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |GROUP BY 1 ORDER BY 1""".stripMargin,
     "q104_neardup_join" ->
-      """WITH s AS (
-        | SELECT doc_id, list_distinct(list_transform(
-        |   generate_series(1, len(string_split(text, ' ')) - 2),
-        |   i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]
-        |        || ' ' || string_split(text, ' ')[i+2])) AS sh
-        | FROM documents)
+      s"""WITH s AS (
+        |$shinglesSql)
         |SELECT a.doc_id AS probe_id, b.doc_id AS match_id,
         | round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
         |   / len(list_distinct(list_concat(a.sh, b.sh))), 4) AS jaccard
@@ -6416,12 +6348,8 @@ object SparkEntry {
     // stream near-dup gate: brute-force bipartite jaccard join over the
     // same probe/corpus id cut, per-probe verdict aggregation
     "q123_stream_neardup_gate" ->
-      """WITH s AS (
-        | SELECT doc_id, list_distinct(list_transform(
-        |   generate_series(1, len(string_split(text, ' ')) - 2),
-        |   i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]
-        |        || ' ' || string_split(text, ' ')[i+2])) AS sh
-        | FROM documents),
+      s"""WITH s AS (
+        |$shinglesSql),
         |probe AS (SELECT * FROM s WHERE doc_id < 50),
         |corp AS (SELECT * FROM s WHERE doc_id >= 50),
         |hits AS (
@@ -6468,12 +6396,8 @@ object SparkEntry {
     // source duplication matrix: q26's pairs joined to source metadata
     // on both endpoints, (least, greatest)-normalized cells
     "q120_source_dup_matrix" ->
-      """WITH s AS (
-        | SELECT doc_id, list_distinct(list_transform(
-        |   generate_series(1, len(string_split(text, ' ')) - 2),
-        |   i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]
-        |        || ' ' || string_split(text, ' ')[i+2])) AS sh
-        | FROM documents),
+      s"""WITH s AS (
+        |$shinglesSql),
         |pairs AS (
         | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
         |  round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
@@ -6492,12 +6416,8 @@ object SparkEntry {
     // leakage audit: q26's exact-jaccard pairs crossed with q49's
     // masked-hash split; max over the ROUNDED jaccard on both sides
     "q119_leakage_audit" ->
-      """WITH s AS (
-        | SELECT doc_id, list_distinct(list_transform(
-        |   generate_series(1, len(string_split(text, ' ')) - 2),
-        |   i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]
-        |        || ' ' || string_split(text, ' ')[i+2])) AS sh
-        | FROM documents),
+      s"""WITH s AS (
+        |$shinglesSql),
         |pairs AS (
         | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
         |  round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
@@ -6524,12 +6444,8 @@ object SparkEntry {
     // inverted onto the train side — a train doc near-dupping any
     // val/test doc is flagged dropped
     "q132_leakage_free_split" ->
-      """WITH s AS (
-        | SELECT doc_id, list_distinct(list_transform(
-        |   generate_series(1, len(string_split(text, ' ')) - 2),
-        |   i -> string_split(text, ' ')[i] || ' ' || string_split(text, ' ')[i+1]
-        |        || ' ' || string_split(text, ' ')[i+2])) AS sh
-        | FROM documents),
+      s"""WITH s AS (
+        |$shinglesSql),
         |pairs AS (
         | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
         | FROM s a JOIN s b ON a.doc_id < b.doc_id

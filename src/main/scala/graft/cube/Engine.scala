@@ -80,23 +80,23 @@ class Engine(spark: SparkSession, dir: String) {
       acc.join(dimDf(j), col(j.parentKey) === col(j.key), "inner")
     }
 
-  /** Evaluate a [[CubeQuery]] — the analog of `OEC.get_data`
-    * (`oec.py:27-66`): drilldowns = GROUP BY keys, measures = aggregates,
-    * cuts = member IN-filters; result columns carry normalized names.
-    * Deterministically ordered by the drilldown keys.
+  /** The shared front half of [[getData]] and [[getDataMulti]]: resolve
+    * the drilldown levels, cuts, range cuts and measures of `q`, join the
+    * fact to exactly the dims they need, and apply the cut filters —
+    * member IN-filters, then range filters with their [[Level.rangePrune]]
+    * scan predicates so the scan prunes row groups/partitions.
     */
-  def getData(q: CubeQuery): DataFrame = {
+  private def resolve(q: CubeQuery, drilldowns: Seq[String])
+      : (CubeDef, Seq[Level], Seq[MeasureDef], DataFrame) = {
     val cube = CubeCatalog(q.cube)
-    val dds = q.drilldowns.map(cube.level)
+    val dds = drilldowns.map(cube.level)
     val cuts = q.cuts.map { case (l, vs) => cube.level(l) -> vs }
     val ranges = q.rangeCuts.map { case (l, b) => cube.level(l) -> b }
     val msrs = q.measures.map(cube.measure)
 
     val roots = (dds.map(_.dim) ++ cuts.keys.map(_.dim) ++
       ranges.keys.map(_.dim) ++ msrs.flatMap(_.dims)).toSet
-    val star = joined(cube, roots)
-
-    val filtered0 = cuts.foldLeft(star) { case (df, (lvl, vs)) =>
+    val filtered0 = cuts.foldLeft(joined(cube, roots)) { case (df, (lvl, vs)) =>
       val lits = vs.map(v => lit(coerce(v, lvl.dataType)))
       df.filter(if (lits.size == 1) lvl.expr === lits.head
                 else lvl.expr.isin(lits: _*))
@@ -104,10 +104,18 @@ class Engine(spark: SparkSession, dir: String) {
     val filtered = ranges.foldLeft(filtered0) { case (df, (lvl, (lo, hi))) =>
       val (loL, hiL) = (lit(coerce(lo, lvl.dataType)), lit(coerce(hi, lvl.dataType)))
       val exact = df.filter(lvl.expr.between(loL, hiL))
-      // derived levels add their superset raw-column predicate so the
-      // scan prunes row groups/partitions (see Level.rangePrune)
       lvl.rangePrune.fold(exact)(p => exact.filter(p(loL, hiL)))
     }
+    (cube, dds, msrs, filtered)
+  }
+
+  /** Evaluate a [[CubeQuery]] — the analog of `OEC.get_data`
+    * (`oec.py:27-66`): drilldowns = GROUP BY keys, measures = aggregates,
+    * cuts = member IN-filters; result columns carry normalized names.
+    * Deterministically ordered by the drilldown keys.
+    */
+  def getData(q: CubeQuery): DataFrame = {
+    val (_, dds, msrs, filtered) = resolve(q, q.drilldowns)
 
     val keyCols: Seq[Column] = dds.map(l => l.expr.as(l.name))
     val aggCols: Seq[Column] = msrs.map(m => m.agg.as(m.name))
@@ -136,26 +144,8 @@ class Engine(spark: SparkSession, dir: String) {
     * lattice special cases of this general form.
     */
   def getDataMulti(q: CubeQuery, drilldownSets: Seq[Seq[String]]): DataFrame = {
-    val cube = CubeCatalog(q.cube)
     val unionNames = drilldownSets.flatten.distinct
-    val dds = unionNames.map(cube.level)
-    val cuts = q.cuts.map { case (l, vs) => cube.level(l) -> vs }
-    val ranges = q.rangeCuts.map { case (l, b) => cube.level(l) -> b }
-    val msrs = q.measures.map(cube.measure)
-
-    val roots = (dds.map(_.dim) ++ cuts.keys.map(_.dim) ++
-      ranges.keys.map(_.dim) ++ msrs.flatMap(_.dims)).toSet
-    val star = joined(cube, roots)
-    val filtered0 = cuts.foldLeft(star) { case (df, (lvl, vs)) =>
-      val lits = vs.map(v => lit(coerce(v, lvl.dataType)))
-      df.filter(if (lits.size == 1) lvl.expr === lits.head
-                else lvl.expr.isin(lits: _*))
-    }
-    val filtered = ranges.foldLeft(filtered0) { case (df, (lvl, (lo, hi))) =>
-      val (loL, hiL) = (lit(coerce(lo, lvl.dataType)), lit(coerce(hi, lvl.dataType)))
-      val exact = df.filter(lvl.expr.between(loL, hiL))
-      lvl.rangePrune.fold(exact)(p => exact.filter(p(loL, hiL)))
-    }
+    val (cube, dds, msrs, filtered) = resolve(q, unionNames)
 
     // grouping expressions must be stable COLUMNS for set expansion:
     // project each level expression under its name once, group on names

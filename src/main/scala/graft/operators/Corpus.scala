@@ -81,7 +81,7 @@ object Corpus {
         val docsPlan = docs.queryExecution.analyzed
         val (memoPlan, frame) = Scratch.memo(docs.sparkSession,
           "corpusCounts", (kind, k))(
-          (docsPlan, build(Par.ensure(docs)).transform(Scratch.stageShared)))
+          (docsPlan, build(docs).transform(Scratch.stageShared)))
         require(memoPlan.sameResult(docsPlan),
           s"shared counts memo for datasetKey='$k' (kind=$kind) was built " +
             "from a semantically different docs frame — a datasetKey must " +
@@ -90,7 +90,7 @@ object Corpus {
             "Scratch.invalidate first if the dataset was rewritten")
         frame
       case None =>
-        Scratch.register(build(Par.ensure(docs)).transform(Scratch.stage))
+        build(docs).transform(Scratch.staged)
     }
 
   /** [[tokenCounts]] through the session memo (keyed) or as per-call
@@ -229,7 +229,7 @@ object Corpus {
     val tagged = benches.map { case (name, b) =>
       grams(b).select(lit(name).as("eval_set"), col("gram")).distinct()
     }.reduce(_ unionAll _)
-    grams(Par.ensure(docs))
+    grams(docs)
       .join(broadcast(tagged), "gram")
       .groupBy(col("doc_id"), col("eval_set"))
       .agg(count(lit(1)).cast("int").as("n_hit_grams"))
@@ -252,7 +252,7 @@ object Corpus {
     val q = graft.functions.TextAnalysis.qualityScore(col("text"))
     val w = Window.partitionBy(col(groupCol))
       .orderBy(col("__q").desc, col("doc_id"))
-    Par.ensure(docs)
+    docs
       .withColumn("__q", q)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
@@ -351,10 +351,10 @@ object Corpus {
     * `tok_offset`.
     */
   private def tokenPrefixSum(sized: DataFrame, order: Seq[Column]): DataFrame = {
-    val ranged = Scratch.register(sized
+    val ranged = sized
       .repartitionByRange(order: _*)
       .withColumn("__pid", spark_partition_id())
-      .transform(Scratch.stage))
+      .transform(Scratch.staged)
     val wRow = Window.partitionBy(col("__pid"))
       .orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -757,11 +757,11 @@ object Corpus {
     // two __toks consumers live in one Project over a separate tokenize
     // Project — CollapseProject keeps the non-cheap split() single
     // because its alias is referenced twice.
-    val perDoc = Scratch.register(docs
+    val perDoc = docs
       .select(col("doc_id"), toks.as("__toks"))
       .select(col("doc_id"), size(col("__toks")).cast("double").as("dl"),
         filter(col("__toks"), t => t.isin(terms: _*)).as("__kept"))
-      .transform(Scratch.stage))
+      .transform(Scratch.staged)
     val stats = perDoc.agg(count(lit(1)).cast("double").as("n_docs"),
       avg(col("dl")).as("avgdl"))
     // tf's two consumers (df and the score join) share the aggregate's
@@ -842,13 +842,13 @@ object Corpus {
           broadcastQueries)) {
         val qset = qterms.select(col("tok")).distinct()
           .agg(collect_set(col("tok")).as("__qs"))
-        val perDoc = Scratch.register(docs
+        val perDoc = docs
           .select(col("doc_id"), toks.as("__toks"))
           .crossJoin(broadcast(qset))
           .select(col("doc_id"), size(col("__toks")).cast("double").as("dl"),
             filter(col("__toks"),
               t => array_contains(col("__qs"), t)).as("__kept"))
-          .transform(Scratch.stage))
+          .transform(Scratch.staged)
         val tf0 = perDoc
           .select(col("doc_id"), col("dl"), explode(col("__kept")).as("tok"))
           .groupBy(col("doc_id"), col("tok"))
@@ -860,9 +860,8 @@ object Corpus {
         val st = docs.agg(count(lit(1)).cast("double").as("n_docs"),
           avg(size(toks).cast("double")).as("avgdl"))
         // two consumers (df and the score join) — materialize once
-        val tf0 = Scratch.register(
-          bm25TfForQueries(docs, qterms, broadcastQueries)
-            .transform(Scratch.stage))
+        val tf0 = bm25TfForQueries(docs, qterms, broadcastQueries)
+          .transform(Scratch.staged)
         (tf0, st)
       }
     val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).cast("double").as("df"))
@@ -928,13 +927,13 @@ object Corpus {
     val stats = lens.agg(count(lit(1)).cast("double").as("n_docs"),
       avg(col("dl")).as("avgdl"))
     // tf at chunk grain: positional token index keys the chunk
-    val tf = Scratch.register(docs
+    val tf = docs
       .select(col("doc_id"), posexplode(toksArr).as(Seq("pos", "tok")))
       .withColumn("chunk_idx", expr(s"pos div $chunkTokens").cast("long"))
       .join(broadcast(qterms.select(col("tok")).distinct()), Seq("tok"), "left_semi")
       .groupBy(col("doc_id"), col("chunk_idx"), col("tok"))
       .agg(count(lit(1)).as("cnt"))
-      .transform(Scratch.stage))
+      .transform(Scratch.staged)
     val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).cast("double").as("df"))
     val scored = tf.join(broadcast(dfreq), "tok")
       .join(lens, Seq("doc_id", "chunk_idx"))
@@ -1012,11 +1011,11 @@ object Corpus {
     */
   def mixtureSample(docs: DataFrame, weights: Map[String, Double],
       tokenBudget: Long): DataFrame = {
-    val perDoc = Scratch.register(Par.ensure(docs)
+    val perDoc = docs
       .select(col("doc_id"), col("source"),
         graft.functions.TextAnalysis.tokenCount(col("text")).cast("long")
           .as("toks"))
-      .transform(Scratch.stage))
+      .transform(Scratch.staged)
     val wCol = element_at(
       map(weights.toSeq.sortBy(_._1)
         .flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*),
@@ -1054,12 +1053,12 @@ object Corpus {
     * a map-side join + one doc_id-keyed aggregation.
     */
   def oovRate(docs: DataFrame, vocabSize: Int = 100): DataFrame = {
-    val tc = Scratch.register(Par.ensure(docs)
+    val tc = docs
       .select(col("doc_id"),
         explode(graft.functions.TextAnalysis.tokens(col("text"))).as("tok"))
       .groupBy(col("doc_id"), col("tok"))
       .agg(count(lit(1)).as("cnt"))
-      .transform(Scratch.stage))
+      .transform(Scratch.staged)
     val vocab = tc.groupBy(col("tok")).agg(sum(col("cnt")).as("tf"))
       .orderBy(col("tf").desc, col("tok")).limit(vocabSize)
       .select(col("tok"), lit(1).as("__v"))
@@ -1220,7 +1219,7 @@ object Corpus {
   def zipfReport(docs: DataFrame,
       datasetKey: Option[String] = None): DataFrame = {
     val tf = datasetKey.map(_ => tokenCountsShared(docs, datasetKey))
-      .getOrElse(tokenCounts(Par.ensure(docs)))
+      .getOrElse(tokenCounts(docs))
       .groupBy(col("tok")).agg(sum(col("cnt")).as("f"))
     val ranked = Ranks.globalRowNumber(tf,
       Seq(col("f").desc, col("tok")), "rk")
@@ -1251,7 +1250,7 @@ object Corpus {
   def qualityTierReport(docs: DataFrame,
       lowCut: Double = 0.65, highCut: Double = 0.74): DataFrame = {
     val q = graft.functions.TextAnalysis.qualityScore(col("text"))
-    Par.ensure(docs)
+    docs
       .select(graft.functions.TextAnalysis.tokenCount(col("text")).as("__t"),
         q.as("__q"))
       .withColumn("tier", when(col("__q") < lowCut, "1_low")
@@ -1319,7 +1318,7 @@ object Corpus {
   def dedupSpans(docs: DataFrame, n: Int = 3): DataFrame = {
     val toks = split(col("text"), " ")
     // ceil(size/n) blocks; sequence(0,-1) counts DOWN, so guard empties
-    val base = Par.ensure(docs).select(col("doc_id"), toks.as("__t"))
+    val base = docs.select(col("doc_id"), toks.as("__t"))
       .withColumn("__nb", when(size(col("__t")) > 0,
         ceil(size(col("__t")).cast("double") / n).cast("int")).otherwise(lit(0)))
     val spans = base
@@ -1427,7 +1426,7 @@ object Corpus {
     * ends it.
     */
   def tokenGini(docs: DataFrame): DataFrame = {
-    val d = Par.ensure(docs).select(col("source"), col("doc_id"),
+    val d = docs.select(col("source"), col("doc_id"),
       size(split(col("text"), " ")).cast("long").as("n_tok"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source")).orderBy(col("n_tok"), col("doc_id"))
@@ -1457,7 +1456,7 @@ object Corpus {
     */
   def templatePrefixes(docs: DataFrame, k: Int = 5,
       minDocs: Int = 3): DataFrame =
-    Par.ensure(docs)
+    docs
       .select(array_join(slice(split(col("text"), " "), 1, k), " ")
         .as("prefix"), col("doc_id"), col("source"))
       .groupBy(col("prefix"))
@@ -1478,7 +1477,7 @@ object Corpus {
     * runs over (lang, char) rows — at most langs × alphabet.
     */
   def charEntropy(docs: DataFrame): DataFrame = {
-    val chars = Par.ensure(docs)
+    val chars = docs
       .select(col("lang"), explode(split(col("text"), "")).as("ch"))
       .filter(col("ch") =!= "")
     val counts = chars.groupBy(col("lang"), col("ch"))
@@ -1506,7 +1505,7 @@ object Corpus {
     * on both engines.
     */
   def sourceVocabOverlap(docs: DataFrame, topK: Int = 20): DataFrame = {
-    val st = Par.ensure(docs)
+    val st = docs
       .select(col("source"),
         explode(array_distinct(split(col("text"), " "))).as("token"))
       .distinct()
@@ -1559,7 +1558,7 @@ object Corpus {
     * sort. Doc counts ride in as a 2-row broadcast cross join.
     */
   def idfDrift(docs: DataFrame, k: Int = 20): DataFrame = {
-    val toks = Par.ensure(docs)
+    val toks = docs
       .select(col("doc_id"), (col("doc_id") % 2 === 0).as("half_a"),
         explode(array_distinct(split(col("text"), " "))).as("token"))
     val df = toks.groupBy(col("token"))
@@ -1983,13 +1982,13 @@ object Corpus {
     // every pair trivially similar; shingles restore the diversity an
     // idf weighting needs. Each (doc, shingle) appears once, so the
     // weight reduces to the idf.
-    val tc = Scratch.register(Par.ensure(docs)
+    val tc = docs
       .filter(size(graft.functions.TextAnalysis.tokens(col("text"))) >= 3)
       .select(col("doc_id"),
         explode(graft.functions.TextAnalysis.shingles(col("text"), 3))
           .as("tok"))
       .withColumn("cnt", lit(1L))
-      .transform(Scratch.stage))
+      .transform(Scratch.staged)
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     // df frame staged once (vocab-sized): feeds the idf keep-list AND
     // the pair-width forecast without re-running the postings groupBy

@@ -79,11 +79,9 @@ object Dedup {
     // once (MEMORY_AND_DISK via localCheckpoint) and derive everything
     // from the cached (doc_id, sh) frame. ~1 KB/doc: the cache is orders
     // of magnitude smaller than the corpus text it replaces re-scanning.
-    // Par.ensure: shingling + 64 minhash passes are the pipeline's hot
-    // map work — a single-file local scan would run them on one task.
-    val withSh = Scratch.register(Par.ensure(docs).select(col("doc_id"),
+    val withSh = docs.select(col("doc_id"),
       TextAnalysis.shingles(col("text"), shingleN).as("sh"))
-      .transform(Scratch.stage))
+      .transform(Scratch.staged)
     val sig = withSh.select(col("doc_id"),
       bandHashes(graft.functions.TextExpressions.minhashSig(col("sh"), numPerms),
         bands, r).as("bands"))
@@ -267,9 +265,9 @@ object Dedup {
 
   private def computePairIntersections(docs: DataFrame, shingleN: Int,
       maxDf: Int): DataFrame = {
-    val withSh = Scratch.register(Par.ensure(docs)
+    val withSh = docs
       .select(col("doc_id"), TextAnalysis.shingles(col("text"), shingleN).as("sh"))
-      .transform(Scratch.stage))
+      .transform(Scratch.staged)
     val post = withSh.select(col("doc_id"), explode(col("sh")).as("g"))
     // count-then-semi-join (not collect_list-then-filter): a mega-hot gram
     // must never be materialized as one giant postings array on a single
@@ -421,10 +419,10 @@ object Dedup {
     val r = numPerms / bands
     // session-lifetime (scratch=false) sides are multi-consumer — in the
     // reliable-checkpoint mode they must not re-read files per probe
-    val raw = Par.ensure(df).select(col("doc_id").as(idAs),
+    val raw = df.select(col("doc_id").as(idAs),
       TextAnalysis.shingles(col("text"), shingleN).as(shAs))
     val withSh =
-      if (scratch) Scratch.register(raw.transform(Scratch.stage))
+      if (scratch) raw.transform(Scratch.staged)
       else raw.transform(Scratch.stageShared)
     val ex = withSh.select(col(idAs),
       explode(bandHashes(
@@ -615,20 +613,19 @@ object Dedup {
           parent.keysIterator.toArray.iterator.map(n => (n, find(n)))
         }
         .toDF("src", "dst")
-      Scratch.register(
-        stars.union(stars.select(col("dst").as("src"), col("src").as("dst")))
-          .distinct()
-          .select(col("src").cast(idType), col("dst").cast(idType))
-          .transform(Scratch.stage))
+      stars.union(stars.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct()
+        .select(col("src").cast(idType), col("dst").cast(idType))
+        .transform(Scratch.staged)
     }
     // Seed label = min(id, min direct neighbor): one aggregation that is
     // exactly the first propagation round for free. For the typical shape
     // (near-dup clusters are near-cliques) every member sees the cluster
     // min immediately and the loop below terminates on its first
     // no-change check.
-    var labels = Scratch.register(edges.groupBy(col("src").as("id"))
+    var labels = edges.groupBy(col("src").as("id"))
       .agg(least(first(col("src")), min(col("dst"))).as("label"))
-      .transform(Scratch.stage))
+      .transform(Scratch.staged)
     // Labels are node ids and only ever decrease, so sum(label) strictly
     // decreases until the fixed point: a one-column aggregate over the
     // just-checkpointed frame replaces a join-based change detector.
@@ -667,8 +664,7 @@ object Dedup {
           col("a.label") === col("jid"), "left")
         .select(col("a.id").as("id"),
           least(col("a.label"), coalesce(col("jlabel"), col("a.label"))).as("label"))
-        .transform(Scratch.stage)
-        .transform(Scratch.register)
+        .transform(Scratch.staged)
       // Labels only decrease, so an unchanged sum across a combined
       // propagate+jump round means neither step moved — a propagation
       // fixed point (the jump cannot move what propagation didn't).
@@ -755,10 +751,10 @@ object Dedup {
     // shingle+vote pipeline 3x. Chunk membership is a bit slice of the
     // fingerprint (bijective with the sign sub-array — identical bucket
     // collisions), and hamming is codegen'd bit_count(a ^ b).
-    val sigd = Scratch.register(Par.ensure(docs).select(col("doc_id"),
+    val sigd = docs.select(col("doc_id"),
       graft.functions.TextExpressions.simhashFp(
         TextAnalysis.tokens(col("text"))).as("fp"))
-      .transform(Scratch.stage))
+      .transform(Scratch.staged)
     val mask = if (width == 64) -1L else (1L << width) - 1
     val exploded = sigd.select(col("doc_id"),
       explode(array((0 until chunks).map { c =>

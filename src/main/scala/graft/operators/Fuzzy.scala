@@ -58,7 +58,7 @@ object Fuzzy {
     */
   private[operators] def candidatePairs(left: DataFrame, right: DataFrame,
       leftCol: String, rightCol: String, maxDist: Int): DataFrame =
-    rawCandidates(Par.ensure(left), right, leftCol, rightCol, maxDist)
+    rawCandidates(left, right, leftCol, rightCol, maxDist)
       .distinct()
 
   /** Segment-block collision pairs WITH witness multiplicity (a pair
@@ -96,14 +96,11 @@ object Fuzzy {
         col(leftCol).substr(start + 1, li).as("s"))).otherwise(lit(null))
     }
     // The left side carries the expansion (up to 75 probe keys/row) and,
-    // post-join, every candidate's distance eval — a single-partition
-    // left input would run all of it on one task (right is tiny and
-    // broadcast, so the join inherits LEFT's partitioning). Callers are
-    // responsible for width: editDistanceJoin hands in an explicitly
-    // repartitioned frame (a lazy width — probing partition count here
-    // via queryExecution.toRdd would eagerly finalize the AQE plan and
-    // run any upstream shuffle's map stage in a throwaway job);
-    // candidatePairs wraps its shuffle-free input in Par.ensure.
+    // post-join, every candidate's distance eval (right is tiny and
+    // broadcast, so the join inherits LEFT's partitioning):
+    // editDistanceJoin hands in an explicitly repartitioned frame, and
+    // candidatePairs' shuffle-free input is widened by the session's
+    // width rule (Par.WidenHeavyStages).
     val l = left.withColumn("__seg",
       explode(array_distinct(filter(array(probes: _*), _.isNotNull))))
     l.join(r, Seq("__seg")).drop("__seg")
@@ -146,9 +143,8 @@ object Fuzzy {
     // shuffle) and the post-distinct stage — which carries the probe
     // expansion and every distance eval — keeps `par` partitions. AQE
     // respects a user-specified partition count, where it would coalesce
-    // the small post-distinct exchange to one task; and unlike a
-    // partition-count probe (queryExecution.toRdd) this is fully lazy —
-    // no throwaway job re-running the distinct's map stage.
+    // the small post-distinct exchange to one task (the width rule leaves
+    // stages that start at an exchange alone).
     val par = left.sparkSession.sparkContext.defaultParallelism
     val ln = left.select(col(leftCol))
       .repartition(par, col(leftCol)).distinct()

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Iterative graph analytics over edge DataFrames. Connected components
   * (pointer jumping) lives in [[Dedup.clusters]]; this adds PageRank —
@@ -31,8 +32,7 @@ object Graph {
     // AQE-coalescible shuffle, and a small edge list would cache as ~one
     // partition — serializing every iteration's probe side (same trap as
     // the index layout writers, see Similarity.lshLayoutRows)
-    val parallelism = edges.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
+    val parallelism = Bridge.numShufflePartitions(edges.sparkSession)
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct()
       .repartition(parallelism, col("src"))
@@ -51,13 +51,13 @@ object Graph {
         .groupBy(col("node"))
         .agg((lit((1.0 - damping) / n) +
           lit(damping) * coalesce(sum(col("c")), lit(0.0))).as("rank"))
-      if (i % 2 == 0 && i < iters) ranks = ranks.transform(Scratch.stage)
+      if (i % 2 == 0 && i < iters) ranks = ranks.transform(Scratch.staged)
     }
     // Materialize the final ranks (localCheckpoint is eager), then release
     // the per-call caches — repeated invocations in one session must not
     // accumulate orphaned cached RDDs (same deterministic-release
     // discipline as [[Scratch.invalidate]]).
-    val out = ranks.transform(Scratch.stage)
+    val out = ranks.transform(Scratch.staged)
     e.unpersist()
     nodes.unpersist()
     out
@@ -129,7 +129,7 @@ object Graph {
     val counts = triangles
       .select(explode(array(col("a"), col("b"), col("c"))).as("doc_id"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_triangles"))
-      .transform(Scratch.stage)
+      .transform(Scratch.staged)
     directed.unpersist()
     counts.orderBy(col("doc_id"))
   }
@@ -199,12 +199,11 @@ object Graph {
     */
   def kCorePeel(pairs: DataFrame, k: Int = 2, rounds: Int = 3): DataFrame = {
     val spark = pairs.sparkSession
-    val parallelism =
-      spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parallelism = Bridge.numShufflePartitions(spark)
     var edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b"), col("doc_a")))
       .repartition(parallelism, col("src"))
-      .transform(Scratch.stage)
+      .transform(Scratch.staged)
     val census = (1 to rounds).map { r =>
       val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       val nNodes = deg.count()
@@ -213,7 +212,7 @@ object Graph {
       edges = edges
         .join(removed, col("src") === col("rm"), "left_anti")
         .join(removed, col("dst") === col("rm"), "left_anti")
-        .transform(Scratch.stage)
+        .transform(Scratch.staged)
       (r, nNodes, nRemoved)
     }
     import spark.implicits._

@@ -1,25 +1,34 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum, when}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution._
+import org.apache.spark.sql.execution.exchange.{EnsureRequirements, Exchange,
+  REPARTITION_BY_NUM, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+  BroadcastNestedLoopJoinExec}
+import org.apache.spark.sql.functions.{coalesce, col, lit, sum, when}
+import org.apache.spark.sql.types.{ArrayType, ObjectType}
 
-/** Parallelism guard for heavy per-row map stages.
+/** Partitioning policy: join-strategy pins, pair-expansion widths, and
+  * the one width rule for heavy per-row stages.
   *
-  * Operators like segment-blocked fuzzy join and minhash signatures do
-  * orders of magnitude more work per input row than a scan (candidate
-  * expansion, 64 hash passes): their wall-clock is bounded by the
-  * parallelism of the INPUT, and a small table read from a single
-  * parquet file arrives as ONE partition — the entire expansion chain
-  * then executes on one task while every other core idles. (Observed on
-  * q82 at sf0.1: 3.6M candidate expansions + bounded-levenshtein evals
-  * on a single task, ~4s; the same work spread over 32 tasks is a few
-  * hundred ms.)
-  *
-  * [[ensure]] round-robin-repartitions the input up to the session's
-  * default parallelism ONLY when it has fewer partitions — the
-  * repartition shuffles just the (small, pre-expansion) input rows. At
-  * cluster scale a 100 TB input already arrives in thousands of splits,
-  * so the guard is an identity there; it never *reduces* partitioning.
+  * Width policy ([[WidenHeavyStages]], injected by
+  * [[graft.GraftExtensions]]): a stage — the nodes between an input leaf
+  * and the next exchange — whose input has fewer partitions than the
+  * session's `defaultParallelism` and that does heavy per-row work gets a
+  * round-robin exchange to `defaultParallelism` under its lowest heavy
+  * node. A small table read from one parquet file arrives as ONE
+  * partition, and a kernel that does orders of magnitude more work per
+  * row than the scan (shingling, 64 hash passes, candidate expansion,
+  * tables × bits dot products) then runs on one task while every other
+  * core idles (q309 at the 100× fixture: 132 s → 11.3 s from width
+  * alone). The rule only ever widens: at cluster scale a 100 TB input
+  * already arrives in thousands of splits and is left untouched, and a
+  * stage that starts at an exchange keeps the width AQE gave it.
   */
 private[graft] object Par {
 
@@ -173,14 +182,106 @@ private[graft] object Par {
       math.max(par, math.ceil(twiceMass / 2.0 / target).toInt))
   }
 
-  def ensure(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    // Probe partitioning via the planned internal RDD (lazy — builds the
-    // DAG, runs no job). `df.rdd` would additionally stack a
-    // row-deserialization RDD conversion on top just to ask the same
-    // question.
-    if (df.queryExecution.toRdd.getNumPartitions < target)
-      df.repartition(target)
-    else df
+  /** The width policy as a physical rule. It runs after
+    * `EnsureRequirements` — as an AQE query-stage preparation rule, and
+    * as a pre-columnar rule for the plans AQE does not wrap (map-only
+    * plans such as a checkpointed kernel frame) — so it sees where the
+    * exchanges are and decides without running a job:
+    *
+    *   - input width is the partition count of the stage's input RDDs:
+    *     file scans without runtime (subquery or dynamic-pruning)
+    *     filters, `RDDScanExec` and local relations; a `Union` sums its
+    *     children; a broadcast join counts its streamed side only.
+    *     Anything else is unknown, and an unknown width inserts nothing;
+    *   - heavy work is an engine kernel (any expression in
+    *     `graft.functions`), a higher-order function, `split`, a regexp
+    *     replace/extract-all or `levenshtein`; a `Generate` over an
+    *     array-typed input column; or a typed-lambda map node whose
+    *     input rows carry an array column (a per-row vector kernel, not
+    *     a per-partition fold such as `Dedup.clusters`' union-find,
+    *     which contracts less the more partitions it sees);
+    *   - the exchange is `RoundRobinPartitioning(defaultParallelism)`
+    *     with origin `REPARTITION_BY_NUM` — what `df.repartition(n)`
+    *     plans, which AQE never coalesces. It goes directly under the
+    *     lowest heavy node, so cheap filters and projections below it
+    *     prune what crosses; a broadcast join under the heavy node is
+    *     width-preserving, so the exchange goes under its streamed side
+    *     instead of shipping the joined rows, and an object-typed child
+    *     (a typed map's deserializer) moves it under that node.
+    *
+    * A one-partition input satisfies every distribution, so the stage
+    * may hold aggregates or joins that planned no exchange; after an
+    * insertion `EnsureRequirements` runs again and adds the shuffles a
+    * wide input would have had.
+    */
+  case class WidenHeavyStages(session: SparkSession) extends Rule[SparkPlan] {
+    def apply(plan: SparkPlan): SparkPlan =
+      if (!plan.exists(heavy)) plan // plain plans: no input-width probe
+      else {
+        val widened = widen(plan, session.sparkContext.defaultParallelism)._1
+        if (widened eq plan) plan
+        else EnsureRequirements(optimizeOutRepartition = false).apply(widened)
+      }
   }
+
+  /** `p` with its heavy stages widened, and the partition count `p`
+    * outputs when its stage's input width is known. */
+  private def widen(p: SparkPlan, par: Int): (SparkPlan, Option[Int]) = p match {
+    case s: FileSourceScanExec => (p, Option.when(!(s.partitionFilters ++
+        s.dataFilters).exists(_.exists(e => e.isInstanceOf[PlanExpression[_]] ||
+        e.isInstanceOf[DynamicPruning])))(s.inputRDD.getNumPartitions))
+    case s: InputRDDCodegen if s.children.isEmpty =>
+      (p, Some(s.inputRDD.getNumPartitions)) // RDD and local relation scans
+    case _ if p.children.isEmpty => (p, None) // incl. query stages
+    case _ =>
+      val (kids, widths) = p.children.map(widen(_, par)).unzip
+      val q = if (kids.corresponds(p.children)(_ eq _)) p else p.withNewChildren(kids)
+      val in = (q, streamedIndex(q)) match {
+        case (_: Exchange, _) => None
+        case (_, Some(i)) => widths(i)
+        case (c: CoalesceExec, _) => widths.head.map(math.min(c.numPartitions, _))
+        case (_: UnionExec, _) => Option.when(widths.forall(_.isDefined))(widths.flatten.sum)
+        case (_: UnaryExecNode, _) => widths.head
+        case _ => None
+      }
+      if (in.exists(_ < par) && heavy(q)) (under(q, par), Some(par)) else (q, in)
+  }
+
+  /** Child index of a broadcast join's streamed side. */
+  private def streamedIndex(p: SparkPlan): Option[Int] = p match {
+    case j: BroadcastHashJoinExec => Some(if (j.buildSide == BuildLeft) 1 else 0)
+    case j: BroadcastNestedLoopJoinExec => Some(if (j.buildSide == BuildLeft) 1 else 0)
+    case _ => None
+  }
+
+  /** `p` with the widening exchange on its input side (a broadcast join's
+    * streamed side, else its child), pushed further under broadcast joins
+    * and under object-typed nodes, whose rows cannot be shuffled. */
+  private def under(p: SparkPlan, par: Int): SparkPlan = {
+    val i = streamedIndex(p).getOrElse(0)
+    val c = p.children(i)
+    p.withNewChildren(p.children.updated(i,
+      if (streamedIndex(c).isDefined || c.output.exists(_.dataType.isInstanceOf[ObjectType]))
+        under(c, par)
+      else ShuffleExchangeExec(RoundRobinPartitioning(par), c, REPARTITION_BY_NUM)))
+  }
+
+  private def heavy(p: SparkPlan): Boolean = p match {
+    case _: MapPartitionsExec | _: MapElementsExec => p.children.head match {
+      case d: DeserializeToObjectExec => d.child.output.exists(isArray)
+      case _ => false
+    }
+    case g: GenerateExec if g.generator.children.exists {
+      case Cast(a: Attribute, _, _, _) => isArray(a)
+      case a: Attribute => isArray(a)
+      case _ => false
+    } => true
+    case _ => p.expressions.exists(_.exists {
+      case _: HigherOrderFunction | _: StringSplit | _: RegExpReplace |
+          _: RegExpExtractAll | _: Levenshtein => true
+      case e => e.getClass.getPackageName == "graft.functions"
+    })
+  }
+
+  private def isArray(e: Expression): Boolean = e.dataType.isInstanceOf[ArrayType]
 }

@@ -50,12 +50,12 @@ object Ranks {
     require(clash.isEmpty,
       s"globalRowNumber: input already has column(s) ${clash.mkString(", ")} " +
         "— withColumn would silently replace them; rename before ranking")
-    val ranged = Scratch.register(df
+    val ranged = df
       .repartitionByRange(order: _*)
       .sortWithinPartitions(order: _*)
       .withColumn("__pid", spark_partition_id())
       .withColumn("__mid", monotonically_increasing_id())
-      .transform(Scratch.stage))
+      .transform(Scratch.staged)
     val wPrev = Window.orderBy(col("__pid"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val wAll = Window.orderBy(col("__pid"))
@@ -106,11 +106,11 @@ object Ranks {
         org.apache.spark.sql.types.LongType).contains(vt),
       s"globalPrefixSum: '$valueCol' is $vt — only integer values keep " +
         "the partitioned prefix sum independent of partition boundaries")
-    val ranged = Scratch.register(df
+    val ranged = df
       .repartitionByRange(order: _*)
       .sortWithinPartitions(order: _*)
       .withColumn("__pid", spark_partition_id())
-      .transform(Scratch.stage))
+      .transform(Scratch.staged)
     val wPrev = Window.orderBy(col("__pid"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val offsets = ranged.groupBy(col("__pid"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import graft.cube.Engine
 
 /** Relational operators beyond the cube query surface: top-k, window
@@ -1166,7 +1167,7 @@ object Relational {
     */
   def openOrderBacklog(spark: SparkSession, dir: String): DataFrame = {
     val en = e(spark, dir)
-    val parallelism = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parallelism = Bridge.numShufflePartitions(spark)
     val lastShip = en.table("lineitem")
       .groupBy(col("l_orderkey"))
       .agg(max(col("l_shipdate")).as("last_ship"))

@@ -12,8 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * until the driver happens to GC the plan references (ContextCleaner),
   * which on a long-lived session means every later query runs against a
   * storage pool full of dead blocks — exactly the eviction pressure a
-  * 100 TB deployment cannot afford. Operators [[register]] each scratch
-  * frame as they checkpoint it; the HARNESS (Verify / Bench / a
+  * 100 TB deployment cannot afford. Operators checkpoint each scratch
+  * frame through [[staged]], which records it; the HARNESS (Verify / Bench / a
   * production pipeline driver) calls [[releaseAll]] at each query
   * boundary, after the result is materialized to its sink.
   *
@@ -98,11 +98,11 @@ object Scratch {
     } else df.localCheckpoint()
   }
 
-  /** [[stage]] + [[register]] in one call — the shape most scratch
-    * frames want: lineage cut now, blocks released at the next query
-    * boundary.
+  /** [[stage]], recorded in the QUERY scope — the per-query scratch
+    * checkpoint: lineage cut now, blocks released at the next query
+    * boundary ([[releaseAll]]).
     */
-  def staged(df: DataFrame): DataFrame = register(stage(df))
+  def staged(df: DataFrame): DataFrame = record(stage(df), QueryScope)
 
   /** [[stage]] for [[memo]]ized multi-consumer frames (the shared
     * pair/postings/counts memos), recorded in the SESSION scope so
@@ -129,12 +129,6 @@ object Scratch {
     }.foreach(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     record(ck, SessionScope)
   }
-
-  /** Register an already-[[stage]]d intermediate for release at
-    * the next query boundary. Returns the frame, so call sites stay
-    * one-liners: `Scratch.register(Scratch.stage(df))`.
-    */
-  def register(df: DataFrame): DataFrame = record(df, QueryScope)
 
   private def record(df: DataFrame, scope: String): DataFrame = {
     pruneStopped(_.sparkContext.isStopped)

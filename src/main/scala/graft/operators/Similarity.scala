@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Approximate & exact nearest-neighbor search over an embedding column
   * (`array<float>`), plus embedding-cosine near-duplicate detection.
@@ -209,14 +210,7 @@ object Similarity {
       struct(lit(t).as("tbl"),
         lshKeyOffset(col("embedding"), t * bits, bits, dim).as("bucket"))
     }: _*)
-    // Par.ensure: the hyperplane keying (tables × bits dot products per
-    // vector) is the pipeline's hot map kernel and would otherwise run
-    // at the SCAN's width — the embeddings table arrives as 1-2 parquet
-    // row groups even at the 100× fixture (49 MB, 2 row groups → 2
-    // working tasks behind 13 byte-splits; measured 66.6 s of q118's
-    // 105 s x100 cold pass in that one stage). The q309 guard, same as
-    // every text pipeline's shingle kernel (Dedup.scala).
-    val keyed = Par.ensure(emb.select(col("vec_id"), col("embedding")))
+    val keyed = emb.select(col("vec_id"), col("embedding"))
       .select(col("vec_id"), explode(keys).as("k"))
       .select(col("vec_id"), col("k.tbl").as("tbl"), col("k.bucket").as("bucket"))
     // one aggregation per bucket (see Dedup.bucketPairs): sigs computed
@@ -383,7 +377,7 @@ object Similarity {
     * down to.
     */
   private def layoutParallelism(df: DataFrame): Int =
-    df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    Bridge.numShufflePartitions(df.sparkSession)
 
   /** Incremental LSH index maintenance — the bucketed-layout twin of
     * [[ivfIndexIncremental]], and the EASIER of the two: LSH keys are
@@ -1209,13 +1203,13 @@ object Similarity {
     * needs O(n²); the variance identity gives the same signal in O(n)).
     */
   def embeddingDiversity(emb: DataFrame): DataFrame = {
-    val ex = Par.ensure(emb).select(col("label"),
+    val ex = emb.select(col("label"),
       posexplode(col("embedding").cast("array<double>")))
     val spread = ex.groupBy(col("label"), col("pos"))
       .agg(var_pop(col("col")).as("v"))
       .groupBy(col("label"))
       .agg(round(sum(col("v")), 4).as("spread"))
-    Par.ensure(emb).groupBy(col("label"))
+    emb.groupBy(col("label"))
       .agg(count(lit(1)).as("n_members"),
         round(avg(norm(col("embedding").cast("array<double>"))), 4)
           .as("avg_norm"))
@@ -1499,14 +1493,7 @@ object Similarity {
       maxId: Long = 128L): DataFrame = {
     val anchors = emb.filter(col("vec_id") < maxId)
       .select(col("vec_id").as("a_id"), col("embedding").as("e_a"))
-    // Par.ensure: the ×|anchors| broadcast pair kernel (two cosines per
-    // pair) runs ON the corpus scan's splits, and the embeddings table
-    // arrives as ONE split at fixture scale (single row group) — the
-    // whole expansion then computes on one core (measured: 0.9 s
-    // single-task stage emitting 256 k pair rows at sf0.1 — the q309
-    // lesson). The guard is a no-op whenever the scan is already wide.
-    val pairs = Par.ensure(emb.select(col("vec_id").as("b_id"),
-        col("embedding").as("e_b")))
+    val pairs = emb.select(col("vec_id").as("b_id"), col("embedding").as("e_b"))
       .join(broadcast(anchors), col("a_id") =!= col("b_id"))
       .select(col("a_id"), col("b_id"),
         round(cosine(col("e_a"), col("e_b")), 4).as("c_full"),
@@ -1580,12 +1567,8 @@ object Similarity {
       }
       (ids, vecs, norms)
     }
-    // the kernel does evals x dim work PER ROW — wall-clock is bounded
-    // by input parallelism, and a ~50 MB embeddings file arrives as one
-    // scan split (shuffle-free input: the Par probe runs no job)
     val cmaxPerVec = emb.filter(col("label") =!= evalLabel)
       .select(col("vec_id"), col("embedding"))
-      .transform(Par.ensure)
       .as[(Long, Array[Float])]
       .mapPartitions { it =>
         val (eids, evecs, enorms) = bc.value
@@ -1670,10 +1653,7 @@ object Similarity {
       maxId: Long = 128L): DataFrame = {
     val anchors = emb.filter(col("vec_id") < maxId)
       .select(col("vec_id").as("a_id"), col("embedding").as("e_a"))
-    // same width guard as [[matryoshkaRecall]] — the pair kernel must
-    // not inherit a 1-split fixture scan (q309 lesson)
-    val pairs = Par.ensure(emb.select(col("vec_id").as("b_id"),
-        col("embedding").as("e_b")))
+    val pairs = emb.select(col("vec_id").as("b_id"), col("embedding").as("e_b"))
       .join(broadcast(anchors), col("a_id") =!= col("b_id"))
       .select(col("a_id"), col("b_id"),
         round(cosine(col("e_a"), col("e_b")), 4).as("c_full"),

@@ -14,6 +14,12 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** The session's `SQLConf.numShufflePartitions`, read typed — never by
+    * parsing the `spark.sql.shuffle.partitions` string. */
+  def numShufflePartitions(spark: SparkSession): Int =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.numShufflePartitions
+
   /** Register an expression builder under a SQL-callable name. */
   def registerFunction(
       spark: SparkSession,

@@ -84,9 +84,16 @@ class DriverHotspotLintSpec extends AnyFunSuite {
       // localCheckpoint block-release plumbing (ids, unpersist) plus
       // stageShared's reliable-mode persist of the checkpointed RDD —
       // never a data path
-      "graft/operators/Scratch.scala" -> 2,
-      // partition-count probe on the analyzed plan (no job)
-      "graft/operators/Par.scala" -> 1))
+      "graft/operators/Scratch.scala" -> 2))
+  }
+
+  test("no eager partition-count probe at DataFrame construction") {
+    // `queryExecution.toRdd` plans the query physically at construction
+    // time and, over an upstream shuffle, runs a throwaway job; input
+    // width is the width rule's decision (Par.WidenHeavyStages), made at
+    // planning time without a job
+    assertCeilings("queryExecution.toRdd", """queryExecution\s*\.\s*toRdd""",
+      Map.empty)
   }
 
   test("TrieMap registries stay confined to Scratch and the schema memo") {

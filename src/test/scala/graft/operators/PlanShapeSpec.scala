@@ -15,15 +15,67 @@ class PlanShapeSpec extends SparkFunSuite {
     df.queryExecution.executedPlan.toString
   }
 
-  test("Par.ensure is identity for already-parallel inputs, widens serial ones") {
-    import graft.SparkTestBase.spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val target = spark.sparkContext.defaultParallelism
-    val wide = (1 to 100).toDF("x").repartition(target, col("x"))
-    // identity — no extra exchange inserted at cluster scale
-    assert(graft.operators.Par.ensure(wide) eq wide)
-    val narrow = (1 to 100).toDF("x").coalesce(1)
-    assert(graft.operators.Par.ensure(narrow).rdd.getNumPartitions == target)
+  test("width rule widens a heavy one-partition stage under its kernel, nothing else") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.StringSplit
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import org.apache.spark.sql.functions.{col, size, split, upper}
+    val s = spark
+    import s.implicits._
+    object Plans extends AdaptiveSparkPlanHelper
+    val par = spark.sparkContext.defaultParallelism
+    val base = (1 to 100).map(i => s"a b $i").toDF("t")
+    def kernel(in: DataFrame): DataFrame = in.select(size(split(col("t"), " ")).as("n"))
+    def widenings(df: DataFrame): Seq[ShuffleExchangeExec] = {
+      df.collect()
+      Plans.collect(df.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM => e
+      }
+    }
+    val narrow = kernel(base.coalesce(1))
+    val ex = widenings(narrow)
+    assert(ex.size == 1, "a heavy stage over one partition gets one exchange")
+    assert(ex.head.outputPartitioning == RoundRobinPartitioning(par))
+    def splits(p: org.apache.spark.sql.execution.SparkPlan): Boolean =
+      Plans.find(p)(_.expressions.exists(_.exists(_.isInstanceOf[StringSplit]))).isDefined
+    assert(splits(narrow.queryExecution.executedPlan) && !splits(ex.head.child),
+      "the exchange must sit below the kernel")
+    assert(narrow.collect().map(_.getInt(0)).toSet == Set(3))
+    // already as wide as the session: left untouched (the 100 TB case)
+    assert(widenings(kernel(base.coalesce(par))).isEmpty)
+    // cheap per-row work is not worth a shuffle
+    assert(widenings(base.coalesce(1).select(upper(col("t")))).isEmpty)
+  }
+
+  test("width rule leaves every registered cube query's plans alone") {
+    val cubeQueries = Seq("q01_", "q02_", "q03_", "q04_", "q05_", "q06_", "q07_",
+      "q08_", "q09_", "q10_", "q17_", "q18_", "q19_", "q20_", "q146_")
+      .map(p => SparkEntry.queries.keys.find(_.startsWith(p)).get)
+    for (name <- cubeQueries) {
+      val n = org.apache.spark.graftplans.PlanCensus.widenings(spark) {
+        SparkEntry.queries(name)(spark, sf).collect()
+      }
+      assert(n == 0, s"$name gained a widening exchange")
+    }
+  }
+
+  test("width rule widens the kernels the hand-placed guards covered") {
+    // a fresh session per query has no memos, so the memo and staging
+    // builds that run each kernel execute (and are counted) here
+    for (name <- Seq("q150_langid_confusion", "q26_minhash_pairs",
+        "q27_simhash_pairs", "q30_embed_neardup", "q122_embedding_diversity",
+        "q141_perplexity_buckets", "q302_matryoshka_recall",
+        "q309_semantic_decontam", "q311_truncation_ndcg")) {
+      val s2 = spark.newSession()
+      val n = org.apache.spark.graftplans.PlanCensus.widenings(s2) {
+        SparkEntry.queries(name)(s2, sf).collect()
+      }
+      graft.operators.Scratch.releaseAll(s2)
+      graft.operators.Scratch.invalidate(s2)
+      assert(n >= 1, s"$name lost the widening exchange under its kernel")
+    }
   }
 
   test("pair-family verification joins stay in the shuffle regime") {

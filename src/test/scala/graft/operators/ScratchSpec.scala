@@ -137,6 +137,22 @@ class ScratchSpec extends SparkFunSuite {
     Scratch.invalidate(s2)
   }
 
+  test("graph operators register their checkpoint frames as scratch") {
+    // pageRank's iteration barriers and output, the triangle census and
+    // every k-core peel round are staged; unregistered, their blocks
+    // stayed pinned until GC instead of draining at the query boundary
+    val s2 = spark.newSession()
+    Scratch.invalidate(s2)
+    val docs = new graft.cube.Engine(s2, sf).table("documents")
+    Dedup.minhashPairsShared(docs, sf).collect() // the shared pair memo
+    Scratch.releaseAll(s2)
+    for (q <- Seq("q90_pagerank", "q102_triangles", "q315_kcore_peel")) {
+      graft.SparkEntry.queries(q)(s2, sf).collect()
+      assert(Scratch.releaseAll(s2) >= 1, s"$q must register its staged frames")
+    }
+    Scratch.invalidate(s2)
+  }
+
   test("cluster iteration frames are scratch, released after the consumer drains") {
     val s2 = spark.newSession()
     import s2.implicits._
