@@ -726,6 +726,24 @@ object EventAnalytics {
       .orderBy(col("n_types"))
   }
 
+  /** The 30-minute-gap sessionization q272, q289 and q294 share: per
+    * user in (ts, event_id) order, `prev` is the previous event's ts,
+    * `new_s` flags an event that opens a session (first event, or more
+    * than 30 minutes after `prev`), and the running sum of `new_s` is the
+    * session id `sid`. Needs (user_id, ts, event_id).
+    */
+  private def sessionIds(events: DataFrame): DataFrame = {
+    val wu = Window.partitionBy(col("user_id"))
+      .orderBy(col("ts"), col("event_id"))
+    events
+      .withColumn("prev", lag(col("ts"), 1).over(wu))
+      .withColumn("new_s", when(col("prev").isNull ||
+        col("ts") > col("prev") + expr("INTERVAL 30 MINUTES"), 1L)
+        .otherwise(0L))
+      .withColumn("sid", sum(col("new_s")).over(
+        wu.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+  }
+
   /** Session value by entry channel: which first-touch surface opens the
     * sessions that go on to purchase — per entry event type: session
     * count, sessions containing a purchase, purchase-value total/mean.
@@ -734,15 +752,7 @@ object EventAnalytics {
     * min + conditional sums — no second window pass).
     */
   def entryChannelValue(spark: SparkSession, dir: String): DataFrame = {
-    val wu = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val perSess = new graft.cube.Engine(spark, dir).table("events")
-      .withColumn("prev", lag(col("ts"), 1).over(wu))
-      .withColumn("new_s", when(col("prev").isNull ||
-        col("ts") > col("prev") + expr("INTERVAL 30 MINUTES"), 1L)
-        .otherwise(0L))
-      .withColumn("sid", sum(col("new_s")).over(
-        wu.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val perSess = sessionIds(new graft.cube.Engine(spark, dir).table("events"))
       .groupBy(col("user_id"), col("sid"))
       .agg(
         min(struct(col("ts"), col("event_id"), col("event_type")))
@@ -821,18 +831,10 @@ object EventAnalytics {
     * exchange and no width forecast is needed.
     */
   def sessionTypeLift(spark: SparkSession, dir: String): DataFrame = {
-    val wu = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val sess = Scratch.staged(new graft.cube.Engine(spark, dir)
-      .table("events")
-      .withColumn("prev", lag(col("ts"), 1).over(wu))
-      .withColumn("new_s", when(col("prev").isNull ||
-        col("ts") > col("prev") + expr("INTERVAL 30 MINUTES"), 1L)
-        .otherwise(0L))
-      .withColumn("sid", sum(col("new_s")).over(
-        wu.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("user_id"), col("sid"))
-      .agg(sort_array(collect_set(col("event_type"))).as("types")))
+    val sess = Scratch.staged(
+      sessionIds(new graft.cube.Engine(spark, dir).table("events"))
+        .groupBy(col("user_id"), col("sid"))
+        .agg(sort_array(collect_set(col("event_type"))).as("types")))
     val nSess = sess.agg(count(lit(1)).as("n_sessions"))
     val perType = sess.select(explode(col("types")).as("event_type"))
       .groupBy(col("event_type"))
@@ -1028,15 +1030,7 @@ object EventAnalytics {
     * (user_id, ts, event_id, event_type).
     */
   def sessionEntryExitOf(events: DataFrame): DataFrame = {
-    val wu = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val perSess = events
-      .withColumn("prev", lag(col("ts"), 1).over(wu))
-      .withColumn("new_s", when(col("prev").isNull ||
-        col("ts") > col("prev") + expr("INTERVAL 30 MINUTES"), 1L)
-        .otherwise(0L))
-      .withColumn("sid", sum(col("new_s")).over(
-        wu.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val perSess = sessionIds(events)
       .groupBy(col("user_id"), col("sid"))
       .agg(
         min(struct(col("ts"), col("event_id"), col("event_type")))

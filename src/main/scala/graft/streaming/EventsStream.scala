@@ -1,21 +1,35 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+  StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming over the events table (absent in the reference —
   * batch-only, SURVEY §2.9 — provided as [EXT] engine surface).
   *
-  * The batch parquet drives the stream synchronously (memory sink +
-  * Trigger.AvailableNow, awaited to self-termination), so results are
-  * deterministic and oracle-checkable
-  * against the equivalent batch SQL. At scale the same plans run against a
-  * real source (Kafka/files) with the watermark bounding state: the
-  * tumbling-window agg keeps one row per (window, type) per trigger, and
-  * the stateful session op keeps one state row per user.
+  * Every registered streaming query ends in the one [[drain]]: the batch
+  * parquet drives the stream under Trigger.AvailableNow, awaited to
+  * self-termination, so results are deterministic and oracle-checkable
+  * against the equivalent batch SQL. The drain writes one of three sinks:
+  *
+  *   - memory: the memory view is the answer (bounded results);
+  *   - overwrite: Complete mode; each trigger overwrites a parquet sink
+  *     with an executor-side rollup of the state, so user-grain state
+  *     never reaches the driver (q163, q175);
+  *   - per-batch: Append mode; batch `bid` overwrites its own
+  *     `__bid=<bid>` parquet directory with a batch operator's output
+  *     (q116, q123).
+  *
+  * The drain owns the whole lifecycle — stop a same-named stream, pick
+  * or resume the checkpoint, scope the state conf, run, delete the
+  * checkpoint, read the answer back — and sets no session conf of its
+  * own. At scale the same plans run against a real source (Kafka/files)
+  * with the watermark bounding state: the tumbling-window agg keeps one
+  * row per (window, type) per trigger, and the stateful session op keeps
+  * one state row per user.
   */
 object EventsStream {
 
@@ -27,30 +41,14 @@ object EventsStream {
     * nanos-as-long -> micros; timestamp types pass through) and cast to
     * tz-aware TIMESTAMP — watermarks demand it, and under the pinned UTC
     * session the NTZ->TZ cast is value-preserving. Cast back to NTZ only
-    * at the output edge.
+    * at the output edge. Returned with the input byte size
+    * ([[streamTable]]), which [[drain]] sizes the state width by.
     */
-  private def streamingEvents(spark: SparkSession, dir: String): DataFrame = {
+  private def streamingEvents(spark: SparkSession, dir: String): (DataFrame, Long) = {
     val stored = graft.cube.Engine.datasetSchema(spark, s"$dir/events.parquet")
-    // Input-size hint for the drain harness's stateful-partition width
-    // (driver-side metadata stat, like the footer read above). Stateful
-    // state cardinality grows with the input, so the state width must
-    // track the workload, not the fixture tuning — the
-    // Par.pairExpansionWidth lesson applied to streaming state. Summed
-    // through the Hadoop FS API (java.nio Files.size on a MULTI-FILE
-    // parquet directory returns the ~4 KB directory entry, silently
-    // collapsing the width to the floor), and refreshed per dir — on
-    // failure the hint is CLEARED, never left stale from a previous
-    // dataset in the same session.
-    try {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      spark.conf.set("spark.graft.streaming.inputBytesHint",
-        fs.getContentSummary(p).getLength.toString)
-    } catch { case _: Throwable =>
-      spark.conf.set("spark.graft.streaming.inputBytesHint", "0")
-    }
-    graft.cube.Engine.adaptTs(streamTable(spark, dir, "events", stored))
-      .withColumn("ts", col("ts").cast(TimestampType))
+    val (raw, bytes) = streamTable(spark, dir, "events", stored)
+    (graft.cube.Engine.adaptTs(raw).withColumn("ts", col("ts").cast(TimestampType)),
+      bytes)
   }
 
   /** Stream a fixture table, handling both physical layouts a parquet
@@ -64,44 +62,47 @@ object EventsStream {
     * count when set — the multi-batch knob the driver-restart chaos
     * harness uses to make checkpoint RESUME meaningful (some batches
     * committed, some not).
+    *
+    * Also returns the table's byte size, a driver-side metadata stat
+    * summed through the Hadoop FS API (java.nio Files.size on a
+    * multi-file parquet directory returns the ~4 KB directory entry,
+    * silently collapsing the state width to its floor); 0 when the path
+    * cannot be read.
     */
   private def streamTable(spark: SparkSession, dir: String, table: String,
-      schema: StructType): DataFrame = {
+      schema: StructType): (DataFrame, Long) = {
     val path = s"$dir/$table.parquet"
     val reader = spark.readStream.schema(schema)
     spark.conf.getOption("spark.graft.streaming.maxFilesPerTrigger")
       .foreach(reader.option("maxFilesPerTrigger", _))
-    val isDir =
+    val (isDir, bytes) =
       try {
         val p = new org.apache.hadoop.fs.Path(path)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .getFileStatus(p).isDirectory
-      } catch { case _: Throwable => false }
-    if (isDir) reader.parquet(path)
-    else reader.option("pathGlobFilter", s"$table.parquet").parquet(dir)
+        val fs = hadoopFs(spark, path)
+        (fs.getFileStatus(p).isDirectory, fs.getContentSummary(p).getLength)
+      } catch { case _: Throwable => (false, 0L) }
+    if (isDir) (reader.parquet(path), bytes)
+    else (reader.option("pathGlobFilter", s"$table.parquet").parquet(dir), bytes)
   }
 
-  /** Ephemeral checkpoint dir for the in-process drain harness. The
-    * memory/foreachBatch drains are synchronous oracle-checkable runs
-    * whose checkpoints are deleted at stop — temp-checkpoint semantics,
-    * no durability contract — yet Spark's default temp location
-    * (java.io.tmpdir) sits on DISK, so every micro-batch pays offset-log
-    * + commit-log + state-snapshot fsyncs for files that outlive nothing.
-    * Point the scratch at RAM-backed storage when present
-    * (`spark.graft.streaming.scratchDir`, default `/dev/shm`; set it to
-    * a path or leave unset to fall back to Spark's own temp dir when
-    * /dev/shm is absent). Production `writeStream` deployments are NOT
-    * routed through here — they set a durable checkpointLocation on
-    * shared storage as always; this helper is reached only from the
-    * drain harness below.
+  /** Ephemeral checkpoint dir for a drain. Drains are synchronous
+    * oracle-checkable runs whose checkpoints are deleted at stop —
+    * temp-checkpoint semantics, no durability contract — yet Spark's
+    * default temp location (java.io.tmpdir) sits on DISK, so every
+    * micro-batch pays offset-log + commit-log + state-snapshot fsyncs for
+    * files that outlive nothing. Point the scratch at RAM-backed storage
+    * when present (`spark.graft.streaming.scratchDir`, default
+    * `/dev/shm`; set it to a path or leave unset to fall back to Spark's
+    * own temp dir when /dev/shm is absent). Production deployments set a
+    * durable checkpointLocation on shared storage and never come here.
     */
   private def scratchCheckpoint(spark: SparkSession, name: String): Option[String] = {
     // `spark.graft.streaming.pinnedCkptRoot`: a STABLE per-drain
     // checkpoint path (no applicationId/nanoTime) — the driver-restart
     // chaos mode. A restarted JVM finds the killed run's offsets/state
-    // under the same path and RESUMES instead of reprocessing from
-    // offset zero; on clean completion the drain still deletes it, so
-    // the pin changes nothing for successful runs.
+    // under the same path and RESUMES (see drain) instead of
+    // reprocessing from offset zero; on clean completion the drain
+    // still deletes it, so the pin changes nothing for successful runs.
     spark.conf.getOption("spark.graft.streaming.pinnedCkptRoot") match {
       case Some(root) => Some(s"$root/$name")
       case None =>
@@ -116,156 +117,169 @@ object EventsStream {
     }
   }
 
-  /** True when a pinned checkpoint from an interrupted prior run exists
-    * for this drain — the restarted JVM must then KEEP the sink (batches
-    * the dead run committed live there; the resumed stream writes only
-    * the rest) instead of resetting it.
-    */
-  private def resuming(spark: SparkSession, name: String): Boolean =
-    spark.conf.getOption("spark.graft.streaming.pinnedCkptRoot")
-      .exists(root => sinkExists(spark, s"$root/$name"))
+  /** Floor of the stateful width: stateful operators keep one state
+    * store per shuffle partition (per join side) and the store
+    * bookkeeping dominates at fixture volume — measured 3.5x on the
+    * stream-stream join going 32 -> 8 partitions, a further ~11% across
+    * the 17-stream sweep going 8 -> 4 (q109 3.1 -> 2.3 s), and 4 -> 2
+    * flat. */
+  private val MinStateWidth = 4
 
-  /** Scoped session conf every STATEFUL drain runs under (restored on
-    * exit):
-    *
-    *   - Stateful-partition width. Stateful operators keep one state
-    *     store per shuffle partition (per join side) and the store
-    *     bookkeeping dominates at fixture volume — measured 3.5x on the
-    *     stream-stream join going 32 -> 8 partitions, a further ~11%
-    *     across the 17-stream sweep going 8 -> 4 (q109 3.1 -> 2.3 s),
-    *     and 4 -> 2 flat, so 4 is the fixture floor. But state
-    *     CARDINALITY grows with the input, so the floor scales with the
-    *     observed input size (`inputBytesHint`, set by
-    *     [[streamingEvents]]) — at the 100× fixture the WAU drain's
-    *     (window × user) state is ~28M rows, and a fixture-static width
-    *     would put ~7M-row state stores on single cores (the
-    *     `Par.pairExpansionWidth` lesson applied to streaming state). An
-    *     explicit `spark.graft.streaming.partitions` wins verbatim;
-    *     either way the width is capped at the session's shuffle width.
-    *   - State store provider: RocksDB by default — the provider a
-    *     production deployment runs, because HDFS-backed state maps live
-    *     on the executor HEAP and a corpus-growing keyspace (users, join
-    *     keys, window×user dedup state) kills an executor-sized heap
-    *     outright (observed live: q163's drain at the 100× fixture under
-    *     local-cluster[4,8,8192] heap-OOM'd all four executors, raw
-    *     java.lang.OutOfMemoryError). RocksDB keeps state in native
-    *     memory + local disk and results are provider-agnostic
-    *     (RocksDbStateSpec). Opt out per session with
-    *     `spark.graft.streaming.heapState=true` (fixture-scale A/B).
+  /** Input bytes per state partition above the floor: state CARDINALITY
+    * grows with the input — at the 100× fixture the WAU drain's
+    * (window × user) state is ~28M rows, and a fixture-static width
+    * would put ~7M-row state stores on single cores (the
+    * `Par.pairExpansionWidth` lesson applied to streaming state). */
+  private val StateBytesPerPartition = 32L << 20
+
+  /** Scoped session conf a stateful drain runs under (restored on exit):
+    * width `min(session shuffle width, max(4, ⌈input bytes / 32 MiB⌉))`,
+    * and the RocksDB state store — HDFS-backed state maps live on the
+    * executor HEAP, and a corpus-growing keyspace (users, join keys,
+    * window×user dedup state) kills an executor-sized heap outright
+    * (observed live: q163's drain at the 100× fixture under
+    * local-cluster[4,8,8192] heap-OOM'd all four executors). RocksDB
+    * keeps state in native memory + local disk, and results are
+    * provider-agnostic (RocksDbStateSpec).
     */
-  private def withStatefulDrainConf[T](spark: SparkSession)(body: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val width = spark.conf.getOption("spark.graft.streaming.partitions")
-      .map(_.toInt)
-      .getOrElse {
-        val bytes = spark.conf
-          .get("spark.graft.streaming.inputBytesHint", "0").toLong
-        val per = spark.conf
-          .get("spark.graft.streaming.bytesPerStatePartition",
-            (32L << 20).toString).toLong
-        math.max(4, math.ceil(bytes.toDouble / per).toInt)
-      }
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.min(prev.toInt, width).toString)
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    if (!spark.conf.get("spark.graft.streaming.heapState", "false").toBoolean)
-      spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
+  private def withStateConf(spark: SparkSession, inputBytes: Long)(body: => Unit): Unit = {
+    val width = math.min(Bridge.numShufflePartitions(spark), math.max(MinStateWidth,
+      math.ceil(inputBytes.toDouble / StateBytesPerPartition).toInt))
+    val scoped = Seq("spark.sql.shuffle.partitions" -> width.toString,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // explicit settings only: restoring a default would pin it in the conf
+    val saved = scoped.map { case (k, _) => k -> spark.conf.getAll.get(k) }
+    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
-    finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      prevProv match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None => spark.conf.unset(provKey)
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Where a drain's answer lands — see the object doc. */
+  private sealed trait Sink
+  private case object Memory extends Sink
+  /** `rollup` runs executor-side on the full state each trigger. */
+  private final case class Overwrite(rollup: DataFrame => DataFrame) extends Sink
+  /** `f` runs on each micro-batch as a plain batch DataFrame. Each batch
+    * overwrites its OWN `__bid=<bid>` directory: foreachBatch is
+    * at-least-once — a driver killed between the parquet write and the
+    * commit-log write re-runs that batch on restart, and a plain append
+    * would then hold its rows TWICE; re-overwriting the same batch
+    * directory is a no-op, so the sink reads back exactly once. */
+  private final case class PerBatch(f: DataFrame => DataFrame) extends Sink
+
+  /** Run `df` to completion into `sink` and return the drained answer.
+    *
+    *   - A same-named active stream is stopped first.
+    *   - Resume: a checkpoint that already exists (only a pinned one
+    *     can) is resumed only when the sink outlives the process — the
+    *     parquet sinks, which hold the batches the dead run committed.
+    *     A memory sink died with the old process, so resuming its
+    *     offsets would lose every pre-kill emission: that drain, and
+    *     every drain with no checkpoint to resume, starts from an empty
+    *     checkpoint and sink.
+    *   - Trigger.AvailableNow, not default-trigger + processAllAvailable
+    *     + stop: the end offsets are computed once at start, the engine
+    *     runs exactly the needed micro-batches (including the no-data
+    *     batch that advances the watermark and flushes append-finalized
+    *     state) and then terminates itself.
+    *   - State conf ([[withStateConf]]) scopes every drain except the
+    *     per-batch ones: their functions run batch joins on the stream's
+    *     session and keep the session's width.
+    *   - The checkpoint is deleted in a `finally`, so a failed or
+    *     interrupted stream leaks no directory.
+    *   - When no trigger fired (a source with no files) no parquet sink
+    *     exists; the answer is then the sink's own function over an
+    *     empty frame of `df`'s schema.
+    */
+  private def drain(df: DataFrame, inputBytes: Long, name: String,
+      mode: OutputMode, sink: Sink): DataFrame = {
+    val spark = df.sparkSession
+    val query = s"graft_stream_$name"
+    spark.streams.active.filter(_.name == query).foreach(_.stop())
+    val ckpt = scratchCheckpoint(spark, name)
+    val out = batchSink(spark, name)
+    if (sink == Memory || !ckpt.exists(sinkExists(spark, _)))
+      (ckpt.toSeq :+ out).foreach(resetSink(spark, _))
+    val writer = df.writeStream.outputMode(mode).queryName(query)
+      .trigger(Trigger.AvailableNow())
+    ckpt.foreach(writer.option("checkpointLocation", _))
+    sink match {
+      case Memory => writer.format("memory")
+      case Overwrite(rollup) => writer.foreachBatch { (batch: DataFrame, _: Long) =>
+        rollup(batch).write.mode("overwrite").parquet(out)
+      }
+      case PerBatch(f) => writer.foreachBatch { (batch: DataFrame, bid: Long) =>
+        f(batch).write.mode("overwrite").parquet(s"$out/__bid=$bid")
       }
     }
+    def run(): Unit =
+      try writer.start().awaitTermination()
+      finally ckpt.foreach(resetSink(spark, _))
+    sink match {
+      case _: PerBatch => run()
+      case _ => withStateConf(spark, inputBytes)(run())
+    }
+    def empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], df.schema)
+    sink match {
+      case Memory => spark.table(query)
+      case Overwrite(rollup) =>
+        if (sinkExists(spark, out)) spark.read.parquet(out) else rollup(empty)
+      case PerBatch(f) =>
+        if (sinkExists(spark, out)) spark.read.parquet(out).drop("__bid") else f(empty)
+    }
   }
 
-  /** Drain a Complete-mode stateful stream through `foreachBatch` into
-    * an overwrite parquet sink, the per-trigger `rollup` applied
-    * EXECUTOR-SIDE — the q163 lesson made reusable: in Complete mode a
-    * memory sink materializes the FULL state (user-grain,
-    * corpus-growing) on the driver, while inside foreachBatch the
-    * state is a distributed frame, so the rollup and the write both
-    * stay on executors and the driver only ever holds the stream
-    * handle. Each trigger overwrites the sink (Complete semantics —
-    * results depend only on the final state, so the last trigger's
-    * rewrite is the drained answer). Returns the sunk frame, or None
-    * when no trigger fired (empty source) so callers can supply their
-    * empty-schema frame.
+  /** Parquet sink of a drain: each micro-batch WRITES its rows and
+    * forgets them, so driver state and plan depth are CONSTANT in the
+    * trigger count. Rooted at `spark.graft.indexDir` when set (a shared
+    * filesystem on a cluster), else the local tmpdir; keyed by
+    * applicationId so concurrent sessions never collide. All path ops go
+    * through the Hadoop FS API, mirroring [[graft.operators.Similarity]]'s
+    * index layouts.
     */
-  private def drainCompleteToParquet(df: DataFrame, name: String)(
-      rollup: DataFrame => DataFrame): Option[DataFrame] = {
-    val spark = df.sparkSession
-    spark.streams.active.filter(_.name == s"graft_stream_$name")
-      .foreach(_.stop())
-    val sink = batchSink(spark, name)
-    if (!resuming(spark, name)) resetSink(spark, sink)
-    withStatefulDrainConf(spark) {
-      val ckpt = scratchCheckpoint(spark, name)
-      val writer = df.writeStream.outputMode(OutputMode.Complete())
-        .queryName(s"graft_stream_$name")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          rollup(batch).write.mode("overwrite").parquet(sink)
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      ckpt.foreach(writer.option("checkpointLocation", _))
-      // try/finally: a failed or interrupted stream must not leak the
-      // scratch/reliable checkpoint directory (matches runToMemory)
-      try {
-        val q = writer.start()
-        q.awaitTermination()
-      } finally ckpt.foreach(resetSink(spark, _))
+  private def batchSink(spark: SparkSession, name: String): String = {
+    // `spark.graft.streaming.pinnedSinkRoot`: a STABLE per-drain sink
+    // path (no applicationId) — paired with pinnedCkptRoot in the
+    // driver-restart chaos mode, so the restarted JVM appends to the
+    // sink holding the dead run's committed batches instead of starting
+    // a fresh one keyed by its new applicationId.
+    spark.conf.getOption("spark.graft.streaming.pinnedSinkRoot") match {
+      case Some(root) => s"$root/graft_${name}_sink"
+      case None =>
+        val root = spark.conf.get("spark.graft.indexDir",
+          System.getProperty("java.io.tmpdir"))
+        s"$root/graft_${name}_sink_${spark.sparkContext.applicationId}"
     }
-    if (sinkExists(spark, sink)) Some(spark.read.parquet(sink)) else None
   }
 
-  private def runToMemory(df: DataFrame, name: String, mode: OutputMode): DataFrame = {
-    val spark = df.sparkSession
-    spark.streams.active.filter(_.name == name).foreach(_.stop())
-    withStatefulDrainConf(spark) {
-      val ckpt = scratchCheckpoint(spark, name)
-      // A PINNED checkpoint left behind by a killed run is DELETED here,
-      // never resumed: this drain's memory sink died with the old
-      // process, so resuming the offsets would leave the new sink
-      // permanently missing every pre-kill Append/Update emission.
-      // Resume-on-restart is only valid when the sink outlives the
-      // process (drainCompleteToParquet / the __bid parquet sinks); a
-      // volatile-sink drain restarts from zero. No-op for the default
-      // nanoTime scratch paths (they never pre-exist).
-      ckpt.foreach(resetSink(spark, _))
-      try {
-        // AvailableNow, not default-trigger + processAllAvailable + stop:
-        // the end offsets are computed once at start, the engine runs
-        // exactly the needed micro-batches (including the no-data batch
-        // that advances the watermark and flushes append-finalized state —
-        // the reason AvailableNow replaced Trigger.Once upstream) and then
-        // terminates itself — no trigger-poll idle cycles and no
-        // stop-handshake against a live trigger thread. Semantics per
-        // batch are identical; StreamSemanticsSpec pins the absolute
-        // counts either way.
-        val writer = df.writeStream.outputMode(mode).format("memory").queryName(name)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        ckpt.foreach(writer.option("checkpointLocation", _))
-        val q = writer.start()
-        q.awaitTermination()
-      } finally ckpt.foreach(resetSink(spark, _))
-    }
-    spark.table(name)
+  private def hadoopFs(spark: SparkSession, path: String) =
+    new org.apache.hadoop.fs.Path(path).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+
+  private def resetSink(spark: SparkSession, path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = hadoopFs(spark, path)
+    if (fs.exists(p)) fs.delete(p, true)
   }
+
+  private def sinkExists(spark: SparkSession, path: String): Boolean =
+    hadoopFs(spark, path).exists(new org.apache.hadoop.fs.Path(path))
 
   /** Tumbling 1-hour rollup with a 1-hour watermark — the streaming twin
     * of the batch `events` cube query (same oracle SQL applies).
     */
   def hourlyRollup(spark: SparkSession, dir: String): DataFrame = {
-    val agg = streamingEvents(spark, dir)
+    val (ev, bytes) = streamingEvents(spark, dir)
+    val agg = ev
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("event_count"),
         round(sum(col("value")), 2).as("total_value"))
-    runToMemory(agg, "graft_stream_hourly", OutputMode.Complete())
+    drain(agg, bytes, "hourly", OutputMode.Complete(), Memory)
       .select(col("window.start").cast(TimestampNTZType).as("event_hour"),
         col("event_type"),
         col("event_count"), col("total_value"))
@@ -285,25 +299,21 @@ object EventsStream {
     * label exactly.
     */
   def slidingActiveUsers(spark: SparkSession, dir: String): DataFrame = {
-    val perUserWin = streamingEvents(spark, dir)
+    val (ev, bytes) = streamingEvents(spark, dir)
+    val perUserWin = ev
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "7 days", "1 day").as("w"), col("user_id"))
       .agg(count(lit(1)).as("__n"))
-    // drainCompleteToParquet, NOT the memory sink: in Complete mode the
-    // sink receives one row per (window, user) — USER-grain,
-    // corpus-growing (~28M rows at the 100× fixture) — so the
-    // per-window COUNT rolls up executor-side inside foreachBatch and
-    // only #window-days rows (calendar-bounded) ever exist anywhere
-    // narrow.
-    val out = drainCompleteToParquet(perUserWin, "wau") { batch =>
-      batch.groupBy((col("w.start") + expr("INTERVAL 6 DAYS"))
+    // an Overwrite sink, NOT the memory sink: in Complete mode the sink
+    // receives one row per (window, user) — USER-grain, corpus-growing
+    // (~28M rows at the 100× fixture) — so the per-window COUNT rolls up
+    // executor-side inside foreachBatch and only #window-days rows
+    // (calendar-bounded) ever exist anywhere narrow.
+    drain(perUserWin, bytes, "wau", OutputMode.Complete(), Overwrite(
+      _.groupBy((col("w.start") + expr("INTERVAL 6 DAYS"))
           .cast(TimestampNTZType).as("win_day"))
-        .agg(count(lit(1)).as("active_7d"))
-    }.getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("win_day", TimestampNTZType),
-          StructField("active_7d", LongType)))))
-    out.orderBy(col("win_day"))
+        .agg(count(lit(1)).as("active_7d"))))
+      .orderBy(col("win_day"))
   }
 
   /** Streaming CDC consumer — the online twin of the batch
@@ -318,7 +328,7 @@ object EventsStream {
     * USER-grain and corpus-growing — the exact structure q163's WAU
     * drain heap-killed the driver-side memory sink with, one multiplier
     * later on the curve — so it drains through
-    * [[drainCompleteToParquet]]: the changelog lands in a distributed
+    * an [[Overwrite]] sink: the changelog lands in a distributed
     * parquet sink executor-side and the snapshot merge scans it back;
     * at scale that sink IS the periodic snapshot publish.
     */
@@ -329,22 +339,17 @@ object EventsStream {
         col("ts"), col("value"))
     val snapshot = graft.operators.Merge.latestState(
       ev.filter(col("ts") < lit(cutoff).cast("timestamp_ntz")))
-    val log = streamingEvents(spark, dir)
-      .filter(col("ts") >= lit(cutoff).cast("timestamp"))
+    val (stream, bytes) = streamingEvents(spark, dir)
+    val log = stream.filter(col("ts") >= lit(cutoff).cast("timestamp"))
     val latestOp = log.groupBy(col("user_id"))
       .agg(max_by(
         struct(col("event_type"), col("value")),
         struct(col("ts"), col("event_id"))).as("op"))
-    val drained = drainCompleteToParquet(latestOp, "cdc") { batch =>
-      // struct flatten runs executor-side; the sink holds the drained
-      // latest-op changelog as a distributed table, never a driver frame
-      batch.select(col("user_id"), col("op.event_type").as("event_type"),
-        col("op.value").as("value"))
-    }.getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("user_id", LongType),
-          StructField("event_type", StringType),
-          StructField("value", DoubleType)))))
+    // struct flatten runs executor-side; the sink holds the drained
+    // latest-op changelog as a distributed table, never a driver frame
+    val drained = drain(latestOp, bytes, "cdc", OutputMode.Complete(), Overwrite(
+      _.select(col("user_id"), col("op.event_type").as("event_type"),
+        col("op.value").as("value"))))
     graft.operators.Merge.applyLatestOps(snapshot, drained)
   }
 
@@ -454,52 +459,15 @@ object EventsStream {
   def nationSpend(spark: SparkSession, dir: String): DataFrame = {
     val cust = new graft.cube.Engine(spark, dir).table("customer")
       .select(col("c_custkey"), col("c_nationkey"))
-    val agg = streamingEvents(spark, dir)
+    val (ev, bytes) = streamingEvents(spark, dir)
+    val agg = ev
       .join(broadcast(cust), col("user_id") === col("c_custkey"))
       .groupBy(col("c_nationkey"))
       .agg(count(lit(1)).as("n_events"),
         round(sum(col("value")), 2).as("total_value"))
-    runToMemory(agg, "graft_stream_nation", OutputMode.Complete())
+    drain(agg, bytes, "nation", OutputMode.Complete(), Memory)
       .orderBy(col("c_nationkey"))
   }
-
-  /** Per-run durable append sink for foreachBatch results: each
-    * micro-batch WRITES its rows and forgets them, so driver state and
-    * plan depth are CONSTANT in the trigger count — the production shape
-    * (the earlier form accumulated a driver-side `unionAll` chain whose
-    * plan grew O(triggers)). Rooted at `spark.graft.indexDir` when set
-    * (a shared filesystem on a cluster), else the local tmpdir; keyed by
-    * applicationId so concurrent sessions never collide. All path ops go
-    * through the Hadoop FS API, mirroring [[graft.operators.Similarity]]'s
-    * index layouts.
-    */
-  private def batchSink(spark: SparkSession, name: String): String = {
-    // `spark.graft.streaming.pinnedSinkRoot`: a STABLE per-drain sink
-    // path (no applicationId) — paired with pinnedCkptRoot in the
-    // driver-restart chaos mode, so the restarted JVM appends to the
-    // sink holding the dead run's committed batches instead of starting
-    // a fresh one keyed by its new applicationId.
-    spark.conf.getOption("spark.graft.streaming.pinnedSinkRoot") match {
-      case Some(root) => s"$root/graft_${name}_sink"
-      case None =>
-        val root = spark.conf.get("spark.graft.indexDir",
-          System.getProperty("java.io.tmpdir"))
-        s"$root/graft_${name}_sink_${spark.sparkContext.applicationId}"
-    }
-  }
-
-  private def hadoopFs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-
-  private def resetSink(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = hadoopFs(spark, path)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
-
-  private def sinkExists(spark: SparkSession, path: String): Boolean =
-    hadoopFs(spark, path).exists(new org.apache.hadoop.fs.Path(path))
 
   /** Streaming ANN enrichment: a micro-batch stream of query vectors
     * enriched against the IVF-INDEXED corpus via `foreachBatch` +
@@ -514,8 +482,8 @@ object EventsStream {
     *
     * Run here in the exhaustive regime (nprobe = nlist over the nlist=8
     * layout), so the drained stream provably equals the exact kNN join —
-    * its oracle. Per-batch top-k rows append to a durable parquet sink
-    * ([[batchSink]]); the returned frame is a plain scan of it.
+    * its oracle. Per-batch top-k rows land in a [[PerBatch]] parquet
+    * sink; the returned frame is a plain scan of it.
     */
   def annEnrich(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Similarity
@@ -523,38 +491,11 @@ object EventsStream {
     Similarity.ivfIndex(corpus, dir, nlist = 8) // warm: batches probe only
     // footer-only driver read at plan time; the stream reads the data
     val schema = graft.cube.Engine.datasetSchema(spark, s"$dir/embeddings.parquet")
-    val queries = streamTable(spark, dir, "embeddings", schema)
-      .filter(col("vec_id") < 5)
-    spark.streams.active.filter(_.name == "graft_stream_ann").foreach(_.stop())
-    val sink = batchSink(spark, "ann")
-    if (!resuming(spark, "ann")) resetSink(spark, sink)
-    val ckpt = scratchCheckpoint(spark, "ann")
-    // per-batch IDEMPOTENT append: each micro-batch overwrites its OWN
-    // `__bid=<batchId>` partition directory. foreachBatch is
-    // at-least-once — a driver killed between the parquet write and the
-    // commit-log write re-runs that batch on restart, and a plain
-    // mode("append") would then hold its rows TWICE. Re-overwriting the
-    // same batch directory is a no-op instead, which upgrades the sink
-    // to exactly-once read-back under driver/executor loss.
-    val writer = queries.writeStream.outputMode(OutputMode.Append())
-      .queryName("graft_stream_ann")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        Similarity.ivfKnnJoin(corpus, batch, k = 3,
-          nlist = 8, nprobe = 8, datasetKey = dir)
-          .write.mode("overwrite").parquet(s"$sink/__bid=$bid")
-        ()
-      }
-    writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    ckpt.foreach(writer.option("checkpointLocation", _))
-    try {
-      val q = writer.start()
-      q.awaitTermination() // AvailableNow self-terminates — see runToMemory
-    } finally ckpt.foreach(resetSink(spark, _))
-    val out = if (!sinkExists(spark, sink))
-      Similarity.ivfKnnJoin(corpus, corpus.limit(0), k = 3,
-        nlist = 8, nprobe = 8, datasetKey = dir)
-    else spark.read.parquet(sink).drop("__bid") // partition-dir batch id
-    out.orderBy(col("q_id"), col("rk"))
+    val (stream, bytes) = streamTable(spark, dir, "embeddings", schema)
+    drain(stream.filter(col("vec_id") < 5), bytes, "ann", OutputMode.Append(),
+      PerBatch(Similarity.ivfKnnJoin(corpus, _, k = 3,
+        nlist = 8, nprobe = 8, datasetKey = dir)))
+      .orderBy(col("q_id"), col("rk"))
   }
 
   /** Streaming ingestion near-dup gate: a stream of incoming documents
@@ -572,10 +513,10 @@ object EventsStream {
     * ([[graft.operators.Dedup.minhashJoinIndexShared]] — the q116
     * warm-index pattern): each micro-batch pays only its own shingles
     * plus the (band, sig) equi-join against the checkpointed corpus
-    * signature frames, never a per-trigger corpus re-scan. Verdicts
-    * append to a durable parquet sink ([[batchSink]]); the returned
-    * frame is a plain scan of it, so driver state and plan depth stay
-    * constant in the trigger count.
+    * signature frames, never a per-trigger corpus re-scan. Verdicts land
+    * in a [[PerBatch]] parquet sink; the returned frame is a plain scan
+    * of it, so driver state and plan depth stay constant in the trigger
+    * count.
     */
   def nearDupGate(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
@@ -585,9 +526,7 @@ object EventsStream {
     // triggers probe the checkpointed frames
     val idx = Dedup.minhashJoinIndexShared(corpus, s"$dir#gate-corpus-50")
     val schema = graft.cube.Engine.datasetSchema(spark, s"$dir/documents.parquet")
-    val stream = streamTable(spark, dir, "documents", schema)
-      .filter(col("doc_id") < 50)
-    spark.streams.active.filter(_.name == "graft_stream_gate").foreach(_.stop())
+    val (stream, bytes) = streamTable(spark, dir, "documents", schema)
     def gate(batch: DataFrame): DataFrame = {
       val hits = Dedup.minhashJoinProbe(batch, idx)
       batch.select(col("doc_id"))
@@ -598,27 +537,8 @@ object EventsStream {
         .select(col("doc_id"), col("__n").isNull.as("admitted"),
           coalesce(col("__n"), lit(0)).as("n_dups"), col("max_jaccard"))
     }
-    val sink = batchSink(spark, "gate")
-    if (!resuming(spark, "gate")) resetSink(spark, sink)
-    val ckpt = scratchCheckpoint(spark, "gate")
-    // per-batch idempotent append — see annEnrich: re-running a batch
-    // after a mid-write kill overwrites its own __bid directory instead
-    // of double-appending
-    val writer = stream.writeStream.outputMode(OutputMode.Append())
-      .queryName("graft_stream_gate")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        gate(batch).write.mode("overwrite").parquet(s"$sink/__bid=$bid")
-        ()
-      }
-    writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    ckpt.foreach(writer.option("checkpointLocation", _))
-    try {
-      val q = writer.start()
-      q.awaitTermination() // AvailableNow self-terminates — see runToMemory
-    } finally ckpt.foreach(resetSink(spark, _))
-    val out = if (!sinkExists(spark, sink)) gate(docs.filter(lit(false)))
-    else spark.read.parquet(sink).drop("__bid") // partition-dir batch id
-    out.orderBy(col("doc_id"))
+    drain(stream.filter(col("doc_id") < 50), bytes, "gate", OutputMode.Append(),
+      PerBatch(gate)).orderBy(col("doc_id"))
   }
 
   /** Per-type daily running totals — the analytic-window time-series
@@ -745,10 +665,10 @@ object EventsStream {
 
   def streamingDebounce(spark: SparkSession, dir: String,
       gapSeconds: Long = 300L): DataFrame = {
-    val flags = debounceFlags(
-      streamingEvents(spark, dir), gapSeconds)
-    val sunk = runToMemory(flags.toDF(), "debounce_flags", OutputMode.Append())
-    sunk.groupBy(col("event_type"))
+    val (ev, bytes) = streamingEvents(spark, dir)
+    drain(debounceFlags(ev, gapSeconds).toDF(), bytes, "debounce",
+      OutputMode.Append(), Memory)
+      .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"), sum(col("kept")).as("n_kept"))
       .withColumn("drop_rate", round(lit(1.0) -
         col("n_kept").cast("double") / col("n_events").cast("double"), 6))
@@ -766,7 +686,7 @@ object EventsStream {
     * join, which is its oracle.
     */
   def purchaseAttribution(spark: SparkSession, dir: String): DataFrame = {
-    val ev = streamingEvents(spark, dir)
+    val (ev, bytes) = streamingEvents(spark, dir)
     val clicks = ev.filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"),
         col("ts").as("click_ts"))
@@ -779,7 +699,7 @@ object EventsStream {
       col("user_id") === col("p_user") &&
         col("purchase_ts") >= col("click_ts") - expr("INTERVAL 1 HOUR") &&
         col("purchase_ts") <= col("click_ts"))
-    runToMemory(joined, "graft_stream_attrib", OutputMode.Append())
+    drain(joined, bytes, "attrib", OutputMode.Append(), Memory)
       .select(col("click_id"), col("user_id"),
         col("click_ts").cast(TimestampNTZType).as("click_ts"),
         col("purchase_ts").cast(TimestampNTZType).as("purchase_ts"),
@@ -827,7 +747,7 @@ object EventsStream {
         max(when(col("event_type") === "purchase",
           unix_micros(col("ts").cast(TimestampType))))))
       .collect()(0).getLong(0) - 2L * 3600L * 1000000L
-    val ev = streamingEvents(spark, dir)
+    val (ev, bytes) = streamingEvents(spark, dir)
     val clicks = ev
       .select(col("event_id").as("click_id"), col("user_id"),
         col("ts").as("click_ts"), col("event_type"))
@@ -846,7 +766,7 @@ object EventsStream {
         col("purchase_ts") >= col("click_ts") - expr("INTERVAL 1 HOUR") &&
         col("purchase_ts") <= col("click_ts"),
       "left_outer")
-    runToMemory(joined, "graft_stream_attrib_outer", OutputMode.Append())
+    drain(joined, bytes, "attrib_outer", OutputMode.Append(), Memory)
       .select(col("click_id"), col("user_id"),
         col("click_ts").cast(TimestampNTZType).as("click_ts"),
         col("purchase_ts").cast(TimestampNTZType).as("purchase_ts"),
@@ -861,7 +781,8 @@ object EventsStream {
     */
   def userSummaries(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val evs = streamingEvents(spark, dir)
+    val (ev, bytes) = streamingEvents(spark, dir)
+    val evs = ev
       .select(col("user_id"), unix_micros(col("ts")).as("tsMicros"),
         col("event_type"), col("value"))
       .as[Ev]
@@ -886,7 +807,7 @@ object EventsStream {
     // final state. Without this fold the drain was only correct when
     // the fixture drove as a single micro-batch (caught live by the
     // multi-batch driver-restart chaos probe).
-    runToMemory(summarized.toDF(), "graft_stream_users", OutputMode.Update())
+    drain(summarized.toDF(), bytes, "users", OutputMode.Update(), Memory)
       .groupBy(col("user_id"))
       .agg(max_by(struct(col("n_events"), col("last_type"),
         col("total_value")), col("n_events")).as("__s"))
@@ -929,31 +850,23 @@ object EventsStream {
     */
   def userSpendTws(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val evs = streamingEvents(spark, dir)
+    val (ev, bytes) = streamingEvents(spark, dir)
+    val evs = ev
       .select(col("user_id"), unix_micros(col("ts")).as("tsMicros"),
         col("event_type"), col("value"))
       .as[Ev]
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val out = evs.groupByKey(_.user_id)
-        .transformWithState(new SpendProcessor, TimeMode.None(), OutputMode.Update())
-      // latest-state changelog fold — see userSummaries: one row per
-      // (user, touching trigger) in Update mode; monotone n_events
-      // selects the final state
-      runToMemory(out.toDF(), "graft_stream_tws", OutputMode.Update())
-        .groupBy(col("user_id"))
-        .agg(max_by(struct(col("n_events"), col("total_value")),
-          col("n_events")).as("__s"))
-        .select(col("user_id"), col("__s.n_events").as("n_events"),
-          round(col("__s.total_value"), 2).as("total_value"))
-        .orderBy(col("user_id"))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    val out = evs.groupByKey(_.user_id)
+      .transformWithState(new SpendProcessor, TimeMode.None(), OutputMode.Update())
+    // latest-state changelog fold — see userSummaries: one row per
+    // (user, touching trigger) in Update mode; monotone n_events
+    // selects the final state
+    drain(out.toDF(), bytes, "tws", OutputMode.Update(), Memory)
+      .groupBy(col("user_id"))
+      .agg(max_by(struct(col("n_events"), col("total_value")),
+        col("n_events")).as("__s"))
+      .select(col("user_id"), col("__s.n_events").as("n_events"),
+        round(col("__s.total_value"), 2).as("total_value"))
+      .orderBy(col("user_id"))
   }
 
   /** Streaming trending leaderboard: tumbling 6-hour windows of
@@ -965,12 +878,12 @@ object EventsStream {
     * the tiny rollup. Ties rank deterministically by type name.
     */
   def trendingTopK(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    val agg = streamingEvents(spark, dir)
+    val (ev, bytes) = streamingEvents(spark, dir)
+    val agg = ev
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "6 hours"), col("event_type"))
       .agg(count(lit(1)).as("n_events"))
-    val drained = runToMemory(agg, "graft_stream_trending",
-      OutputMode.Complete())
+    val drained = drain(agg, bytes, "trending", OutputMode.Complete(), Memory)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("win_start"))
       .orderBy(col("n_events").desc, col("event_type"))

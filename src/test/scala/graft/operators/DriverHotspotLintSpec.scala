@@ -96,6 +96,21 @@ class DriverHotspotLintSpec extends AnyFunSuite {
       Map.empty)
   }
 
+  test("streams start at the one drain") {
+    // every streaming query runs through EventsStream.drain, which owns
+    // the checkpoint, resume, state-conf and clean-up steps; a second
+    // writer restates that lifecycle
+    assertCeilings("writeStream", """\bwriteStream\b""", Map(
+      "graft/streaming/EventsStream.scala" -> 1))
+  }
+
+  test("graft session conf is set only by GraftSession") {
+    // operators hand values to each other as values, never through a
+    // session-conf side channel
+    assertCeilings("""conf.set("spark.graft.""", """conf\.set\("spark\.graft\.""",
+      Map("graft/GraftSession.scala" -> 1))
+  }
+
   test("TrieMap registries stay confined to Scratch and the schema memo") {
     // Scratch owns all session-scoped state (scratch ids, session memos,
     // memo counts); a hand-made registry elsewhere duplicates its

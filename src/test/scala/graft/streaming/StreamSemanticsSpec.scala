@@ -499,6 +499,68 @@ class StreamSemanticsSpec extends SparkFunSuite {
       "q163's (window, user) state leaked into a driver memory sink")
   }
 
+  test("every drain restores session conf, stops its stream and deletes its checkpoint") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.streaming.{StreamingQueryListener,
+      StreamingQueryProgress}
+    val stateful = Seq("q32_stream_hourly", "q33_stream_user_state",
+      "q54_stream_join", "q78_tws_spend", "q105_stream_enrich",
+      "q109_stream_outer_join", "q242_stream_debounce", "q281_stream_trending",
+      "q163_stream_wau", "q175_stream_cdc")
+    val perBatch = Seq("q116_stream_ann_enrich", "q123_stream_neardup_gate")
+    // a session no earlier test has run a drain in, so a conf key any
+    // drain leaves behind shows up as a difference
+    val fresh = spark.newSession()
+    val scratch = java.nio.file.Files.createTempDirectory("graft_drain_scratch")
+    val progress =
+      new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        progress.add(e.progress)
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    fresh.conf.set("spark.graft.streaming.scratchDir", scratch.toString)
+    fresh.streams.addListener(listener)
+    try {
+      for (q <- stateful ++ perBatch) {
+        val before = fresh.conf.getAll
+        graft.SparkEntry.queries(q)(fresh, sf).collect()
+        assert(fresh.conf.getAll == before, s"$q left session conf changed")
+        assert(fresh.streams.active.isEmpty, s"$q left a stream running")
+        val left = java.nio.file.Files.list(scratch).iterator().asScala
+          .map(_.getFileName.toString).filter(_.startsWith("graft_ckpt_")).toSeq
+        assert(left.isEmpty, s"$q left checkpoints $left")
+      }
+      org.apache.spark.graftplans.ListenerBus.drain(fresh)
+      val byQuery = progress.asScala.toSeq.groupBy(_.name)
+      val withState = byQuery.filter(_._2.exists(_.stateOperators.nonEmpty)).keySet
+      assert(withState == Set("graft_stream_hourly", "graft_stream_users",
+        "graft_stream_attrib", "graft_stream_tws", "graft_stream_nation",
+        "graft_stream_attrib_outer", "graft_stream_debounce",
+        "graft_stream_trending", "graft_stream_wau", "graft_stream_cdc"))
+      for ((name, ps) <- byQuery; p <- ps; op <- p.stateOperators) {
+        assert(op.numShufflePartitions == 4, s"$name state width")
+        assert(op.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb")),
+          s"$name state store is not RocksDB: ${op.customMetrics.keySet}")
+      }
+    } finally fresh.streams.removeListener(listener)
+  }
+
+  test("overwrite drains over a zero-row source keep the populated run's schema") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_empty_events").toString
+    spark.read.parquet(s"$sf/events.parquet").limit(0)
+      .write.parquet(s"$dir/events.parquet")
+    def columns(df: org.apache.spark.sql.DataFrame) =
+      df.schema.map(f => f.name -> f.dataType)
+    for (q <- Seq("q163_stream_wau", "q175_stream_cdc")) {
+      val populated = columns(graft.SparkEntry.queries(q)(spark, sf))
+      val empty = graft.SparkEntry.queries(q)(spark, dir)
+      assert(empty.collect().isEmpty, q)
+      assert(columns(empty) == populated, q)
+    }
+  }
+
   test("session paths: every path has at most 3 hops and counts sum to sessions") {
     val paths = graft.streaming.EventsStream.topSessionPaths(spark, sf)
       .collect()
