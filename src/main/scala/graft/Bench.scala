@@ -22,8 +22,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.local(cpus.toInt)
+    val spark = GraftSession.local()
     // ANN index builds (q106-q108) run FIRST in each pass, right after
     // the memo invalidation: they are timed as their own entries (the
     // amortized build cost), and by populating the memos they make the

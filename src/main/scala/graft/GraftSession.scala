@@ -5,14 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** Opinionated SparkSession factory — the configuration half of the
   * engine's scale posture, in one place instead of scattered per-main.
   *
-  * What is pinned and why:
+  * Correctness pins, which win over every other source of conf:
   *   - UTC session time zone: every timestamp in the engine is naive
   *     wall-clock (TIMESTAMP_NTZ surface); a non-UTC session would shift
   *     NTZ<->TZ casts and break cross-engine determinism.
-  *   - AQE + partition coalescing + skew-join splitting: explicitly on
-  *     (they are Spark 4 defaults — pinned so a cluster-side override
-  *     cannot silently change plan shapes). AQE is the first line of
-  *     defense for skew; `operators.Skew` is the explicit fallback.
   *   - TIMESTAMP_MICROS parquet output: results round-trip with the same
   *     physical type ANSI engines write (INT96 reads back as nanos).
   *   - nanosAsLong: legacy fixture generations stored the events ts as
@@ -21,10 +17,19 @@ import org.apache.spark.sql.SparkSession
   *     schema-adaptively (current fixtures store timestamp[us] and pass
   *     through untouched — the flag is then inert but kept so both
   *     encodings read in one session).
-  *   - shuffle partitions are a REQUIRED argument: there is no correct
+  *
+  * Performance defaults, each applied only when the caller sets no value
+  * for its key (through `SPARK_GRAFT_EXTRA_CONF` or a `spark.*` JVM
+  * system property — spark-defaults, `--conf`):
+  *   - shuffle partitions: the `builder` argument. There is no correct
   *     global default — size to ~2-3x total cores on a cluster, to the
-  *     core count locally. (The streaming mains further cap stateful
+  *     core count locally. (The streaming drains further cap stateful
   *     partitions — see `streaming.EventsStream`.)
+  *   - AQE + partition coalescing + skew-join splitting on (Spark 4
+  *     defaults, restated). AQE is the first line of defense for skew;
+  *     `operators.Skew` is the explicit fallback.
+  *   - the AQE coalescing floor at 64k (see [[settings]]), the UI off,
+  *     and checkpoint-file cleanup on.
   *
   * Applies [[GraftExtensions]]: the engine's SQL functions
   * (cosine_similarity, dot_product, ...) so pure-SQL users get the native
@@ -46,18 +51,18 @@ object GraftSession {
         (k.trim, v.trim)
       }
 
-  def builder(master: String, shufflePartitions: Int): SparkSession.Builder = {
-    val b0 = SparkSession.builder().master(master)
-    // Extra conf applied BEFORE the pinned conf below (later .config
-    // wins in SparkSession.Builder), so an experiment cannot silently
-    // override the correctness-critical pins.
-    extraConf.foreach { case (k, v) => b0.config(k, v) }
-    b0
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+  /** The session conf [[builder]] applies, in order (a later entry for
+    * the same key wins): the performance defaults whose key neither
+    * `extra` nor `props` (the JVM system properties) sets, then `extra`,
+    * then the correctness pins.
+    */
+  private[graft] def settings(shufflePartitions: Int,
+      extra: Seq[(String, String)],
+      props: Map[String, String]): Seq[(String, String)] = {
+    val performance = Seq(
+      "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
       // AQE's coalescer never splits below this floor, and the Spark
       // default (1m) binds exactly when a shuffle's TOTAL bytes are
       // small (< ~cores × 1 MiB): bounded rollup/window frames collapse
@@ -71,26 +76,45 @@ object GraftSession {
       // advisory/parallelism sizing dominates long before a 64k floor is
       // reachable, and `parallelismFirst` (Spark default, kept) still
       // caps the width at the session's parallelism.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // inert under the default localCheckpoint mode; with
-      // spark.graft.reliableCheckpoint=true it lets the ContextCleaner
-      // reclaim reliable checkpoint FILES when their RDDs are GC'd
-      // (Scratch.releaseAll drains the blocks; without this the durable
-      // files would accumulate until context stop)
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      // inert without a checkpoint dir; with one (the reliable mode, see
+      // operators.Scratch) it lets the ContextCleaner reclaim reliable
+      // checkpoint FILES when their RDDs are GC'd (Scratch.releaseAll
+      // drains the blocks; without this every durable file stays in the
+      // dir)
+      "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true",
+      "spark.ui.enabled" -> "false")
+    val correctness = Seq(
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+    val callerKeys = extra.map(_._1).toSet ++ props.keySet
+    performance.filterNot(kv => callerKeys(kv._1)) ++ extra ++ correctness
   }
+
+  def builder(master: String, shufflePartitions: Int): SparkSession.Builder = {
+    val b = SparkSession.builder().master(master)
+      .withExtensions(new GraftExtensions)
+    settings(shufflePartitions, extraConf, sys.props.toMap)
+      .foreach { case (k, v) => b.config(k, v) }
+    b
+  }
+
+  /** The harness mains' session: [[local]] sized to `SPARK_GRAFT_CPUS`
+    * threads, else to every core of the host.
+    */
+  def local(): SparkSession = local(sys.env.get("SPARK_GRAFT_CPUS")
+    .fold(Runtime.getRuntime.availableProcessors)(_.trim.toInt))
 
   /** Local session sized to `cpus` threads (the harness shape).
     *
-    * `SPARK_GRAFT_RELIABLE_CKPT_DIR=<dir>` switches the session into the
-    * durable-checkpoint mode (`spark.graft.reliableCheckpoint=true` +
-    * `setCheckpointDir`) so every harness main — Verify, Bench, Soak —
-    * can run the preemptible-cluster configuration unmodified; the
-    * measured cost delta of that mode lives in SCALE_r14.json.
+    * `SPARK_GRAFT_RELIABLE_CKPT_DIR=<dir>` sets the context's checkpoint
+    * dir, and a checkpoint dir switches every `operators.Scratch.stage`
+    * site to the durable-checkpoint mode, so every harness main — Verify,
+    * Bench, Soak — can run the preemptible-cluster configuration
+    * unmodified; the measured cost delta of that mode lives in
+    * SCALE_r14.json.
     *
     * `SPARK_GRAFT_MASTER` overrides the master URL — the multi-process
     * soak mode. `local-cluster[4,8,8192]` runs 4 executor JVMs × 8 cores
@@ -149,10 +173,8 @@ object GraftSession {
     }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("SPARK_GRAFT_RELIABLE_CKPT_DIR").foreach { dir =>
-      spark.conf.set("spark.graft.reliableCheckpoint", "true")
-      spark.sparkContext.setCheckpointDir(dir)
-    }
+    sys.env.get("SPARK_GRAFT_RELIABLE_CKPT_DIR")
+      .foreach(spark.sparkContext.setCheckpointDir)
     spark
   }
 

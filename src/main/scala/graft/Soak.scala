@@ -20,6 +20,9 @@ package graft
   * Usage: runMain graft.Soak <sfDir> <name,name,...> <out.json> [warmupDir]
   */
 object Soak {
+  /** Timed passes per query: the two cold-pipeline samples above. */
+  private val Passes = 2
+
   def main(args: Array[String]): Unit = {
     require(args.length == 3 || args.length == 4,
       "usage: Soak <sfDir> <names-csv> <out.json> [warmupDir]")
@@ -31,8 +34,7 @@ object Soak {
     val names = args(1).split(',').toSeq.filter(_.nonEmpty).distinct
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.local(cpus.toInt)
+    val spark = GraftSession.local()
     // untimed warmup at the smallest sf: JVM/codegen/parquet-footer
     // one-off costs stay out of pass 1. A FAILED warmup silently
     // shifting those costs into the timed pass would skew ratio_cold,
@@ -46,12 +48,8 @@ object Soak {
       }
       graft.operators.Scratch.releaseAll(spark)
     }
-    // pass count: 2 by default (min-of-passes is the contention-resistant
-    // estimate); SPARK_GRAFT_SOAK_PASSES=1 for completion-gated probes
-    // where wall-clock budget outweighs the second sample
-    val passes = sys.env.getOrElse("SPARK_GRAFT_SOAK_PASSES", "2").toInt
     val loads = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val samples = (1 to passes).flatMap { _ =>
+    val samples = (1 to Passes).flatMap { _ =>
       loads += GraftSession.loadAvg1m()
       graft.operators.Scratch.invalidate(spark)
       names.map { name =>

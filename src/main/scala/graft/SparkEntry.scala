@@ -1328,10 +1328,6 @@ object SparkEntry {
     })
   )
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. Lazy:
-    * some entries read private vals declared further down.
-    */
   /** DuckDB twin of `TextAnalysis.shingles(text, 3)` as a `(doc_id, sh)`
     * select over `documents` — the term space of every shingle-family
     * oracle. Margin-prefixed: interpolate it into a `stripMargin` string.
@@ -1343,6 +1339,35 @@ object SparkEntry {
       |        || ' ' || string_split(text, ' ')[i+2])) AS sh
       | FROM documents"""
 
+  /** The >= 0.8 shingle-Jaccard `pairs (doc_a, doc_b)` CTE over a CTE `s`
+    * of [[shinglesSql]] rows. Margin-prefixed, like [[shinglesSql]].
+    */
+  private val jaccardPairsSql =
+    """pairs AS (
+      | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+      | FROM s a JOIN s b ON a.doc_id < b.doc_id
+      | WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+      |    / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8)"""
+
+  /** Connected components of `pairs` as recursive CTEs: `edges` holds
+    * both directions of each pair and `reach (src, dst)` every node `src`
+    * reaches. Margin-prefixed, like [[shinglesSql]].
+    */
+  private val reachSql =
+    """edges AS (
+      | SELECT doc_a AS src, doc_b AS dst FROM pairs
+      | UNION SELECT doc_b, doc_a FROM pairs),
+      |reach AS (
+      | WITH RECURSIVE r(src, dst) AS (
+      |  SELECT src, dst FROM edges
+      |  UNION
+      |  SELECT r.src, e.dst FROM r JOIN edges e ON r.dst = e.src)
+      | SELECT * FROM r)"""
+
+  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
+    * the same parquet tables. Omit for non-SQL-expressible ops. Lazy:
+    * some entries read private vals declared further down.
+    */
   lazy val oracleSql: Map[String, String] = Map(
     "q01_year_nation" ->
       """SELECT CAST(year(o_orderdate) AS INTEGER) AS year, n_name AS nation,
@@ -2044,20 +2069,8 @@ object SparkEntry {
     "q192_cluster_sizes" ->
       s"""WITH s AS (
         |$shinglesSql),
-        |pairs AS (
-        | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        | FROM s a JOIN s b ON a.doc_id < b.doc_id
-        | WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8),
-        |edges AS (
-        | SELECT doc_a AS src, doc_b AS dst FROM pairs
-        | UNION SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        | WITH RECURSIVE r(src, dst) AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM r JOIN edges e ON r.dst = e.src)
-        | SELECT * FROM r),
+        |$jaccardPairsSql,
+        |$reachSql,
         |cl AS (
         | SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
         | FROM reach GROUP BY src),
@@ -2466,20 +2479,8 @@ object SparkEntry {
     "q217_dedup_savings" ->
       s"""WITH s AS (
         |$shinglesSql),
-        |pairs AS (
-        | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        | FROM s a JOIN s b ON a.doc_id < b.doc_id
-        | WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8),
-        |edges AS (
-        | SELECT doc_a AS src, doc_b AS dst FROM pairs
-        | UNION SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        | WITH RECURSIVE r(src, dst) AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM r JOIN edges e ON r.dst = e.src)
-        | SELECT * FROM r),
+        |$jaccardPairsSql,
+        |$reachSql,
         |comp AS (
         | SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
         | FROM reach GROUP BY src),
@@ -2770,11 +2771,7 @@ object SparkEntry {
     "q233_assortativity" ->
       s"""WITH s AS (
         |$shinglesSql),
-        |pairs AS (
-        | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        | FROM s a JOIN s b ON a.doc_id < b.doc_id
-        | WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8),
+        |$jaccardPairsSql,
         |und AS (
         | SELECT doc_a AS src, doc_b AS dst FROM pairs
         | UNION ALL SELECT doc_b, doc_a FROM pairs),
@@ -3122,20 +3119,8 @@ object SparkEntry {
     "q250_dedup_funnel" ->
       s"""WITH s AS (
         |$shinglesSql),
-        |pairs AS (
-        | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        | FROM s a JOIN s b ON a.doc_id < b.doc_id
-        | WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8),
-        |edges AS (
-        | SELECT doc_a AS src, doc_b AS dst FROM pairs
-        | UNION SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        | WITH RECURSIVE r(src, dst) AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM r JOIN edges e ON r.dst = e.src)
-        | SELECT * FROM r),
+        |$jaccardPairsSql,
+        |$reachSql,
         |comp AS (
         | SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
         | FROM reach GROUP BY src),
@@ -4350,11 +4335,7 @@ object SparkEntry {
     "q315_kcore_peel" ->
       s"""WITH s AS (
         |$shinglesSql),
-        |pairs AS (
-        | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        | FROM s a JOIN s b ON a.doc_id < b.doc_id
-        | WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8),
+        |$jaccardPairsSql,
         |e0 AS (
         | SELECT doc_a AS src, doc_b AS dst FROM pairs
         | UNION ALL SELECT doc_b, doc_a FROM pairs),
@@ -4962,39 +4943,15 @@ object SparkEntry {
     "q41_dedup_clusters" ->
       s"""WITH s AS (
         |$shinglesSql),
-        |pairs AS (
-        | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        | FROM s a JOIN s b ON a.doc_id < b.doc_id
-        | WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8),
-        |edges AS (
-        | SELECT doc_a AS src, doc_b AS dst FROM pairs
-        | UNION SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        | WITH RECURSIVE r(src, dst) AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM r JOIN edges e ON r.dst = e.src)
-        | SELECT * FROM r)
+        |$jaccardPairsSql,
+        |$reachSql
         |SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
         |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin,
     "q42_dedup_keep" ->
       s"""WITH s AS (
         |$shinglesSql),
-        |pairs AS (
-        | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        | FROM s a JOIN s b ON a.doc_id < b.doc_id
-        | WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8),
-        |edges AS (
-        | SELECT doc_a AS src, doc_b AS dst FROM pairs
-        | UNION SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        | WITH RECURSIVE r(src, dst) AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM r JOIN edges e ON r.dst = e.src)
-        | SELECT * FROM r),
+        |$jaccardPairsSql,
+        |$reachSql,
         |comp AS (
         | SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
         | FROM reach GROUP BY src)
@@ -5007,20 +4964,8 @@ object SparkEntry {
     "q142_keep_best" ->
       s"""WITH s AS (
         |$shinglesSql),
-        |pairs AS (
-        | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        | FROM s a JOIN s b ON a.doc_id < b.doc_id
-        | WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8),
-        |edges AS (
-        | SELECT doc_a AS src, doc_b AS dst FROM pairs
-        | UNION SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        | WITH RECURSIVE r(src, dst) AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM r JOIN edges e ON r.dst = e.src)
-        | SELECT * FROM r),
+        |$jaccardPairsSql,
+        |$reachSql,
         |comp AS (
         | SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
         | FROM reach GROUP BY src),
@@ -5223,20 +5168,8 @@ object SparkEntry {
         |  AND CAST(top_count AS DOUBLE) / n_tokens < 0.15),
         |s AS (
         |$shinglesSql),
-        |pairs AS (
-        | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        | FROM s a JOIN s b ON a.doc_id < b.doc_id
-        | WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8),
-        |edges AS (
-        | SELECT doc_a AS src, doc_b AS dst FROM pairs
-        | UNION SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        | WITH RECURSIVE r(src, dst) AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM r JOIN edges e ON r.dst = e.src)
-        | SELECT * FROM r),
+        |$jaccardPairsSql,
+        |$reachSql,
         |comp AS (
         | SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
         | FROM reach GROUP BY src)
@@ -5528,20 +5461,8 @@ object SparkEntry {
         |  AND CAST(top_count AS DOUBLE) / n_tokens < 0.15),
         |s AS (
         |$shinglesSql),
-        |pairs AS (
-        | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        | FROM s a JOIN s b ON a.doc_id < b.doc_id
-        | WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8),
-        |edges AS (
-        | SELECT doc_a AS src, doc_b AS dst FROM pairs
-        | UNION SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        | WITH RECURSIVE r(src, dst) AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM r JOIN edges e ON r.dst = e.src)
-        | SELECT * FROM r),
+        |$jaccardPairsSql,
+        |$reachSql,
         |comp AS (
         | SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
         | FROM reach GROUP BY src),
@@ -6056,11 +5977,7 @@ object SparkEntry {
     "q102_triangles" ->
       s"""WITH s AS (
         |$shinglesSql),
-        |pairs AS (
-        | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        | FROM s a JOIN s b ON a.doc_id < b.doc_id
-        | WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8),
+        |$jaccardPairsSql,
         |tri AS (
         | SELECT p1.doc_a AS a, p1.doc_b AS b, p2.doc_b AS c
         | FROM pairs p1
@@ -6446,11 +6363,7 @@ object SparkEntry {
     "q132_leakage_free_split" ->
       s"""WITH s AS (
         |$shinglesSql),
-        |pairs AS (
-        | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        | FROM s a JOIN s b ON a.doc_id < b.doc_id
-        | WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.8),
+        |$jaccardPairsSql,
         |sym AS (
         | SELECT doc_a AS doc_id, doc_b AS partner FROM pairs
         | UNION ALL SELECT doc_b, doc_a FROM pairs),

@@ -34,8 +34,7 @@ object SplitFixture {
     require(args.length >= 2, "usage: SplitFixture <src> <dst> [files]")
     val (src, dst) = (args(0), args(1))
     val n = if (args.length > 2) args(2).toInt else 12
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
+    val spark = GraftSession.local()
     tables.foreach { t =>
       val df = spark.read.parquet(s"$src/$t.parquet")
       if (t == "events") {

@@ -13,8 +13,7 @@ object Verify {
       (if (args.length > 2) args(2) else "").split(',').filter(_.nonEmpty)
     def keep(name: String): Boolean =
       nameFilters.isEmpty || nameFilters.exists(name.contains)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.local(cpus.toInt)
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

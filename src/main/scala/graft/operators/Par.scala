@@ -107,12 +107,11 @@ private[graft] object Par {
     * width with an explicit count (an explicit count is NOT
     * AQE-coalescible — AQE cannot see the expansion in the map-stage
     * stats and would coalesce the small byte-size back to one task, the
-    * q82 lesson). Tunables: `spark.graft.pairsPerPartition` (default
-    * 1e6 pair rows per task — a ~100 MB aggregate map, inside a
-    * busy executor's per-task share even with storage-pinned memo
-    * blocks squeezing the execution pool) and `spark.graft.maxPairWidth` (default
-    * 4096, the local-mode task-overhead cap; raise it on a real
-    * cluster).
+    * q82 lesson). Two constants set the width: [[PairsPerPartition]]
+    * (1e6 pair rows per task — a ~100 MB aggregate map, inside a busy
+    * executor's per-task share even with storage-pinned memo blocks
+    * squeezing the execution pool) and [[MaxPairWidth]] (4096, the
+    * local-mode task-overhead cap).
     *
     * The forecast is sized to the DISTINCT pair mass Σ C(df,2), while
     * the self-join physically emits ~2× that (df² rows per key before
@@ -120,7 +119,7 @@ private[graft] object Par {
     * rows STREAM through the filter without buffering, and the
     * structure the width protects — the pair-grain aggregate's map-side
     * hash map — holds one entry per distinct pair, so C(df,2) is its
-    * true working set and `pairsPerPartition` is calibrated to it. The
+    * true working set and [[PairsPerPartition]] is calibrated to it. The
     * transient 2× row flow is headroom the target already absorbs.
     *
     * PRECONDITION (asserted): `dfCounts` must be a STAGED frame
@@ -139,7 +138,7 @@ private[graft] object Par {
   /** [[pairExpansionWidth]] for STAR-degrading bucket expansions
     * ([[Dedup.bucketPairs]]): a bucket over `cap` is not DROPPED from
     * the output — it emits a linear star of (size − 1) pairs — so its
-    * mass is counted linearly instead of excluded. Same knobs, same
+    * mass is counted linearly instead of excluded. Same constants, same
     * staged-frame precondition, same explicit-count contract (pass the
     * result as `repartition(width, …)` — AQE cannot see the in-bucket
     * expansion in the map-stage byte stats and would otherwise coalesce
@@ -157,8 +156,8 @@ private[graft] object Par {
     * precondition, run the 1-row eager mass aggregate (`massAgg` must
     * produce 2× the distinct-pair mass — the C(df,2) sums are written
     * un-divided as df·(df−1) to stay integer-exact), and clamp to
-    * [defaultParallelism, spark.graft.maxPairWidth] at
-    * `spark.graft.pairsPerPartition` pairs per task.
+    * [defaultParallelism, [[MaxPairWidth]]] at [[PairsPerPartition]]
+    * pairs per task.
     */
   private def widthFromTwiceMass(dfCounts: DataFrame,
       massAgg: DataFrame): Int = {
@@ -172,15 +171,17 @@ private[graft] object Par {
         "(Scratch.stage/staged): the forecast aggregate is eager, and " +
         "an unstaged frame would re-pay its postings groupBy shuffle " +
         "here and again at the caller's keep-list join")
-    val sp = dfCounts.sparkSession
-    val target =
-      sp.conf.get("spark.graft.pairsPerPartition", "1000000").toLong
-    val maxW = sp.conf.get("spark.graft.maxPairWidth", "4096").toInt
     val twiceMass = massAgg.head().getLong(0)
-    val par = sp.sparkContext.defaultParallelism
-    math.min(maxW,
-      math.max(par, math.ceil(twiceMass / 2.0 / target).toInt))
+    val par = dfCounts.sparkSession.sparkContext.defaultParallelism
+    math.min(MaxPairWidth,
+      math.max(par, math.ceil(twiceMass / 2.0 / PairsPerPartition).toInt))
   }
+
+  /** Distinct pairs per pair-expansion task (see [[pairExpansionWidth]]). */
+  val PairsPerPartition = 1000000L
+
+  /** Upper bound of a pair-expansion width (see [[pairExpansionWidth]]). */
+  val MaxPairWidth = 4096
 
   /** The width policy as a physical rule. It runs after
     * `EnsureRequirements` — as an AQE query-stage preparation rule, and

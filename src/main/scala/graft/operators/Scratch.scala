@@ -39,13 +39,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * recompute on next use; Verify/Bench rerun the query). A deployment on
   * preemptible/spot executors — where mid-query executor loss is the
   * NORM, not the tail — inverts that trade: set
-  * `spark.graft.reliableCheckpoint=true` plus
   * `sparkContext.setCheckpointDir` on shared storage and every [[stage]]
   * site becomes a durable `checkpoint()` with the same plan shape. The
   * registry still applies in that mode — reliable RDDs simply resolve to
   * nothing at unpersist time; their files are reclaimed by Spark's
   * ContextCleaner when `spark.cleaner.referenceTracking.cleanCheckpoints`
-  * is on (recommended alongside the flag) or at context stop.
+  * is on (a `GraftSession` default) and the driver GCs their RDDs. Files
+  * of RDDs still referenced at context stop stay in the dir.
   */
 object Scratch {
   import scala.collection.concurrent.TrieMap
@@ -77,26 +77,19 @@ object Scratch {
     TrieMap.empty[String, java.util.concurrent.atomic.AtomicLongArray]
 
   /** Truncate `df`'s lineage with an EAGER checkpoint — the engine's
-    * single checkpoint chokepoint. `spark.graft.reliableCheckpoint=false`
-    * (default) uses `localCheckpoint` (executor-local MEMORY_AND_DISK —
-    * fast, executor-churn-unsafe); `=true` uses reliable `checkpoint`
-    * (durable blocks in the cluster checkpoint dir — survives executor
-    * loss, the preemptible/spot-fleet mode). Identical plan shape and
-    * results either way (CheckpointModeSpec asserts both); the reliable
-    * mode requires `sparkContext.setCheckpointDir` and fails fast with a
-    * pointer when it's missing rather than letting Spark throw a bare
-    * "checkpoint directory has not been set" deep inside a job.
+    * single checkpoint chokepoint. Without a checkpoint dir (the
+    * default) it uses `localCheckpoint` (executor-local MEMORY_AND_DISK —
+    * fast, executor-churn-unsafe); once `sparkContext.setCheckpointDir`
+    * is set it uses reliable `checkpoint` (durable blocks in that dir —
+    * survives executor loss, the preemptible/spot-fleet mode). Identical
+    * plan shape and results either way (CheckpointModeSpec asserts
+    * both).
     */
-  def stage(df: DataFrame): DataFrame = {
-    val reliable = df.sparkSession.conf
-      .get("spark.graft.reliableCheckpoint", "false").toBoolean
-    if (reliable) {
-      require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "spark.graft.reliableCheckpoint=true requires " +
-          "sparkContext.setCheckpointDir(<shared storage path>)")
-      df.checkpoint()
-    } else df.localCheckpoint()
-  }
+  def stage(df: DataFrame): DataFrame =
+    if (reliable(df)) df.checkpoint() else df.localCheckpoint()
+
+  private def reliable(df: DataFrame): Boolean =
+    df.sparkSession.sparkContext.getCheckpointDir.isDefined
 
   /** [[stage]], recorded in the QUERY scope — the per-query scratch
     * checkpoint: lineage cut now, blocks released at the next query
@@ -122,9 +115,7 @@ object Scratch {
     */
   def stageShared(df: DataFrame): DataFrame = {
     val ck = stage(df)
-    val reliable = df.sparkSession.conf
-      .get("spark.graft.reliableCheckpoint", "false").toBoolean
-    if (reliable) ck.queryExecution.logical.collect {
+    if (reliable(df)) ck.queryExecution.logical.collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }.foreach(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     record(ck, SessionScope)

@@ -277,7 +277,7 @@ object Similarity {
     * All path handling below goes through the Hadoop FileSystem API, so
     * whatever filesystem the root resolves to is the one probed.
     */
-  private def indexRoot(spark: org.apache.spark.sql.SparkSession): String =
+  private[graft] def indexRoot(spark: org.apache.spark.sql.SparkSession): String =
     spark.conf.get("spark.graft.indexDir",
       System.getProperty("java.io.tmpdir"))
 

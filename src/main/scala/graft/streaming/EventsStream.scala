@@ -235,8 +235,9 @@ object EventsStream {
 
   /** Parquet sink of a drain: each micro-batch WRITES its rows and
     * forgets them, so driver state and plan depth are CONSTANT in the
-    * trigger count. Rooted at `spark.graft.indexDir` when set (a shared
-    * filesystem on a cluster), else the local tmpdir; keyed by
+    * trigger count. Rooted at the index layouts' root
+    * ([[graft.operators.Similarity.indexRoot]]: `spark.graft.indexDir`,
+    * a shared filesystem on a cluster, else the local tmpdir); keyed by
     * applicationId so concurrent sessions never collide. All path ops go
     * through the Hadoop FS API, mirroring [[graft.operators.Similarity]]'s
     * index layouts.
@@ -250,8 +251,7 @@ object EventsStream {
     spark.conf.getOption("spark.graft.streaming.pinnedSinkRoot") match {
       case Some(root) => s"$root/graft_${name}_sink"
       case None =>
-        val root = spark.conf.get("spark.graft.indexDir",
-          System.getProperty("java.io.tmpdir"))
+        val root = graft.operators.Similarity.indexRoot(spark)
         s"$root/graft_${name}_sink_${spark.sparkContext.applicationId}"
     }
   }

@@ -20,7 +20,7 @@ object ChaosRetrySpec {
 
 /** Task-retry determinism under partial failure.
   *
-  * Preemption durability is priced (the reliableCheckpoint A/B), but a
+  * Preemption durability is priced (the reliable-checkpoint A/B), but a
   * PARTIAL failure — one task dies, Spark re-runs that attempt — is a
   * different execution reality: a retried task that re-executes a
   * nondeterministic stage (k-means init sampling, per-partition

@@ -5,14 +5,14 @@ import scala.jdk.CollectionConverters._
 
 import graft.SparkFunSuite
 
-/** The one-flag checkpoint-durability contract (`Scratch.stage`):
-  * `spark.graft.reliableCheckpoint=false` (default) cuts lineage with
-  * executor-local blocks; `=true` swaps every site in the engine to a
-  * durable reliable `checkpoint()` for executor-churn clusters
-  * (preemptible/spot fleets) — same plan shape, same results. A source
-  * lint pins `stage` as the ONLY raw `localCheckpoint()` call site in
-  * src/main, so the flag provably reaches every lineage cut: a new raw
-  * call anywhere fails here and must route through the helper.
+/** The checkpoint-durability contract (`Scratch.stage`): without a
+  * checkpoint dir (the default) lineage is cut with executor-local
+  * blocks; once `sparkContext.setCheckpointDir` is set, every site in
+  * the engine takes a durable reliable `checkpoint()` for executor-churn
+  * clusters (preemptible/spot fleets) — same plan shape, same results. A
+  * source lint pins `stage` as the ONLY raw `localCheckpoint()` call site
+  * in src/main, so the mode provably reaches every lineage cut: a new
+  * raw call anywhere fails here and must route through the helper.
   */
 class CheckpointModeSpec extends SparkFunSuite {
 
@@ -25,40 +25,27 @@ class CheckpointModeSpec extends SparkFunSuite {
       .filter(_._2 > 0).toMap
     assert(hits == Map("graft/operators/Scratch.scala" -> 1),
       s"localCheckpoint() outside Scratch.stage: $hits — route new " +
-        "lineage cuts through Scratch.stage so the durability flag " +
+        "lineage cuts through Scratch.stage so the durability mode " +
         "reaches them")
   }
 
-  test("reliable mode without a checkpoint dir fails fast with a pointer") {
-    val s2 = spark.newSession()
-    import s2.implicits._
-    s2.conf.set("spark.graft.reliableCheckpoint", "true")
-    // the shared context has no checkpoint dir unless a test set one;
-    // guard so this test is meaningful regardless of suite order
-    assume(s2.sparkContext.getCheckpointDir.isEmpty)
-    val e = intercept[IllegalArgumentException] {
-      Scratch.stage(Seq(1, 2, 3).toDF("x"))
-    }
-    assert(e.getMessage.contains("setCheckpointDir"))
-  }
-
   test("both modes produce identical results through a staged pipeline") {
-    val dir = Files.createTempDirectory("graft-ckpt").toString
+    def run(s: org.apache.spark.sql.SparkSession): Set[(Long, Long)] = {
+      import s.implicits._
+      // triangle + pendant: pageRank iterates through stage barriers
+      val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L))
+        .toDF("src", "dst")
+      Graph.pageRank(edges, iters = 6)
+        .select($"node", ($"rank" * 1e6).cast("long"))
+        .as[(Long, Long)].collect().toSet
+    }
     val sLocal = spark.newSession()
     val sReliable = spark.newSession()
-    sReliable.conf.set("spark.graft.reliableCheckpoint", "true")
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    val viaLocal = run(sLocal)
+    val dir = Files.createTempDirectory("graft-ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     try {
-      def run(s: org.apache.spark.sql.SparkSession): Set[(Long, Long)] = {
-        import s.implicits._
-        // triangle + pendant: pageRank iterates through stage barriers
-        val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L))
-          .toDF("src", "dst")
-        Graph.pageRank(edges, iters = 6)
-          .select($"node", ($"rank" * 1e6).cast("long"))
-          .as[(Long, Long)].collect().toSet
-      }
-      val viaLocal = run(sLocal)
       val viaReliable = run(sReliable)
       assert(viaLocal == viaReliable)
       assert(viaLocal.nonEmpty)
@@ -82,9 +69,15 @@ class CheckpointModeSpec extends SparkFunSuite {
     // the checkpoint dir per consumer (q139 1.36 s → 4.08 s in the r14
     // A/B). stageShared adds a MEMORY_AND_DISK persist on top so
     // consumers read blocks while the files still back recovery.
+    // default mode: stageShared ≡ stage (localCheckpoint already
+    // persists MEMORY_AND_DISK) — results unchanged
+    val s3 = spark.newSession()
+    val ck2 = Scratch.stageShared { import s3.implicits._
+      Seq(1).toDF("x") }
+    assert(ck2.count() == 1)
+    Scratch.releaseAll(s3)
     val dir = Files.createTempDirectory("graft-ckpt-shared").toString
     val s2 = spark.newSession()
-    s2.conf.set("spark.graft.reliableCheckpoint", "true")
     spark.sparkContext.setCheckpointDir(dir)
     try {
       import s2.implicits._
@@ -99,13 +92,6 @@ class CheckpointModeSpec extends SparkFunSuite {
           "multi-consumer reads")
       assert(ck.count() == 3)
       rdds.foreach(_.unpersist(blocking = false))
-      // default mode: stageShared ≡ stage (localCheckpoint already
-      // persists MEMORY_AND_DISK) — results unchanged
-      val s3 = spark.newSession()
-      val ck2 = Scratch.stageShared { import s3.implicits._
-        Seq(1).toDF("x") }
-      assert(ck2.count() == 1)
-      Scratch.releaseAll(s3)
     } finally {
       spark.sparkContext.setCheckpointDir(null)
       val tmp = Paths.get(dir)

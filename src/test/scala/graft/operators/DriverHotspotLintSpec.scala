@@ -104,11 +104,36 @@ class DriverHotspotLintSpec extends AnyFunSuite {
       "graft/streaming/EventsStream.scala" -> 1))
   }
 
-  test("graft session conf is set only by GraftSession") {
+  test("no engine code sets a graft session conf key") {
     // operators hand values to each other as values, never through a
-    // session-conf side channel
+    // session-conf side channel, and no setting restates another (the
+    // checkpoint mode is the checkpoint dir, not a flag beside it)
     assertCeilings("""conf.set("spark.graft.""", """conf\.set\("spark\.graft\.""",
+      Map.empty)
+  }
+
+  test("graft knobs are not parsed from strings") {
+    // a `spark.graft.*` conf read or a `SPARK_GRAFT_*` environment read
+    // followed, in the same expression, by a string-to-number/boolean
+    // parse; the one audited site is the SPARK_GRAFT_CPUS thread count
+    assertCeilings("graft knob parse",
+      """(?:conf|env)\s*\.\s*get\w*\(\s*"(?:spark\.graft\.|SPARK_GRAFT_)""" +
+        """[^"]*"[^)]*\)(?:[^\n]|\n\s*\.)*?\.to(?:Int|Long|Boolean|Double)\b""",
       Map("graft/GraftSession.scala" -> 1))
+  }
+
+  test("README's knob list names exactly the knobs src/main reads") {
+    val knob = """spark\.graft\.[A-Za-z.]*[A-Za-z]|SPARK_GRAFT_[A-Z_]*[A-Z]"""
+    val read = sources.flatMap(p =>
+      s""""($knob)"""".r.findAllMatchIn(Files.readString(p)).map(_.group(1)))
+      .toSet
+    val readme = Files.readString(Paths.get("README.md"))
+    val section = readme.split("\n## ").find(_.startsWith("Operational knobs"))
+    assert(section.isDefined, "README has no \"Operational knobs\" section")
+    val named = knob.r.findAllIn(section.get).toSet
+    assert(named == read,
+      s"\n  read in src/main but not in README: ${read -- named}" +
+        s"\n  in README but not read in src/main: ${named -- read}")
   }
 
   test("TrieMap registries stay confined to Scratch and the schema memo") {

@@ -131,32 +131,34 @@ class PlanShapeSpec extends SparkFunSuite {
 
   test("pair expansion width tracks the forecast pair mass, clamped both ways") {
     val s2 = spark.newSession()
-    s2.conf.set("spark.graft.pairsPerPartition", "10")
     import s2.implicits._
+    import graft.operators.Par.{MaxPairWidth, PairsPerPartition}
     val par = s2.sparkContext.defaultParallelism
-    // one gram shared by 12 docs → C(12,2) = 66 pairs → ceil(66/10) = 7;
-    // the input is the per-key df counts frame the pipelines already
-    // stage for their maxDf keep-list
-    val dfs = Seq(("g1", 12L)).toDF("g", "__df")
-    assert(graft.operators.Par.pairExpansionWidth(dfs, "__df", 1000) == 7)
+    assert(par == 4 && PairsPerPartition == 1000000L && MaxPairWidth == 4096)
+    // one gram shared by 3606 docs → C(3606,2) = 6,499,815 pairs →
+    // ceil(6,499,815 / 1e6) = 7; the input is the per-key df counts frame
+    // the pipelines already stage for their maxDf keep-list
+    val dfs = Seq(("g1", 3606L)).toDF("g", "__df")
+    assert(graft.operators.Par.pairExpansionWidth(dfs, "__df", 5000) == 7)
     // tiny mass clamps UP to the session parallelism (never narrower
     // than the default — the width must not serialize small corpora)
     val tiny = Seq(("g1", 2L)).toDF("g", "__df")
-    assert(graft.operators.Par.pairExpansionWidth(tiny, "__df", 1000) == par)
+    assert(graft.operators.Par.pairExpansionWidth(tiny, "__df", 5000) == par)
     // hot keys above maxDf are excluded from the forecast exactly as
     // they are excluded from the join itself
     assert(graft.operators.Par.pairExpansionWidth(dfs, "__df", 5) == par)
     // star-degrading buckets (bucketPairs): a bucket over the cap is
-    // counted LINEARLY (size − 1 star pairs), not excluded — 12 docs in
-    // one capped bucket forecast 11 pairs, not 66 and not 0 — the
-    // linear mass clamps up to the session parallelism like any tiny mass
-    assert(graft.operators.Par.starPairWidth(dfs, "__df", 1000) == 7)
+    // counted LINEARLY (size − 1 star pairs), not excluded — 3606 docs in
+    // one capped bucket forecast 3605 pairs, not 6,499,815 and not 0 —
+    // the linear mass clamps up to the session parallelism like any tiny
+    // mass
+    assert(graft.operators.Par.starPairWidth(dfs, "__df", 5000) == 7)
     assert(graft.operators.Par.starPairWidth(dfs, "__df", 5) == par)
-    // the local-mode task-overhead cap clamps DOWN
-    s2.conf.set("spark.graft.maxPairWidth", "6")
-    assert(graft.operators.Par.pairExpansionWidth(dfs, "__df", 1000) == 6)
-    s2.conf.unset("spark.graft.maxPairWidth")
-    s2.conf.unset("spark.graft.pairsPerPartition")
+    // the local-mode task-overhead cap clamps DOWN: C(100000,2) ≈ 5e9
+    // pairs would ask for 5000 tasks
+    val huge = Seq(("g1", 100000L)).toDF("g", "__df")
+    assert(graft.operators.Par.pairExpansionWidth(huge, "__df", 100000) ==
+      MaxPairWidth)
   }
 
   test("market basket runs pair stages at forecast width, part counts off broadcast") {

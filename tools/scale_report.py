@@ -96,9 +96,10 @@ for name, xa in a["samples"].items():
         rows[name]["superlinear_v"] = rows[name]["ratio_best_v"] > GROWTH
     if rows[name]["superlinear"] and name in CAUSES:
         rows[name]["cause"] = CAUSES[name]
-# durable-checkpoint mode: same fixture as soak_b, flag on — the cost
-# of spark.graft.reliableCheckpoint=true (checkpoint() write+read per
-# Scratch.stage barrier instead of executor-local blocks). min-vs-min,
+# durable-checkpoint mode: same fixture as soak_b, run with
+# SPARK_GRAFT_RELIABLE_CKPT_DIR set — the cost of a checkpoint dir
+# (checkpoint() write+read per Scratch.stage barrier instead of
+# executor-local blocks). min-vs-min,
 # same-box same-fixture, so the ratio IS the mode's price per query;
 # queries with no Scratch.stage in their plan should sit at ~1.0.
 reliable = None
