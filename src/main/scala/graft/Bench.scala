@@ -137,6 +137,7 @@ object Bench {
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $out: ${e.getMessage}")
     }
+    graft.operators.Scratch.invalidate(spark)
     spark.stop()
     // The harness stores only a ~2000-char tail of this process's output,
     // and any per-query map at 299 queries (~3.4 KB even with qNN keys

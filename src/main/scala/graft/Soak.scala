@@ -70,6 +70,7 @@ object Soak {
     val line = s"""{"sf":"$sfDir","load_1m":${loads.mkString("[", ",", "]")},""" +
       s""""samples":$qs}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), line + "\n")
+    graft.operators.Scratch.invalidate(spark)
     spark.stop()
     println(s"[soak] wrote $out")
   }

@@ -175,8 +175,7 @@ object SparkEntry {
         queryId = 0L, k = 10, datasetKey = d)
     }),
     "q30_embed_neardup" -> ((s, d) =>
-      Similarity.lshNearDupPairsShared(eng(s, d).table("embeddings"), d,
-        threshold = 0.3)),
+      Similarity.lshNearDupPairsShared(eng(s, d).table("embeddings"), d)),
     "q31_label_centroids" -> ((s, d) =>
       Similarity.labelCentroids(eng(s, d).table("embeddings"))),
     // --- [EXT] structured streaming (SURVEY §2.9) ---
@@ -989,7 +988,7 @@ object SparkEntry {
     // equi-DEPTH histogram of order totals: rank-balanced bins with
     // observed bounds — the optimizer-stats artifact (q67 = equi-width)
     "q148_equidepth_hist" -> ((s, d) =>
-      Relational.equiDepthHistogram(s, d, buckets = 10)),
+      Relational.equiDepthHistogram(s, d)),
     // vocabulary coverage curve: corpus token mass covered by the top-k
     // types at k in {10,20,50,100} — the vocab-budget knee finder
     "q149_vocab_coverage" -> ((s, d) =>
@@ -1070,8 +1069,7 @@ object SparkEntry {
     // Padding-waste report: per length-bin cost of naive pad-to-512
     // batching — the measurement that motivates q62's packing
     "q134_padding_waste" -> ((s, d) =>
-      Corpus.paddingWaste(eng(s, d).table("documents"),
-        contextLen = 512, binWidth = 64)),
+      Corpus.paddingWaste(eng(s, d).table("documents"))),
     // Embedding health audit: per-dim mean/std/min/max + near-zero
     // fraction — run before any index build over a fresh embedding drop
     "q135_embedding_health" -> ((s, d) =>
@@ -1181,7 +1179,7 @@ object SparkEntry {
         (0L, Seq("spark", "query", "join")),
         (1L, Seq("stream", "window", "batch")),
         (2L, Seq("sort", "merge", "shuffle"))).toDF("query_id", "terms")
-      Corpus.bm25Retrieval(eng(s, d).table("documents"), queries, topK = 5)
+      Corpus.bm25Retrieval(eng(s, d).table("documents"), queries)
     }),
     // RAG chunk retrieval: q115's BM25 at q71's chunk granularity —
     // passage scoring over 32-token chunks, chunk text never built
@@ -1198,12 +1196,11 @@ object SparkEntry {
     // cut at 3-token-block granularity): drop every block occurring in
     // more than one document, reassemble survivors in order
     "q117_dedup_spans" -> ((s, d) =>
-      Corpus.dedupSpans(eng(s, d).table("documents"), n = 3)),
+      Corpus.dedupSpans(eng(s, d).table("documents"))),
     // SemDeDup-style semantic dedup: q30's near-dup pairs closed into
     // clusters, each keeping the member closest to the cluster centroid
     "q118_semantic_keeplist" -> ((s, d) =>
-      Similarity.semanticKeepList(eng(s, d).table("embeddings"),
-        threshold = 0.3, datasetKey = d)),
+      Similarity.semanticKeepList(eng(s, d).table("embeddings"), datasetKey = d)),
     // Train/eval leakage audit: eval docs near-dupped with a train doc
     // (shared pair frame x deterministic split — the eval-trust gate)
     "q119_leakage_audit" -> ((s, d) =>
@@ -1363,6 +1360,47 @@ object SparkEntry {
       |  UNION
       |  SELECT r.src, e.dst FROM r JOIN edges e ON r.dst = e.src)
       | SELECT * FROM r)"""
+
+  /** The df-capped (<= 256) postings CTEs over a CTE `s` of [[shinglesSql]]
+    * rows: `p` (doc, gram), `keep` (grams kept), `kp` and the pair
+    * intersection counts `i (doc_a, doc_b, n_int)`. Margin-prefixed, like
+    * [[shinglesSql]].
+    */
+  private val postingsPairsSql =
+    """p AS (SELECT doc_id, unnest(sh) AS g FROM s),
+      |keep AS (SELECT g FROM p GROUP BY g HAVING count(*) <= 256),
+      |kp AS (SELECT p.doc_id, p.g FROM p JOIN keep USING (g)),
+      |i AS (
+      | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_int
+      | FROM kp a JOIN kp b ON a.g = b.g AND a.doc_id < b.doc_id
+      | GROUP BY 1, 2)"""
+
+  /** Exact cosine top-10 against `vec_id = 0` over `embeddings`: the
+    * brute-force relation every exhaustive ANN regime must equal. */
+  private val cosineTop10Sql =
+    """WITH q AS (SELECT embedding AS q_emb FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding, label FROM embeddings) embeddings WHERE vec_id = 0)
+      |SELECT vec_id, label,
+      | round(list_inner_product(embedding, q_emb)
+      |   / (sqrt(list_inner_product(embedding, embedding))
+      |      * sqrt(list_inner_product(q_emb, q_emb))), 4) AS cos_sim
+      |FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding, label FROM embeddings) embeddings, q WHERE vec_id <> 0
+      |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin
+
+  /** The BM25 corpus CTEs over `documents`: `toks (doc_id, tok)`, `lens
+    * (doc_id, dl)` and the one-row `st (n_docs, avgdl)`. Margin-prefixed,
+    * like [[shinglesSql]]; interpolate it with `raw` (the regex holds a
+    * backslash).
+    */
+  private val bm25StatsSql =
+    """toks AS (
+      | SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS tok
+      | FROM documents),
+      |lens AS (
+      | SELECT doc_id,
+      |  CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE) AS dl
+      | FROM documents),
+      |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl
+      |       FROM lens)"""
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. Lazy:
@@ -1607,13 +1645,7 @@ object SparkEntry {
     "q136_jaccard_pairs" ->
       s"""WITH s AS (
         |$shinglesSql),
-        |p AS (SELECT doc_id, unnest(sh) AS g FROM s),
-        |keep AS (SELECT g FROM p GROUP BY g HAVING count(*) <= 256),
-        |kp AS (SELECT p.doc_id, p.g FROM p JOIN keep USING (g)),
-        |i AS (
-        | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_int
-        | FROM kp a JOIN kp b ON a.g = b.g AND a.doc_id < b.doc_id
-        | GROUP BY 1, 2),
+        |$postingsPairsSql,
         |z AS (SELECT doc_id, len(sh) AS n FROM s)
         |SELECT doc_a, doc_b,
         | round(CAST(n_int AS DOUBLE) / (za.n + zb.n - n_int), 4) AS jaccard
@@ -1626,13 +1658,7 @@ object SparkEntry {
     "q137_containment_pairs" ->
       s"""WITH s AS (
         |$shinglesSql),
-        |p AS (SELECT doc_id, unnest(sh) AS g FROM s),
-        |keep AS (SELECT g FROM p GROUP BY g HAVING count(*) <= 256),
-        |kp AS (SELECT p.doc_id, p.g FROM p JOIN keep USING (g)),
-        |i AS (
-        | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_int
-        | FROM kp a JOIN kp b ON a.g = b.g AND a.doc_id < b.doc_id
-        | GROUP BY 1, 2),
+        |$postingsPairsSql,
         |z AS (SELECT doc_id, len(sh) AS n FROM s)
         |SELECT doc_a, doc_b,
         | round(CAST(n_int AS DOUBLE) / least(za.n, zb.n), 4) AS overlap,
@@ -1646,13 +1672,7 @@ object SparkEntry {
     "q139_dup_degree" ->
       s"""WITH s AS (
         |$shinglesSql),
-        |p AS (SELECT doc_id, unnest(sh) AS g FROM s),
-        |keep AS (SELECT g FROM p GROUP BY g HAVING count(*) <= 256),
-        |kp AS (SELECT p.doc_id, p.g FROM p JOIN keep USING (g)),
-        |i AS (
-        | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_int
-        | FROM kp a JOIN kp b ON a.g = b.g AND a.doc_id < b.doc_id
-        | GROUP BY 1, 2),
+        |$postingsPairsSql,
         |z AS (SELECT doc_id, len(sh) AS n FROM s),
         |j AS (
         | SELECT doc_a, doc_b,
@@ -1704,13 +1724,7 @@ object SparkEntry {
         |WHERE bit_count(xor(fp_a, fp_b)) <= 3
         |ORDER BY 1, 2""".stripMargin,
     "q28_embed_knn" ->
-      """WITH q AS (SELECT embedding AS q_emb FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding, label FROM embeddings) embeddings WHERE vec_id = 0)
-        |SELECT vec_id, label,
-        | round(list_inner_product(embedding, q_emb)
-        |   / (sqrt(list_inner_product(embedding, embedding))
-        |      * sqrt(list_inner_product(q_emb, q_emb))), 4) AS cos_sim
-        |FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding, label FROM embeddings) embeddings, q WHERE vec_id <> 0
-        |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin,
+      cosineTop10Sql,
     // LSH probe top-k: the hyperplane components are md5 bits
     // (Similarity.planeComponent), so the oracle recomputes the FULL
     // probe — 4 plane families (tables x 8 planes), per-table bucket
@@ -2044,13 +2058,7 @@ object SparkEntry {
     "q191_jaccard_sweep" ->
       s"""WITH s AS (
         |$shinglesSql),
-        |p AS (SELECT doc_id, unnest(sh) AS g FROM s),
-        |keep AS (SELECT g FROM p GROUP BY g HAVING count(*) <= 256),
-        |kp AS (SELECT p.doc_id, p.g FROM p JOIN keep USING (g)),
-        |i AS (
-        | SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_int
-        | FROM kp a JOIN kp b ON a.g = b.g AND a.doc_id < b.doc_id
-        | GROUP BY 1, 2),
+        |$postingsPairsSql,
         |z AS (SELECT doc_id, len(sh) AS n FROM s),
         |j AS (
         | SELECT doc_a, doc_b,
@@ -5197,13 +5205,7 @@ object SparkEntry {
         |   / (len(toks) - 2), 4) AS dup_trigram_ratio
         |FROM t ORDER BY doc_id""".stripMargin,
     "q58_sql_surface" ->
-      """WITH q AS (SELECT embedding AS q_emb FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding, label FROM embeddings) embeddings WHERE vec_id = 0)
-        |SELECT vec_id, label,
-        | round(list_inner_product(embedding, q_emb)
-        |   / (sqrt(list_inner_product(embedding, embedding))
-        |      * sqrt(list_inner_product(q_emb, q_emb))), 4) AS cos_sim
-        |FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding, label FROM embeddings) embeddings, q WHERE vec_id <> 0
-        |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin,
+      cosineTop10Sql,
     "q59_approx_percentiles" ->
       """SELECT l_returnflag,
         | round(quantile_cont(l_extendedprice, 0.5), 4) AS p50,
@@ -5863,15 +5865,7 @@ object SparkEntry {
     // summed in double (CAST — DuckDB's bare 1.0 is DECIMAL and its
     // division would diverge from Spark's double at the 6th dp)
     "q129_hybrid_rrf" ->
-      """WITH toks AS (
-        | SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS tok
-        | FROM documents),
-        |lens AS (
-        | SELECT doc_id,
-        |  CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE) AS dl
-        | FROM documents),
-        |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl
-        |       FROM lens),
+      raw"""WITH $bm25StatsSql,
         |tf AS (SELECT doc_id, tok, CAST(count(*) AS DOUBLE) AS cnt FROM toks
         |       WHERE tok IN ('spark', 'query', 'join') GROUP BY 1, 2),
         |dfreq AS (SELECT tok, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY 1),
@@ -6046,23 +6040,11 @@ object SparkEntry {
         |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin,
     // exhaustive IVF ≡ brute force: same oracle as q28
     "q113_ivf_exhaustive" ->
-      """WITH q AS (SELECT embedding AS q_emb FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding, label FROM embeddings) embeddings WHERE vec_id = 0)
-        |SELECT vec_id, label,
-        | round(list_inner_product(embedding, q_emb)
-        |   / (sqrt(list_inner_product(embedding, embedding))
-        |      * sqrt(list_inner_product(q_emb, q_emb))), 4) AS cos_sim
-        |FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding, label FROM embeddings) embeddings, q WHERE vec_id <> 0
-        |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin,
+      cosineTop10Sql,
     // exhaustive probe of the incrementally-appended layout ≡ brute
     // force over base ∪ delta = the whole table: q113's oracle relation
     "q140_ivf_append" ->
-      """WITH q AS (SELECT embedding AS q_emb FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding, label FROM embeddings) embeddings WHERE vec_id = 0)
-        |SELECT vec_id, label,
-        | round(list_inner_product(embedding, q_emb)
-        |   / (sqrt(list_inner_product(embedding, embedding))
-        |      * sqrt(list_inner_product(q_emb, q_emb))), 4) AS cos_sim
-        |FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding, label FROM embeddings) embeddings, q WHERE vec_id <> 0
-        |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin,
+      cosineTop10Sql,
     "q112_oov_rate" ->
       """WITH tc AS (
         | SELECT doc_id, tok, count(*) AS cnt FROM (
@@ -6083,15 +6065,7 @@ object SparkEntry {
     // (constants written as the same folded expressions) so the scores
     // hash-compare at 4 dp
     "q110_bm25" ->
-      """WITH toks AS (
-        | SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS tok
-        | FROM documents),
-        |lens AS (
-        | SELECT doc_id,
-        |  CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE) AS dl
-        | FROM documents),
-        |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl
-        |       FROM lens),
+      raw"""WITH $bm25StatsSql,
         |tf AS (SELECT doc_id, tok, CAST(count(*) AS DOUBLE) AS cnt FROM toks
         |       WHERE tok IN ('spark', 'query', 'join') GROUP BY 1, 2),
         |dfreq AS (SELECT tok, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY 1)
@@ -6106,21 +6080,13 @@ object SparkEntry {
     // Corpus.bm25Retrieval's FP op order exactly (shared bm25Score
     // expression — constants written as the same folded expressions)
     "q115_bm25_join" ->
-      """WITH queries AS (
+      raw"""WITH queries AS (
         | SELECT * FROM (VALUES
         |  (CAST(0 AS BIGINT), ['spark', 'query', 'join']),
         |  (CAST(1 AS BIGINT), ['stream', 'window', 'batch']),
         |  (CAST(2 AS BIGINT), ['sort', 'merge', 'shuffle'])) q(query_id, terms)),
         |qterms AS (SELECT DISTINCT query_id, unnest(terms) AS tok FROM queries),
-        |toks AS (
-        | SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS tok
-        | FROM documents),
-        |lens AS (
-        | SELECT doc_id,
-        |  CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE) AS dl
-        | FROM documents),
-        |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, avg(dl) AS avgdl
-        |       FROM lens),
+        |$bm25StatsSql,
         |tf AS (SELECT doc_id, tok, CAST(count(*) AS DOUBLE) AS cnt FROM toks
         |       WHERE tok IN (SELECT tok FROM qterms) GROUP BY 1, 2),
         |dfreq AS (SELECT tok, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY 1),

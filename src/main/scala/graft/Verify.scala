@@ -40,6 +40,9 @@ object Verify {
     val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // release the session memos too: in the reliable checkpoint mode
+    // this deletes their files from the checkpoint dir
+    graft.operators.Scratch.invalidate(spark)
     spark.stop()
   }
 }

@@ -39,11 +39,6 @@ object TextAnalysis {
     round(length(regexp_replace(text, "[^A-Za-z]", "")).cast("double")
       / length(text), 4)
 
-  /** Ratio of punctuation characters. */
-  def punctRatio(text: Column): Column =
-    round(length(regexp_replace(text, "[^.,;:!?'\"()\\[\\]-]", "")).cast("double")
-      / length(text), 4)
-
   /** Per-language marker-token profiles (public stopword knowledge). */
   val stopwordProfiles: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "and", "of", "to", "a", "in", "is", "that", "it", "for"),

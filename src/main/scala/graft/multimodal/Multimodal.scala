@@ -58,19 +58,18 @@ object Multimodal {
 
   /** "Resize" + "frame-sample" stand-ins over the binary payload (the
     * shapes a codec-backed pipeline needs):
-    *   - resize: keep every stride-th byte down to <= `target` bytes;
+    *   - resize: keep every stride-th byte down to <= `target` (64) bytes;
     *   - frame-sample: treat the payload as fixed-size frames and keep
-    *     every `sampleEvery`-th frame.
+    *     every `sampleEvery`-th (4th) frame of `frameBytes` (32) bytes.
     * Runs as a native expression ([[graft.functions.AssetResizeSample]])
     * inside the scan stage — no RDD drop-down, no encoder round-trip;
     * a real codec swaps into the expression's marked eval body without
     * touching this plan.
     */
-  def resizeAndSample(
-      docs: DataFrame,
-      target: Int = 64,
-      frameBytes: Int = 32,
-      sampleEvery: Int = 4): DataFrame =
+  def resizeAndSample(docs: DataFrame): DataFrame = {
+    val target = 64
+    val frameBytes = 32
+    val sampleEvery = 4
     withAssets(docs)
       .select(col("doc_id"), col("meta.format").as("format"),
         graft.functions.MultimodalExpressions
@@ -80,6 +79,7 @@ object Multimodal {
         col("t.resized_bytes"), col("t.n_frames"), col("t.sampled_frames"),
         col("t.checksum"))
       .orderBy(col("doc_id"))
+  }
 
   /** "Decode" each asset and extract a 16-bin byte-value histogram
     * feature; the L2 norm and argmax bin are emitted as compact features.
@@ -115,7 +115,7 @@ object Multimodal {
   }
 
   /** Byte-balanced shard plan: assets ranked by size descending and
-    * dealt round-robin into `shards` shards — the deterministic
+    * dealt round-robin into `shards` (8) shards — the deterministic
     * first-fit-ish layout a modality-heavy dataset needs so one shard
     * doesn't carry all the video. Reports per-shard count, bytes, and
     * the balance ratio against the mean. Rank and assignment are exact
@@ -125,7 +125,8 @@ object Multimodal {
     * the first operator to die at 100 TB; the distributed rank exchanges
     * the frame exactly once (range repartition) and stays map-side after.
     */
-  def shardPlan(docs: DataFrame, shards: Int = 8): DataFrame = {
+  def shardPlan(docs: DataFrame): DataFrame = {
+    val shards = 8
     val sized = withAssets(docs)
       .select(col("doc_id"), col("meta.n_bytes").as("n_bytes"))
     val perShard = graft.operators.Ranks
@@ -143,11 +144,12 @@ object Multimodal {
   }
 
   /** Thin-asset purge estimate: assets whose payload is smaller than
-    * `minBytes` — the "tiny payload, full bookkeeping cost" cut — with
+    * `minBytes` (100) — the "tiny payload, full bookkeeping cost" cut — with
     * the bytes a purge reclaims per source. Exact integer predicate and
     * byte sums.
     */
-  def purgeEstimate(docs: DataFrame, minBytes: Long = 100L): DataFrame =
+  def purgeEstimate(docs: DataFrame): DataFrame = {
+    val minBytes = 100L
     withAssets(docs)
       .withColumn("thin", (col("meta.n_bytes") < minBytes).cast("int"))
       .groupBy(col("source"))
@@ -160,11 +162,12 @@ object Multimodal {
         round(col("bytes_reclaimed").cast("double") /
           col("total_bytes").cast("double"), 6))
       .orderBy(col("source"))
+  }
 
   /** Two-stage exact asset dedup by content digest — the "same asset
     * re-uploaded under ten names" cut that runs BEFORE any perceptual
     * hashing. Stage 1 groups by a digest of the payload's first
-    * `prefixBytes` bytes (the thumbnail/header region — cheap, catches
+    * `prefixBytes` (80) bytes (the thumbnail/header region — cheap, catches
     * every exact-duplicate candidate since equal payloads have equal
     * prefixes); stage 2 counts DISTINCT full-payload digests inside each
     * candidate group, so `n_copies == n_distinct_full` exposes prefix
@@ -177,7 +180,8 @@ object Multimodal {
     * carries gigabytes, not the corpus. The same plan dedups any opaque
     * modality.
     */
-  def assetDedup(docs: DataFrame, prefixBytes: Int = 80): DataFrame =
+  def assetDedup(docs: DataFrame): DataFrame = {
+    val prefixBytes = 80
     withAssets(docs)
       .select(col("doc_id"),
         sha2(expr(s"substring(payload, 1, $prefixBytes)"), 256).as("digest"),
@@ -187,6 +191,7 @@ object Multimodal {
         countDistinct(col("full_digest")).as("n_distinct_full"))
       .filter(col("n_copies") > 1)
       .orderBy(col("keeper"))
+  }
 
   /** Aspect-ratio bucketing for multimodal training batches: group
     * assets by quantized width:height ratio (`(10·w) div h` — integer

@@ -121,12 +121,10 @@ object Corpus {
     * compute them with the identical op order, so the flag is stable);
     * the reported ratios are rounded for the result surface.
     */
-  def qualityFilter(
-      docs: DataFrame,
-      minTokens: Int = 20,
-      maxDupRatio: Double = 0.6,
-      maxTopRatio: Double = 0.15,
-      datasetKey: Option[String] = None): DataFrame = {
+  def qualityFilter(docs: DataFrame, datasetKey: Option[String] = None): DataFrame = {
+    val minTokens = 20
+    val maxDupRatio = 0.6
+    val maxTopRatio = 0.15
     val total = col("n_tokens").cast("double")
     val dup = lit(1.0) - col("distinct_tokens").cast("double") / total
     val top = col("top_count").cast("double") / total
@@ -154,7 +152,9 @@ object Corpus {
     * nondeterminism — which is what a training pipeline actually needs
     * from a split: stable membership under re-runs and backfills.
     */
-  def splitAssign(docs: DataFrame, trainPct: Int = 80, valPct: Int = 10): DataFrame =
+  def splitAssign(docs: DataFrame): DataFrame = {
+    val trainPct = 80
+    val valPct = 10
     docs
       .withColumn("bucket", pmod(docHash(col("doc_id")), lit(100)))
       .withColumn("split",
@@ -162,6 +162,7 @@ object Corpus {
           .when(col("bucket") < trainPct + valPct, "val")
           .otherwise("test"))
       .drop("bucket")
+  }
 
   /** Per-(lang, split) cardinality + size stats — the stratification
     * report for [[splitAssign]].
@@ -270,11 +271,9 @@ object Corpus {
     * deliverable joins back to `docs` by doc_id.
     */
   def curate(docs: DataFrame, pairs: DataFrame,
-      minTokens: Int = 20, maxDupRatio: Double = 0.6,
-      maxTopRatio: Double = 0.15,
       datasetKey: Option[String] = None): DataFrame = {
     val qualityKeep =
-      qualityFilter(docs, minTokens, maxDupRatio, maxTopRatio, datasetKey)
+      qualityFilter(docs, datasetKey)
       .filter(col("keep")).select(col("doc_id"))
     val dedupKeep = Dedup.keepList(docs, pairs)
     splitAssign(docs).select(col("doc_id"), col("lang"), col("split"))
@@ -741,8 +740,7 @@ object Corpus {
     * exactly (constants written as the same expressions,
     * left-associated), so scores hash-compare at 4 dp.
     */
-  def bm25TopDocs(docs: DataFrame, terms: Seq[String], k1: Double = 1.2,
-      b: Double = 0.75, topK: Int = 10): DataFrame = {
+  def bm25TopDocs(docs: DataFrame, terms: Seq[String], topK: Int = 10): DataFrame = {
     require(terms.nonEmpty, "bm25TopDocs needs at least one query term")
     val toks = graft.functions.TextAnalysis.tokens(col("text"))
     // ONE corpus scan for stats AND tf (round 18, guide §1.2/§2.3): the
@@ -774,17 +772,19 @@ object Corpus {
     tf.join(broadcast(dfreq), "tok")
       .crossJoin(broadcast(stats))
       .groupBy(col("doc_id"))
-      .agg(round(sum(bm25Score(k1, b)), 4).as("bm25"),
+      .agg(round(sum(bm25Score), 4).as("bm25"),
         count(lit(1)).cast("int").as("n_terms"))
       .orderBy(col("bm25").desc, col("doc_id"))
       .limit(topK)
   }
 
   /** The per-(doc, term) BM25 summand over columns (cnt, dl, df, n_docs,
-    * avgdl) — one expression shared by [[bm25TopDocs]] and
-    * [[bm25Retrieval]] so both stay FP-op-order-identical to the oracle.
+    * avgdl) at k1 = 1.2, b = 0.75 — one expression shared by
+    * [[bm25TopDocs]], [[bm25Retrieval]] and [[chunkRetrieval]] so all
+    * three stay FP-op-order-identical to the oracle.
     */
-  private def bm25Score(k1: Double, b: Double): Column = {
+  private def bm25Score: Column = {
+    val (k1, b) = (1.2, 0.75)
     val idf = log(lit(1.0) +
       (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
     idf * (col("cnt").cast("double") * (lit(k1) + lit(1.0))) /
@@ -820,9 +820,9 @@ object Corpus {
     * relation is regime-independent (q115's oracle holds for both); the
     * shuffle plan shape is asserted in CorpusPipelineSpec.
     */
-  def bm25Retrieval(docs: DataFrame, queries: DataFrame, k1: Double = 1.2,
-      b: Double = 0.75, topK: Int = 5,
+  def bm25Retrieval(docs: DataFrame, queries: DataFrame,
       broadcastQueries: Option[Boolean] = None): DataFrame = {
+    val topK = 5
     val toks = graft.functions.TextAnalysis.tokens(col("text"))
     val qterms = queries
       .select(col("query_id"), explode(col("terms")).as("tok")).distinct()
@@ -869,7 +869,7 @@ object Corpus {
       .crossJoin(broadcast(stats))
       .join(Similarity.queryRegime(qterms, broadcastQueries), "tok")
       .groupBy(col("query_id"), col("doc_id"))
-      .agg(round(sum(bm25Score(k1, b)), 4).as("bm25"),
+      .agg(round(sum(bm25Score), 4).as("bm25"),
         count(lit(1)).cast("int").as("n_terms"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("bm25").desc, col("doc_id"))
@@ -898,8 +898,7 @@ object Corpus {
     * corpus passes deliberately — the round-18 single-scan A/B is in
     * the method comment inside.
     */
-  def chunkRetrieval(docs: DataFrame, queries: DataFrame,
-      chunkTokens: Int = 32, k1: Double = 1.2, b: Double = 0.75,
+  def chunkRetrieval(docs: DataFrame, queries: DataFrame, chunkTokens: Int = 32,
       topK: Int = 5): DataFrame = {
     val toksArr = graft.functions.TextAnalysis.tokens(col("text"))
     val qterms = queries
@@ -940,7 +939,7 @@ object Corpus {
       .crossJoin(broadcast(stats))
       .join(broadcast(qterms), "tok")
       .groupBy(col("query_id"), col("doc_id"), col("chunk_idx"))
-      .agg(round(sum(bm25Score(k1, b)), 4).as("bm25"),
+      .agg(round(sum(bm25Score), 4).as("bm25"),
         count(lit(1)).cast("int").as("n_terms"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("bm25").desc, col("doc_id"), col("chunk_idx"))
@@ -962,7 +961,7 @@ object Corpus {
     * (doc_id = vec_id, the fixture's contract).
     *
     * Scale shape: each candidate list is an already-proven bounded
-    * top-`fuseK` (BM25's two-scan TakeOrderedAndProject; the ANN side an
+    * top-`fuseK` (20; the fused list keeps the top 10, `rrfK` = 60) (BM25's two-scan TakeOrderedAndProject; the ANN side an
     * exact scan here, swappable for the IVF probe). Fusion then touches
     * 2×fuseK rows: ranks are windows over those bounded lists (fuseK
     * rows — bounded by the fusion width, a constant, not by data), the
@@ -972,8 +971,10 @@ object Corpus {
     * fused output is hash-comparable cross-engine.
     */
   def hybridRetrieval(docs: DataFrame, emb: DataFrame, terms: Seq[String],
-      queryVecId: Long, fuseK: Int = 20, topK: Int = 10,
-      rrfK: Int = 60): DataFrame = {
+      queryVecId: Long): DataFrame = {
+    val fuseK = 20
+    val topK = 10
+    val rrfK = 60
     val wLex = Window.orderBy(col("bm25").desc, col("doc_id"))
     val lex = bm25TopDocs(docs, terms, topK = fuseK)
       .withColumn("lex_rank", row_number().over(wLex))
@@ -1247,8 +1248,9 @@ object Corpus {
     * arithmetic (q23's oracle reproduces it bit-for-bit), so the tier
     * decision is stable cross-engine with no FP-boundary caveat.
     */
-  def qualityTierReport(docs: DataFrame,
-      lowCut: Double = 0.65, highCut: Double = 0.74): DataFrame = {
+  def qualityTierReport(docs: DataFrame): DataFrame = {
+    val lowCut = 0.65
+    val highCut = 0.74
     val q = graft.functions.TextAnalysis.qualityScore(col("text"))
     docs
       .select(graft.functions.TextAnalysis.tokenCount(col("text")).as("__t"),
@@ -1294,7 +1296,7 @@ object Corpus {
 
   /** Corpus-level duplicated-span removal (the C4 / RefinedWeb
     * boilerplate cut, adapted to span granularity): chunk each document
-    * into NON-OVERLAPPING `n`-token blocks, drop every block whose exact
+    * into NON-OVERLAPPING `n`-token (3) blocks, drop every block whose exact
     * text occurs in more than one document of the corpus (site chrome,
     * license headers, navigation — content that repeats verbatim across
     * pages), and reassemble the survivors in their original order. C4
@@ -1315,7 +1317,8 @@ object Corpus {
     * single. No driver materialization, no all-pairs anything: cost is
     * linear in corpus tokens.
     */
-  def dedupSpans(docs: DataFrame, n: Int = 3): DataFrame = {
+  def dedupSpans(docs: DataFrame): DataFrame = {
+    val n = 3
     val toks = split(col("text"), " ")
     // ceil(size/n) blocks; sequence(0,-1) counts DOWN, so guard empties
     val base = docs.select(col("doc_id"), toks.as("__t"))
@@ -1384,9 +1387,9 @@ object Corpus {
   }
 
   /** Batching-efficiency report for a fixed context window: bucket
-    * documents by token length (`binWidth`-wide bins) and report, per
+    * documents by token length (`binWidth`-wide bins, 64) and report, per
     * bin, the padding waste (slots burned padding short docs to
-    * `contextLen`) and truncation loss (tokens cut from docs longer than
+    * `contextLen` = 512) and truncation loss (tokens cut from docs longer than
     * it) of naive one-doc-per-row batching, plus the resulting
     * efficiency = kept / (docs × contextLen). This is the measurement
     * that motivates [[packSequences]]: the gap between a bin's
@@ -1396,8 +1399,9 @@ object Corpus {
     * key (≈ maxLen / binWidth bins) — no joins, no text shuffle (the
     * token count reduces each doc to one long at the scan).
     */
-  def paddingWaste(docs: DataFrame, contextLen: Int = 512,
-      binWidth: Int = 64): DataFrame = {
+  def paddingWaste(docs: DataFrame): DataFrame = {
+    val contextLen = 512
+    val binWidth = 64
     val kept = least(col("n_tok"), lit(contextLen.toLong))
     docs.select(size(split(col("text"), " ")).cast("long").as("n_tok"))
       .withColumn("bin", floor(col("n_tok") / binWidth).cast("long"))
@@ -1447,15 +1451,16 @@ object Corpus {
     * listings, license headers) — the PREFIX-clustering complement to
     * [[dedupSpans]]' span-content cut, catching templates whose bodies
     * diverge after a shared opening. Emits prefixes shared by at least
-    * `minDocs` documents with their spread across sources.
+    * `minDocs` (3) documents with their spread across sources.
     *
     * Scale shape: each doc reduces to its k-token prefix in the scan
     * projection (one slice, no explode — the full token array never
     * materializes past the expression), then one aggregation on the
     * prefix string; bounded output via the minDocs filter.
     */
-  def templatePrefixes(docs: DataFrame, k: Int = 5,
-      minDocs: Int = 3): DataFrame =
+  def templatePrefixes(docs: DataFrame): DataFrame = {
+    val k = 5
+    val minDocs = 3
     docs
       .select(array_join(slice(split(col("text"), " "), 1, k), " ")
         .as("prefix"), col("doc_id"), col("source"))
@@ -1465,6 +1470,7 @@ object Corpus {
         min(col("doc_id")).as("first_doc"))
       .filter(col("n_docs") >= minDocs)
       .orderBy(col("n_docs").desc, col("prefix"))
+  }
 
   /** Character-level Shannon entropy per language — the "does this text
     * look like language at all?" quality signal (mojibake, base64 blobs,
@@ -1504,7 +1510,8 @@ object Corpus {
     * the Jaccard arithmetic is single-division integer math, identical
     * on both engines.
     */
-  def sourceVocabOverlap(docs: DataFrame, topK: Int = 20): DataFrame = {
+  def sourceVocabOverlap(docs: DataFrame): DataFrame = {
+    val topK = 20
     val st = docs
       .select(col("source"),
         explode(array_distinct(split(col("text"), " "))).as("token"))
@@ -1557,7 +1564,8 @@ object Corpus {
     * the top-k movers come out via TakeOrderedAndProject — no global
     * sort. Doc counts ride in as a 2-row broadcast cross join.
     */
-  def idfDrift(docs: DataFrame, k: Int = 20): DataFrame = {
+  def idfDrift(docs: DataFrame): DataFrame = {
+    val k = 20
     val toks = docs
       .select(col("doc_id"), (col("doc_id") % 2 === 0).as("half_a"),
         explode(array_distinct(split(col("text"), " "))).as("token"))
@@ -1691,8 +1699,8 @@ object Corpus {
     * allocated token count. One scan, one ~|sources| rollup; the floor
     * runs on an integer-valued double so the cast is portable.
     */
-  def sqrtBudgetAllocation(docs: DataFrame,
-      budgetTokens: Long = 500000L): DataFrame = {
+  def sqrtBudgetAllocation(docs: DataFrame): DataFrame = {
+    val budgetTokens = 500000L
     val perSource = docs.select(col("source"),
         (length(col("text")) - length(translate(col("text"), " ", "")) + 1)
           .cast("long").as("toks"))
@@ -1719,7 +1727,8 @@ object Corpus {
     * wide stage); documents shorter than the shingle width contribute no
     * grams and are excluded, identically on both engines.
     */
-  def ngramNovelty(docs: DataFrame, n: Int = 3): DataFrame = {
+  def ngramNovelty(docs: DataFrame): DataFrame = {
+    val n = 3
     val grams = docs.select(col("doc_id"), col("source"),
         explode(graft.functions.TextAnalysis.shingles(col("text"), n))
           .as("g"))
@@ -1921,7 +1930,7 @@ object Corpus {
   }
 
   /** Stylometric profile divergence per source: the corpus picks its own
-    * "function words" (global top-`k` tokens, count-desc/word-asc — a
+    * "function words" (global top-`k` (10) tokens, count-desc/word-asc — a
     * deterministic, data-derived list, since a synthetic corpus has no
     * English stopwords), then each source's frequency profile over that
     * list is compared to the global profile by L1 distance — the
@@ -1974,8 +1983,9 @@ object Corpus {
     * oracle-side counterpart (`generate_series(1, len-2)` is empty), so
     * the term space must be defined identically on both engines.
     */
-  def tfidfCosinePairs(docs: DataFrame, threshold: Double = 0.8,
-      maxDf: Int = 256): DataFrame = {
+  def tfidfCosinePairs(docs: DataFrame): DataFrame = {
+    val threshold = 0.8
+    val maxDf = 256
     // term space = distinct 3-word shingles (the q136 space), NOT
     // unigrams: this corpus family has a tiny unigram vocabulary (~31
     // terms at sf0.1), under which every unigram is a hot posting and
@@ -2058,7 +2068,8 @@ object Corpus {
       .orderBy(col("source"))
   }
 
-  def stylometryProfile(docs: DataFrame, k: Int = 10): DataFrame = {
+  def stylometryProfile(docs: DataFrame): DataFrame = {
+    val k = 10
     val tokens = docs.select(col("source"),
       explode(split(lower(col("text")), " ")).as("w"))
     val bySourceWord = tokens.groupBy(col("source"), col("w"))
@@ -2145,7 +2156,7 @@ object Corpus {
   }
 
   /** Per-source topic coherence: the mean pairwise PMI of each source's
-    * top-`m` tokens, computed from document co-occurrence — the
+    * top-`m` (5) tokens, computed from document co-occurrence — the
     * topic-model evaluation statistic ("do this source's characteristic
     * terms actually appear TOGETHER?") that separates a coherent domain
     * source from a mixed-crawl one. `PMI(a,b) = log₂(df_ab·N /
@@ -2160,7 +2171,8 @@ object Corpus {
     * zero-cooccurrence pair is excluded from the mean (log 0 is an
     * engine-divergent boundary) and surfaced in `n_zero_pairs` instead.
     */
-  def sourceCoherence(docs: DataFrame, m: Int = 5): DataFrame = {
+  def sourceCoherence(docs: DataFrame): DataFrame = {
+    val m = 5
     val toks = docs.select(col("doc_id"), col("source"),
       explode(split(col("text"), " ")).as("tok"))
     val top = toks.groupBy(col("source"), col("tok"))

@@ -16,11 +16,21 @@ import graft.functions.TextAnalysis
   *   - verification joins shingle sets back for the (small) candidate set
   *     only; AQE broadcasts the candidate list;
   *   - degenerate buckets (giant clusters of identical docs) switch from
-  *     quadratic all-pairs to a linear star expansion past `maxBucketSize`
+  *     quadratic all-pairs to a linear star expansion past a bucket-size cap
   *     so one viral duplicate cannot quadratic-blow a partition, while
   *     every member stays connected for clustering (see [[bucketPairs]]).
   */
 object Dedup {
+
+  /** Word n-gram size of the shingle sets every operator here compares. */
+  val ShingleN = 3
+  /** MinHash signature length and LSH banding: 16 bands of 4 rows. */
+  val NumPerms = 64
+  val Bands = 16
+  /** Near-dup Jaccard cut of the minhash and postings pair operators. */
+  val Threshold = 0.8
+  /** Bucket size past which [[bucketPairs]] emits a star, not all pairs. */
+  val MaxBucketSize = 1000
 
   /** Exact dedup: group by full text, keep the smallest doc_id as the
     * canonical representative (deterministic, unlike dropDuplicates).
@@ -33,19 +43,6 @@ object Dedup {
       .select(col("doc_id"), col("n_copies"))
       .orderBy(col("doc_id"))
 
-  /** MinHash signatures: a native per-row expression over the shingle
-    * set — signatures are per-document, so the scale-optimal plan is a
-    * pure map with NO shuffle at all. (Two earlier forms are preserved in
-    * history for the record: 64 nested HOFs — inlined 64x by
-    * CollapseProject, 25x slower — and explode + 64 partial mins — right
-    * shape for an aggregate but pays an unnecessary 270k-row shuffle.)
-    * Returns (doc_id, sig array<long>).
-    */
-  def minhashSigs(docs: DataFrame, shingleN: Int, numPerms: Int): DataFrame =
-    docs.select(col("doc_id"),
-      graft.functions.TextExpressions.minhashSig(
-        TextAnalysis.shingles(col("text"), shingleN), numPerms).as("sig"))
-
   /** LSH band hashes of a minhash signature: b bands of r rows each. */
   def bandHashes(sig: Column, b: Int, r: Int): Column =
     array((0 until b).map { i =>
@@ -53,7 +50,8 @@ object Dedup {
     }: _*)
 
   /** Candidate pairs whose band hashes collide, then exact-Jaccard
-    * verified against `threshold`. Banding 16x4 targets the ~0.8+ Jaccard
+    * verified against [[Threshold]]. Banding 16x4 ([[Bands]] of
+    * [[NumPerms]]) targets the ~0.8+ Jaccard
     * near-dup regime (P[detect] = 1-(1-j^4)^16: .9998 at j=.8, ~1 at .9).
     *
     * Precision/recall contract: exact-Jaccard verification makes the
@@ -66,30 +64,27 @@ object Dedup {
     * against a regenerated corpus with mass at the threshold boundary,
     * gate this with a recall tolerance rather than exact equality.
     */
-  def minhashPairs(
-      docs: DataFrame,
-      shingleN: Int = 3,
-      numPerms: Int = 64,
-      bands: Int = 16,
-      threshold: Double = 0.8,
-      maxBucketSize: Int = 1000): DataFrame = {
-    val r = numPerms / bands
+  def minhashPairs(docs: DataFrame): DataFrame = {
     // Shingling is the pipeline's hot map work and three stages need it
     // (signature + both sides of the verification join) — materialize it
     // once (MEMORY_AND_DISK via localCheckpoint) and derive everything
     // from the cached (doc_id, sh) frame. ~1 KB/doc: the cache is orders
     // of magnitude smaller than the corpus text it replaces re-scanning.
     val withSh = docs.select(col("doc_id"),
-      TextAnalysis.shingles(col("text"), shingleN).as("sh"))
+      TextAnalysis.shingles(col("text"), ShingleN).as("sh"))
       .transform(Scratch.staged)
-    val sig = withSh.select(col("doc_id"),
-      bandHashes(graft.functions.TextExpressions.minhashSig(col("sh"), numPerms),
-        bands, r).as("bands"))
+    val sig = withSh.select(col("doc_id"), minhashBands(col("sh")).as("bands"))
     val exploded = sig.select(col("doc_id"), explode(col("bands")).as("b"))
       .select(col("doc_id"), col("b.band").as("band"), col("b.sig").as("sig"))
-    val cand = bucketPairs(exploded, Seq("band", "sig"), "doc_id", maxBucketSize)
-    verifyJaccard(cand, withSh, threshold)
+    val cand = bucketPairs(exploded, Seq("band", "sig"), "doc_id", MaxBucketSize)
+    verifyJaccard(cand, withSh, Threshold)
   }
+
+  /** The [[Bands]] band hashes of a shingle set's [[NumPerms]]-long
+    * minhash signature. */
+  private def minhashBands(sh: Column): Column =
+    bandHashes(graft.functions.TextExpressions.minhashSig(sh, NumPerms),
+      Bands, NumPerms / Bands)
 
   /** Near-dup pairs computed ONCE per (session, dataset) and reused.
     *
@@ -106,9 +101,7 @@ object Dedup {
     * or dataset computes fresh. The key is the CALLER-SUPPLIED path and
     * is trusted: an entry lives until [[Scratch.invalidate]] — if the
     * data under `datasetKey` is rewritten mid-session, the caller must
-    * invalidate or every consumer reads stale pairs. Only the
-    * DEFAULT-parameter pipeline is memoized; callers with custom banding
-    * use [[minhashPairs]].
+    * invalidate or every consumer reads stale pairs.
     */
   def minhashPairsShared(docs: DataFrame, datasetKey: String): DataFrame =
     Scratch.memo(docs.sparkSession, "minhashPairs", datasetKey)(
@@ -227,14 +220,13 @@ object Dedup {
     * boundary, never a false positive. Oracles replicate the cap with the
     * same df rule, so the contract stays hash-exact either way.
     */
-  def jaccardPairs(docs: DataFrame, shingleN: Int = 3,
-      threshold: Double = 0.8, maxDf: Int = 1000,
+  def jaccardPairs(docs: DataFrame, maxDf: Int = 1000,
       datasetKey: Option[String] = None): DataFrame =
-    pairIntersections(docs, shingleN, maxDf, datasetKey)
+    pairIntersections(docs, maxDf, datasetKey)
       // threshold the UNROUNDED ratio, same discipline as [[verifyJaccard]]
       .withColumn("__j", col("__i").cast("double") /
         (col("__na") + col("__nb") - col("__i")))
-      .filter(col("__j") >= threshold)
+      .filter(col("__j") >= Threshold)
       .select(col("doc_a"), col("doc_b"), round(col("__j"), 4).as("jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
 
@@ -247,26 +239,25 @@ object Dedup {
     * With a `datasetKey` the frame is session-memoized and
     * localCheckpoint'ed (the [[minhashPairsShared]] discipline): four
     * registered queries consume this exact frame at the same
-    * (shingleN, maxDf), and the postings self-join — the expensive part
+    * maxDf, and the postings self-join — the expensive part
     * of all four — is paid once per session instead of once per
     * consumer. The checkpointed frame is one row per CANDIDATE pair
     * (intersection ≥ 1 post-cap), bounded by the same maxDf cap that
     * bounds the join itself; [[Scratch.invalidate]] releases it.
     */
-  private def pairIntersections(docs: DataFrame, shingleN: Int,
-      maxDf: Int, datasetKey: Option[String] = None): DataFrame =
+  private def pairIntersections(docs: DataFrame, maxDf: Int,
+      datasetKey: Option[String]): DataFrame =
     datasetKey match {
       case Some(k) => Scratch.memo(docs.sparkSession, "pairIntersections",
-          (k, shingleN, maxDf))(
-        computePairIntersections(docs, shingleN, maxDf)
+          (k, maxDf))(
+        computePairIntersections(docs, maxDf)
           .transform(Scratch.stageShared))
-      case None => computePairIntersections(docs, shingleN, maxDf)
+      case None => computePairIntersections(docs, maxDf)
     }
 
-  private def computePairIntersections(docs: DataFrame, shingleN: Int,
-      maxDf: Int): DataFrame = {
+  private def computePairIntersections(docs: DataFrame, maxDf: Int): DataFrame = {
     val withSh = docs
-      .select(col("doc_id"), TextAnalysis.shingles(col("text"), shingleN).as("sh"))
+      .select(col("doc_id"), TextAnalysis.shingles(col("text"), ShingleN).as("sh"))
       .transform(Scratch.staged)
     val post = withSh.select(col("doc_id"), explode(col("sh")).as("g"))
     // count-then-semi-join (not collect_list-then-filter): a mega-hot gram
@@ -311,11 +302,10 @@ object Dedup {
     * the pair pipeline per threshold. Counts are integers, so the curve
     * is bit-stable across engines.
     */
-  def jaccardThresholdSweep(docs: DataFrame, shingleN: Int = 3,
-      maxDf: Int = 1000,
-      thresholds: Seq[Double] = Seq(0.5, 0.6, 0.7, 0.8, 0.9),
+  def jaccardThresholdSweep(docs: DataFrame, maxDf: Int = 1000,
       datasetKey: Option[String] = None): DataFrame = {
-    val j = pairIntersections(docs, shingleN, maxDf, datasetKey)
+    val thresholds = Seq(0.5, 0.6, 0.7, 0.8, 0.9)
+    val j = pairIntersections(docs, maxDf, datasetKey)
       .withColumn("__j", col("__i").cast("double") /
         (col("__na") + col("__nb") - col("__i")))
     val sweep = j
@@ -357,10 +347,10 @@ object Dedup {
     * coefficients so a consumer can separate true near-dups (high
     * jaccard) from inclusions (high overlap, low jaccard).
     */
-  def containmentPairs(docs: DataFrame, shingleN: Int = 3,
+  def containmentPairs(docs: DataFrame,
       threshold: Double = 0.9, maxDf: Int = 1000,
       datasetKey: Option[String] = None): DataFrame =
-    pairIntersections(docs, shingleN, maxDf, datasetKey)
+    pairIntersections(docs, maxDf, datasetKey)
       .withColumn("__c", col("__i").cast("double") / least(col("__na"), col("__nb")))
       .filter(col("__c") >= threshold)
       .select(col("doc_a"), col("doc_b"),
@@ -370,7 +360,7 @@ object Dedup {
       .orderBy(col("doc_a"), col("doc_b"))
 
   /** Per-document near-duplicate DEGREE: for every doc with at least one
-    * exact-Jaccard partner at `threshold`, how many partners it has and
+    * exact-Jaccard partner at [[Threshold]], how many partners it has and
     * the strongest similarity. Degree is the density signal pair lists
     * bury: a doc with 40 near-dups is boilerplate (a template, a license
     * page, syndicated chrome) and a curation pass drops or down-weights
@@ -385,13 +375,12 @@ object Dedup {
     * that is already tiny next to the corpus, and the degree agg is a
     * bounded-key groupBy on doc_id.
     */
-  def dupDegree(docs: DataFrame, shingleN: Int = 3,
-      threshold: Double = 0.8, maxDf: Int = 1000,
+  def dupDegree(docs: DataFrame, maxDf: Int = 1000,
       datasetKey: Option[String] = None): DataFrame = {
-    val pairs = pairIntersections(docs, shingleN, maxDf, datasetKey)
+    val pairs = pairIntersections(docs, maxDf, datasetKey)
       .withColumn("__j", col("__i").cast("double") /
         (col("__na") + col("__nb") - col("__i")))
-      .filter(col("__j") >= threshold)
+      .filter(col("__j") >= Threshold)
     pairs.select(col("doc_a").as("doc_id"), col("__j"))
       .unionAll(pairs.select(col("doc_b").as("doc_id"), col("__j")))
       .groupBy(col("doc_id"))
@@ -401,12 +390,11 @@ object Dedup {
   }
 
   /** One side of the bipartite near-dup join, pre-keyed: the checkpointed
-    * shingle frame and its exploded (id, band, sig) band-hash frame, plus
-    * the banding parameters they were built with (a probe MUST use the
-    * same family or the equi-join keys mean nothing).
+    * shingle frame and its exploded (id, band, sig) band-hash frame. Both
+    * sides of a join are keyed by the one banding family above, so their
+    * equi-join keys mean the same thing.
     */
-  final case class MinhashJoinIndex(sh: DataFrame, bands: DataFrame,
-      shingleN: Int, numPerms: Int, nBands: Int)
+  final case class MinhashJoinIndex(sh: DataFrame, bands: DataFrame)
 
   /** Shingle + band-hash one side of the bipartite join. `scratch` frames
     * are per-query intermediates (drained at the query boundary);
@@ -414,27 +402,21 @@ object Dedup {
     * via [[Scratch.invalidate]].
     */
   private def keyedSide(df: DataFrame, idAs: String, shAs: String,
-      shingleN: Int, numPerms: Int, bands: Int,
       scratch: Boolean): MinhashJoinIndex = {
-    val r = numPerms / bands
     // session-lifetime (scratch=false) sides are multi-consumer — in the
     // reliable-checkpoint mode they must not re-read files per probe
     val raw = df.select(col("doc_id").as(idAs),
-      TextAnalysis.shingles(col("text"), shingleN).as(shAs))
+      TextAnalysis.shingles(col("text"), ShingleN).as(shAs))
     val withSh =
       if (scratch) raw.transform(Scratch.staged)
       else raw.transform(Scratch.stageShared)
-    val ex = withSh.select(col(idAs),
-      explode(bandHashes(
-        graft.functions.TextExpressions.minhashSig(col(shAs), numPerms),
-        bands, r)).as("b"))
+    val ex = withSh.select(col(idAs), explode(minhashBands(col(shAs))).as("b"))
       .select(col(idAs), col("b.band").as("band"), col("b.sig").as("sig"))
-    MinhashJoinIndex(withSh, ex, shingleN, numPerms, bands)
+    MinhashJoinIndex(withSh, ex)
   }
 
   /** Build (once per session+dataset) the corpus side of
-    * [[minhashJoin]] for repeated probing — default banding only, like
-    * [[minhashPairsShared]]; custom families go through [[minhashJoin]].
+    * [[minhashJoin]] for repeated probing, like [[minhashPairsShared]].
     * Build once — the full corpus scan + shingle + 64 minhash passes, the
     * expensive amortized step — probe many. This is what an ONLINE
     * admission gate (q123) needs: a per-trigger rebuild of the static
@@ -444,17 +426,15 @@ object Dedup {
     */
   def minhashJoinIndexShared(right: DataFrame, datasetKey: String): MinhashJoinIndex =
     Scratch.memo(right.sparkSession, "minhashJoinIndex", datasetKey)(
-      keyedSide(right, "match_id", "sh_b", 3, 64, 16, scratch = false))
+      keyedSide(right, "match_id", "sh_b", scratch = false))
 
   /** Probe a pre-built corpus index with `left`: the per-trigger cost of
     * the streaming gate — the probe batch's own shingles plus the
     * (band, sig) equi-join; the corpus side is read from its checkpoint,
     * never recomputed. Same output contract as [[minhashJoin]].
     */
-  def minhashJoinProbe(left: DataFrame, idx: MinhashJoinIndex,
-      threshold: Double = 0.8): DataFrame = {
-    val l = keyedSide(left, "probe_id", "sh_a",
-      idx.shingleN, idx.numPerms, idx.nBands, scratch = true)
+  def minhashJoinProbe(left: DataFrame, idx: MinhashJoinIndex): DataFrame = {
+    val l = keyedSide(left, "probe_id", "sh_a", scratch = true)
     // Bipartite band join and both verification lookups: every input
     // grows with its corpus side — shuffle regime, never broadcast.
     val cand = l.bands.join(Par.shuffleJoin(idx.bands), Seq("band", "sig"))
@@ -467,13 +447,13 @@ object Dedup {
       .withColumn("__j",
         size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
           size(array_union(col("sh_a"), col("sh_b"))))
-      .filter(col("__j") >= threshold)
+      .filter(col("__j") >= Threshold)
       .select(col("probe_id"), col("match_id"), round(col("__j"), 4).as("jaccard"))
       .orderBy(col("probe_id"), col("match_id"))
   }
 
   /** Cross-corpus near-dup JOIN: for every left ("probe") doc, the right
-    * ("corpus") docs with exact Jaccard >= threshold. The banding
+    * ("corpus") docs with exact Jaccard >= [[Threshold]]. The banding
     * machinery of [[minhashPairs]], but candidates come from band-hash
     * collisions ACROSS the two sides — an equi-join keyed (band, sig)
     * carrying only ids and hashes (text never shuffles, never a cross
@@ -497,27 +477,8 @@ object Dedup {
     * static corpus (the streaming gate) use [[minhashJoinIndexShared]] +
     * [[minhashJoinProbe]] so the corpus side is keyed once, not per call.
     */
-  def minhashJoin(
-      left: DataFrame,
-      right: DataFrame,
-      shingleN: Int = 3,
-      numPerms: Int = 64,
-      bands: Int = 16,
-      threshold: Double = 0.8): DataFrame =
-    minhashJoinProbe(left,
-      keyedSide(right, "match_id", "sh_b", shingleN, numPerms, bands,
-        scratch = true),
-      threshold)
-
-  /** SimHash signatures as arrays of 64 sign values (+1/-1): native
-    * per-row expression over the token array (bit i of a token = sign of
-    * its i-seeded hash) — a pure map, no shuffle; same rationale as
-    * [[minhashSigs]]. Returns (doc_id, signs array<int>).
-    */
-  def simhashSigns(docs: DataFrame, bits: Int = 64): DataFrame =
-    docs.select(col("doc_id"),
-      graft.functions.TextExpressions.simhashSigns(
-        TextAnalysis.tokens(col("text")), bits).as("signs"))
+  def minhashJoin(left: DataFrame, right: DataFrame): DataFrame =
+    minhashJoinProbe(left, keyedSide(right, "match_id", "sh_b", scratch = true))
 
   /** Pack sign array into a 64-bit fingerprint (powers-of-two literals —
     * no variable shifts).
@@ -546,11 +507,12 @@ object Dedup {
     * jumping make adversarial near-dup CHAINS (the worst case a viral
     * template produces) converge in O(log #partitions-crossed) rounds —
     * that, not the typical tiny cluster, is what matters on a 100 TB
-    * corpus. `maxIters` stays as a hard bound. The driver loop only
+    * corpus. `maxIters` (20 rounds) stays as a hard bound. The driver loop only
     * orchestrates; all data movement is one mapPartitions pass plus
     * joins.
     */
-  def clusters(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
+  def clusters(pairs: DataFrame): DataFrame = {
+    val maxIters = 20
     // localCheckpoint (not cache) after every round: iterative plans grow
     // exponentially in lineage otherwise — planning itself OOMs past a
     // handful of iterations. Checkpointing truncates the logical plan.
@@ -742,7 +704,7 @@ object Dedup {
   def simhashPairs(
       docs: DataFrame,
       maxDist: Int = 3,
-      maxBucketSize: Int = 1000): DataFrame = {
+      maxBucketSize: Int = MaxBucketSize): DataFrame = {
     val chunks = maxDist + 1
     val width = 64 / chunks
     // One signature scan for the whole job: (doc_id, fp) is 16 bytes/doc,

@@ -23,6 +23,15 @@ object EventAnalytics {
 
   private val stages = Seq("view", "click", "purchase")
 
+  /** Lookback of the touch-attribution models ([[lastTouchAttribution]],
+    * [[attributionCompare]]). */
+  private val AttributionHorizonDays = 7
+
+  /** Minimum gap between two kept events of one (user, type): the batch
+    * [[debounceReport]] and its streaming twin
+    * [[graft.streaming.EventsStream.streamingDebounce]]. */
+  private[graft] val DebounceGapSeconds = 300L
+
   /** Strictly-ordered conversion funnel view → click → purchase: a user
     * counts at stage k only if each stage-k event happened strictly after
     * their earliest qualifying stage-(k-1) event. Returns one row per
@@ -214,8 +223,7 @@ object EventAnalytics {
     * shape twice), cross-tabulated. Off-diagonal mass = users whose
     * primary behavior changed — the engagement-mix drift monitor.
     */
-  def behaviorSwitchers(spark: SparkSession, dir: String,
-      cutoff: String = "2024-01-16 00:00:00"): DataFrame = {
+  def behaviorSwitchers(spark: SparkSession, dir: String): DataFrame = {
     val events = new graft.cube.Engine(spark, dir).table("events")
     def dominant(df: org.apache.spark.sql.DataFrame, out: String) =
       df.groupBy(col("user_id"), col("event_type"))
@@ -223,10 +231,9 @@ object EventAnalytics {
         .groupBy(col("user_id"))
         .agg(max_by(col("event_type"), struct(col("n"), col("event_type")))
           .as(out))
-    val a = dominant(events.filter(col("ts") < lit(cutoff).cast("timestamp_ntz")),
-      "dominant_before")
-    val b = dominant(events.filter(col("ts") >= lit(cutoff).cast("timestamp_ntz")),
-      "dominant_after")
+    val cutoff = lit(Merge.SnapshotCutoff).cast("timestamp_ntz")
+    val a = dominant(events.filter(col("ts") < cutoff), "dominant_before")
+    val b = dominant(events.filter(col("ts") >= cutoff), "dominant_after")
     a.join(b, "user_id")
       .groupBy(col("dominant_before"), col("dominant_after"))
       .agg(count(lit(1)).as("n_users"))
@@ -342,7 +349,7 @@ object EventAnalytics {
   }
 
   /** Trailing-window anomaly flags on the daily value series: a day is
-    * anomalous when its total deviates more than `sigmas` sample standard
+    * anomalous when its total deviates more than `sigmas` (2) sample standard
     * deviations from the trailing 28-day mean (window INCLUDES the
     * current day — the usual monitoring convention, and it keeps the
     * first day well-defined). The ops-dashboard "did ingestion break
@@ -354,8 +361,8 @@ object EventAnalytics {
     * over ~years-of-days rows, never over raw events. (A multi-tenant
     * variant partitions the window by tenant and stays fully parallel.)
     */
-  def dailyAnomalies(spark: SparkSession, dir: String,
-      sigmas: Double = 2.0): DataFrame = {
+  def dailyAnomalies(spark: SparkSession, dir: String): DataFrame = {
+    val sigmas = 2.0
     val events = new graft.cube.Engine(spark, dir).table("events")
     val daily = events
       .groupBy(date_trunc("day", col("ts"))
@@ -426,8 +433,7 @@ object EventAnalytics {
     * a tiny channel rollup. Same single-partitioning discipline as
     * [[funnel]].
     */
-  def lastTouchAttribution(spark: SparkSession, dir: String,
-      horizonDays: Int = 7): DataFrame = {
+  def lastTouchAttribution(spark: SparkSession, dir: String): DataFrame = {
     val events = new graft.cube.Engine(spark, dir).table("events")
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
@@ -442,7 +448,7 @@ object EventAnalytics {
       .filter(col("event_type") === "purchase")
       .withColumn("channel",
         when(col("lt").isNull ||
-          col("lt.t") < col("ts") - expr(s"INTERVAL $horizonDays DAYS"),
+          col("lt.t") < col("ts") - expr(s"INTERVAL $AttributionHorizonDays DAYS"),
           lit("none")).otherwise(col("lt.ch")))
       .groupBy(col("channel"))
       .agg(count(lit(1)).as("n_purchases"),
@@ -494,8 +500,8 @@ object EventAnalytics {
     * event time (broadcast scalar, no wall clock); ages are exact
     * microseconds and only the decay kernel is floating point.
     */
-  def decayedEngagement(spark: SparkSession, dir: String,
-      halfLifeDays: Double = 30.0): DataFrame = {
+  def decayedEngagement(spark: SparkSession, dir: String): DataFrame = {
+    val halfLifeDays = 30.0
     val ev = new graft.cube.Engine(spark, dir).table("events")
     val horizon = ev.agg(
       expr("max(unix_micros(CAST(ts AS TIMESTAMP)))").as("h"))
@@ -542,7 +548,7 @@ object EventAnalytics {
 
   /** Burst-collapse debounce report: within each (user, event_type)
     * stream, an event survives when it opens a burst — its predecessor
-    * is absent or at least `gapSeconds` older. Survivor count equals
+    * is absent or at least [[DebounceGapSeconds]] older. Survivor count equals
     * burst count, so the per-type drop rate is the duplicate-burst
     * pressure a throttling ingest stage would remove. One lag window
     * per (user, type) key (event_id tiebreaks equal timestamps so the
@@ -572,8 +578,7 @@ object EventAnalytics {
       .orderBy(col("n_active_days"))
   }
 
-  def debounceReport(spark: SparkSession, dir: String,
-      gapSeconds: Long = 300L): DataFrame = {
+  def debounceReport(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"), col("event_type"))
       .orderBy(col("ts"), col("event_id"))
     new graft.cube.Engine(spark, dir).table("events")
@@ -581,7 +586,7 @@ object EventAnalytics {
       .withColumn("kept", when(col("prev").isNull ||
         expr("unix_micros(CAST(ts AS TIMESTAMP)) - " +
           "unix_micros(CAST(prev AS TIMESTAMP))") >=
-          gapSeconds * 1000000L, 1L).otherwise(0L))
+          DebounceGapSeconds * 1000000L, 1L).otherwise(0L))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"), sum(col("kept")).as("n_kept"))
       .withColumn("drop_rate", round(lit(1.0) -
@@ -651,7 +656,8 @@ object EventAnalytics {
     * before any lag work, so the lag fan-out (7×) is over the tiny daily
     * frame, never events.
     */
-  def eventCcf(spark: SparkSession, dir: String, maxLag: Int = 3): DataFrame = {
+  def eventCcf(spark: SparkSession, dir: String): DataFrame = {
+    val maxLag = 3
     val daily = new graft.cube.Engine(spark, dir).table("events")
       .groupBy(to_date(col("ts")).as("day"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))
@@ -686,8 +692,8 @@ object EventAnalytics {
     * count-rollup then one scalar aggregation; d_min is a fixed,
     * oracle-replicated threshold, and every ln argument is ≥ 1.
     */
-  def activityTailIndex(spark: SparkSession, dir: String,
-      dMin: Long = 16L): DataFrame = {
+  def activityTailIndex(spark: SparkSession, dir: String): DataFrame = {
+    val dMin = 16L
     new graft.cube.Engine(spark, dir).table("events")
       .groupBy(col("user_id")).agg(count(lit(1)).as("d"))
       .agg(count(lit(1)).as("n_users"),
@@ -889,8 +895,8 @@ object EventAnalytics {
     * against the independently-summed DuckDB oracle at every fixture
     * SF.
     */
-  def markovStationary(spark: SparkSession, dir: String,
-      iters: Int = 12): DataFrame = {
+  def markovStationary(spark: SparkSession, dir: String): DataFrame = {
+    val iters = 12
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
     val trans = new graft.cube.Engine(spark, dir).table("events")
@@ -979,9 +985,8 @@ object EventAnalytics {
     * the window attribute to 'none'. The struct min/max tiebreak is
     * (ts, event_id) — unique, so portable.
     */
-  def attributionCompare(spark: SparkSession, dir: String,
-      horizonDays: Int = 7): DataFrame = {
-    val horizonUs = horizonDays * 86400L * 1000000L
+  def attributionCompare(spark: SparkSession, dir: String): DataFrame = {
+    val horizonUs = AttributionHorizonDays * 86400L * 1000000L
     val w = Window.partitionBy(col("user_id"))
       .orderBy(expr("unix_micros(CAST(ts AS TIMESTAMP))"))
       .rangeBetween(-horizonUs, -1)

@@ -193,8 +193,8 @@ object Fuzzy {
     * set; each probe must re-find its source (distance 1) and may match
     * other catalog rows within distance 2 (the part namespace is dense).
     */
-  def partNameResolution(spark: SparkSession, dir: String,
-      maxDist: Int = 2): DataFrame = {
+  def partNameResolution(spark: SparkSession, dir: String): DataFrame = {
+    val maxDist = 2
     val part = new Engine(spark, dir).table("part")
     val probes = part
       .filter(pmod(col("p_partkey"), lit(23)) === 5)

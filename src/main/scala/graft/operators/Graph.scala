@@ -25,8 +25,10 @@ object Graph {
     * iteration count keeps the result deterministic and cross-engine
     * checkable.
     */
-  def pageRank(edges: DataFrame, srcCol: String = "src", dstCol: String = "dst",
-      iters: Int = 5, damping: Double = 0.85): DataFrame = {
+  def pageRank(edges: DataFrame, iters: Int = 5): DataFrame = {
+    val srcCol = "src"
+    val dstCol = "dst"
+    val damping = 0.85
     require(iters >= 1 && damping > 0 && damping < 1)
     // explicit partition count: a column-only repartition is an
     // AQE-coalescible shuffle, and a small edge list would cache as ~one
@@ -179,8 +181,8 @@ object Graph {
       .select(col("doc_a"), col("doc_b")))
   }
 
-  /** k-core peel census: `rounds` FIXED iterations of the classic
-    * degeneracy peel (drop every node with degree < k, recompute,
+  /** k-core peel census: `rounds` (3) FIXED iterations of the classic
+    * degeneracy peel (drop every node with degree < k = 2, recompute,
     * repeat) over an undirected pair set, reporting per round how many
     * nodes were active and how many the round removed. The surviving
     * set after convergence is the k-core — the dense part of the
@@ -197,7 +199,9 @@ object Graph {
     * barrier discipline). Only the per-round COUNTS (2 longs × rounds)
     * ever reach the driver.
     */
-  def kCorePeel(pairs: DataFrame, k: Int = 2, rounds: Int = 3): DataFrame = {
+  def kCorePeel(pairs: DataFrame): DataFrame = {
+    val k = 2
+    val rounds = 3
     val spark = pairs.sparkSession
     val parallelism = Bridge.numShufflePartitions(spark)
     var edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))

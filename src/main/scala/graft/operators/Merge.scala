@@ -24,6 +24,12 @@ import graft.cube.Engine
   */
 object Merge {
 
+  /** The fixture's snapshot/change-log split: events before this instant
+    * form the snapshot, events at or after it the log. Shared by the
+    * merge and CDC paths here, [[graft.streaming.EventsStream.cdcStream]]
+    * and [[EventAnalytics.behaviorSwitchers]]. */
+  val SnapshotCutoff = "2024-01-16 00:00:00"
+
   /** Generic MERGE: full-outer on `keys`; change rows win wholesale. */
   def mergeUpsert(target: DataFrame, changes: DataFrame,
       keys: Seq[String]): DataFrame = {
@@ -51,13 +57,13 @@ object Merge {
     * NOT do (it merges the same two halves), proving the maintenance
     * path, while the q69 oracle already pins the full-recompute shape.
     */
-  def latestStateMerge(spark: SparkSession, dir: String,
-      cutoff: String = "2024-01-16 00:00:00"): DataFrame = {
+  def latestStateMerge(spark: SparkSession, dir: String): DataFrame = {
     val ev = new Engine(spark, dir).table("events")
       .select(col("user_id"), col("event_id"), col("event_type"),
         col("ts"), col("value"))
-    val snapshot = latestState(ev.filter(col("ts") < lit(cutoff).cast("timestamp_ntz")))
-    val changes = latestState(ev.filter(col("ts") >= lit(cutoff).cast("timestamp_ntz")))
+    val cutoff = lit(SnapshotCutoff).cast("timestamp_ntz")
+    val snapshot = latestState(ev.filter(col("ts") < cutoff))
+    val changes = latestState(ev.filter(col("ts") >= cutoff))
     mergeUpsert(snapshot, changes, Seq("user_id"))
       .orderBy(col("user_id"))
   }
@@ -94,17 +100,16 @@ object Merge {
     * and the snapshot never shuffles. Tombstones become a filter, not a
     * second pass.
     */
-  def cdcApply(spark: SparkSession, dir: String,
-      cutoff: String = "2024-01-16 00:00:00"): DataFrame = {
+  def cdcApply(spark: SparkSession, dir: String): DataFrame = {
     val ev = new Engine(spark, dir).table("events")
       .select(col("user_id"), col("event_id"), col("event_type"),
         col("ts"), col("value"))
-    val snapshot = latestState(
-      ev.filter(col("ts") < lit(cutoff).cast("timestamp_ntz")))
+    val cutoff = lit(SnapshotCutoff).cast("timestamp_ntz")
+    val snapshot = latestState(ev.filter(col("ts") < cutoff))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id"))
       .orderBy(col("ts").desc, col("event_id").desc)
-    val latestOp = ev.filter(col("ts") >= lit(cutoff).cast("timestamp_ntz"))
+    val latestOp = ev.filter(col("ts") >= cutoff)
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("user_id"), col("event_type"), col("value"))
     applyLatestOps(snapshot, latestOp)

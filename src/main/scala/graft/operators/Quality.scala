@@ -129,7 +129,8 @@ object Quality {
       .orderBy(col("event_type"))
   }
 
-  def psiReport(spark: SparkSession, dir: String, bins: Int = 10): DataFrame = {
+  def psiReport(spark: SparkSession, dir: String): DataFrame = {
+    val bins = 10
     val ev = new Engine(spark, dir).table("events")
       .select(col("user_id"), col("value"))
     val binned = ev

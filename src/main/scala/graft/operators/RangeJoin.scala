@@ -21,10 +21,10 @@ import graft.cube.Engine
 object RangeJoin {
 
   /** Events wiring: for each event, how many other events (any user)
-    * happened within `windowSec` seconds — zero-preserving (left outer).
+    * happened within `windowSec` (60) seconds — zero-preserving (left outer).
     */
-  def nearbyEventCounts(spark: SparkSession, dir: String,
-      windowSec: Long = 60): DataFrame = {
+  def nearbyEventCounts(spark: SparkSession, dir: String): DataFrame = {
+    val windowSec: Long = 60
     val windowUs = windowSec * 1000000L
     val ev = new Engine(spark, dir).table("events")
       // NTZ -> TZ cast reads the naive wall clock in the session tz

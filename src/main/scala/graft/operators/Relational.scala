@@ -19,6 +19,14 @@ object Relational {
 
   private def e(spark: SparkSession, dir: String) = new Engine(spark, dir)
 
+  /** Order date splitting base from delta in the incremental-maintenance
+    * views ([[incrementalOrderStats]], [[incrementalNationRevenue]]). */
+  private val IncrementalCutoff = "1999-01-01"
+
+  /** Base year of the price decompositions ([[laspeyresPriceIndex]],
+    * [[priceVolumeMix]]). */
+  private val BaseYear = 1995
+
   /** Top-10 customers by revenue — TakeOrderedAndProject, not a full sort.
     * Deterministic tiebreak on customer key.
     */
@@ -135,8 +143,8 @@ object Relational {
     * duplicate values may span adjacent buckets (rank order inside a
     * tie is the deterministic key tie-break).
     */
-  def equiDepthHistogram(spark: SparkSession, dir: String,
-      buckets: Int = 10): DataFrame = {
+  def equiDepthHistogram(spark: SparkSession, dir: String): DataFrame = {
+    val buckets = 10
     val vals = e(spark, dir).table("orders")
       .select(col("o_totalprice").as("v"), col("o_orderkey").as("k"))
     graft.operators.Ranks
@@ -228,7 +236,8 @@ object Relational {
     * broadcast of #groups rows) — not a window over the fact table, so
     * the big side is scanned once and never shuffled or sorted.
     */
-  def valueOutliers(spark: SparkSession, dir: String, sigmas: Double = 3.0): DataFrame = {
+  def valueOutliers(spark: SparkSession, dir: String): DataFrame = {
+    val sigmas = 3.0
     val events = e(spark, dir).table("events")
     val moments = events.groupBy(col("event_type"))
       .agg(avg(col("value")).as("mu"), stddev_samp(col("value")).as("sd"))
@@ -347,8 +356,9 @@ object Relational {
     * the plan is a plain single-pass hash aggregate over at most `nbins`
     * groups — histogramming 100 TB is one map-side-combined scan.
     */
-  def charsHistogram(spark: SparkSession, dir: String,
-      width: Int = 100, nbins: Int = 10): DataFrame =
+  def charsHistogram(spark: SparkSession, dir: String): DataFrame = {
+    val width = 100
+    val nbins = 10
     e(spark, dir).table("documents")
       .select(least(floor(col("n_chars") / lit(width)), lit(nbins - 1L))
         .as("bucket"), col("n_chars"))
@@ -360,6 +370,7 @@ object Relational {
       .select(col("bucket"), col("bucket_lo"), col("n_docs"),
         col("min_chars"), col("max_chars"))
       .orderBy(col("bucket"))
+  }
 
   /** CDC compaction / latest-per-key snapshot: keep each user's most
     * recent event (ts desc, event_id desc tie-break) — the "apply the
@@ -527,7 +538,8 @@ object Relational {
     * the query is oracle-gated; the under-capacity approximate regime is
     * tolerance-gated in EventAnalyticsSpec.
     */
-  def approxTopEventTypes(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
+  def approxTopEventTypes(spark: SparkSession, dir: String): DataFrame = {
+    val k = 5
     val daily = e(spark, dir).table("events")
       .groupBy(date_trunc("day", col("ts")).as("day"))
       .agg(expr("approx_top_k_accumulate(event_type, 16)").as("sk"))
@@ -547,14 +559,14 @@ object Relational {
     * recompute; at 100 TB this is the difference between touching one
     * day and touching seven years.
     */
-  def incrementalOrderStats(spark: SparkSession, dir: String,
-      cutoff: String = "1999-01-01"): DataFrame = {
+  def incrementalOrderStats(spark: SparkSession, dir: String): DataFrame = {
     val orders = e(spark, dir).table("orders")
     def partial(df: DataFrame): DataFrame =
       df.groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("n_orders"), sum(col("o_totalprice")).as("total"))
-    val base = partial(orders.filter(col("o_orderdate") < lit(cutoff).cast("timestamp_ntz")))
-    val delta = partial(orders.filter(col("o_orderdate") >= lit(cutoff).cast("timestamp_ntz")))
+    val cutoff = lit(IncrementalCutoff).cast("timestamp_ntz")
+    val base = partial(orders.filter(col("o_orderdate") < cutoff))
+    val delta = partial(orders.filter(col("o_orderdate") >= cutoff))
     base.unionByName(delta)
       .groupBy(col("o_custkey"))
       .agg(sum(col("n_orders")).as("n_orders"),
@@ -570,8 +582,7 @@ object Relational {
     * touches one day of fact rows; the oracle recomputes the view from
     * the full table, proving merged partials ≡ full recompute.
     */
-  def incrementalNationRevenue(spark: SparkSession, dir: String,
-      cutoff: String = "1999-01-01"): DataFrame = {
+  def incrementalNationRevenue(spark: SparkSession, dir: String): DataFrame = {
     val en = e(spark, dir)
     val orders = en.table("orders")
     val cust = en.table("customer").select(col("c_custkey"), col("c_nationkey"))
@@ -579,8 +590,9 @@ object Relational {
       df.join(cust, col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_nationkey"))
         .agg(count(lit(1)).as("n_orders"), sum(col("o_totalprice")).as("total"))
-    val base = partial(orders.filter(col("o_orderdate") < lit(cutoff).cast("timestamp_ntz")))
-    val delta = partial(orders.filter(col("o_orderdate") >= lit(cutoff).cast("timestamp_ntz")))
+    val cutoff = lit(IncrementalCutoff).cast("timestamp_ntz")
+    val base = partial(orders.filter(col("o_orderdate") < cutoff))
+    val delta = partial(orders.filter(col("o_orderdate") >= cutoff))
     base.unionByName(delta)
       .groupBy(col("c_nationkey"))
       .agg(sum(col("n_orders")).as("n_orders"),
@@ -602,7 +614,8 @@ object Relational {
     * each count is a metadata-light scan the actual delete (an anti-join
     * rewrite, `Merge`-style) would then mirror.
     */
-  def purgeAudit(spark: SparkSession, dir: String, modulus: Int = 97): DataFrame = {
+  def purgeAudit(spark: SparkSession, dir: String): DataFrame = {
+    val modulus = 97
     val en = e(spark, dir)
     val forget = en.table("customer")
       .filter(col("c_custkey") % modulus === 0)
@@ -635,7 +648,8 @@ object Relational {
     * join output they forecast. The figure that decides between plain
     * shuffle join, broadcast, and [[graft.operators.Skew]] salting.
     */
-  def joinFanoutReport(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
+  def joinFanoutReport(spark: SparkSession, dir: String): DataFrame = {
+    val k = 10
     val en = e(spark, dir)
     val le = en.table("events").groupBy(col("user_id").as("key"))
       .agg(count(lit(1)).as("n_events"))
@@ -735,8 +749,9 @@ object Relational {
     * collecting a 100×-catalog side); only the 1-row order-count frame
     * still broadcasts.
     */
-  def marketBasket(spark: SparkSession, dir: String, minSupport: Int = 3,
-      k: Int = 15): DataFrame = {
+  def marketBasket(spark: SparkSession, dir: String): DataFrame = {
+    val minSupport = 3
+    val k = 15
     // ONE fact-grain exchange for the whole query: the grouped
     // collect_set BOTH dedupes (orderkey, partkey) — so the separate
     // distinct's exchange disappears — and assembles the basket array
@@ -891,7 +906,8 @@ object Relational {
     * `percentile` calls for approx_percentile's KLL-style sketch, which
     * DOES combine map-side — same code shape, tolerance-gated like q59).
     */
-  def madOutliers(spark: SparkSession, dir: String, k: Double = 3.0): DataFrame = {
+  def madOutliers(spark: SparkSession, dir: String): DataFrame = {
+    val k = 3.0
     val ev = e(spark, dir).table("events")
       .select(col("event_type"), col("value"))
     val med = ev.groupBy(col("event_type"))
@@ -1141,7 +1157,8 @@ object Relational {
     * runs over the (brand, part) rollup, never the fact; ranking on the
     * exact 2-decimal revenue makes tie membership engine-stable.
     */
-  def topPartsPerBrand(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
+  def topPartsPerBrand(spark: SparkSession, dir: String): DataFrame = {
+    val k = 3
     val en = e(spark, dir)
     val rev = en.table("lineitem")
       .join(broadcast(en.table("part").select(col("p_partkey"), col("p_brand"))),
@@ -1664,8 +1681,8 @@ object Relational {
     * 1000-executor shuffle commits to it. Modulo (not engine hash) so
     * the bucket assignment is portable; one scan, 32 groups.
     */
-  def partitionBalance(spark: SparkSession, dir: String,
-      buckets: Int = 32): DataFrame = {
+  def partitionBalance(spark: SparkSession, dir: String): DataFrame = {
+    val buckets = 32
     val byBucket = e(spark, dir).table("lineitem")
       .groupBy(pmod(col("l_orderkey"), lit(buckets.toLong)).cast("int")
         .as("bucket"))
@@ -2413,8 +2430,8 @@ object Relational {
     * cents); 'OTHER' aggregates the rest so the output total always
     * equals the fact total (share column sums to 1).
     */
-  def topBrandsWithOther(spark: SparkSession, dir: String,
-      k: Int = 5): DataFrame = {
+  def topBrandsWithOther(spark: SparkSession, dir: String): DataFrame = {
+    val k = 5
     val en = e(spark, dir)
     val byBrand = en.table("lineitem")
       .join(broadcast(en.table("part")
@@ -2478,8 +2495,8 @@ object Relational {
     * single-partition sort), assignment is integer math. The halves
     * full-outer-join on the customer key — one key-only shuffle each.
     */
-  def valueMigration(spark: SparkSession, dir: String,
-      splitDate: String = "1998-05-01"): DataFrame = {
+  def valueMigration(spark: SparkSession, dir: String): DataFrame = {
+    val splitDate = "1998-05-01"
     val orders = e(spark, dir).table("orders")
     def half(cond: Column, name: String): DataFrame = {
       val pc = orders.filter(cond)
@@ -2568,8 +2585,8 @@ object Relational {
     * Moments come from cents-exact BIGINT power sums; σ is population
     * std. One bounded rollup, one broadcast-back of the denominator.
     */
-  def neymanAllocation(spark: SparkSession, dir: String,
-      budget: Int = 1000): DataFrame = {
+  def neymanAllocation(spark: SparkSession, dir: String): DataFrame = {
+    val budget = 1000
     // first moment stays BIGINT-exact; the SECOND moment must be double —
     // cents² sums cross 2⁶³ past ~50k rows (and the outputs that depend
     // on it are rounded coarsely enough that ulp drift cannot show)
@@ -2651,8 +2668,7 @@ object Relational {
     * per-part unit price and the final index ratio, computed from
     * identical exact integers on both engines.
     */
-  def laspeyresPriceIndex(spark: SparkSession, dir: String,
-      baseYear: Int = 1995): DataFrame = {
+  def laspeyresPriceIndex(spark: SparkSession, dir: String): DataFrame = {
     val en = e(spark, dir)
     val py = en.table("lineitem")
       .join(en.table("orders").select(col("o_orderkey"), col("o_orderdate")),
@@ -2663,7 +2679,7 @@ object Relational {
         sum(expr("CAST(round(l_quantity, 0) AS BIGINT)")).as("sq"))
       .withColumn("unit",
         col("cents").cast("double") / 100.0 / col("sq").cast("double"))
-    val base = py.filter(col("yr") === baseYear)
+    val base = py.filter(col("yr") === BaseYear)
       .select(col("l_partkey").as("bpart"), col("unit").as("unit0"),
         col("sq").as("q0"))
     py.join(base, col("l_partkey") === col("bpart"))
@@ -2801,8 +2817,9 @@ object Relational {
     * driver-side reads are the sketch itself and the ≤ 25-brand key
     * list: model-state-sized by construction.
     */
-  def cmsBrandContract(spark: SparkSession, dir: String,
-      eps: Double = 1e-4, conf: Double = 0.99): DataFrame = {
+  def cmsBrandContract(spark: SparkSession, dir: String): DataFrame = {
+    val eps = 1e-4
+    val conf = 0.99
     val en = e(spark, dir)
     val fact = en.table("lineitem").select(col("l_partkey"))
       .join(broadcast(en.table("part")
@@ -2846,7 +2863,8 @@ object Relational {
     * QI rollup is an ordinary combiner-friendly aggregation; nothing
     * here is quadratic in rows.
     */
-  def kAnonymity(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
+  def kAnonymity(spark: SparkSession, dir: String): DataFrame = {
+    val k = 5
     val classes = e(spark, dir).table("customer")
       .select(col("c_nationkey"), col("c_mktsegment"),
         floor(expr("CAST(round(c_acctbal * 100, 0) AS BIGINT)") /
@@ -3081,8 +3099,7 @@ object Relational {
     * exact-integer-derived doubles in both engines, so the 2dp rounding
     * cannot diverge. Brands are bounded; the dim broadcasts.
     */
-  def priceVolumeMix(spark: SparkSession, dir: String,
-      baseYear: Int = 1995): DataFrame = {
+  def priceVolumeMix(spark: SparkSession, dir: String): DataFrame = {
     val en = e(spark, dir)
     val by = en.table("lineitem")
       .join(en.table("orders").select(col("o_orderkey"), col("o_orderdate")),
@@ -3090,9 +3107,9 @@ object Relational {
       .join(broadcast(en.table("part")
         .select(col("p_partkey"), col("p_brand"))),
         col("l_partkey") === col("p_partkey"))
-      .filter(year(col("o_orderdate")).isin(baseYear, baseYear + 1))
+      .filter(year(col("o_orderdate")).isin(BaseYear, BaseYear + 1))
       .groupBy(col("p_brand"),
-        (year(col("o_orderdate")) === baseYear).as("is_base"))
+        (year(col("o_orderdate")) === BaseYear).as("is_base"))
       .agg(sum(expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)"))
           .as("cents"),
         sum(expr("CAST(round(l_quantity, 0) AS BIGINT)")).as("qty"))

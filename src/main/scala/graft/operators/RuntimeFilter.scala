@@ -29,13 +29,10 @@ object RuntimeFilter {
     * pre-filter on the probe side. Exact: bloom false positives are
     * removed by the left-semi join; false negatives cannot occur.
     */
-  def bloomSemiJoin(
-      big: DataFrame,
-      bigKey: String,
-      small: DataFrame,
-      smallKey: String,
-      expectedItems: Long = 10000L,
-      numBits: Long = 131072L): DataFrame = {
+  def bloomSemiJoin(big: DataFrame, bigKey: String, small: DataFrame,
+      smallKey: String): DataFrame = {
+    val expectedItems = 10000L
+    val numBits = 131072L
     // the bloom must reach might_contain as a scalar subquery (analyzer
     // contract, same shape InjectRuntimeFilter plants): one driver-side
     // value, computed once, shipped with the probe tasks

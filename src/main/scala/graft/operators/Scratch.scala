@@ -41,11 +41,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * NORM, not the tail — inverts that trade: set
   * `sparkContext.setCheckpointDir` on shared storage and every [[stage]]
   * site becomes a durable `checkpoint()` with the same plan shape. The
-  * registry still applies in that mode — reliable RDDs simply resolve to
-  * nothing at unpersist time; their files are reclaimed by Spark's
-  * ContextCleaner when `spark.cleaner.referenceTracking.cleanCheckpoints`
-  * is on (a `GraftSession` default) and the driver GCs their RDDs. Files
-  * of RDDs still referenced at context stop stay in the dir.
+  * registry applies in that mode too: it records each reliable frame's
+  * checkpoint directory, and [[releaseAll]] / [[invalidate]] delete
+  * those files along with unpersisting the blocks, so a harness that
+  * invalidates before `spark.stop()` (Verify, Bench, Soak do) leaves no
+  * `rdd-*` files behind. Spark's ContextCleaner
+  * (`spark.cleaner.referenceTracking.cleanCheckpoints`, a `GraftSession`
+  * default) still reclaims the files of RDDs the driver GCs earlier.
   */
 object Scratch {
   import scala.collection.concurrent.TrieMap
@@ -53,7 +55,8 @@ object Scratch {
   private val QueryScope = "query"
   private val SessionScope = "session"
 
-  // The registry records RDD IDs, never object references: a strong
+  // The registry records RDD IDs and, for reliable checkpoints, the
+  // checkpoint directory as a String — never object references: a strong
   // DataFrame registry would pin every scratch frame for the session's
   // lifetime if a library caller (outside Verify/Bench) never drains it
   // — the hygiene mechanism itself becoming the leak — while weak
@@ -63,8 +66,8 @@ object Scratch {
   // persistent-RDD map at release time; an id the ContextCleaner
   // already reclaimed simply resolves to nothing. Keyed by (session,
   // scope).
-  private val reg = TrieMap
-    .empty[(SparkSession, String), scala.collection.mutable.ArrayBuffer[Int]]
+  private val reg = TrieMap.empty[(SparkSession, String),
+    scala.collection.mutable.ArrayBuffer[(Int, Option[String])]]
 
   // Session-scope memo values, keyed by (session, kind, key). The kind
   // is part of the key so two operators' keys cannot collide. A
@@ -109,9 +112,8 @@ object Scratch {
     * memoizing. This variant additionally persists the checkpointed RDD
     * MEMORY_AND_DISK so consumers read blocks while the durable files
     * still back recovery: a lost block recomputes by re-reading its
-    * checkpoint file, never by re-running corpus lineage. The
-    * ContextCleaner reclaims the files when the RDDs are GC'd
-    * (`spark.cleaner.referenceTracking.cleanCheckpoints`).
+    * checkpoint file, never by re-running corpus lineage. [[invalidate]]
+    * unpersists the blocks and deletes the files.
     */
   def stageShared(df: DataFrame): DataFrame = {
     val ck = stage(df)
@@ -123,12 +125,14 @@ object Scratch {
 
   private def record(df: DataFrame, scope: String): DataFrame = {
     pruneStopped(_.sparkContext.isStopped)
-    val ids = df.queryExecution.logical.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    val entries = df.queryExecution.logical.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD =>
+        val rdd = l.rdd
+        (rdd.id, rdd.getCheckpointFile)
     }
     val buf = reg.getOrElseUpdate((df.sparkSession, scope),
-      scala.collection.mutable.ArrayBuffer.empty[Int])
-    buf.synchronized { buf ++= ids }
+      scala.collection.mutable.ArrayBuffer.empty[(Int, Option[String])])
+    buf.synchronized { buf ++= entries }
     df
   }
 
@@ -175,16 +179,24 @@ object Scratch {
   /** Unpersist every id `spark` recorded in `scope` that is still
     * persisted (non-blocking — the block manager drops the blocks
     * asynchronously, but they leave the storage pool's accounting
-    * immediately); ids the ContextCleaner already reclaimed are skipped.
+    * immediately) and delete the files of its reliable checkpoints; ids
+    * and files the ContextCleaner already reclaimed are skipped.
     * Returns how many recorded ids were drained.
     */
   private def drain(spark: SparkSession, scope: String): Int = {
     pruneStopped(_.sparkContext.isStopped)
     reg.remove((spark, scope)).map { buf =>
-      val ids = buf.synchronized { buf.toList }
+      val entries = buf.synchronized { buf.toList }
       val persistent = spark.sparkContext.getPersistentRDDs
-      ids.foreach(id => persistent.get(id).foreach(_.unpersist(blocking = false)))
-      ids.size
+      entries.foreach { case (id, file) =>
+        persistent.get(id).foreach(_.unpersist(blocking = false))
+        file.foreach { f =>
+          val path = new org.apache.hadoop.fs.Path(f)
+          path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            .delete(path, true)
+        }
+      }
+      entries.size
     }.getOrElse(0)
   }
 

@@ -31,6 +31,27 @@ object Similarity {
     * q106 build-manifest completeness check (total rows = tables × corpus).
     */
   val DefaultLshTables = 4
+  /** Default sign bits per LSH table and embedding width of the LSH
+    * layouts; the incremental layout always uses these. */
+  val DefaultLshPlanes = 8
+  val DefaultLshDim = 64
+
+  /** Cosine cut of the embedding near-dup pairs (q30) and the semantic
+    * keep-list built on them (q118). */
+  val SemanticDupThreshold = 0.3
+
+  /** Lloyd iterations of every [[kmeans]] quantizer (IVF cells, PQ
+    * codebooks). */
+  val KmeansIters = 5
+
+  /** vec_id bound of the all-pairs eval slices ([[knnConfusion]],
+    * [[mutualKnn]], [[labelSeparation]]). */
+  val EvalSlice = 256L
+
+  /** Anchor slice (vec_id bound) and neighbour count of the
+    * truncated-embedding evals [[matryoshkaRecall]] and [[truncationNdcg]]. */
+  private val TruncAnchors = 128L
+  private val TruncK = 10
 
   /** Dot product composed from built-in HOFs (element-wise in double — a
     * float multiply would diverge from ANSI engines' low bits). Reference
@@ -155,7 +176,7 @@ object Similarity {
   }
 
   /** Sign-bit count that keeps expected LSH bucket occupancy near
-    * `targetOccupancy` for an `n`-vector corpus: `ceil(log2(n/occ))`,
+    * `targetOccupancy` (16) for an `n`-vector corpus: `ceil(log2(n/occ))`,
     * floored at 6 (the fixture/oracle regime — corpora ≤ ~1000 vectors
     * keep the exact 6-bit keys the q30/q118 SQL oracles hard-code) and
     * capped at 20 (1M buckets/table; past that, per-bucket work is
@@ -166,7 +187,8 @@ object Similarity {
     * measured q30 at 15.7× wall for 10× vectors on fixed 6-bit tables);
     * occupancy-targeted bits keep candidates ~linear in the corpus.
     */
-  def autoLshBits(n: Long, targetOccupancy: Int = 16): Int = {
+  def autoLshBits(n: Long): Int = {
+    val targetOccupancy = 16
     val auto = math.ceil(
       math.log(math.max(1.0, n.toDouble / targetOccupancy)) /
         math.log(2.0)).toInt
@@ -199,10 +221,10 @@ object Similarity {
     */
   def lshNearDupPairs(
       emb: DataFrame,
-      threshold: Double = 0.3,
+      threshold: Double = SemanticDupThreshold,
       tables: Int = 4,
       bitsPerTable: Int = 0,
-      dim: Int = 64,
+      dim: Int = DefaultLshDim,
       maxBucketSize: Int = 2000): DataFrame = {
     val bits =
       if (bitsPerTable > 0) bitsPerTable else autoLshBits(emb.count())
@@ -263,13 +285,12 @@ object Similarity {
     * the whole embedding store per consumer. The frame is one row per
     * verified pair (tiny next to the corpus), so it is localCheckpoint'ed;
     * [[Scratch.invalidate]] releases the blocks deterministically. Only
-    * the default-parameter pipeline is memoized (key = session, dataset,
-    * threshold); custom bandings call [[lshNearDupPairs]] directly.
+    * the default-parameter pipeline is memoized (key = session, dataset);
+    * custom bandings call [[lshNearDupPairs]] directly.
     */
-  def lshNearDupPairsShared(emb: DataFrame, datasetKey: String,
-      threshold: Double = 0.3): DataFrame =
-    Scratch.memo(emb.sparkSession, "lshNearDupPairs", (datasetKey, threshold))(
-      lshNearDupPairs(emb, threshold).transform(Scratch.stageShared))
+  def lshNearDupPairsShared(emb: DataFrame, datasetKey: String): DataFrame =
+    Scratch.memo(emb.sparkSession, "lshNearDupPairs", datasetKey)(
+      lshNearDupPairs(emb).transform(Scratch.stageShared))
 
   /** Root directory for index layouts: `spark.graft.indexDir` if set
     * (on a cluster, point it at the shared filesystem — HDFS/S3 — so
@@ -297,7 +318,7 @@ object Similarity {
 
   /** Directory-granularity shift for an LSH layout over an `n`-vector
     * corpus: partition directories key on `bucket >> shift`, sized so a
-    * directory holds ~`dirOccupancy` rows per table instead of a fixed
+    * directory holds ~`dirOccupancy` (64) rows per table instead of a fixed
     * `2^planes` fan-out. The EXACT bucket stays a data column, so probe
     * semantics (and the q29/q151 oracles) are untouched — only the
     * physical pruning granularity coarsens, and only at SMALL corpora:
@@ -308,7 +329,8 @@ object Similarity {
     * pure metadata) while a real corpus amortizes the same directories
     * over millions of rows.
     */
-  def lshDirShift(n: Long, planes: Int, dirOccupancy: Int = 64): Int = {
+  def lshDirShift(n: Long, planes: Int): Int = {
+    val dirOccupancy = 64
     val dirBits = math.ceil(
       math.log(math.max(1.0, n.toDouble / dirOccupancy)) /
         math.log(2.0)).toInt
@@ -331,7 +353,8 @@ object Similarity {
     * auto-bits discipline.
     */
   def lshIndex(emb: DataFrame, datasetKey: String,
-      planes: Int = 8, dim: Int = 64, tables: Int = DefaultLshTables): LshLayout =
+      planes: Int = DefaultLshPlanes, dim: Int = DefaultLshDim,
+      tables: Int = DefaultLshTables): LshLayout =
     Scratch.memo(emb.sparkSession, "lshIndex", (datasetKey, tables, planes, dim)) {
       val path = indexPath(emb.sparkSession, s"lsh${tables}t${planes}x$dim", datasetKey)
       val shift = lshDirShift(emb.count(), planes)
@@ -407,10 +430,9 @@ object Similarity {
     * as it is for the in-memory memos.
     */
   def lshIndexIncremental(base: DataFrame, delta: DataFrame,
-      datasetKey: String, planes: Int = 8, dim: Int = 64,
-      tables: Int = DefaultLshTables): LshLayout =
-    Scratch.memo(base.sparkSession, "lshIndex",
-        (s"${datasetKey}_incr", tables, planes, dim)) {
+      datasetKey: String): LshLayout = {
+    val (planes, dim, tables) = (DefaultLshPlanes, DefaultLshDim, DefaultLshTables)
+    Scratch.memo(base.sparkSession, "lshIndex", s"${datasetKey}_incr") {
         val spark = base.sparkSession
         val path = indexPath(spark, s"lsh${tables}t${planes}x$dim",
           s"${datasetKey}_incr")
@@ -433,18 +455,18 @@ object Similarity {
           s"$path/gen=delta", Seq("tbl", "bpfx"))
         LshLayout(path, shift)
       }
+  }
 
   /** Top-k probe through the incrementally-appended LSH layout: exactly
     * [[lshTopK]]'s multi-probe read against the appended path. Because
     * the appended layout equals the rebuilt one, this is q29's relation
     * over base ∪ delta — the same oracle gates both (q151).
     */
-  def lshIncrementalTopK(base: DataFrame, delta: DataFrame, queryId: Long,
-      k: Int, planes: Int = 8, dim: Int = 64,
-      tables: Int = DefaultLshTables, datasetKey: String): DataFrame =
-    lshProbeTopK(
-      lshIndexIncremental(base, delta, datasetKey, planes, dim, tables),
-      base.unionByName(delta), queryId, k, planes, dim, tables)
+  def lshIncrementalTopK(base: DataFrame, delta: DataFrame, queryId: Long, k: Int,
+      datasetKey: String): DataFrame =
+    lshProbeTopK(lshIndexIncremental(base, delta, datasetKey),
+      base.unionByName(delta), queryId, k, DefaultLshPlanes, DefaultLshDim,
+      DefaultLshTables)
 
   /** Bucketed ANN top-k through the multi-table LSH index: in EACH table
     * the query's bucket plus all Hamming-1 neighbors (multi-probe) become
@@ -457,8 +479,8 @@ object Similarity {
       emb: DataFrame,
       queryId: Long,
       k: Int,
-      planes: Int = 8,
-      dim: Int = 64,
+      planes: Int = DefaultLshPlanes,
+      dim: Int = DefaultLshDim,
       tables: Int = DefaultLshTables,
       datasetKey: String): DataFrame =
     lshProbeTopK(lshIndex(emb, datasetKey, planes, dim, tables),
@@ -556,11 +578,12 @@ object Similarity {
     * spend the distributed work on the single full-corpus assignment
     * pass in [[ivfTopK]]. Init = farthest-point traversal (k-means++
     * without the randomness) seeded at the first sample vector, so
-    * cluster spread is guaranteed; then `iters` Lloyd iterations, empty
+    * cluster spread is guaranteed; then `iters` ([[KmeansIters]] unless a
+    * caller asks otherwise) Lloyd iterations, empty
     * clusters keeping their previous centroid.
     * Returns the final centroids as (cid, centroid array<double>).
     */
-  def kmeans(emb: DataFrame, k: Int = 16, iters: Int = 5,
+  def kmeans(emb: DataFrame, k: Int = 16, iters: Int = KmeansIters,
       maxSample: Int = 2048): DataFrame = {
     import org.apache.spark.sql.Row
     val spark = emb.sparkSession
@@ -639,12 +662,11 @@ object Similarity {
     * corpus Hive-partitioned by cell id. The one full-corpus pass, paid
     * at build time, never at probe time.
     */
-  def ivfIndex(emb: DataFrame, datasetKey: String,
-      nlist: Int = 16, iters: Int = 5): IvfIndex =
-    Scratch.memo(emb.sparkSession, "ivfIndex", (datasetKey, nlist, iters)) {
-      val centroids = kmeans(emb, nlist, iters).collect()
+  def ivfIndex(emb: DataFrame, datasetKey: String, nlist: Int = 16): IvfIndex =
+    Scratch.memo(emb.sparkSession, "ivfIndex", (datasetKey, nlist)) {
+      val centroids = kmeans(emb, nlist).collect()
         .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-      val path = indexPath(emb.sparkSession, s"ivf${nlist}i$iters", datasetKey)
+      val path = indexPath(emb.sparkSession, s"ivf${nlist}i$KmeansIters", datasetKey)
       // repartition by cell: one writer set per cell directory (see
       // lshIndex) instead of tasks × cells tiny files; explicit count so
       // AQE cannot coalesce the writers serial (see lshLayoutRows)
@@ -662,15 +684,9 @@ object Similarity {
     * bounding probe I/O to ~nprobe/nlist of the corpus instead of
     * filtering a full scan.
     */
-  def ivfTopK(
-      emb: DataFrame,
-      queryId: Long,
-      k: Int,
-      nlist: Int = 16,
-      nprobe: Int = 4,
-      iters: Int = 5,
+  def ivfTopK(emb: DataFrame, queryId: Long, k: Int, nlist: Int = 16, nprobe: Int = 4,
       datasetKey: String): DataFrame =
-    ivfProbeTopK(ivfIndex(emb, datasetKey, nlist, iters), emb, queryId, k, nprobe)
+    ivfProbeTopK(ivfIndex(emb, datasetKey, nlist), emb, queryId, k, nprobe)
 
   /** Single-query probe against an already-built [[IvfIndex]] — the
     * shared probe path of [[ivfTopK]] and [[ivfIncrementalTopK]]. The
@@ -725,13 +741,13 @@ object Similarity {
     * if a cell goes EMPTY between generations, a vanishing edge at any
     * real corpus size. Idempotence is spec-pinned either way.)
     */
-  def ivfIndexIncremental(base: DataFrame, delta: DataFrame,
-      datasetKey: String, nlist: Int = 16, iters: Int = 5): IvfIndex =
+  def ivfIndexIncremental(base: DataFrame, delta: DataFrame, datasetKey: String,
+      nlist: Int = 16): IvfIndex =
     // derived keys use '_' (never '#'/':' — dataset keys feed path
     // basenames, and URI-fragment parsing would silently collide the
     // base layout with the plain index of the same dataset)
-    Scratch.memo(base.sparkSession, "ivfIndex", (s"${datasetKey}_incr", nlist, iters)) {
-      val idx = ivfIndex(base, s"${datasetKey}_incrbase", nlist, iters)
+    Scratch.memo(base.sparkSession, "ivfIndex", (s"${datasetKey}_incr", nlist)) {
+      val idx = ivfIndex(base, s"${datasetKey}_incrbase", nlist)
       assignToCentroids(delta, idx.centroids)
         .repartition(layoutParallelism(delta), col("cid"))
         .write.mode(org.apache.spark.sql.SaveMode.Append)
@@ -744,10 +760,9 @@ object Similarity {
     * exact top-k over base ∪ delta — the append machinery sits on the
     * oracle surface (q140) exactly as q113 gates the probe machinery.
     */
-  def ivfIncrementalTopK(base: DataFrame, delta: DataFrame,
-      queryId: Long, k: Int, nlist: Int = 16, nprobe: Int = 4,
-      iters: Int = 5, datasetKey: String): DataFrame =
-    ivfProbeTopK(ivfIndexIncremental(base, delta, datasetKey, nlist, iters),
+  def ivfIncrementalTopK(base: DataFrame, delta: DataFrame, queryId: Long, k: Int,
+      nlist: Int = 16, nprobe: Int = 4, datasetKey: String): DataFrame =
+    ivfProbeTopK(ivfIndexIncremental(base, delta, datasetKey, nlist),
       base.unionByName(delta), queryId, k, nprobe)
 
   /** Pick the query-side join regime for the indexed ANN joins. A
@@ -778,13 +793,7 @@ object Similarity {
   private[operators] def wantsBroadcast(qProbes: DataFrame,
       regime: Option[Boolean]): Boolean =
     regime.getOrElse {
-      val raw = qProbes.sparkSession.conf
-        .get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      val thr =
-        try raw.toLong
-        catch { case _: NumberFormatException =>
-          org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw)
-        }
+      val thr = Bridge.autoBroadcastJoinThreshold(qProbes.sparkSession)
       thr > 0 &&
         qProbes.queryExecution.optimizedPlan.stats.sizeInBytes <= thr
     }
@@ -802,11 +811,10 @@ object Similarity {
     * is corpus-scale; the shuffle regime's exhaustive form is
     * oracle-gated as q128.
     */
-  def ivfKnnJoin(corpus: DataFrame, queries: DataFrame, k: Int,
-      nlist: Int = 16, nprobe: Int = 4, iters: Int = 5,
-      datasetKey: String,
+  def ivfKnnJoin(corpus: DataFrame, queries: DataFrame, k: Int, nlist: Int = 16,
+      nprobe: Int = 4, datasetKey: String,
       broadcastQueries: Option[Boolean] = None): DataFrame = {
-    val idx = ivfIndex(corpus, datasetKey, nlist, iters)
+    val idx = ivfIndex(corpus, datasetKey, nlist)
     val qProbes = queries
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
       .withColumn("cid", explode(probeCids(idx.centroids, nprobe, col("q_emb"))))
@@ -848,22 +856,20 @@ object Similarity {
     * label-inequality predicate applied before scoring. At nprobe = nlist
     * the probe covers every cell and the result provably equals the exact
     * miner — the oracle-gated regime (q114, the q101/q113 device); the
-    * probed regime is recall-gated in IvfSpec. `broadcastQueries` selects
-    * the query-side regime ([[queryRegime]]): hard-negative mining over
-    * the WHOLE corpus as the query set is the canonical corpus-scale
-    * case, and it must shuffle on cid, not broadcast.
+    * probed regime is recall-gated in IvfSpec. The query-side regime is
+    * [[queryRegime]]'s auto choice: hard-negative mining over the WHOLE
+    * corpus as the query set is the canonical corpus-scale case, and its
+    * size estimate then fails the broadcast bar, so it shuffles on cid.
     */
-  def ivfHardNegatives(corpus: DataFrame, queries: DataFrame, k: Int,
-      nlist: Int = 16, nprobe: Int = 4, iters: Int = 5,
-      datasetKey: String,
-      broadcastQueries: Option[Boolean] = None): DataFrame = {
-    val idx = ivfIndex(corpus, datasetKey, nlist, iters)
+  def ivfHardNegatives(corpus: DataFrame, queries: DataFrame, k: Int, nlist: Int = 16,
+      nprobe: Int = 4, datasetKey: String): DataFrame = {
+    val idx = ivfIndex(corpus, datasetKey, nlist)
     val qProbes = queries
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),
         col("embedding").as("q_emb"))
       .withColumn("cid", explode(probeCids(idx.centroids, nprobe, col("q_emb"))))
     val indexed = corpus.sparkSession.read.parquet(idx.path)
-    val scored = indexed.join(queryRegime(qProbes, broadcastQueries), Seq("cid"))
+    val scored = indexed.join(queryRegime(qProbes, None), Seq("cid"))
       .filter(col("vec_id") =!= col("q_id") && col("label") =!= col("q_label"))
       .select(col("q_id"), col("vec_id"), col("label").as("neg_label"),
         round(cosine(col("embedding"), col("q_emb")), 4).as("cos_sim"))
@@ -1034,8 +1040,8 @@ object Similarity {
     * slice bound keeps the all-pairs eval driver-scale by design (the
     * production path for full-corpus evals is the IVF family).
     */
-  def knnConfusion(emb: DataFrame, maxId: Long = 256L): DataFrame = {
-    val sub = emb.filter(col("vec_id") < maxId)
+  def knnConfusion(emb: DataFrame): DataFrame = {
+    val sub = emb.filter(col("vec_id") < EvalSlice)
     val scored = sub
       .select(col("vec_id"), col("embedding"), col("label").as("nlabel"))
       .crossJoin(broadcast(sub.select(col("vec_id").as("q_id"),
@@ -1057,8 +1063,8 @@ object Similarity {
     * how cross-engine hashes die); labels the 1-NN never predicts carry
     * NULL precision/F1 honestly, zero-TP labels pin F1 to exactly 0.
     */
-  def knnPrf(emb: DataFrame, maxId: Long = 256L): DataFrame = {
-    val cm = knnConfusion(emb, maxId)
+  def knnPrf(emb: DataFrame): DataFrame = {
+    val cm = knnConfusion(emb)
     val byTrue = cm.groupBy(col("label")).agg(sum(col("n")).as("support"))
     val byPred = cm.groupBy(col("predicted").as("plabel"))
       .agg(sum(col("n")).as("pred_n"))
@@ -1121,7 +1127,8 @@ object Similarity {
     * embedding store this runs as a single map stage feeding the shard
     * writer.
     */
-  def quantizeInt8(emb: DataFrame, vecCol: String = "embedding"): DataFrame = {
+  def quantizeInt8(emb: DataFrame): DataFrame = {
+    val vecCol = "embedding"
     val v = transform(col(vecCol), x => x.cast("double"))
     emb
       .withColumn("__v", v)
@@ -1152,16 +1159,9 @@ object Similarity {
     * two-stage path is hash-comparable at nprobe = nlist (q130, the
     * q113 exhaustive device); probed regimes inherit ivfTopK's pruning.
     */
-  def ivfQuantizedTopK(
-      emb: DataFrame,
-      queryId: Long,
-      k: Int,
-      rerankWidth: Int = 50,
-      nlist: Int = 16,
-      nprobe: Int = 4,
-      iters: Int = 5,
-      datasetKey: String): DataFrame = {
-    val idx = ivfIndex(emb, datasetKey, nlist, iters)
+  def ivfQuantizedTopK(emb: DataFrame, queryId: Long, k: Int, rerankWidth: Int = 50,
+      nlist: Int = 16, nprobe: Int = 4, datasetKey: String): DataFrame = {
+    val idx = ivfIndex(emb, datasetKey, nlist)
     val qRows = emb.filter(col("vec_id") === queryId).collect()
     require(qRows.nonEmpty, s"ivfQuantizedTopK: query vec_id=$queryId not found")
     val q = qRows.head
@@ -1238,11 +1238,10 @@ object Similarity {
     * measure-zero for continuous embeddings; same FP-boundary contract
     * as the q29/q30 oracles), rounded only for display.
     */
-  def semanticKeepList(emb: DataFrame, threshold: Double = 0.3,
-      datasetKey: String = null): DataFrame = {
+  def semanticKeepList(emb: DataFrame, datasetKey: String = null): DataFrame = {
     val pairFrame =
-      if (datasetKey == null) lshNearDupPairs(emb, threshold)
-      else lshNearDupPairsShared(emb, datasetKey, threshold)
+      if (datasetKey == null) lshNearDupPairs(emb)
+      else lshNearDupPairsShared(emb, datasetKey)
     val pairs = pairFrame
       .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
     val cl = Dedup.clusters(pairs)
@@ -1275,7 +1274,8 @@ object Similarity {
     * groups, so the shuffle is partitions × dim tiny rows regardless of
     * corpus size. No joins, no vector materialization on the driver.
     */
-  def embeddingHealth(emb: DataFrame, zeroEps: Double = 1e-6): DataFrame =
+  def embeddingHealth(emb: DataFrame): DataFrame = {
+    val zeroEps = 1e-6
     emb.select(posexplode(col("embedding")))
       .select((col("pos") + 1).cast("long").as("dim"),
         col("col").cast("double").as("v"))
@@ -1288,6 +1288,7 @@ object Similarity {
         round(avg(when(abs(col("v")) < zeroEps, 1.0).otherwise(0.0)), 4)
           .as("near_zero_frac"))
       .orderBy(col("dim"))
+  }
 
   /** Mutual-kNN and label-homophily audit over a bounded evaluation slice
     * of the embedding table: build the exact cosine k-nearest-neighbor
@@ -1307,7 +1308,8 @@ object Similarity {
     * keep the identical mutual/homophily tail, which only ever sees
     * k*n edges.
     */
-  def mutualKnn(emb: DataFrame, k: Int = 5, maxId: Long = 256L): DataFrame = {
+  def mutualKnn(emb: DataFrame, maxId: Long = EvalSlice): DataFrame = {
+    val k = 5
     val sub = emb.filter(col("vec_id") < maxId)
       .select(col("vec_id"), col("embedding"), col("label"))
     val pairs = sub.toDF("a_id", "e_a", "a_label")
@@ -1352,7 +1354,7 @@ object Similarity {
     * `maxId` sample slice and the broadcast side is tiny; the full-corpus
     * version would sample per label and reuse the identical tail.
     */
-  def labelSeparation(emb: DataFrame, maxId: Long = 256L): DataFrame = {
+  def labelSeparation(emb: DataFrame, maxId: Long = EvalSlice): DataFrame = {
     val sub = emb.filter(col("vec_id") < maxId)
       .select(col("vec_id"), col("embedding"), col("label"))
     val pairs = sub.toDF("a_id", "e_a", "a_label")
@@ -1389,8 +1391,8 @@ object Similarity {
       .orderBy(col("label"))
   }
 
-  /** Product-quantization ANN with exact rerank: train one `codeK`-way
-    * codebook per `subspaces` subvector slice (on [[kmeans]]'s bounded
+  /** Product-quantization top-k (k = 10) with exact rerank: train one
+    * `codeK`-way (16) codebook per `subspaces` (8) subvector slice (on [[kmeans]]'s bounded
     * sample — driver-sized model state), encode every vector to
     * `subspaces` small codes in ONE map pass (argmin over
     * `||c||² − 2·x_j·c`, the per-row `||x_j||²` constant dropped), and
@@ -1412,9 +1414,10 @@ object Similarity {
     * limit of the whole store. Production sets `rerankWidth` ~10·k;
     * PqSpec pins both regimes.
     */
-  def pqRerankTopK(emb: DataFrame, queryId: Long, k: Int = 10,
-      subspaces: Int = 8, codeK: Int = 16,
-      rerankWidth: Int = 10000): DataFrame = {
+  def pqRerankTopK(emb: DataFrame, queryId: Long, rerankWidth: Int = 10000): DataFrame = {
+    val k = 10
+    val subspaces = 8
+    val codeK = 16
     val qRows = emb.filter(col("vec_id") === queryId).collect()
     require(qRows.nonEmpty, s"pqRerankTopK: query vec_id=$queryId not found")
     val qv = embAsDoubles(qRows.head, qRows.head.fieldIndex("embedding"))
@@ -1489,8 +1492,8 @@ object Similarity {
     * round to 4dp with an id tiebreak before ranking (the q28/q29
     * determinism contract), so both engines rank identically.
     */
-  def matryoshkaRecall(emb: DataFrame, k: Int = 10, truncDim: Int = 16,
-      maxId: Long = 128L): DataFrame = {
+  def matryoshkaRecall(emb: DataFrame, truncDim: Int = 16): DataFrame = {
+    val (k, maxId) = (TruncK, TruncAnchors)
     val anchors = emb.filter(col("vec_id") < maxId)
       .select(col("vec_id").as("a_id"), col("embedding").as("e_a"))
     val pairs = emb.select(col("vec_id").as("b_id"), col("embedding").as("e_b"))
@@ -1543,7 +1546,8 @@ object Similarity {
     * max-then-round equals the old round-then-max; the bin census then
     * groups ≤ 41 bins.
     */
-  def semanticDecontam(emb: DataFrame, evalLabel: Int = 0): DataFrame = {
+  def semanticDecontam(emb: DataFrame): DataFrame = {
+    val evalLabel = 0
     val sp = emb.sparkSession
     import sp.implicits._
     // driver-sized model state by contract: a benchmark suite, not a
@@ -1649,8 +1653,8 @@ object Similarity {
   def ndcgIdcg(k: Int): Double =
     (1 to k).map(i => (k + 1 - i) / (math.log(i + 1) / math.log(2))).sum
 
-  def truncationNdcg(emb: DataFrame, k: Int = 10, truncDim: Int = 16,
-      maxId: Long = 128L): DataFrame = {
+  def truncationNdcg(emb: DataFrame, truncDim: Int = 16): DataFrame = {
+    val (k, maxId) = (TruncK, TruncAnchors)
     val anchors = emb.filter(col("vec_id") < maxId)
       .select(col("vec_id").as("a_id"), col("embedding").as("e_a"))
     val pairs = emb.select(col("vec_id").as("b_id"), col("embedding").as("e_b"))

@@ -308,9 +308,6 @@ object OecJsonSource {
     StructType(fields.map { case (n, t) => StructField(n, t, nullable = true) }.toSeq)
   }
 
-  /** Single-file form of [[inferFromFiles]]. */
-  def inferFromFile(file: String): StructType = inferFromFiles(Seq(file))
-
   private def widen(a: DataType, b: DataType): DataType = (a, b) match {
     case (x, y) if x == y => x
     case (LongType, DoubleType) | (DoubleType, LongType) => DoubleType

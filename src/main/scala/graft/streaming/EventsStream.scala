@@ -332,15 +332,15 @@ object EventsStream {
     * parquet sink executor-side and the snapshot merge scans it back;
     * at scale that sink IS the periodic snapshot publish.
     */
-  def cdcStream(spark: SparkSession, dir: String,
-      cutoff: String = "2024-01-16 00:00:00"): DataFrame = {
+  def cdcStream(spark: SparkSession, dir: String): DataFrame = {
     val ev = new graft.cube.Engine(spark, dir).table("events")
       .select(col("user_id"), col("event_id"), col("event_type"),
         col("ts"), col("value"))
+    val cutoff = lit(graft.operators.Merge.SnapshotCutoff)
     val snapshot = graft.operators.Merge.latestState(
-      ev.filter(col("ts") < lit(cutoff).cast("timestamp_ntz")))
+      ev.filter(col("ts") < cutoff.cast("timestamp_ntz")))
     val (stream, bytes) = streamingEvents(spark, dir)
-    val log = stream.filter(col("ts") >= lit(cutoff).cast("timestamp"))
+    val log = stream.filter(col("ts") >= cutoff.cast("timestamp"))
     val latestOp = log.groupBy(col("user_id"))
       .agg(max_by(
         struct(col("event_type"), col("value")),
@@ -353,15 +353,16 @@ object EventsStream {
     graft.operators.Merge.applyLatestOps(snapshot, drained)
   }
 
-  /** Session path mining: the top-k opening event-type sequences (first
-    * `prefixLen` events, in time order) across q39's 30-minute session
+  /** Session path mining: the top-5 opening event-type sequences (first
+    * 3 events, in time order) across q39's 30-minute session
     * windows — the "how do journeys start?" product probe. One
     * session_window aggregation assembles ordered paths (struct-sorted
     * collect_list, so ordering never needs a second shuffle), one count
     * ranks them, TakeOrderedAndProject bounds the answer.
     */
-  def topSessionPaths(spark: SparkSession, dir: String, k: Int = 5,
-      prefixLen: Int = 3): DataFrame = {
+  def topSessionPaths(spark: SparkSession, dir: String): DataFrame = {
+    val k = 5
+    val prefixLen = 3
     val events = new graft.cube.Engine(spark, dir).table("events")
     events
       .withColumn("tsq", col("ts").cast(TimestampType))
@@ -578,8 +579,8 @@ object EventsStream {
     * Input df needs (user_id, ts: timestamp, value) and an event-time
     * watermark column `ts`.
     */
-  def sessionize(events: DataFrame, gapMinutes: Int,
-      watermarkDelay: String = "10 seconds"): Dataset[SessionOut] = {
+  def sessionize(events: DataFrame, gapMinutes: Int): Dataset[SessionOut] = {
+    val watermarkDelay = "10 seconds"
     val spark = events.sparkSession
     import spark.implicits._
     val gapUs = gapMinutes * 60L * 1000000L
@@ -625,7 +626,8 @@ object EventsStream {
   /** Streaming burst-collapse debounce — the stateful twin of the batch
     * debounce report (same oracle): per (user, event_type) the state is
     * the LAST SEEN event time; an event is kept when it opens a burst
-    * (no predecessor, or the gap reached `gapSeconds`). One tiny fixed
+    * (no predecessor, or the gap reached
+    * [[graft.operators.EventAnalytics.DebounceGapSeconds]]). One tiny fixed
     * state record per key — this is the bounded-memory shape an
     * unbounded throttling ingest needs; equal-timestamp events collapse
     * identically under any intra-batch order, so the batch oracle's
@@ -663,10 +665,10 @@ object EventsStream {
       }
   }
 
-  def streamingDebounce(spark: SparkSession, dir: String,
-      gapSeconds: Long = 300L): DataFrame = {
+  def streamingDebounce(spark: SparkSession, dir: String): DataFrame = {
     val (ev, bytes) = streamingEvents(spark, dir)
-    drain(debounceFlags(ev, gapSeconds).toDF(), bytes, "debounce",
+    drain(debounceFlags(ev, graft.operators.EventAnalytics.DebounceGapSeconds).toDF(),
+      bytes, "debounce",
       OutputMode.Append(), Memory)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"), sum(col("kept")).as("n_kept"))
@@ -877,7 +879,8 @@ object EventsStream {
     * standard trending-topics split: state in the stream, leaderboard on
     * the tiny rollup. Ties rank deterministically by type name.
     */
-  def trendingTopK(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
+  def trendingTopK(spark: SparkSession, dir: String): DataFrame = {
+    val k = 3
     val (ev, bytes) = streamingEvents(spark, dir)
     val agg = ev
       .withWatermark("ts", "1 hour")

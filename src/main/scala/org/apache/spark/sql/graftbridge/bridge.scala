@@ -20,6 +20,12 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.conf.numShufflePartitions
 
+  /** The session's `SQLConf.autoBroadcastJoinThreshold` in bytes, read
+    * typed: Spark's own conf entry parses size strings such as "10MB". */
+  def autoBroadcastJoinThreshold(spark: SparkSession): Long =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.autoBroadcastJoinThreshold
+
   /** Register an expression builder under a SQL-callable name. */
   def registerFunction(
       spark: SparkSession,

@@ -99,4 +99,34 @@ class CheckpointModeSpec extends SparkFunSuite {
         .foreach(p => Files.deleteIfExists(p))
     }
   }
+
+  test("releaseAll and invalidate delete reliable checkpoint files") {
+    // a reliable checkpoint lives in files; unpersisting a frame that was
+    // never block-cached frees nothing, so the drain itself must delete
+    // them or every harness run leaves rdd-* dirs on shared storage
+    val dir = Files.createTempDirectory("graft-ckpt-reclaim").toString
+    def rddDirs: Seq[String] = Files.walk(Paths.get(dir)).iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith("rdd-")).toSeq
+    val s = spark.newSession()
+    spark.sparkContext.setCheckpointDir(dir)
+    try {
+      import s.implicits._
+      val scratch = Scratch.staged(Seq(1, 2, 3).toDF("x"))
+      assert(scratch.count() == 3)
+      assert(rddDirs.nonEmpty, "reliable staging wrote no rdd-* dir")
+      assert(Scratch.releaseAll(s) == 1)
+      assert(rddDirs.isEmpty, s"releaseAll left $rddDirs")
+      val shared = Scratch.memo(s, "checkpointModeSpec", "reclaim")(
+        Scratch.stageShared(Seq(4, 5).toDF("y")))
+      assert(shared.count() == 2)
+      assert(rddDirs.nonEmpty, "reliable stageShared wrote no rdd-* dir")
+      assert(Scratch.invalidate(s) == 1)
+      assert(rddDirs.isEmpty, s"invalidate left $rddDirs")
+    } finally {
+      spark.sparkContext.setCheckpointDir(null)
+      val tmp = Paths.get(dir)
+      Files.walk(tmp).iterator().asScala.toSeq.reverse
+        .foreach(p => Files.deleteIfExists(p))
+    }
+  }
 }

@@ -222,7 +222,7 @@ class CorpusPipelineSpec extends SparkFunSuite {
       (3L, "nav home about"),
       (4L, "solo doc words tail2")
     ).toDF("doc_id", "text")
-    val out = Corpus.dedupSpans(docs, n = 3).collect()
+    val out = Corpus.dedupSpans(docs).collect()
       .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2), r.getLong(3))).toMap
     assert(out(1L) == (("x y z x y z", 3L, 1L)))
     assert(out(2L) == (("unique middle words tail end bit", 3L, 1L)))
@@ -342,7 +342,7 @@ class CorpusPipelineSpec extends SparkFunSuite {
       (1L, "a b c d e f g"),
       (2L, "h i j k")
     ).toDF("doc_id", "text")
-    val out = Corpus.dedupSpans(docs, n = 3).collect()
+    val out = Corpus.dedupSpans(docs).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(out(1L) == "a b c d e f g")
     assert(out(2L) == "h i j k")
@@ -435,7 +435,7 @@ class CorpusPipelineSpec extends SparkFunSuite {
   test("paddingWaste: token mass conserved, efficiency bounded by the window") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val report = Corpus.paddingWaste(docs, contextLen = 512, binWidth = 64)
+    val report = Corpus.paddingWaste(docs)
       .localCheckpoint()
     val agg = report.agg(
       sum(col("n_docs")), sum(col("total_tokens")), sum(col("trunc_loss")),
@@ -544,7 +544,7 @@ class CorpusPipelineSpec extends SparkFunSuite {
       chunkTokens = maxLen, topK = 5).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3),
         r.getDouble(4), r.getInt(5)))
-    val whole = Corpus.bm25Retrieval(docs, queries, topK = 5).collect()
+    val whole = Corpus.bm25Retrieval(docs, queries).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3),
         r.getInt(4)))
     assert(chunked.forall(_._4 == 0L), "every doc must be a single chunk")
@@ -568,7 +568,7 @@ class CorpusPipelineSpec extends SparkFunSuite {
   }
 
   test("equiDepthHistogram balances bucket sizes and keeps bounds ordered") {
-    val out = Relational.equiDepthHistogram(spark, sf, buckets = 10).collect()
+    val out = Relational.equiDepthHistogram(spark, sf).collect()
       .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2), r.getLong(3)))
     val n = spark.read.parquet(s"$sf/orders.parquet").count()
     assert(out.map(_._1).toSeq == (0 until 10), "all buckets present, in order")

@@ -29,7 +29,7 @@ class GiniTemplateSpec extends SparkFunSuite {
       (1L, "a", "x y z p q one"), (2L, "a", "x y z p q two"),
       (3L, "b", "x y z p q three"),
       (4L, "a", "lone doc body here now")).toDF("doc_id", "source", "text")
-    val rows = Corpus.templatePrefixes(docs, k = 5, minDocs = 3).collect()
+    val rows = Corpus.templatePrefixes(docs).collect()
     assert(rows.length == 1)
     assert(rows.head.getString(0) == "x y z p q")
     assert(rows.head.getLong(1) == 3 && rows.head.getLong(2) == 2)

@@ -71,7 +71,7 @@ class MeltParetoKnnSpec extends SparkFunSuite {
 
   test("mutual knn emits exactly k edges per anchor; rates in [0,1]") {
     val emb = new graft.cube.Engine(spark, sf).table("embeddings")
-    val out = Similarity.mutualKnn(emb, k = 5, maxId = 64L).collect()
+    val out = Similarity.mutualKnn(emb, maxId = 64L).collect()
     assert(out.map(_.getLong(1)).sum == 64L)
     out.foreach { r =>
       assert(r.getLong(2) == 5L * r.getLong(1), "k edges per anchor")

@@ -105,7 +105,7 @@ class SimilaritySpec extends SparkFunSuite {
       (2L, axis0(1f, -d), 0),
       (3L, axis0(2f, 0f), 0),
       (4L, Seq.tabulate(64)(i => if (i == 1) 1f else 0f), 1))
-    val out = Similarity.semanticKeepList(df, threshold = 0.3).collect()
+    val out = Similarity.semanticKeepList(df).collect()
       .map(r => (r.getLong(1), r.getBoolean(2), r.getInt(3)))
     assert(out.map(_._1).toSet == Set(1L, 2L, 3L), "singleton must be absent")
     assert(out.forall(_._3 == 3))
@@ -120,5 +120,18 @@ class SimilaritySpec extends SparkFunSuite {
     val out = Similarity.labelCentroids(df).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
     assert(out.toSeq == Seq((0, 2L, 1.0), (1, 1L, 1.0)))
+  }
+
+  test("auto query regime reads the broadcast threshold as a size") {
+    // a size string is a legal threshold; the regime reads it through
+    // Spark's typed conf entry, so "10MB" broadcasts a tiny frame and
+    // "-1" (broadcast off) never does
+    val s = graft.SparkTestBase.spark.newSession()
+    val tiny = s.range(3).toDF("q_id")
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "10MB")
+    assert(Similarity.wantsBroadcast(tiny, None))
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    assert(!Similarity.wantsBroadcast(tiny, None))
+    assert(Similarity.wantsBroadcast(tiny, Some(true)))
   }
 }

@@ -40,12 +40,12 @@ class StatBatch3Spec extends SparkFunSuite {
 
   test("matryoshka recall is perfect when the truncation is the full dimension") {
     val emb = new graft.cube.Engine(spark, sf).table("embeddings")
-    val full = Similarity.matryoshkaRecall(emb, k = 10, truncDim = 64).collect()
+    val full = Similarity.matryoshkaRecall(emb, truncDim = 64).collect()
     // identical rankings → every anchor overlaps on all 10 neighbors
     assert(full.length == 1 && full.head.getLong(0) == 10L &&
       full.head.getDouble(2) == 1.0)
     // and the anchor census is conserved at any truncation
-    val trunc = Similarity.matryoshkaRecall(emb, k = 10, truncDim = 16).collect()
+    val trunc = Similarity.matryoshkaRecall(emb, truncDim = 16).collect()
     val anchors = emb.filter(col("vec_id") < 128).count()
     assert(trunc.map(_.getLong(1)).sum == anchors &&
       full.head.getLong(1) == anchors)
