@@ -32,6 +32,38 @@ object SparkEntry {
     s"${System.getProperty("java.io.tmpdir")}/${prefix}_" +
       s"${s.sparkContext.applicationId}_" + new java.io.File(dataset).getName
 
+  /** Roundtrip check of an LSH layout (q106, q154), in one pass over the
+    * files at `path`: table 0 is one full corpus copy (`n_vecs`,
+    * `sum_ids`). Completeness must hold PER TABLE, not just in aggregate
+    * — a duplicated row in one table plus a missing row in another keeps
+    * the grand total intact, so the total alone proves nothing. The pair
+    * (distinct (tbl, vec_id) == n_vecs x tables, total == distinct) does:
+    * the first says every table covers every vector, the second that no
+    * (tbl, vec_id) appears twice.
+    */
+  private def lshLayoutCheck(s: SparkSession, path: String): DataFrame =
+    s.read.parquet(path)
+      .agg(count(when(col("tbl") === 0, lit(1))).as("n_vecs"),
+        sum(when(col("tbl") === 0, col("vec_id"))).as("sum_ids"),
+        count(lit(1)).as("__total"),
+        countDistinct(col("tbl"), col("vec_id")).as("__distinct"))
+      .select(col("n_vecs"), col("sum_ids"),
+        (col("__distinct") === col("n_vecs") * Similarity.DefaultLshTables &&
+          col("__total") === col("__distinct"))
+          .as("all_tables_complete"))
+
+  /** Roundtrip check of the `nlist`-cell IVF layout of dataset `d` (q107,
+    * q108): the corpus read back (`n_vecs`, `sum_ids`) in 1..nlist cells.
+    */
+  private def ivfLayoutCheck(s: SparkSession, d: String, nlist: Int): DataFrame = {
+    val idx = Similarity.ivfIndex(eng(s, d).table("embeddings"), d, nlist)
+    s.read.parquet(idx.path)
+      .agg(count(lit(1)).as("n_vecs"), sum(col("vec_id")).as("sum_ids"),
+        countDistinct(col("cid")).as("__cells"))
+      .select(col("n_vecs"), col("sum_ids"),
+        (col("__cells") >= 1 && col("__cells") <= nlist).as("cells_ok"))
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The Spark-native transposition of the reference docstring query
     * (`oec.py:30-37`): drilldowns [Year, Nation], measure [Trade Value],
@@ -1106,26 +1138,9 @@ object SparkEntry {
     // consumer cares about, since the build is amortized by design.
     // Each is also a roundtrip oracle: the layout read back must contain
     // exactly the corpus (nothing lost or duplicated by the write).
-    "q106_lsh_index_build" -> ((s, d) => {
-      val emb = eng(s, d).table("embeddings")
-      val path = Similarity.lshIndex(emb, datasetKey = d).path // q29's layout
-      // single pass over the layout: table 0 is one full corpus copy.
-      // Completeness must hold PER TABLE, not just in aggregate — a
-      // duplicated row in one table plus a missing row in another keeps
-      // the grand total intact, so the total alone proves nothing. The
-      // pair (distinct (tbl, vec_id) == n_vecs x tables, total ==
-      // distinct) does: the first says every table covers every vector,
-      // the second that no (tbl, vec_id) appears twice.
-      s.read.parquet(path)
-        .agg(count(when(col("tbl") === 0, lit(1))).as("n_vecs"),
-          sum(when(col("tbl") === 0, col("vec_id"))).as("sum_ids"),
-          count(lit(1)).as("__total"),
-          countDistinct(col("tbl"), col("vec_id")).as("__distinct"))
-        .select(col("n_vecs"), col("sum_ids"),
-          (col("__distinct") === col("n_vecs") * Similarity.DefaultLshTables &&
-            col("__total") === col("__distinct"))
-            .as("all_tables_complete"))
-    }),
+    // q106 builds q29's layout, q107 q46's, q108 q101's.
+    "q106_lsh_index_build" -> ((s, d) => lshLayoutCheck(s,
+      Similarity.lshIndex(eng(s, d).table("embeddings"), datasetKey = d).path)),
     // q151's layout as its own timed build entry (the q106-q108
     // discipline: builds run FIRST each bench pass and are counted in
     // builds_total, so q151 measures PROBE latency against the warm
@@ -1138,28 +1153,12 @@ object SparkEntry {
     // incremental cost — see Similarity.lshIndexIncremental.
     "q154_lshincr_index_build" -> ((s, d) => {
       val emb = eng(s, d).table("embeddings")
-      val path = Similarity.lshIndexIncremental(
+      lshLayoutCheck(s, Similarity.lshIndexIncremental(
         emb.filter(pmod(col("vec_id"), lit(5)) =!= 0),
-        emb.filter(pmod(col("vec_id"), lit(5)) === 0), datasetKey = d).path
-      s.read.parquet(path)
-        .agg(count(when(col("tbl") === 0, lit(1))).as("n_vecs"),
-          sum(when(col("tbl") === 0, col("vec_id"))).as("sum_ids"),
-          count(lit(1)).as("__total"),
-          countDistinct(col("tbl"), col("vec_id")).as("__distinct"))
-        .select(col("n_vecs"), col("sum_ids"),
-          (col("__distinct") === col("n_vecs") * Similarity.DefaultLshTables &&
-            col("__total") === col("__distinct"))
-            .as("all_tables_complete"))
+        emb.filter(pmod(col("vec_id"), lit(5)) === 0), datasetKey = d).path)
     }),
-    "q107_ivf_index_build" -> ((s, d) => {
-      val emb = eng(s, d).table("embeddings")
-      val idx = Similarity.ivfIndex(emb, datasetKey = d) // q46's layout
-      s.read.parquet(idx.path)
-        .agg(count(lit(1)).as("n_vecs"), sum(col("vec_id")).as("sum_ids"),
-          countDistinct(col("cid")).as("__cells"))
-        .select(col("n_vecs"), col("sum_ids"),
-          (col("__cells") >= 1 && col("__cells") <= 16).as("cells_ok"))
-    }),
+    "q107_ivf_index_build" -> ((s, d) =>
+      ivfLayoutCheck(s, d, Similarity.DefaultNlist)),
     // Stream-stream LEFT OUTER interval join (q54's hard variant: null
     // emission gated on watermark close-out; see
     // EventsStream.purchaseAttributionOuter for the drain-determinism cut)
@@ -1289,15 +1288,7 @@ object SparkEntry {
       Similarity.ivfHardNegatives(emb, emb.filter(col("vec_id") < 5), k = 3,
         nlist = 8, nprobe = 8, datasetKey = d)
     }),
-    "q108_ivf8_index_build" -> ((s, d) => {
-      val emb = eng(s, d).table("embeddings")
-      val idx = Similarity.ivfIndex(emb, datasetKey = d, nlist = 8) // q101's
-      s.read.parquet(idx.path)
-        .agg(count(lit(1)).as("n_vecs"), sum(col("vec_id")).as("sum_ids"),
-          countDistinct(col("cid")).as("__cells"))
-        .select(col("n_vecs"), col("sum_ids"),
-          (col("__cells") >= 1 && col("__cells") <= 8).as("cells_ok"))
-    }),
+    "q108_ivf8_index_build" -> ((s, d) => ivfLayoutCheck(s, d, 8)),
     // Wire-source roundtrip: serialize a dimension into the reference's
     // {"data":[...]} wire format (raw keys with spaces, exactly what a
     // migrating user captures with curl — oec.py:22/62), read it back

@@ -9,8 +9,13 @@ import org.apache.spark.sql.graftbridge.Bridge
   * (`array<float>`), plus embedding-cosine near-duplicate detection.
   *
   * Scale design:
-  *   - cosine/dot/norm are zip_with + aggregate higher-order functions —
-  *     codegen'd per-row math, no UDF;
+  *   - cosine/dot/norm are native fused Catalyst expressions
+  *     ([[graft.functions.VectorExpressions]]) — codegen'd per-row math,
+  *     no UDF; the zip_with + aggregate forms ([[dotHof]], [[cosineHof]])
+  *     are reference implementations the tests compare against;
+  *   - every ranking is one contract: cosine rounded to 4 dp, descending,
+  *     vec_id tiebreak — [[cosineTopK]] for one query,
+  *     [[rankPerQuery]] for a batch of queries;
   *   - brute-force top-k is score -> TakeOrderedAndProject (per-partition
   *     heap of k, merged on the driver): the baseline, exact, one scan;
   *   - the scale path is random-hyperplane LSH: a per-row bucket key from
@@ -35,6 +40,11 @@ object Similarity {
     * layouts; the incremental layout always uses these. */
   val DefaultLshPlanes = 8
   val DefaultLshDim = 64
+
+  /** Default cell count and probed-cell count of the IVF entry points;
+    * the q107 layout check bounds its cell count by [[DefaultNlist]]. */
+  val DefaultNlist = 16
+  val DefaultNprobe = 4
 
   /** Cosine cut of the embedding near-dup pairs (q30) and the semantic
     * keep-list built on them (q118). */
@@ -91,30 +101,54 @@ object Similarity {
       cosineFn: (Column, Column) => Column = cosine): DataFrame = {
     val q = broadcast(emb.filter(col("vec_id") === queryId)
       .select(col("embedding").as("q_emb")))
-    emb.filter(col("vec_id") =!= queryId)
-      .crossJoin(q)
-      .select(col("vec_id"), col("label"),
-        round(cosineFn(col("embedding"), col("q_emb")), 4).as("cos_sim"))
+    cosineTopK(emb.filter(col("vec_id") =!= queryId).crossJoin(q),
+      cosineFn(col("embedding"), col("q_emb")), k)
+  }
+
+  /** The single-query ranking contract of every top-k operator here:
+    * `vec_id`, `label`, the `extra` columns, then `score` rounded to 4 dp
+    * as `cos_sim`, ordered by it descending with a `vec_id` tiebreak. The
+    * rounded score is the value an ANSI oracle ranks, so both engines
+    * order identically (the q28/q29 contract). `limit` after `orderBy`
+    * plans as one TakeOrderedAndProject: per-partition heaps of k.
+    */
+  private def cosineTopK(cands: DataFrame, score: Column, k: Int,
+      extra: Column*): DataFrame =
+    cands.select((Seq(col("vec_id"), col("label")) ++ extra :+
+        round(score, 4).as("cos_sim")): _*)
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(k)
+
+  /** The per-query form of [[cosineTopK]]'s contract, shared by the four
+    * batch kNN joins. `queries` becomes (q_id[, q_label], q_emb) and
+    * `pairsOf` pairs it with corpus rows: a broadcast cross join for the
+    * exact joins, a cid join for the indexed ones ([[ivfPairs]]). Self-pairs are dropped, each pair scores its 4 dp
+    * cosine, and a row_number window over q_id keeps the top `k` in the
+    * same order. `negatives` also drops same-label pairs before scoring
+    * and emits the corpus label as `neg_label`.
+    */
+  private def rankPerQuery(queries: DataFrame, k: Int, negatives: Boolean)(
+      pairsOf: DataFrame => DataFrame): DataFrame = {
+    def neg(c: Column): Seq[Column] = if (negatives) Seq(c) else Nil
+    val notSelf = col("vec_id") =!= col("q_id")
+    val scored = pairsOf(queries.select((col("vec_id").as("q_id") +:
+        neg(col("label").as("q_label")) :+ col("embedding").as("q_emb")): _*))
+      .filter(if (negatives) notSelf && col("label") =!= col("q_label") else notSelf)
+      .select((Seq(col("q_id"), col("vec_id")) ++ neg(col("label").as("neg_label")) :+
+        round(cosine(col("embedding"), col("q_emb")), 4).as("cos_sim")): _*)
+    val w = Window.partitionBy(col("q_id"))
+      .orderBy(col("cos_sim").desc, col("vec_id"))
+    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+      .select((Seq(col("q_id"), col("rk"), col("vec_id")) ++ neg(col("neg_label")) :+
+        col("cos_sim")): _*)
+      .orderBy(col("q_id"), col("rk"))
   }
 
   /** Exact kNN join: for every query row (small, broadcast), the top-k
     * corpus neighbors — window row_number over the scored cross product.
     */
-  def knnJoin(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val scored = corpus
-      .crossJoin(broadcast(queries
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        round(cosine(col("embedding"), col("q_emb")), 4).as("cos_sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("q_id"), col("rk"), col("vec_id"), col("cos_sim"))
-      .orderBy(col("q_id"), col("rk"))
-  }
+  def knnJoin(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    rankPerQuery(queries, k, negatives = false)(q => corpus.crossJoin(broadcast(q)))
 
   /** Hard-negative mining — the contrastive-training data primitive: for
     * every query vector, the top-k most-similar corpus vectors with a
@@ -126,20 +160,8 @@ object Similarity {
     * exact form is the oracle-gated baseline; [[ivfHardNegatives]] is the
     * indexed scale path (same output in its exhaustive regime, q114).
     */
-  def hardNegatives(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val scored = corpus
-      .crossJoin(broadcast(queries.select(col("vec_id").as("q_id"),
-        col("label").as("q_label"), col("embedding").as("q_emb"))))
-      .filter(col("vec_id") =!= col("q_id") && col("label") =!= col("q_label"))
-      .select(col("q_id"), col("vec_id"), col("label").as("neg_label"),
-        round(cosine(col("embedding"), col("q_emb")), 4).as("cos_sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("q_id"), col("rk"), col("vec_id"), col("neg_label"),
-        col("cos_sim"))
-      .orderBy(col("q_id"), col("rk"))
-  }
+  def hardNegatives(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    rankPerQuery(queries, k, negatives = true)(q => corpus.crossJoin(broadcast(q)))
 
   /** Deterministic pseudo-random +-1 hyperplane component for (plane p,
     * dim d): the low bit of md5("p,d") — reproducible across sessions
@@ -159,13 +181,9 @@ object Similarity {
   }
 
   /** LSH bucket key: `planes` sign bits from dot products with the +-1
-    * hyperplanes. Pure per-row expression over literal plane vectors.
-    */
-  def lshKey(emb: Column, planes: Int, dim: Int): Column =
-    lshKeyOffset(emb, 0, planes, dim)
-
-  /** As [[lshKey]] but starting at plane index `offset` — gives each LSH
-    * table an independent plane family.
+    * hyperplanes `offset until offset + planes` — each LSH table starts at
+    * its own offset, so the tables use independent plane families. Pure
+    * per-row expression over literal plane vectors.
     */
   def lshKeyOffset(emb: Column, offset: Int, planes: Int, dim: Int): Column = {
     val bits = (0 until planes).map { p =>
@@ -466,7 +484,7 @@ object Similarity {
       datasetKey: String): DataFrame =
     lshProbeTopK(lshIndexIncremental(base, delta, datasetKey),
       base.unionByName(delta), queryId, k, DefaultLshPlanes, DefaultLshDim,
-      DefaultLshTables)
+      DefaultLshTables, "lshIncrementalTopK")
 
   /** Bucketed ANN top-k through the multi-table LSH index: in EACH table
     * the query's bucket plus all Hamming-1 neighbors (multi-probe) become
@@ -484,26 +502,23 @@ object Similarity {
       tables: Int = DefaultLshTables,
       datasetKey: String): DataFrame =
     lshProbeTopK(lshIndex(emb, datasetKey, planes, dim, tables),
-      emb, queryId, k, planes, dim, tables)
+      emb, queryId, k, planes, dim, tables, "lshTopK")
 
   /** Multi-probe read against an already-built LSH layout — the shared
-    * probe path of [[lshTopK]] and [[lshIncrementalTopK]]. `lookup` only
-    * supplies the query vector and its buckets (1-row driver fetch).
+    * probe path of [[lshTopK]] and [[lshIncrementalTopK]] (`op` names the
+    * caller in errors). `lookup` only supplies the query vector and its
+    * buckets.
     */
   private def lshProbeTopK(layout: LshLayout, lookup: DataFrame, queryId: Long,
-      k: Int, planes: Int, dim: Int, tables: Int): DataFrame = {
+      k: Int, planes: Int, dim: Int, tables: Int, op: String): DataFrame = {
     val path = layout.path
-    val emb = lookup
-    // 1-row driver fetch: the query vector and its per-table buckets
-    // (computed by the SAME column expressions the index used)
-    val keyCols = (0 until tables).map(t =>
-      lshKeyOffset(col("embedding"), t * planes, planes, dim).as(s"b$t"))
-    val q = emb.filter(col("vec_id") === queryId)
-      .select((col("embedding") +: keyCols): _*)
-      .collect()
-    require(q.nonEmpty, s"lshTopK: query vec_id=$queryId not found")
+    val spark = lookup.sparkSession
+    // the query's per-table buckets come from the SAME column expressions
+    // the index used
+    val (qv, q) = fetchQuery(lookup, queryId, op, (0 until tables).map(t =>
+      lshKeyOffset(col("embedding"), t * planes, planes, dim)): _*)
     val admitted = (0 until tables).flatMap { t =>
-      val b = q.head.getLong(1 + t)
+      val b = q.getLong(1 + t)
       (b +: (0 until planes).map(p => b ^ (1L << p))).distinct.map(t -> _)
     }
     val probeFilter = admitted.groupBy(_._1).map { case (t, bs) =>
@@ -518,7 +533,7 @@ object Similarity {
     // may live on HDFS/S3 (spark.graft.indexDir) — a local-only check
     // there would see nothing and silently return an empty probe.
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      emb.sparkSession.sparkContext.hadoopConfiguration)
+      spark.sparkContext.hadoopConfiguration)
     // Incremental layouts hold gen=base/gen=delta subtrees (see
     // lshIndexIncremental); plain layouts put tbl=… at the root. ONE
     // root listing discovers which shape this is — the probed-dir count
@@ -541,19 +556,31 @@ object Similarity {
       .flatMap { case (t, p) =>
         subRoots.map(g => s"$path/${g}tbl=$t/bpfx=$p") }
       .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
-    val qLit = array(embAsDoubles(q.head, 0).map(lit).toIndexedSeq: _*)
     val indexed =
-      if (probeDirs.isEmpty) emb.sparkSession.read.parquet(path).filter(lit(false))
-      else emb.sparkSession.read.option("basePath", path).parquet(probeDirs: _*)
-    indexed
-      .filter(probeFilter && col("vec_id") =!= queryId)
-      .select(col("vec_id"), col("label"), col("embedding"))
-      .dropDuplicates("vec_id")
-      .select(col("vec_id"), col("label"),
-        round(cosine(col("embedding"), qLit), 4).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
+      if (probeDirs.isEmpty) spark.read.parquet(path).filter(lit(false))
+      else spark.read.option("basePath", path).parquet(probeDirs: _*)
+    cosineTopK(indexed
+        .filter(probeFilter && col("vec_id") =!= queryId)
+        .select(col("vec_id"), col("label"), col("embedding"))
+        .dropDuplicates("vec_id"),
+      cosine(col("embedding"), vecLit(qv)), k)
   }
+
+  /** The 1-row driver fetch of the single-query operators: query
+    * `queryId`'s embedding as doubles, plus the row of `extra` values
+    * computed on it (at fields 1.., after the embedding). `op` names the
+    * caller in the not-found error.
+    */
+  private def fetchQuery(emb: DataFrame, queryId: Long, op: String,
+      extra: Column*): (Array[Double], org.apache.spark.sql.Row) = {
+    val rows = emb.filter(col("vec_id") === queryId)
+      .select((col("embedding") +: extra): _*).collect()
+    require(rows.nonEmpty, s"$op: query vec_id=$queryId not found")
+    (embAsDoubles(rows.head, 0), rows.head)
+  }
+
+  /** A driver-side vector as an `array<double>` literal column. */
+  private def vecLit(v: Array[Double]): Column = array(v.map(lit).toIndexedSeq: _*)
 
   /** Driver-side embedding fetch tolerant of BOTH physical encodings —
     * list<float> and list<double> — the events-ts dual-encoding lesson
@@ -641,20 +668,34 @@ object Similarity {
             org.apache.spark.sql.types.DoubleType)))))
   }
 
-  /** Nearest-centroid assignment: per-row argmin of squared L2 distance
-    * (min over (c.c - 2 x.c) — the ||x||^2 term is constant per row);
-    * ties break to the lowest cid.
+  /** [[kmeans]] collected as driver-side model state: (cid, centroid)
+    * in cid order, `k` x dim doubles.
+    */
+  private def trainCentroids(emb: DataFrame, k: Int): Array[(Int, Array[Double])] =
+    kmeans(emb, k).collect()
+      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
+      .sortBy(_._1)
+
+  /** One `(‖c‖² − 2·x·c, cid)` struct per centroid: the squared L2 from
+    * `x` to `c` less the per-row ‖x‖² term, which cannot change the
+    * order. array_min over the structs picks the nearest centroid and
+    * sort_array the nearest few, ties to the lowest cid — pure column
+    * math, no shuffle, no driver round-trip.
+    */
+  private def centroidScores(x: Column,
+      centroids: Array[(Int, Array[Double])]): Column =
+    array(centroids.map { case (cid, c) =>
+      struct((lit(c.map(v => v * v).sum) - lit(2.0) * dot(x, vecLit(c))).as("score"),
+        lit(cid).as("cid"))
+    }.toIndexedSeq: _*)
+
+  /** Nearest-centroid assignment: the [[centroidScores]] argmin as a
+    * `cid` column.
     */
   private def assignToCentroids(
-      emb: DataFrame, centroids: Array[(Int, Array[Double])]): DataFrame = {
-    val scored = centroids.map { case (cid, c) =>
-      val cLit = array(c.map(lit).toIndexedSeq: _*)
-      val c2 = c.map(x => x * x).sum
-      struct((lit(c2) - lit(2.0) * dot(col("embedding"), cLit)).as("score"),
-        lit(cid).as("cid"))
-    }
-    emb.withColumn("cid", array_min(array(scored.toIndexedSeq: _*)).getField("cid"))
-  }
+      emb: DataFrame, centroids: Array[(Int, Array[Double])]): DataFrame =
+    emb.withColumn("cid",
+      array_min(centroidScores(col("embedding"), centroids)).getField("cid"))
 
   /** Build (once per session+dataset) the IVF index: train the coarse
     * quantizer on a bounded sample ([[kmeans]]), assign every vector to
@@ -662,10 +703,9 @@ object Similarity {
     * corpus Hive-partitioned by cell id. The one full-corpus pass, paid
     * at build time, never at probe time.
     */
-  def ivfIndex(emb: DataFrame, datasetKey: String, nlist: Int = 16): IvfIndex =
+  def ivfIndex(emb: DataFrame, datasetKey: String, nlist: Int = DefaultNlist): IvfIndex =
     Scratch.memo(emb.sparkSession, "ivfIndex", (datasetKey, nlist)) {
-      val centroids = kmeans(emb, nlist).collect()
-        .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
+      val centroids = trainCentroids(emb, nlist)
       val path = indexPath(emb.sparkSession, s"ivf${nlist}i$KmeansIters", datasetKey)
       // repartition by cell: one writer set per cell directory (see
       // lshIndex) instead of tasks × cells tiny files; explicit count so
@@ -684,32 +724,38 @@ object Similarity {
     * bounding probe I/O to ~nprobe/nlist of the corpus instead of
     * filtering a full scan.
     */
-  def ivfTopK(emb: DataFrame, queryId: Long, k: Int, nlist: Int = 16, nprobe: Int = 4,
-      datasetKey: String): DataFrame =
-    ivfProbeTopK(ivfIndex(emb, datasetKey, nlist), emb, queryId, k, nprobe)
+  def ivfTopK(emb: DataFrame, queryId: Long, k: Int, nlist: Int = DefaultNlist,
+      nprobe: Int = DefaultNprobe, datasetKey: String): DataFrame =
+    ivfProbeTopK(ivfIndex(emb, datasetKey, nlist), emb, queryId, k, nprobe, "ivfTopK")
 
-  /** Single-query probe against an already-built [[IvfIndex]] — the
-    * shared probe path of [[ivfTopK]] and [[ivfIncrementalTopK]]. The
-    * `lookup` frame only supplies the query vector (one filtered
-    * collect); all scored data comes off the cid-partitioned layout.
+  /** Single-query top-k against an already-built [[IvfIndex]] — the
+    * shared path of [[ivfTopK]] and [[ivfIncrementalTopK]]: the
+    * [[ivfProbe]] candidates ranked by [[cosineTopK]].
     */
   private def ivfProbeTopK(idx: IvfIndex, lookup: DataFrame,
-      queryId: Long, k: Int, nprobe: Int): DataFrame = {
-    val qRows = lookup.filter(col("vec_id") === queryId).collect()
-    require(qRows.nonEmpty, s"ivfTopK: query vec_id=$queryId not found")
-    val q = qRows.head
-    val qv = embAsDoubles(q, q.fieldIndex("embedding"))
+      queryId: Long, k: Int, nprobe: Int, op: String): DataFrame = {
+    val (cells, qLit) = ivfProbe(idx, lookup, queryId, nprobe, op)
+    cosineTopK(cells, cosine(col("embedding"), qLit), k)
+  }
+
+  /** The single-query IVF cell probe: fetch query `queryId` from `lookup`
+    * (the only thing it supplies — all scored data comes off the
+    * cid-partitioned layout), choose its `nprobe` nearest cells
+    * driver-side by full L2 against the centroid model, and read only
+    * those cell directories, without the query row. The full L2 is a
+    * different floating-point form from [[centroidScores]]'; keeping the
+    * two apart means no near-tie flips a probed cell. Returns the
+    * candidates and the query vector as a literal.
+    */
+  private def ivfProbe(idx: IvfIndex, lookup: DataFrame, queryId: Long,
+      nprobe: Int, op: String): (DataFrame, Column) = {
+    val qv = fetchQuery(lookup, queryId, op)._1
     val probes = idx.centroids.map { case (cid, c) =>
-      val d2 = c.zip(qv).map { case (a, b) => (a - b) * (a - b) }.sum
-      cid -> d2
+      cid -> c.zip(qv).map { case (a, b) => (a - b) * (a - b) }.sum
     }.sortBy(_._2).take(nprobe).map(_._1).toSet
-    val qLit = array(qv.map(lit).toIndexedSeq: _*)
-    lookup.sparkSession.read.parquet(idx.path)
-      .filter(col("cid").isInCollection(probes) && col("vec_id") =!= queryId)
-      .select(col("vec_id"), col("label"),
-        round(cosine(col("embedding"), qLit), 4).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
+    (lookup.sparkSession.read.parquet(idx.path)
+      .filter(col("cid").isInCollection(probes) && col("vec_id") =!= queryId),
+      vecLit(qv))
   }
 
   /** INCREMENTAL index maintenance: fold a delta of new vectors into an
@@ -742,7 +788,7 @@ object Similarity {
     * real corpus size. Idempotence is spec-pinned either way.)
     */
   def ivfIndexIncremental(base: DataFrame, delta: DataFrame, datasetKey: String,
-      nlist: Int = 16): IvfIndex =
+      nlist: Int = DefaultNlist): IvfIndex =
     // derived keys use '_' (never '#'/':' — dataset keys feed path
     // basenames, and URI-fragment parsing would silently collide the
     // base layout with the plain index of the same dataset)
@@ -761,9 +807,10 @@ object Similarity {
     * oracle surface (q140) exactly as q113 gates the probe machinery.
     */
   def ivfIncrementalTopK(base: DataFrame, delta: DataFrame, queryId: Long, k: Int,
-      nlist: Int = 16, nprobe: Int = 4, datasetKey: String): DataFrame =
+      nlist: Int = DefaultNlist, nprobe: Int = DefaultNprobe,
+      datasetKey: String): DataFrame =
     ivfProbeTopK(ivfIndexIncremental(base, delta, datasetKey, nlist),
-      base.unionByName(delta), queryId, k, nprobe)
+      base.unionByName(delta), queryId, k, nprobe, "ivfIncrementalTopK")
 
   /** Pick the query-side join regime for the indexed ANN joins. A
     * mining/retrieval BATCH of queries broadcasts (each corpus partition
@@ -811,43 +858,33 @@ object Similarity {
     * is corpus-scale; the shuffle regime's exhaustive form is
     * oracle-gated as q128.
     */
-  def ivfKnnJoin(corpus: DataFrame, queries: DataFrame, k: Int, nlist: Int = 16,
-      nprobe: Int = 4, datasetKey: String,
-      broadcastQueries: Option[Boolean] = None): DataFrame = {
+  def ivfKnnJoin(corpus: DataFrame, queries: DataFrame, k: Int,
+      nlist: Int = DefaultNlist, nprobe: Int = DefaultNprobe, datasetKey: String,
+      broadcastQueries: Option[Boolean] = None): DataFrame =
+    rankPerQuery(queries, k, negatives = false)(
+      ivfPairs(corpus, nlist, nprobe, datasetKey, broadcastQueries))
+
+  /** [[rankPerQuery]]'s indexed pairs: each query row explodes to its
+    * `nprobe` nearest cells ([[probeCids]]) and joins the cid-partitioned
+    * layout on cid, the query side in [[queryRegime]]'s `regime` — a
+    * bucket join keyed on cid, never a cross join against the corpus.
+    */
+  private def ivfPairs(corpus: DataFrame, nlist: Int, nprobe: Int,
+      datasetKey: String, regime: Option[Boolean]): DataFrame => DataFrame = {
     val idx = ivfIndex(corpus, datasetKey, nlist)
-    val qProbes = queries
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      .withColumn("cid", explode(probeCids(idx.centroids, nprobe, col("q_emb"))))
-    val indexed = corpus.sparkSession.read.parquet(idx.path)
-    val scored = indexed.join(queryRegime(qProbes, broadcastQueries), Seq("cid"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        round(cosine(col("embedding"), col("q_emb")), 4).as("cos_sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("q_id"), col("rk"), col("vec_id"), col("cos_sim"))
-      .orderBy(col("q_id"), col("rk"))
+    q => corpus.sparkSession.read.parquet(idx.path).join(queryRegime(
+      q.withColumn("cid", explode(probeCids(idx.centroids, nprobe, col("q_emb")))),
+      regime), Seq("cid"))
   }
 
   /** A query row's `nprobe` nearest cells as a pure column expression
-    * against the centroid model: squared-L2 to each centroid in its
-    * cheapest form ||c||² − 2·q·c (the ||q||² term is constant per row
-    * and cannot change the argsort), sort, slice — nlist scores per row,
-    * no shuffle, no driver round-trip.
+    * against the centroid model: the [[centroidScores]] sorted and
+    * sliced — nlist scores per row.
     */
   private def probeCids(centroids: Array[(Int, Array[Double])],
-      nprobe: Int, qEmb: Column): Column = {
-    val cellScores = centroids.map { case (cid, c) =>
-      val cLit = array(c.map(lit).toIndexedSeq: _*)
-      val c2 = c.map(x => x * x).sum
-      struct((lit(c2) - lit(2.0) * dot(qEmb, cLit)).as("score"),
-        lit(cid).as("cid"))
-    }
-    transform(
-      slice(sort_array(array(cellScores.toIndexedSeq: _*)), 1, nprobe),
+      nprobe: Int, qEmb: Column): Column =
+    transform(slice(sort_array(centroidScores(qEmb, centroids)), 1, nprobe),
       p => p.getField("cid"))
-  }
 
   /** Hard-negative mining through the IVF layout — the indexed scale path
     * of [[hardNegatives]]: each query probes only its `nprobe` nearest
@@ -861,43 +898,17 @@ object Similarity {
     * corpus as the query set is the canonical corpus-scale case, and its
     * size estimate then fails the broadcast bar, so it shuffles on cid.
     */
-  def ivfHardNegatives(corpus: DataFrame, queries: DataFrame, k: Int, nlist: Int = 16,
-      nprobe: Int = 4, datasetKey: String): DataFrame = {
-    val idx = ivfIndex(corpus, datasetKey, nlist)
-    val qProbes = queries
-      .select(col("vec_id").as("q_id"), col("label").as("q_label"),
-        col("embedding").as("q_emb"))
-      .withColumn("cid", explode(probeCids(idx.centroids, nprobe, col("q_emb"))))
-    val indexed = corpus.sparkSession.read.parquet(idx.path)
-    val scored = indexed.join(queryRegime(qProbes, None), Seq("cid"))
-      .filter(col("vec_id") =!= col("q_id") && col("label") =!= col("q_label"))
-      .select(col("q_id"), col("vec_id"), col("label").as("neg_label"),
-        round(cosine(col("embedding"), col("q_emb")), 4).as("cos_sim"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("q_id"), col("rk"), col("vec_id"), col("neg_label"),
-        col("cos_sim"))
-      .orderBy(col("q_id"), col("rk"))
-  }
+  def ivfHardNegatives(corpus: DataFrame, queries: DataFrame, k: Int,
+      nlist: Int = DefaultNlist, nprobe: Int = DefaultNprobe,
+      datasetKey: String): DataFrame =
+    rankPerQuery(queries, k, negatives = true)(
+      ivfPairs(corpus, nlist, nprobe, datasetKey, None))
 
-  /** Per-label centroids (mean embedding) + intra-cluster cohesion (mean
-    * cosine of members to a unit-normalized sum — computed with array
-    * aggregates, no UDAF: sum-vector via element-wise aggregation over
-    * posexploded components).
+  /** Per-label member count and centroid norm (the L2 norm of the mean
+    * embedding, 6 dp) — computed with array aggregates, no UDAF: the
+    * mean vector comes from a per-(label, pos) rollup over posexploded
+    * components, reassembled in pos order.
     */
-  /** [[labelCentroids]] via the typed [[graft.functions.VectorAvg]]
-    * Aggregator — one pass, one buffer per (label, map task) in the
-    * shuffle, no posexplode blow-up of the row count. Same output.
-    */
-  def labelCentroidsAgg(emb: DataFrame): DataFrame =
-    emb.groupBy(col("label"))
-      .agg(count(lit(1)).as("n_members"),
-        graft.functions.VectorAvg.column(col("embedding")).as("centroid"))
-      .select(col("label"), col("n_members"),
-        round(norm(col("centroid")), 6).as("centroid_norm"))
-      .orderBy(col("label"))
-
   def labelCentroids(emb: DataFrame): DataFrame = {
     val exploded = emb.select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
     val sums = exploded.groupBy(col("label"), col("pos"))
@@ -909,6 +920,18 @@ object Similarity {
         round(norm(transform(col("pairs"), p => p.getField("m"))), 6).as("centroid_norm"))
       .orderBy(col("label"))
   }
+
+  /** [[labelCentroids]] via the typed [[graft.functions.VectorAvg]]
+    * Aggregator — one pass, one buffer per (label, map task) in the
+    * shuffle, no posexplode blow-up of the row count. Same output.
+    */
+  def labelCentroidsAgg(emb: DataFrame): DataFrame =
+    emb.groupBy(col("label"))
+      .agg(count(lit(1)).as("n_members"),
+        graft.functions.VectorAvg.column(col("embedding")).as("centroid"))
+      .select(col("label"), col("n_members"),
+        round(norm(col("centroid")), 6).as("centroid_norm"))
+      .orderBy(col("label"))
 
   /** Per-label semantic outlier census: each member's cosine to its OWN
     * label centroid, rolled up to (n_members, mean cosine, count below
@@ -1160,28 +1183,16 @@ object Similarity {
     * q113 exhaustive device); probed regimes inherit ivfTopK's pruning.
     */
   def ivfQuantizedTopK(emb: DataFrame, queryId: Long, k: Int, rerankWidth: Int = 50,
-      nlist: Int = 16, nprobe: Int = 4, datasetKey: String): DataFrame = {
-    val idx = ivfIndex(emb, datasetKey, nlist)
-    val qRows = emb.filter(col("vec_id") === queryId).collect()
-    require(qRows.nonEmpty, s"ivfQuantizedTopK: query vec_id=$queryId not found")
-    val q = qRows.head
-    val qv = embAsDoubles(q, q.fieldIndex("embedding"))
-    val probes = idx.centroids.map { case (cid, c) =>
-      cid -> c.zip(qv).map { case (a, b) => (a - b) * (a - b) }.sum
-    }.sortBy(_._2).take(nprobe).map(_._1).toSet
-    val qLit = array(qv.map(lit).toIndexedSeq: _*)
-    val candidates = quantizeInt8(
-      emb.sparkSession.read.parquet(idx.path)
-        .filter(col("cid").isInCollection(probes) && col("vec_id") =!= queryId))
+      nlist: Int = DefaultNlist, nprobe: Int = DefaultNprobe,
+      datasetKey: String): DataFrame = {
+    val (cells, qLit) = ivfProbe(ivfIndex(emb, datasetKey, nlist), emb,
+      queryId, nprobe, "ivfQuantizedTopK")
+    val candidates = quantizeInt8(cells)
       .withColumn("approx_cos",
         round(cosine(col("q").cast("array<double>"), qLit), 4))
       .orderBy(col("approx_cos").desc, col("vec_id"))
       .limit(rerankWidth)
-    candidates
-      .select(col("vec_id"), col("label"), col("approx_cos"),
-        round(cosine(col("embedding"), qLit), 4).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
+    cosineTopK(candidates, cosine(col("embedding"), qLit), k, col("approx_cos"))
   }
 
   /** Fixture wiring (q84): quantization audit per vector. */
@@ -1418,14 +1429,11 @@ object Similarity {
     val k = 10
     val subspaces = 8
     val codeK = 16
-    val qRows = emb.filter(col("vec_id") === queryId).collect()
-    require(qRows.nonEmpty, s"pqRerankTopK: query vec_id=$queryId not found")
-    val qv = embAsDoubles(qRows.head, qRows.head.fieldIndex("embedding"))
+    val qv = fetchQuery(emb, queryId, "pqRerankTopK")._1
     val dim = qv.length
     require(dim % subspaces == 0,
       s"pqRerankTopK: dim $dim not divisible into $subspaces subspaces")
     val dsub = dim / subspaces
-    val qLit = array(qv.map(lit).toIndexedSeq: _*)
     val base = emb.filter(col("vec_id") =!= queryId)
     // Exhaustive regime: the ADC prune is an identity, so training
     // codebooks and globally sorting the whole store by __adc only to
@@ -1436,26 +1444,17 @@ object Similarity {
       // per-subspace codebooks: kmeans over the subvector slice (the
       // sample inside kmeans is bounded; the returned codebook is
       // codeK x dsub — model state)
-      val books: Seq[Array[(Int, Array[Double])]] =
-        (0 until subspaces).map { j =>
-          kmeans(emb.select(col("vec_id"),
-              slice(col("embedding"), j * dsub + 1, dsub).as("embedding")),
-            k = codeK)
-            .collect()
-            .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-            .sortBy(_._1)
-        }
-      // fused encode + ADC: per subspace, code = argmin_c(||c||²−2·x_j·c)
-      // (ties to lowest cid — array_min on (d, cid) structs), then the
-      // query-side lookup table prices that code
+      val books = (0 until subspaces).map { j =>
+        trainCentroids(emb.select(col("vec_id"),
+          slice(col("embedding"), j * dsub + 1, dsub).as("embedding")), codeK)
+      }
+      // fused encode + ADC: per subspace, code = the nearest codeword by
+      // centroidScores (ties to lowest cid), then the query-side lookup
+      // table prices that code
       val adc = (0 until subspaces).map { j =>
         val sub = slice(col("embedding"), j * dsub + 1, dsub)
         val qj = qv.slice(j * dsub, (j + 1) * dsub)
-        val code = array_min(array(books(j).map { case (cid, c) =>
-          val cLit = array(c.map(lit).toIndexedSeq: _*)
-          struct((lit(c.map(x => x * x).sum) - lit(2.0) * dot(sub, cLit))
-            .as("d"), lit(cid).as("cid"))
-        }.toIndexedSeq: _*)).getField("cid")
+        val code = array_min(centroidScores(sub, books(j))).getField("cid")
         val lut = books(j).map { case (_, c) =>
           c.zip(qj).map { case (a, b) => (a - b) * (a - b) }.sum
         }
@@ -1465,11 +1464,7 @@ object Similarity {
         .orderBy(col("__adc").asc, col("vec_id"))
         .limit(rerankWidth)
     }
-    candidates
-      .select(col("vec_id"), col("label"),
-        round(cosine(col("embedding"), qLit), 4).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(k)
+    cosineTopK(candidates, cosine(col("embedding"), vecLit(qv)), k)
   }
 
   /** Matryoshka truncation audit: recall@k of PREFIX-truncated cosine
@@ -1481,10 +1476,11 @@ object Similarity {
     * recall before the full-dim rerank?" — measured, not assumed, the
     * same way q130's int8 rerank prices quantization.
     *
-    * Shape: anchors are a bounded evaluation slice (`vec_id < maxId` —
-    * recall is a corpus statistic and estimates fine from a slice);
-    * the anchor side BROADCASTS, the corpus streams past it, and the
-    * per-anchor top-k window partitions on the anchor id. The pair
+    * Shape ([[anchorPairs]]): anchors are a bounded evaluation slice
+    * (`vec_id <` [[TruncAnchors]] — recall is a corpus statistic and
+    * estimates fine from a slice); the anchor side BROADCASTS, the
+    * corpus streams past it, and the per-anchor top-k window partitions
+    * on the anchor id. The pair
     * frame is |corpus|·|anchors| rows of (id, id, two cosines) — at
     * full corpus scale feed a corpus sample or the LSH-bucketed
     * candidate frame ([[lshNearDupPairs]]-style) as `emb`; the
@@ -1493,15 +1489,8 @@ object Similarity {
     * determinism contract), so both engines rank identically.
     */
   def matryoshkaRecall(emb: DataFrame, truncDim: Int = 16): DataFrame = {
-    val (k, maxId) = (TruncK, TruncAnchors)
-    val anchors = emb.filter(col("vec_id") < maxId)
-      .select(col("vec_id").as("a_id"), col("embedding").as("e_a"))
-    val pairs = emb.select(col("vec_id").as("b_id"), col("embedding").as("e_b"))
-      .join(broadcast(anchors), col("a_id") =!= col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        round(cosine(col("e_a"), col("e_b")), 4).as("c_full"),
-        round(cosine(slice(col("e_a"), 1, truncDim),
-          slice(col("e_b"), 1, truncDim)), 4).as("c_trunc"))
+    val k = TruncK
+    val (anchors, pairs) = anchorPairs(emb, truncDim)
     def topK(c: String): DataFrame = pairs
       .withColumn("__r", row_number().over(
         Window.partitionBy(col("a_id")).orderBy(col(c).desc, col("b_id"))))
@@ -1629,6 +1618,34 @@ object Similarity {
       .orderBy(col("bin"))
   }
 
+  /** The anchor-pair frame of the truncated-embedding evals
+    * ([[matryoshkaRecall]], [[truncationNdcg]]): the [[TruncAnchors]]
+    * slice as broadcast anchors (a_id, e_a), paired with every other
+    * corpus row (b_id), each pair scored by its 4 dp cosine at full
+    * dimension (`c_full`) and over the first `truncDim` dims (`c_trunc`).
+    * Returns the anchors and the pairs.
+    */
+  private def anchorPairs(emb: DataFrame, truncDim: Int): (DataFrame, DataFrame) = {
+    val anchors = emb.filter(col("vec_id") < TruncAnchors)
+      .select(col("vec_id").as("a_id"), col("embedding").as("e_a"))
+    val pairs = emb.select(col("vec_id").as("b_id"), col("embedding").as("e_b"))
+      .join(broadcast(anchors), col("a_id") =!= col("b_id"))
+      .select(col("a_id"), col("b_id"),
+        round(cosine(col("e_a"), col("e_b")), 4).as("c_full"),
+        round(cosine(slice(col("e_a"), 1, truncDim),
+          slice(col("e_b"), 1, truncDim)), 4).as("c_trunc"))
+    (anchors, pairs)
+  }
+
+  /** Ideal DCG@k for the graded relevances `k..1` — ONE shared double
+    * literal: [[truncationNdcg]] divides by it and the q311 oracle SQL
+    * interpolates the identical `Double.toString` round-trip literal, so
+    * neither engine recomputes the log sum (whose summation order and
+    * libm could differ in the last ulp).
+    */
+  def ndcgIdcg(k: Int): Double =
+    (1 to k).map(i => (k + 1 - i) / (math.log(i + 1) / math.log(2))).sum
+
   /** Rank-aware twin of [[matryoshkaRecall]]: NDCG@k of the
     * prefix-truncated cosine ranking, using graded relevance from the
     * full-dimension ranking (`rel = k+1 − full_rank` for the true top-k,
@@ -1644,26 +1661,9 @@ object Similarity {
     * the q302 frame: bounded anchor slice broadcast, corpus streamed,
     * per-anchor windows partitioned by anchor id.
     */
-  /** Ideal DCG@k for the graded relevances `k..1` — ONE shared double
-    * literal: [[truncationNdcg]] divides by it and the q311 oracle SQL
-    * interpolates the identical `Double.toString` round-trip literal, so
-    * neither engine recomputes the log sum (whose summation order and
-    * libm could differ in the last ulp).
-    */
-  def ndcgIdcg(k: Int): Double =
-    (1 to k).map(i => (k + 1 - i) / (math.log(i + 1) / math.log(2))).sum
-
   def truncationNdcg(emb: DataFrame, truncDim: Int = 16): DataFrame = {
-    val (k, maxId) = (TruncK, TruncAnchors)
-    val anchors = emb.filter(col("vec_id") < maxId)
-      .select(col("vec_id").as("a_id"), col("embedding").as("e_a"))
-    val pairs = emb.select(col("vec_id").as("b_id"), col("embedding").as("e_b"))
-      .join(broadcast(anchors), col("a_id") =!= col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        round(cosine(col("e_a"), col("e_b")), 4).as("c_full"),
-        round(cosine(slice(col("e_a"), 1, truncDim),
-          slice(col("e_b"), 1, truncDim)), 4).as("c_trunc"))
-    val ranked = pairs
+    val k = TruncK
+    val ranked = anchorPairs(emb, truncDim)._2
       .withColumn("full_rank", row_number().over(
         Window.partitionBy(col("a_id")).orderBy(col("c_full").desc,
           col("b_id"))))

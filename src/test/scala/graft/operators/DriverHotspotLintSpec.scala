@@ -58,12 +58,12 @@ class DriverHotspotLintSpec extends AnyFunSuite {
       // <= 25-brand key list probing the driver-held CMS (q301 —
       // sketch + key list are model-state-sized by construction)
       "graft/operators/Relational.scala" -> 1,
-      // k-means centroids (k x dim), 1-row query-vector fetches, plus
-      // q306 PQ: one query-row fetch + per-subspace codebook collection
-      // (codeK x dsub each — model state), plus q309's eval-suite fetch
-      // (bounded benchmark set by contract, require-guarded <= 1e6,
-      // broadcast to the decontam max-dot kernel)
-      "graft/operators/Similarity.scala" -> 8,
+      // k-means training sample (<= maxSample rows), trained centroids
+      // (IVF cells and PQ codebooks, k x dim — model state), the one
+      // 1-row query-vector fetch of the single-query operators, plus
+      // q309's eval-suite fetch (bounded benchmark set by contract,
+      // require-guarded <= 1e6, broadcast to the decontam max-dot kernel)
+      "graft/operators/Similarity.scala" -> 4,
       // 1-row aggregate: the q109 watermark cutoff
       "graft/streaming/EventsStream.scala" -> 1))
   }

@@ -59,6 +59,31 @@ class SimilaritySpec extends SparkFunSuite {
       q0.map(_.getLong(2)).head == 1L)
   }
 
+  test("single-query operators name themselves and the id of an unknown query") {
+    // 64 dims: the LSH layouts' default width, and divisible into PQ's 8
+    // subspaces
+    val df = vecs((0 until 32).map(i => (i.toLong,
+      (0 until 64).map(d => math.sin(i * 0.7 + d * 0.3).toFloat), i % 4)): _*)
+    val (base, delta) = (df.filter(col("vec_id") % 2 === 0),
+      df.filter(col("vec_id") % 2 === 1))
+    val missing = 999L
+    val key = "simspec-unknown-query"
+    val calls: Seq[(String, () => Any)] = Seq(
+      "lshTopK" -> (() => Similarity.lshTopK(df, missing, 3, datasetKey = key)),
+      "lshIncrementalTopK" ->
+        (() => Similarity.lshIncrementalTopK(base, delta, missing, 3, key)),
+      "ivfTopK" -> (() => Similarity.ivfTopK(df, missing, 3, nlist = 4,
+        datasetKey = key)),
+      "ivfQuantizedTopK" -> (() => Similarity.ivfQuantizedTopK(df, missing, 3,
+        nlist = 4, datasetKey = key)),
+      "pqRerankTopK" -> (() => Similarity.pqRerankTopK(df, missing)))
+    calls.foreach { case (op, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(s"$op: query vec_id=$missing not found"),
+        s"$op raised: ${e.getMessage}")
+    }
+  }
+
   test("autoLshBits keeps occupancy-targeted growth with oracle-regime floor") {
     // <=1024 vectors: floored at 6 — the bit count every SQL oracle
     // fixture (500-row embeddings) hard-codes; beyond that, one more bit
