@@ -1,7 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -30,28 +30,11 @@ object AsOf {
     * no prior right row carry nulls (left-outer semantics).
     */
   def asofJoin(left: DataFrame, right: DataFrame,
-      key: String, time: String): DataFrame = {
-    for (df <- Seq(left, right); c <- Seq(key, time))
-      require(df.columns.contains(c),
-        s"asofJoin: column '$c' missing from one side " +
-          s"(left: ${left.columns.mkString(",")}; right: ${right.columns.mkString(",")})")
-    val lPay = left.columns.filterNot(c => c == key || c == time).toSeq
-    val rPay = (time +: right.columns.filterNot(c => c == key || c == time)).toSeq
-    val lType = StructType(lPay.map(left.schema(_)))
-    val rType = StructType(rPay.map(right.schema(_)))
-    val lu = left.select(col(key), col(time), lit(1).as("_side"),
-      struct(lPay.map(col): _*).as("_l"), lit(null).cast(rType).as("_r"))
-    val ru = right.select(col(key), col(time), lit(0).as("_side"),
-      lit(null).cast(lType).as("_l"), struct(rPay.map(col): _*).as("_r"))
-    val w = Window.partitionBy(col(key)).orderBy(col(time), col("_side"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    lu.unionByName(ru)
-      .withColumn("_rff", last(col("_r"), ignoreNulls = true).over(w))
-      .filter(col("_side") === 1)
-      .select(col(key) +: col(time) +:
-        (lPay.map(c => col("_l." + c).as(c)) ++
-          rPay.map(c => col("_rff." + c).as("r_" + c))): _*)
-  }
+      key: String, time: String): DataFrame =
+    tagged("asofJoin", left, right, key, time, leftSide = 1,
+      ord => Seq("_rff" -> last(col("_r"), ignoreNulls = true)
+        .over(ord.rowsBetween(Window.unboundedPreceding, Window.currentRow))),
+      col("_rff"))
 
   /** Forward as-of join — for each left row, the EARLIEST right row with
     * the same key and right.time >= left.time ("what happens next"):
@@ -64,27 +47,11 @@ object AsOf {
     * `ASOF LEFT JOIN ... ON l.t <= r.t`, which gates it.
     */
   def asofJoinForward(left: DataFrame, right: DataFrame,
-      key: String, time: String): DataFrame = {
-    for (df <- Seq(left, right); c <- Seq(key, time))
-      require(df.columns.contains(c),
-        s"asofJoinForward: column '$c' missing from one side")
-    val lPay = left.columns.filterNot(c => c == key || c == time).toSeq
-    val rPay = (time +: right.columns.filterNot(c => c == key || c == time)).toSeq
-    val lType = StructType(lPay.map(left.schema(_)))
-    val rType = StructType(rPay.map(right.schema(_)))
-    val lu = left.select(col(key), col(time), lit(0).as("_side"),
-      struct(lPay.map(col): _*).as("_l"), lit(null).cast(rType).as("_r"))
-    val ru = right.select(col(key), col(time), lit(1).as("_side"),
-      lit(null).cast(lType).as("_l"), struct(rPay.map(col): _*).as("_r"))
-    val w = Window.partitionBy(col(key)).orderBy(col(time), col("_side"))
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    lu.unionByName(ru)
-      .withColumn("_rff", first(col("_r"), ignoreNulls = true).over(w))
-      .filter(col("_side") === 0)
-      .select(col(key) +: col(time) +:
-        (lPay.map(c => col("_l." + c).as(c)) ++
-          rPay.map(c => col("_rff." + c).as("r_" + c))): _*)
-  }
+      key: String, time: String): DataFrame =
+    tagged("asofJoinForward", left, right, key, time, leftSide = 0,
+      ord => Seq("_rff" -> first(col("_r"), ignoreNulls = true)
+        .over(ord.rowsBetween(Window.currentRow, Window.unboundedFollowing))),
+      col("_rff"))
 
   /** Nearest as-of join — for each left row, the right row with the same
     * key that is temporally CLOSEST (either direction); ties (equidistant
@@ -98,36 +65,65 @@ object AsOf {
     */
   def asofJoinNearest(left: DataFrame, right: DataFrame,
       key: String, time: String): DataFrame = {
-    for (df <- Seq(left, right); c <- Seq(key, time))
-      require(df.columns.contains(c),
-        s"asofJoinNearest: column '$c' missing from one side")
-    val lPay = left.columns.filterNot(c => c == key || c == time).toSeq
-    val rPay = (time +: right.columns.filterNot(c => c == key || c == time)).toSeq
-    val lType = StructType(lPay.map(left.schema(_)))
-    val rType = StructType(rPay.map(right.schema(_)))
-    val lu = left.select(col(key), col(time), lit(1).as("_side"),
-      struct(lPay.map(col): _*).as("_l"), lit(null).cast(rType).as("_r"))
-    val ru = right.select(col(key), col(time), lit(0).as("_side"),
-      lit(null).cast(lType).as("_l"), struct(rPay.map(col): _*).as("_r"))
-    val ord = Window.partitionBy(col(key)).orderBy(col(time), col("_side"))
-    val wb = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wf = ord.rowsBetween(Window.currentRow, Window.unboundedFollowing)
     val dtB = expr(s"unix_micros(CAST($time AS TIMESTAMP)) - " +
       s"unix_micros(CAST(_rb.$time AS TIMESTAMP))")
     val dtF = expr(s"unix_micros(CAST(_rf.$time AS TIMESTAMP)) - " +
       s"unix_micros(CAST($time AS TIMESTAMP))")
-    lu.unionByName(ru)
-      .withColumn("_rb", last(col("_r"), ignoreNulls = true).over(wb))
-      .withColumn("_rf", first(col("_r"), ignoreNulls = true).over(wf))
-      .filter(col("_side") === 1)
-      .withColumn("_rn",
-        when(col("_rf").isNull, col("_rb"))
-          .when(col("_rb").isNull, col("_rf"))
-          .when(dtB <= dtF, col("_rb"))
-          .otherwise(col("_rf")))
+    tagged("asofJoinNearest", left, right, key, time, leftSide = 1,
+      ord => Seq(
+        "_rb" -> last(col("_r"), ignoreNulls = true)
+          .over(ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
+        "_rf" -> first(col("_r"), ignoreNulls = true)
+          .over(ord.rowsBetween(Window.currentRow, Window.unboundedFollowing))),
+      when(col("_rf").isNull, col("_rb"))
+        .when(col("_rb").isNull, col("_rf"))
+        .when(dtB <= dtF, col("_rb"))
+        .otherwise(col("_rf")))
+  }
+
+  /** The tagged union under all three joins. Both sides become
+    * (key, time, `_side`, `_l`, `_r`) rows, with each side's payload in its
+    * own struct and a null of the other side's struct type. The `carries`
+    * are window columns over the key partition ordered by (time, `_side`);
+    * `leftSide` is the left rows' tag, so 1 sorts an equal-time right row
+    * before the left row and 0 after it. The left rows are kept, and the
+    * right struct `pick` (built from the carries) is unpacked into the
+    * `r_` columns.
+    */
+  private def tagged(op: String, left: DataFrame, right: DataFrame,
+      key: String, time: String, leftSide: Int,
+      carries: WindowSpec => Seq[(String, Column)], pick: Column): DataFrame = {
+    for (df <- Seq(left, right); c <- Seq(key, time))
+      require(df.columns.contains(c),
+        s"$op: column '$c' missing from one side " +
+          s"(left: ${left.columns.mkString(",")}; right: ${right.columns.mkString(",")})")
+    val lPay = left.columns.filterNot(c => c == key || c == time).toSeq
+    val rPay = (time +: right.columns.filterNot(c => c == key || c == time)).toSeq
+    def tag(df: DataFrame, side: Int, l: Column, r: Column): DataFrame =
+      df.select(col(key), col(time), lit(side).as("_side"), l.as("_l"), r.as("_r"))
+    val lu = tag(left, leftSide, struct(lPay.map(col): _*),
+      lit(null).cast(StructType(rPay.map(right.schema(_)))))
+    val ru = tag(right, 1 - leftSide,
+      lit(null).cast(StructType(lPay.map(left.schema(_)))),
+      struct(rPay.map(col): _*))
+    val ord = Window.partitionBy(col(key)).orderBy(col(time), col("_side"))
+    carries(ord).foldLeft(lu.unionByName(ru)) { case (df, (n, c)) =>
+        df.withColumn(n, c) }
+      .filter(col("_side") === leftSide)
+      .withColumn("_rn", pick)
       .select(col(key) +: col(time) +:
         (lPay.map(c => col("_l." + c).as(c)) ++
           rPay.map(c => col("_rn." + c).as("r_" + c))): _*)
+  }
+
+  /** The clicks (left) and purchases (right) of the events wirings. */
+  private def clicksAndPurchases(spark: SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
+    val ev = new Engine(spark, dir).table("events")
+    (ev.filter(col("event_type") === "click")
+      .select(col("user_id"), col("ts"), col("event_id"), col("value")),
+     ev.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("ts"), col("value").as("purchase_value")))
   }
 
   /** Events wiring (nearest): each click annotated with the temporally
@@ -138,11 +134,7 @@ object AsOf {
     * on negatives is not portable).
     */
   def clickNearestPurchase(spark: SparkSession, dir: String): DataFrame = {
-    val ev = new Engine(spark, dir).table("events")
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts"), col("value").as("purchase_value"))
+    val (clicks, purchases) = clicksAndPurchases(spark, dir)
     asofJoinNearest(clicks, purchases, "user_id", "ts")
       .select(col("event_id"), col("user_id"), col("ts"),
         col("r_ts").as("purchase_ts"),
@@ -162,11 +154,7 @@ object AsOf {
     * time-to-conversion frame.
     */
   def clickNextPurchase(spark: SparkSession, dir: String): DataFrame = {
-    val ev = new Engine(spark, dir).table("events")
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts"), col("value").as("purchase_value"))
+    val (clicks, purchases) = clicksAndPurchases(spark, dir)
     asofJoinForward(clicks, purchases, "user_id", "ts")
       .select(col("event_id"), col("user_id"), col("ts"),
         col("r_ts").as("purchase_ts"),
@@ -181,11 +169,7 @@ object AsOf {
     * recent purchase at or before the click.
     */
   def clickLastPurchase(spark: SparkSession, dir: String): DataFrame = {
-    val ev = new Engine(spark, dir).table("events")
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts"), col("value").as("purchase_value"))
+    val (clicks, purchases) = clicksAndPurchases(spark, dir)
     asofJoin(clicks, purchases, "user_id", "ts")
       .select(col("event_id"), col("user_id"), col("ts"),
         col("r_ts").as("purchase_ts"), col("r_purchase_value").as("purchase_value"))

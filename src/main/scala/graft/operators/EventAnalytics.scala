@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import Relational.{cents, ntzBucket}
 
 /** Ordered-sequence event analytics: conversion funnels and cohort
   * retention. Absent in the reference (whose events surface stops at
@@ -63,8 +64,7 @@ object EventAnalytics {
   def cohortRetention(spark: SparkSession, dir: String): DataFrame = {
     val events = new graft.cube.Engine(spark, dir).table("events")
     val perUser = events
-      .select(col("user_id"), date_trunc("day", col("ts"))
-        .cast(org.apache.spark.sql.types.TimestampNTZType).as("day"))
+      .select(col("user_id"), ntzBucket("day", col("ts")).as("day"))
       .groupBy(col("user_id"))
       .agg(collect_set(col("day")).as("days"))
       .select(col("user_id"), array_min(col("days")).as("cohort_day"),
@@ -92,14 +92,11 @@ object EventAnalytics {
     val daily = events
       .filter(col("event_type") === "purchase")
       .groupBy(col("user_id"),
-        date_trunc("day", col("ts"))
-          .cast(org.apache.spark.sql.types.TimestampNTZType).as("day"))
+        ntzBucket("day", col("ts")).as("day"))
       .agg(round(sum(col("value")), 2).as("day_value"))
     val bounds = events.agg(
-      date_trunc("day", min(col("ts")))
-        .cast(org.apache.spark.sql.types.TimestampNTZType).as("d0"),
-      date_trunc("day", max(col("ts")))
-        .cast(org.apache.spark.sql.types.TimestampNTZType).as("d1"))
+      ntzBucket("day", min(col("ts"))).as("d0"),
+      ntzBucket("day", max(col("ts"))).as("d1"))
     val calendar = bounds
       .select(explode(sequence(col("d0"), col("d1"),
         expr("INTERVAL 1 DAY"))).as("day"))
@@ -194,8 +191,7 @@ object EventAnalytics {
   def growthAccounting(spark: SparkSession, dir: String): DataFrame = {
     val events = new graft.cube.Engine(spark, dir).table("events")
     val uw = events.select(col("user_id"),
-      date_trunc("week", col("ts"))
-        .cast(org.apache.spark.sql.types.TimestampNTZType).as("week"))
+      ntzBucket("week", col("ts")).as("week"))
       .distinct()
     val firstW = uw.groupBy(col("user_id")).agg(min(col("week")).as("first_week"))
     val prev = uw.select(col("user_id"),
@@ -257,8 +253,7 @@ object EventAnalytics {
   def cohortLtv(spark: SparkSession, dir: String): DataFrame = {
     val ev = new graft.cube.Engine(spark, dir).table("events")
       .select(col("user_id"), col("event_type"), col("value"),
-        date_trunc("day", col("ts"))
-          .cast(org.apache.spark.sql.types.TimestampNTZType).as("day"))
+        ntzBucket("day", col("ts")).as("day"))
     val cohort = ev.groupBy(col("user_id"))
       .agg(min(col("day")).as("cohort_day"))
     val sizes = cohort.groupBy(col("cohort_day"))
@@ -295,10 +290,9 @@ object EventAnalytics {
     // global window — the oracle sums the same integers, so the match is
     // exact, not ulp-lucky.
     val daily = events
-      .groupBy(date_trunc("day", col("ts"))
-        .cast(org.apache.spark.sql.types.TimestampNTZType).as("day"))
+      .groupBy(ntzBucket("day", col("ts")).as("day"))
       .agg(round(sum(col("value")), 2).as("total"))
-      .withColumn("cents", round(col("total") * 100, 0).cast("long"))
+      .withColumn("cents", cents(col("total")))
     val ranked = Ranks.globalRowNumber(daily, Seq(col("day")), "i", Some("n"))
     val cum = Ranks.globalPrefixSum(ranked, Seq(col("day")), "cents", "cum_cents")
     val tot = daily.agg(sum(col("cents")).as("tot_cents"))
@@ -365,8 +359,7 @@ object EventAnalytics {
     val sigmas = 2.0
     val events = new graft.cube.Engine(spark, dir).table("events")
     val daily = events
-      .groupBy(date_trunc("day", col("ts"))
-        .cast(org.apache.spark.sql.types.TimestampNTZType).as("day"))
+      .groupBy(ntzBucket("day", col("ts")).as("day"))
       // rounded BEFORE the window (q74's convention): rolling stats run
       // on exact 2dp values, so engines' partial-sum order can't leak
       // ulp drift into the windowed mean/std or the flag comparison
@@ -460,8 +453,7 @@ object EventAnalytics {
     val events = new graft.cube.Engine(spark, dir).table("events")
     val userDays = events
       .select(col("user_id"),
-        date_trunc("day", col("ts"))
-          .cast(org.apache.spark.sql.types.TimestampNTZType).as("day"))
+        ntzBucket("day", col("ts")).as("day"))
       .distinct()
     userDays
       .select(col("user_id"),

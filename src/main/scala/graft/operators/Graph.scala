@@ -160,19 +160,11 @@ object Graph {
         col("src") === col("node")).drop("node")
       .join(deg.select(col("node").as("n2"), col("deg").as("dy")),
         col("dst") === col("n2")).drop("n2")
-    j.agg(count(lit(1)).as("m"), sum(col("dx")).as("sx"),
-        sum(col("dy")).as("sy"), sum(col("dx") * col("dy")).as("sxy"),
-        sum(col("dx") * col("dx")).as("sxx"),
-        sum(col("dy") * col("dy")).as("syy"))
+    j.agg(count(lit(1)).as("m"),
+        Relational.powerSums(col("dx"), col("dy")): _*)
       .crossJoin(broadcast(deg.agg(count(lit(1)).as("n_nodes"))))
       .select(col("n_nodes"), expr("m div 2").as("n_edges"),
-        round((col("m").cast("double") * col("sxy").cast("double") -
-            col("sx").cast("double") * col("sy").cast("double")) /
-          sqrt((col("m").cast("double") * col("sxx").cast("double") -
-              col("sx").cast("double") * col("sx").cast("double")) *
-            (col("m").cast("double") * col("syy").cast("double") -
-              col("sy").cast("double") * col("sy").cast("double"))), 6)
-          .as("assortativity"))
+        Relational.pearson("m").as("assortativity"))
   }
 
   def docTriangles(spark: SparkSession, dir: String): DataFrame = {

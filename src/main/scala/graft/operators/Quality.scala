@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.NumericType
 
 import graft.cube.Engine
+import Relational.cents
 
 /** Data-quality operators an ETL engine runs before publishing a table:
   * column profiling and declarative constraint audits. The reference
@@ -168,12 +169,12 @@ object Quality {
     val en = new Engine(spark, dir)
     val lines = en.table("lineitem")
       .groupBy(col("l_orderkey"))
-      .agg(sum(expr("CAST(round(l_extendedprice * (1 - l_discount) * " +
-        "(1 + l_tax) * 100, 0) AS BIGINT)")).as("line_cents"))
+      .agg(sum(cents(col("l_extendedprice") * (lit(1) - col("l_discount")) *
+        (lit(1) + col("l_tax")))).as("line_cents"))
     en.table("orders")
       .join(lines, col("o_orderkey") === col("l_orderkey"), "left")
       .withColumn("diff_cents", coalesce(col("line_cents"), lit(0L)) -
-        expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)"))
+        cents(col("o_totalprice")))
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_orders"),
         sum(when(abs(col("diff_cents")) > 1, 1L).otherwise(0L))

@@ -4,20 +4,78 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.TimestampNTZType
 import graft.cube.Engine
 
-/** Relational operators beyond the cube query surface: top-k, window
-  * ranking, semi/anti joins, set ops, rollup (SURVEY §2.5-2.7 — absent in
+/** Relational operators over the TPC-H star and the event log, beyond the
+  * cube query surface: rankings and top-k, semi/anti joins and set ops,
+  * rollups and cubes, time series, distribution and concentration
+  * statistics, and the data-quality audits (SURVEY §2.5-2.7 — absent in
   * the reference, provided as first-class engine ops).
+  *
+  * Two conventions keep every result hash-equal to the oracle:
+  *  - Money sums in exact integer cents ([[cents]]): a sum of BIGINT cents
+  *    does not depend on partial-aggregation order, a sum of doubles does.
+  *    Dollars come back only at the end, as `cents / 100.0` rounded to 2dp.
+  *  - Calendar buckets surface as `TIMESTAMP_NTZ` ([[ntzBucket]]): Spark's
+  *    `date_trunc` returns a session-zone TIMESTAMP, the oracle's a naive
+  *    one; the cast keeps the naive wall clock (the session runs in UTC).
   *
   * Scale notes: every operator here is a declarative plan — top-k is
   * `ORDER BY ... LIMIT k` which Spark executes as per-partition top-k
   * (TakeOrderedAndProject) with no full sort; semi/anti joins shuffle only
-  * the join keys; rollup is a single pass with grouping-set expansion.
+  * the join keys; rollup is a single pass with grouping-set expansion;
+  * windows run over pre-aggregated grids, never the fact.
   */
 object Relational {
 
   private def e(spark: SparkSession, dir: String) = new Engine(spark, dir)
+
+  /** A money amount in exact integer cents (BIGINT). */
+  private[graft] def cents(c: Column): Column = round(c * 100, 0).cast("long")
+
+  /** The `unit` calendar bucket of `c` as a `TIMESTAMP_NTZ`. */
+  private[graft] def ntzBucket(unit: String, c: Column): Column =
+    date_trunc(unit, c).cast(TimestampNTZType)
+
+  /** `li` (a lineitem frame) with each line's `p_brand`, plus any `extra`
+    * part columns, from the broadcast part dim; for `.transform`. */
+  private def withBrand(en: Engine, extra: Column*)(
+      li: DataFrame): DataFrame =
+    li.join(broadcast(en.table("part")
+        .select(col("p_partkey") +: col("p_brand") +: extra: _*)),
+      col("l_partkey") === col("p_partkey"))
+
+  /** Daily order revenue: one row per order day, `(day, cents)`. */
+  private def dailyOrderCents(en: Engine): DataFrame =
+    en.table("orders")
+      .groupBy(ntzBucket("day", col("o_orderdate")).as("day"))
+      .agg(sum(cents(col("o_totalprice"))).as("cents"))
+
+  /** Each customer's revenue over `orders`: `(o_custkey, cents)`. */
+  private def customerOrderCents(orders: DataFrame): DataFrame =
+    orders.groupBy(col("o_custkey"))
+      .agg(sum(cents(col("o_totalprice"))).as("cents"))
+
+  /** The power sums of a Pearson correlation of `x` and `y`, named `sx`,
+    * `sy`, `sxy`, `sxx` and `syy`; the caller puts the row count first. */
+  private[graft] def powerSums(x: Column, y: Column): Seq[Column] =
+    Seq(sum(x).as("sx"), sum(y).as("sy"), sum(x * y).as("sxy"),
+      sum(x * x).as("sxx"), sum(y * y).as("syy"))
+
+  /** `n·s_ab − s_a·s_b` over the count column `n` and the [[powerSums]].
+    * Every term is cast to double first: on long sums (exact integer
+    * inputs) that keeps the products from overflowing, and on double sums
+    * the cast is a no-op the optimizer removes. */
+  private def coMoment(n: String, a: String, b: String): Column = {
+    def d(c: String) = col(c).cast("double")
+    d(n) * d(s"s$a$b") - d(s"s$a") * d(s"s$b")
+  }
+
+  /** Pearson's r of x and y from [[coMoment]]s, rounded to 6dp. */
+  private[graft] def pearson(n: String): Column =
+    round(coMoment(n, "x", "y") /
+      sqrt(coMoment(n, "x", "x") * coMoment(n, "y", "y")), 6)
 
   /** Order date splitting base from delta in the incremental-maintenance
     * views ([[incrementalOrderStats]], [[incrementalNationRevenue]]). */
@@ -36,8 +94,8 @@ object Relational {
       .join(en.table("orders"), col("l_orderkey") === col("o_orderkey"))
       .join(en.table("customer"), col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_custkey"), col("c_name"))
-      .agg(round(sum(expr("CAST(round(l_extendedprice * (1 - l_discount) " +
-          "* 100, 0) AS BIGINT)")).cast("double") / 100.0, 2)
+      .agg(round(sum(cents(col("l_extendedprice") *
+          (lit(1) - col("l_discount")))).cast("double") / 100.0, 2)
         .as("revenue"))
       .orderBy(col("revenue").desc, col("c_custkey"))
       .limit(10)
@@ -455,8 +513,7 @@ object Relational {
   def dailyDeltas(spark: SparkSession, dir: String): DataFrame = {
     val daily = e(spark, dir).table("events")
       .filter(col("event_type") === "purchase")
-      .groupBy(date_trunc("day", col("ts"))
-        .cast(org.apache.spark.sql.types.TimestampNTZType).as("day"))
+      .groupBy(ntzBucket("day", col("ts")).as("day"))
       .agg(count(lit(1)).as("n_purchases"),
         round(sum(col("value")), 2).as("day_value"))
     val ranked = Ranks.globalRowNumber(daily, Seq(col("day")), "__rn")
@@ -481,8 +538,7 @@ object Relational {
   def movingAverage7d(spark: SparkSession, dir: String): DataFrame = {
     val daily = e(spark, dir).table("events")
       .groupBy(col("event_type"),
-        date_trunc("day", col("ts"))
-          .cast(org.apache.spark.sql.types.TimestampNTZType).as("day"))
+        ntzBucket("day", col("ts")).as("day"))
       .agg(round(sum(col("value")), 2).as("day_value"))
       .withColumn("day_num", datediff(col("day"), lit("1970-01-01")).cast("long"))
     val w = Window.partitionBy(col("event_type")).orderBy(col("day_num"))
@@ -509,8 +565,8 @@ object Relational {
       .join(en.table("orders"), col("l_orderkey") === col("o_orderkey"))
       .join(en.table("customer"), col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_custkey"))
-      .agg(round(sum(expr("CAST(round(l_extendedprice * (1 - l_discount) " +
-          "* 100, 0) AS BIGINT)")).cast("double") / 100.0, 2)
+      .agg(round(sum(cents(col("l_extendedprice") *
+          (lit(1) - col("l_discount")))).cast("double") / 100.0, 2)
         .as("revenue"))
     Ranks.globalRowNumber(rev, Seq(col("revenue").desc, col("c_custkey")),
         "__rank", totalCol = Some("__n"))
@@ -1105,15 +1161,9 @@ object Relational {
         col("l_discount").as("y"))
     li.groupBy(col("l_returnflag"))
       .agg(count(lit(1)).cast("double").as("n"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("y") * col("y")).as("syy"))
+        powerSums(col("x"), col("y")): _*)
       .select(col("l_returnflag"), col("n").cast("long").as("n_rows"),
-        round((col("n") * col("sxy") - col("sx") * col("sy")) /
-          sqrt((col("n") * col("sxx") - col("sx") * col("sx")) *
-            (col("n") * col("syy") - col("sy") * col("sy"))), 6)
-          .as("corr_qty_discount"))
+        pearson("n").as("corr_qty_discount"))
       .orderBy(col("l_returnflag"))
   }
 
@@ -1129,10 +1179,9 @@ object Relational {
   def abcClasses(spark: SparkSession, dir: String): DataFrame = {
     val en = e(spark, dir)
     val brandRev = en.table("lineitem")
-      .join(broadcast(en.table("part").select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
+      .transform(withBrand(en))
       .groupBy(col("p_brand"))
-      .agg(round(sum(col("l_extendedprice")) * 100, 0).cast("long")
+      .agg(cents(sum(col("l_extendedprice")))
         .as("cents"))
     val wCum = Window.orderBy(col("cents").desc, col("p_brand"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1161,8 +1210,7 @@ object Relational {
     val k = 3
     val en = e(spark, dir)
     val rev = en.table("lineitem")
-      .join(broadcast(en.table("part").select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
+      .transform(withBrand(en))
       .groupBy(col("p_brand"), col("p_partkey"))
       .agg(round(sum(col("l_extendedprice")), 2).as("revenue"))
     val w = Window.partitionBy(col("p_brand")).orderBy(col("revenue").desc)
@@ -1218,7 +1266,7 @@ object Relational {
             date_trunc("month", col("last_ship"))),
           expr("interval 1 month"))).as("__m"))
       .select(col("o_totalprice"),
-        col("__m").cast(org.apache.spark.sql.types.TimestampNTZType)
+        col("__m").cast(TimestampNTZType)
           .as("month"))
       .groupBy(col("month"))
       .agg(count(lit(1)).as("open_orders"),
@@ -1235,8 +1283,7 @@ object Relational {
     */
   def revenueTrend(spark: SparkSession, dir: String): DataFrame = {
     val monthly = e(spark, dir).table("orders")
-      .groupBy(date_trunc("month", col("o_orderdate"))
-        .cast(org.apache.spark.sql.types.TimestampNTZType).as("month"))
+      .groupBy(ntzBucket("month", col("o_orderdate")).as("month"))
       .agg(round(sum(col("o_totalprice")), 2).as("revenue"))
     val w = Window.orderBy(col("month")).rowsBetween(-11, Window.currentRow)
     monthly
@@ -1263,7 +1310,7 @@ object Relational {
         .select(col("s_suppkey"), col("s_name"))),
         col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("s_suppkey"), col("s_name"))
-      .agg(round(sum(col("l_extendedprice")) * 100, 0).cast("long")
+      .agg(cents(sum(col("l_extendedprice")))
         .as("cents"))
     val total = perSup.agg(sum(col("cents")).as("total_cents"),
       count(lit(1)).as("n_sup"))
@@ -1293,9 +1340,7 @@ object Relational {
         count(lit(1)).as("cnt_qty"))
     li.join(perPart, col("l_partkey") === col("pk"))
       .filter(col("l_quantity") * lit(2) * col("cnt_qty") < col("sum_qty"))
-      .join(broadcast(en.table("part")
-        .select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
+      .transform(withBrand(en))
       .groupBy(col("p_brand"))
       .agg(count(lit(1)).as("n_items"),
         round(sum(col("l_extendedprice")), 2).as("small_qty_revenue"))
@@ -1326,9 +1371,7 @@ object Relational {
   def weightedMedianPrice(spark: SparkSession, dir: String): DataFrame = {
     val en = e(spark, dir)
     val li = en.table("lineitem")
-      .join(broadcast(en.table("part")
-        .select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
+      .transform(withBrand(en))
       .select(col("p_brand"), col("l_extendedprice").as("price"),
         col("l_quantity").as("w"))
     val byPrice = li.groupBy(col("p_brand"), col("price"))
@@ -1354,7 +1397,7 @@ object Relational {
     */
   def benfordOrders(spark: SparkSession, dir: String): DataFrame = {
     val d = e(spark, dir).table("orders")
-      .withColumn("cents", round(col("o_totalprice") * 100, 0).cast("long"))
+      .withColumn("cents", cents(col("o_totalprice")))
       .withColumn("digit",
         substring(col("cents").cast("string"), 1, 1).cast("int"))
     val byDigit = d.groupBy(col("digit")).agg(count(lit(1)).as("n"))
@@ -1381,8 +1424,7 @@ object Relational {
   def dailyAutocorr(spark: SparkSession, dir: String): DataFrame = {
     val daily = e(spark, dir).table("orders")
       .groupBy(date_trunc("day", col("o_orderdate")).as("day"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)"))
-        .as("cents"))
+      .agg(sum(cents(col("o_totalprice"))).as("cents"))
       .withColumn("dollars", expr("cents div 100"))
     val lags = Seq(1, 7).map { k =>
       val lagged = daily.select(col("day").as("lday"),
@@ -1393,19 +1435,8 @@ object Relational {
           col("ldollars").as("y"))
     }.reduce(_.unionAll(_))
     lags.groupBy(col("lag"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("y") * col("y")).as("syy"))
-      .select(col("lag"), col("n"),
-        round((col("n").cast("double") * col("sxy").cast("double") -
-            col("sx").cast("double") * col("sy").cast("double")) /
-          sqrt((col("n").cast("double") * col("sxx").cast("double") -
-              col("sx").cast("double") * col("sx").cast("double")) *
-            (col("n").cast("double") * col("syy").cast("double") -
-              col("sy").cast("double") * col("sy").cast("double"))), 6)
-          .as("autocorr"))
+      .agg(count(lit(1)).as("n"), powerSums(col("x"), col("y")): _*)
+      .select(col("lag"), col("n"), pearson("n").as("autocorr"))
       .orderBy(col("lag"))
   }
 
@@ -1488,11 +1519,7 @@ object Relational {
     * dollars; only the 7-term weighted sum is floating point.
     */
   def dailyEwma(spark: SparkSession, dir: String): DataFrame = {
-    val daily = e(spark, dir).table("orders")
-      .groupBy(date_trunc("day", col("o_orderdate"))
-        .cast(org.apache.spark.sql.types.TimestampNTZType).as("day"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)"))
-        .as("cents"))
+    val daily = dailyOrderCents(e(spark, dir))
       .withColumn("dollars", expr("cents div 100"))
     val probes = daily.select(col("day"), explode(
         sequence(lit(0), lit(6))).as("k"))
@@ -1596,19 +1623,14 @@ object Relational {
   def priceElasticity(spark: SparkSession, dir: String): DataFrame = {
     val en = e(spark, dir)
     val li = en.table("lineitem")
-      .join(broadcast(en.table("part")
-        .select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
+      .transform(withBrand(en))
       .select(col("p_brand"), log(col("l_extendedprice")).as("x"),
         log(col("l_quantity")).as("y"))
     li.groupBy(col("p_brand"))
       .agg(count(lit(1)).cast("double").as("n"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"))
+        powerSums(col("x"), col("y")): _*)
       .select(col("p_brand"), col("n").cast("long").as("n_rows"),
-        round((col("n") * col("sxy") - col("sx") * col("sy")) /
-          (col("n") * col("sxx") - col("sx") * col("sx")), 6)
+        round(coMoment("n", "x", "y") / coMoment("n", "x", "x"), 6)
           .as("elasticity"))
       .orderBy(col("p_brand"))
   }
@@ -1657,7 +1679,7 @@ object Relational {
     val en = e(spark, dir)
     val cust = en.table("customer").filter(col("c_acctbal") > 0)
       .select(col("c_custkey"), col("c_mktsegment"),
-        round(col("c_acctbal") * 100, 0).cast("long").as("bal_cents"))
+        cents(col("c_acctbal")).as("bal_cents"))
     val segAvg = cust.groupBy(col("c_mktsegment"))
       .agg(sum(col("bal_cents")).as("seg_cents"),
         count(lit(1)).as("seg_n"))
@@ -1709,14 +1731,11 @@ object Relational {
   def realizedDiscount(spark: SparkSession, dir: String): DataFrame = {
     val en = e(spark, dir)
     en.table("lineitem")
-      .join(broadcast(en.table("part")
-        .select(col("p_partkey"), col("p_brand"),
-          round(col("p_retailprice") * 100, 0).cast("long")
-            .as("retail_cents"))),
-        col("l_partkey") === col("p_partkey"))
+      .transform(withBrand(en,
+        cents(col("p_retailprice")).as("retail_cents")))
       .groupBy(col("p_brand"))
       .agg(count(lit(1)).as("n_items"),
-        round(sum(col("l_extendedprice")) * 100, 0).cast("long")
+        cents(sum(col("l_extendedprice")))
           .as("rev_cents"),
         sum(col("l_quantity").cast("long") * col("retail_cents"))
           .as("retail_value_cents"))
@@ -1737,11 +1756,7 @@ object Relational {
     * neighbors), so the frame is deterministic on both engines.
     */
   def median3Smoothing(spark: SparkSession, dir: String): DataFrame = {
-    val daily = e(spark, dir).table("orders")
-      .groupBy(date_trunc("day", col("o_orderdate"))
-        .cast(org.apache.spark.sql.types.TimestampNTZType).as("day"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)"))
-        .as("cents"))
+    val daily = dailyOrderCents(e(spark, dir))
       .withColumn("dollars", expr("cents div 100"))
     val w = Window.orderBy(col("day"))
     val a = col("prev"); val b = col("dollars"); val c = col("nxt")
@@ -1831,8 +1846,8 @@ object Relational {
       .join(supNation, col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("supp_nation"), col("cust_nation"))
       .agg(count(lit(1)).as("n_items"),
-        round(sum(expr("CAST(round(l_extendedprice * (1 - l_discount) " +
-            "* 100, 0) AS BIGINT)")).cast("double") / 100.0, 2)
+        round(sum(cents(col("l_extendedprice") *
+            (lit(1) - col("l_discount")))).cast("double") / 100.0, 2)
           .as("revenue"))
       .orderBy(col("supp_nation"), col("cust_nation"))
   }
@@ -1851,7 +1866,7 @@ object Relational {
       .orderBy(col("o_orderdate"), col("o_orderkey"))
     val seqd = en.table("orders")
       .select(col("o_custkey"),
-        round(col("o_totalprice") * 100, 0).cast("long").as("cents"),
+        cents(col("o_totalprice")).as("cents"),
         col("o_orderdate"), col("o_orderkey"))
       .withColumn("seq", row_number().over(w).cast("long"))
     val perCust = seqd.groupBy(col("o_custkey"))
@@ -1885,7 +1900,7 @@ object Relational {
   def samplingCalibration(spark: SparkSession, dir: String): DataFrame = {
     val orders = e(spark, dir).table("orders")
       .select(col("o_orderkey"),
-        round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
+        cents(col("o_totalprice")).as("cents"))
       .withColumn("h",
         pmod(col("o_orderkey").bitwiseAND(lit(0x7FFFFFFFL)) *
           lit(2654435761L), lit(1000L)))
@@ -2037,8 +2052,7 @@ object Relational {
     val monthly = e(spark, dir).table("orders")
       .groupBy(year(col("o_orderdate")).as("y"),
         month(col("o_orderdate")).as("m"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)"))
-        .as("cents"))
+      .agg(sum(cents(col("o_totalprice"))).as("cents"))
     val perM = monthly.groupBy(col("m"))
       .agg(count(lit(1)).as("n_months"), sum(col("cents")).as("m_cents"))
     val tot = perM.agg(sum(col("n_months")).as("all_months"),
@@ -2069,10 +2083,9 @@ object Relational {
       .withColumn("rk", row_number().over(w))
       .withColumn("is_new", (col("rk") === 1).cast("int"))
       .withColumn("cents",
-        round(col("o_totalprice") * 100, 0).cast("long"))
+        cents(col("o_totalprice")))
     classified
-      .groupBy(date_trunc("month", col("o_orderdate"))
-        .cast(org.apache.spark.sql.types.TimestampNTZType).as("month"))
+      .groupBy(ntzBucket("month", col("o_orderdate")).as("month"))
       .agg(sum(col("is_new")).cast("long").as("n_new"),
         sum(lit(1) - col("is_new")).cast("long").as("n_returning"),
         sum(when(col("is_new") === 1, col("cents")).otherwise(0L))
@@ -2093,9 +2106,7 @@ object Relational {
   def returnRates(spark: SparkSession, dir: String): DataFrame = {
     val en = e(spark, dir)
     val byBrand = en.table("lineitem")
-      .join(broadcast(en.table("part")
-        .select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
+      .transform(withBrand(en))
       .groupBy(col("p_brand"))
       .agg(count(lit(1)).as("n_items"),
         sum(when(col("l_returnflag") === "R", 1L).otherwise(0L))
@@ -2123,7 +2134,7 @@ object Relational {
     e(spark, dir).table("part")
       .select(expr("p_size div 10").cast("int").as("size_band"),
         split(col("p_type"), " ").getItem(0).as("type_head"),
-        round(col("p_retailprice") * 100, 0).cast("long").as("cents"))
+        cents(col("p_retailprice")).as("cents"))
       .groupBy(col("size_band"), col("type_head"))
       .agg(count(lit(1)).as("n_parts"),
         round(sum(col("cents")).cast("double") /
@@ -2146,15 +2157,9 @@ object Relational {
       .filter(col("x").isNotNull)
     ev.groupBy(col("event_type"))
       .agg(count(lit(1)).cast("double").as("n"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("y") * col("y")).as("syy"))
+        powerSums(col("x"), col("y")): _*)
       .select(col("event_type"), col("n").cast("long").as("n_events"),
-        round((col("n") * col("sxy") - col("sx") * col("sy")) /
-          sqrt((col("n") * col("sxx") - col("sx") * col("sx")) *
-            (col("n") * col("syy") - col("sy") * col("sy"))), 6)
-          .as("corr_k_value"))
+        pearson("n").as("corr_k_value"))
       .orderBy(col("event_type"))
   }
 
@@ -2171,17 +2176,15 @@ object Relational {
     val en = e(spark, dir)
     val perOrder = en.table("orders")
       .select(col("o_orderkey"),
-        round(col("o_totalprice") * 100, 0).cast("long").as("ocents"))
+        cents(col("o_totalprice")).as("ocents"))
     val topOrders = Ranks.globalRowNumber(perOrder,
         Seq(col("ocents").desc, col("o_orderkey")), "rk", Some("n_orders"))
       .filter(col("rk") * 10 <= col("n_orders"))
       .select(col("o_orderkey"))
     val li = en.table("lineitem")
-      .join(broadcast(en.table("part")
-        .select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
+      .transform(withBrand(en))
       .select(col("l_orderkey"), col("p_brand"),
-        round(col("l_extendedprice") * 100, 0).cast("long").as("cents"))
+        cents(col("l_extendedprice")).as("cents"))
     val flagged = li.join(topOrders.withColumn("__top", lit(1)),
       col("l_orderkey") === col("o_orderkey"), "left")
     val byBrand = flagged.groupBy(col("p_brand"))
@@ -2220,7 +2223,7 @@ object Relational {
       .join(broadcast(en.table("region")),
         col("n_regionkey") === col("r_regionkey"))
       .groupBy(col("r_name").as("region"), col("n_name").as("nation"))
-      .agg(round(sum(col("l_extendedprice")) * 100, 0).cast("long")
+      .agg(cents(sum(col("l_extendedprice")))
         .as("cents"))
     val wRegion = Window.partitionBy(col("region"))
     val wAll = Window.partitionBy()
@@ -2247,8 +2250,7 @@ object Relational {
       .groupBy((year(col("o_orderdate")) * 4 +
           quarter(col("o_orderdate")) - 1).cast("int").as("qidx"),
         date_trunc("day", col("o_orderdate")).as("day"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)"))
-        .as("cents"))
+      .agg(sum(cents(col("o_totalprice"))).as("cents"))
     val wPeak = Window.partitionBy(col("qidx")).orderBy(col("day"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     daily
@@ -2272,12 +2274,10 @@ object Relational {
     val monthly = en.table("lineitem")
       .join(en.table("orders").select(col("o_orderkey"), col("o_orderdate")),
         col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(en.table("part")
-        .select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
+      .transform(withBrand(en))
       .groupBy(col("p_brand"),
         date_trunc("month", col("o_orderdate")).as("month"))
-      .agg(round(sum(col("l_extendedprice")) * 100, 0).cast("long")
+      .agg(cents(sum(col("l_extendedprice")))
         .as("cents"))
       .withColumn("dollars", expr("cents div 100"))
     val b = monthly.select(col("month"), col("p_brand").as("brand_b"),
@@ -2286,18 +2286,9 @@ object Relational {
       .filter(col("p_brand") < col("brand_b"))
       .groupBy(col("p_brand").as("brand_a"), col("brand_b"))
       .agg(count(lit(1)).as("n_months"),
-        sum(col("dollars")).as("sx"), sum(col("db")).as("sy"),
-        sum(col("dollars") * col("db")).as("sxy"),
-        sum(col("dollars") * col("dollars")).as("sxx"),
-        sum(col("db") * col("db")).as("syy"))
+        powerSums(col("dollars"), col("db")): _*)
       .select(col("brand_a"), col("brand_b"), col("n_months"),
-        round((col("n_months").cast("double") * col("sxy").cast("double") -
-            col("sx").cast("double") * col("sy").cast("double")) /
-          sqrt((col("n_months").cast("double") * col("sxx").cast("double") -
-              col("sx").cast("double") * col("sx").cast("double")) *
-            (col("n_months").cast("double") * col("syy").cast("double") -
-              col("sy").cast("double") * col("sy").cast("double"))), 6)
-          .as("corr"))
+        pearson("n_months").as("corr"))
       .orderBy(col("brand_a"), col("brand_b"))
   }
 
@@ -2328,8 +2319,8 @@ object Relational {
   def orderPriceSpread(spark: SparkSession, dir: String): DataFrame = {
     e(spark, dir).table("lineitem")
       .groupBy(col("l_orderkey"))
-      .agg((round(max(col("l_extendedprice")) * 100, 0).cast("long") -
-        round(min(col("l_extendedprice")) * 100, 0).cast("long"))
+      .agg((cents(max(col("l_extendedprice"))) -
+        cents(min(col("l_extendedprice"))))
         .as("spread_cents"))
       .withColumn("band", expr("spread_cents div 500000"))
       .groupBy(col("band")).agg(count(lit(1)).as("n_orders"))
@@ -2363,17 +2354,10 @@ object Relational {
       .withColumn("ry", avgRank(col("p_retailprice")))
     ranked.groupBy(col("p_type"))
       .agg(count(lit(1)).cast("double").as("n"),
-        sum(col("rx")).as("sx"), sum(col("ry")).as("sy"),
-        sum(col("rx") * col("ry")).as("sxy"),
-        sum(col("rx") * col("rx")).as("sxx"),
-        sum(col("ry") * col("ry")).as("syy"))
-      .filter(col("n") * col("sxx") - col("sx") * col("sx") > 0 &&
-        col("n") * col("syy") - col("sy") * col("sy") > 0)
+        powerSums(col("rx"), col("ry")): _*)
+      .filter(coMoment("n", "x", "x") > 0 && coMoment("n", "y", "y") > 0)
       .select(col("p_type"), col("n").cast("long").as("n_parts"),
-        round((col("n") * col("sxy") - col("sx") * col("sy")) /
-          sqrt((col("n") * col("sxx") - col("sx") * col("sx")) *
-            (col("n") * col("syy") - col("sy") * col("sy"))), 6)
-          .as("spearman"))
+        pearson("n").as("spearman"))
       .orderBy(col("p_type"))
   }
 
@@ -2397,8 +2381,8 @@ object Relational {
       .join(en.table("customer").select(col("c_custkey"), col("c_nationkey")),
         col("o_custkey") === col("c_custkey"))
       .select(col("s_nationkey"), col("c_nationkey"),
-        expr("CAST(round(l_extendedprice * (1 - l_discount) * 100, 0) " +
-          "AS BIGINT)").as("cents"))
+        cents(col("l_extendedprice") * (lit(1) - col("l_discount")))
+          .as("cents"))
     // one pass: each line contributes to its supplier nation's exports
     // and its customer nation's imports via a 2-row role explode
     val flows = li.select(explode(array(
@@ -2434,12 +2418,9 @@ object Relational {
     val k = 5
     val en = e(spark, dir)
     val byBrand = en.table("lineitem")
-      .join(broadcast(en.table("part")
-        .select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
+      .transform(withBrand(en))
       .groupBy(col("p_brand"))
-      .agg(sum(expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)"))
-        .as("cents"))
+      .agg(sum(cents(col("l_extendedprice"))).as("cents"))
     val w = Window.orderBy(col("cents").desc, col("p_brand"))
     val tagged = byBrand // bounded frame (#brands) — window is fine here
       .withColumn("rk", row_number().over(w))
@@ -2468,12 +2449,9 @@ object Relational {
     val byYear = en.table("lineitem")
       .join(en.table("orders").select(col("o_orderkey"), col("o_orderdate")),
         col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(en.table("part")
-        .select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
+      .transform(withBrand(en))
       .groupBy(year(col("o_orderdate")).as("yr"), col("p_brand"))
-      .agg(sum(expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)"))
-        .as("cents"))
+      .agg(sum(cents(col("l_extendedprice"))).as("cents"))
     val w = Window.partitionBy(col("yr"))
       .orderBy(col("cents").desc, col("p_brand"))
     val ranked = byYear.withColumn("rk", row_number().over(w).cast("long"))
@@ -2499,10 +2477,7 @@ object Relational {
     val splitDate = "1998-05-01"
     val orders = e(spark, dir).table("orders")
     def half(cond: Column, name: String): DataFrame = {
-      val pc = orders.filter(cond)
-        .groupBy(col("o_custkey"))
-        .agg(sum(expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)"))
-          .as("cents"))
+      val pc = customerOrderCents(orders.filter(cond))
       Ranks.globalRowNumber(pc,
         Seq(col("cents").desc, col("o_custkey")), "rk", Some("n"))
         .select(col("o_custkey").as(s"ck_$name"),
@@ -2531,7 +2506,7 @@ object Relational {
     val perCust = e(spark, dir).table("orders")
       .select(col("o_custkey"),
         struct(col("o_orderdate"), col("o_orderkey"),
-          expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)").as("cents"))
+          cents(col("o_totalprice")).as("cents"))
           .as("o"))
       .groupBy(col("o_custkey"))
       .agg(min(col("o")).getField("cents").as("first_cents"),
@@ -2557,12 +2532,9 @@ object Relational {
   def brandGini(spark: SparkSession, dir: String): DataFrame = {
     val en = e(spark, dir)
     val perPart = en.table("lineitem")
-      .join(broadcast(en.table("part")
-        .select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
+      .transform(withBrand(en))
       .groupBy(col("p_brand"), col("p_partkey"))
-      .agg(sum(expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)"))
-        .as("cents"))
+      .agg(sum(cents(col("l_extendedprice"))).as("cents"))
     val w = Window.partitionBy(col("p_brand"))
       .orderBy(col("cents"), col("p_partkey"))
     perPart
@@ -2592,7 +2564,7 @@ object Relational {
     // on it are rounded coarsely enough that ulp drift cannot show)
     val strata = e(spark, dir).table("orders")
       .select(col("o_orderpriority"),
-        expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)").as("cents"))
+        cents(col("o_totalprice")).as("cents"))
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_h"), sum(col("cents")).as("sx"),
         sum(col("cents").cast("double") * col("cents").cast("double"))
@@ -2622,10 +2594,7 @@ object Relational {
     * [[revenueConcentration]] — two reports, one plan.
     */
   private def revenueDeciles(spark: SparkSession, dir: String): DataFrame = {
-    val perCust = e(spark, dir).table("orders")
-      .groupBy(col("o_custkey"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)"))
-        .as("cents"))
+    val perCust = customerOrderCents(e(spark, dir).table("orders"))
     val ranked = Ranks.globalRowNumber(perCust,
       Seq(col("cents").desc, col("o_custkey")), "rk", Some("n_cust"))
     val deciles = ranked
@@ -2674,7 +2643,7 @@ object Relational {
       .join(en.table("orders").select(col("o_orderkey"), col("o_orderdate")),
         col("l_orderkey") === col("o_orderkey"))
       .groupBy(year(col("o_orderdate")).as("yr"), col("l_partkey"))
-      .agg(sum(expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)"))
+      .agg(sum(cents(col("l_extendedprice")))
           .as("cents"),
         sum(expr("CAST(round(l_quantity, 0) AS BIGINT)")).as("sq"))
       .withColumn("unit",
@@ -2706,10 +2675,7 @@ object Relational {
     */
   def theilByNation(spark: SparkSession, dir: String): DataFrame = {
     val en = e(spark, dir)
-    val perCust = en.table("orders")
-      .groupBy(col("o_custkey"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)"))
-        .as("cents"))
+    val perCust = customerOrderCents(en.table("orders"))
       .filter(col("cents") > 0)
       .join(en.table("customer").select(col("c_custkey"), col("c_nationkey")),
         col("o_custkey") === col("c_custkey"))
@@ -2762,11 +2728,7 @@ object Relational {
     * semanticOutliers/q284 exact-sum discipline.
     */
   def brownForecast(spark: SparkSession, dir: String): DataFrame = {
-    val daily = e(spark, dir).table("orders")
-      .groupBy(date_trunc("day", col("o_orderdate"))
-        .cast(org.apache.spark.sql.types.TimestampNTZType).as("day"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)"))
-        .as("cents"))
+    val daily = dailyOrderCents(e(spark, dir))
       .withColumn("dollars", expr("cents div 100"))
       .select(col("day"), col("dollars"))
     // (day, src_day, integer weight 4^k·5^(6-k)) lag probes
@@ -2783,7 +2745,7 @@ object Relational {
       .agg(sum(col("dollars") * col("w")).as("n1"), sum(col("w")).as("d1"))
       // cents-grid requantization: pass 2 consumes an exact integer
       .withColumn("s1c",
-        expr("CAST(round(CAST(n1 AS DOUBLE) / d1 * 100, 0) AS BIGINT)"))
+        cents(col("n1").cast("double") / col("d1")))
     val s2 = probes(s1)
       .join(s1.select(col("day").as("src_day"), col("s1c")), "src_day")
       .groupBy(col("day"))
@@ -2822,9 +2784,7 @@ object Relational {
     val conf = 0.99
     val en = e(spark, dir)
     val fact = en.table("lineitem").select(col("l_partkey"))
-      .join(broadcast(en.table("part")
-        .select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
+      .transform(withBrand(en))
       .select(col("p_brand").as("brand"))
     val exact = fact.groupBy(col("brand")).agg(count(lit(1)).as("exact_cnt"))
     val skBytes = fact
@@ -2867,7 +2827,7 @@ object Relational {
     val k = 5
     val classes = e(spark, dir).table("customer")
       .select(col("c_nationkey"), col("c_mktsegment"),
-        floor(expr("CAST(round(c_acctbal * 100, 0) AS BIGINT)") /
+        floor(cents(col("c_acctbal")) /
           lit(200000.0)).cast("long").as("bal_band"))
       .groupBy(col("c_nationkey"), col("c_mktsegment"), col("bal_band"))
       .agg(count(lit(1)).as("class_size"))
@@ -2980,11 +2940,7 @@ object Relational {
     * grain is bounded by span days at any corpus scale.
     */
   def seasonalMase(spark: SparkSession, dir: String): DataFrame = {
-    val daily = e(spark, dir).table("orders")
-      .groupBy(date_trunc("day", col("o_orderdate"))
-        .cast(org.apache.spark.sql.types.TimestampNTZType).as("day"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)"))
-        .as("cents"))
+    val daily = dailyOrderCents(e(spark, dir))
     def lagged(k: Int, as: String): DataFrame = daily.select(
       expr(s"day + make_interval(0, 0, 0, $k)").as("day"),
       col("cents").as(as))
@@ -3025,11 +2981,7 @@ object Relational {
     * table shuffles once into the daily rollup.
     */
   def stlWeekdayDecomposition(spark: SparkSession, dir: String): DataFrame = {
-    val daily = e(spark, dir).table("orders")
-      .groupBy(date_trunc("day", col("o_orderdate"))
-        .cast(org.apache.spark.sql.types.TimestampNTZType).as("day"))
-      .agg(sum(expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)"))
-        .as("cents"))
+    val daily = dailyOrderCents(e(spark, dir))
     val w = Window.orderBy(col("day")).rowsBetween(-3, 3)
     val det = daily
       .withColumn("t7", sum(col("cents")).over(w))
@@ -3071,8 +3023,7 @@ object Relational {
         col("l_orderkey") === col("o_orderkey"))
       .withColumn("d", datediff(col("l_shipdate").cast("date"),
         col("o_orderdate").cast("date")).cast("long"))
-      .groupBy(date_trunc("month", col("o_orderdate"))
-        .cast(org.apache.spark.sql.types.TimestampNTZType).as("month"))
+      .groupBy(ntzBucket("month", col("o_orderdate")).as("month"))
       .agg(count(lit(1)).as("n_lines"),
         sum(col("d")).as("ship_days"),
         round(expr("percentile(d, 0.95)"), 4).as("p95_days_to_ship"),
@@ -3104,13 +3055,11 @@ object Relational {
     val by = en.table("lineitem")
       .join(en.table("orders").select(col("o_orderkey"), col("o_orderdate")),
         col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(en.table("part")
-        .select(col("p_partkey"), col("p_brand"))),
-        col("l_partkey") === col("p_partkey"))
+      .transform(withBrand(en))
       .filter(year(col("o_orderdate")).isin(BaseYear, BaseYear + 1))
       .groupBy(col("p_brand"),
         (year(col("o_orderdate")) === BaseYear).as("is_base"))
-      .agg(sum(expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)"))
+      .agg(sum(cents(col("l_extendedprice")))
           .as("cents"),
         sum(expr("CAST(round(l_quantity, 0) AS BIGINT)")).as("qty"))
     val b0 = by.filter(col("is_base"))

@@ -504,19 +504,22 @@ object Similarity {
     lshProbeTopK(lshIndex(emb, datasetKey, planes, dim, tables),
       emb, queryId, k, planes, dim, tables, "lshTopK")
 
-  /** Multi-probe read against an already-built LSH layout — the shared
-    * probe path of [[lshTopK]] and [[lshIncrementalTopK]] (`op` names the
-    * caller in errors). `lookup` only supplies the query vector and its
-    * buckets.
+  /** Multi-probe read against an LSH layout — the shared probe path of
+    * [[lshTopK]] and [[lshIncrementalTopK]] (`op` names the caller in
+    * errors). `lookup` only supplies the query vector and its buckets.
+    * The query is fetched before `buildLayout` runs, so an unknown id
+    * fails before any layout is written.
     */
-  private def lshProbeTopK(layout: LshLayout, lookup: DataFrame, queryId: Long,
-      k: Int, planes: Int, dim: Int, tables: Int, op: String): DataFrame = {
-    val path = layout.path
+  private def lshProbeTopK(buildLayout: => LshLayout, lookup: DataFrame,
+      queryId: Long, k: Int, planes: Int, dim: Int, tables: Int,
+      op: String): DataFrame = {
     val spark = lookup.sparkSession
     // the query's per-table buckets come from the SAME column expressions
     // the index used
     val (qv, q) = fetchQuery(lookup, queryId, op, (0 until tables).map(t =>
       lshKeyOffset(col("embedding"), t * planes, planes, dim)): _*)
+    val layout = buildLayout
+    val path = layout.path
     val admitted = (0 until tables).flatMap { t =>
       val b = q.getLong(1 + t)
       (b +: (0 until planes).map(p => b ^ (1L << p))).distinct.map(t -> _)
@@ -610,7 +613,7 @@ object Similarity {
     * clusters keeping their previous centroid.
     * Returns the final centroids as (cid, centroid array<double>).
     */
-  def kmeans(emb: DataFrame, k: Int = 16, iters: Int = KmeansIters,
+  def kmeans(emb: DataFrame, k: Int, iters: Int = KmeansIters,
       maxSample: Int = 2048): DataFrame = {
     import org.apache.spark.sql.Row
     val spark = emb.sparkSession
@@ -732,7 +735,7 @@ object Similarity {
     * shared path of [[ivfTopK]] and [[ivfIncrementalTopK]]: the
     * [[ivfProbe]] candidates ranked by [[cosineTopK]].
     */
-  private def ivfProbeTopK(idx: IvfIndex, lookup: DataFrame,
+  private def ivfProbeTopK(idx: => IvfIndex, lookup: DataFrame,
       queryId: Long, k: Int, nprobe: Int, op: String): DataFrame = {
     val (cells, qLit) = ivfProbe(idx, lookup, queryId, nprobe, op)
     cosineTopK(cells, cosine(col("embedding"), qLit), k)
@@ -740,20 +743,23 @@ object Similarity {
 
   /** The single-query IVF cell probe: fetch query `queryId` from `lookup`
     * (the only thing it supplies — all scored data comes off the
-    * cid-partitioned layout), choose its `nprobe` nearest cells
-    * driver-side by full L2 against the centroid model, and read only
-    * those cell directories, without the query row. The full L2 is a
-    * different floating-point form from [[centroidScores]]'; keeping the
-    * two apart means no near-tie flips a probed cell. Returns the
-    * candidates and the query vector as a literal.
+    * cid-partitioned layout), then build the index `idx` (after the
+    * fetch, so an unknown id fails before any layout is written), choose
+    * its `nprobe` nearest cells driver-side by full L2 against the
+    * centroid model, and read only those cell directories, without the
+    * query row. The full L2 is a different floating-point form from
+    * [[centroidScores]]'; keeping the two apart means no near-tie flips a
+    * probed cell. Returns the candidates and the query vector as a
+    * literal.
     */
-  private def ivfProbe(idx: IvfIndex, lookup: DataFrame, queryId: Long,
+  private def ivfProbe(idx: => IvfIndex, lookup: DataFrame, queryId: Long,
       nprobe: Int, op: String): (DataFrame, Column) = {
     val qv = fetchQuery(lookup, queryId, op)._1
-    val probes = idx.centroids.map { case (cid, c) =>
+    val index = idx
+    val probes = index.centroids.map { case (cid, c) =>
       cid -> c.zip(qv).map { case (a, b) => (a - b) * (a - b) }.sum
     }.sortBy(_._2).take(nprobe).map(_._1).toSet
-    (lookup.sparkSession.read.parquet(idx.path)
+    (lookup.sparkSession.read.parquet(index.path)
       .filter(col("cid").isInCollection(probes) && col("vec_id") =!= queryId),
       vecLit(qv))
   }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.types._
+import graft.operators.Relational.ntzBucket
 
 /** Structured Streaming over the events table (absent in the reference —
   * batch-only, SURVEY §2.9 — provided as [EXT] engine surface).
@@ -548,7 +549,7 @@ object EventsStream {
   def runningDailyTotals(spark: SparkSession, dir: String): DataFrame = {
     val events = new graft.cube.Engine(spark, dir).table("events")
     val daily = events
-      .groupBy(date_trunc("day", col("ts")).cast(TimestampNTZType).as("day"),
+      .groupBy(ntzBucket("day", col("ts")).as("day"),
         col("event_type"))
       .agg(count(lit(1)).as("event_count"),
         round(sum(col("value")), 2).as("day_value"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class CorpusAsOfSpec extends SparkFunSuite {
@@ -38,6 +39,20 @@ class CorpusAsOfSpec extends SparkFunSuite {
     assert(out.map(r => (r.getString(0),
       if (r.isNullAt(1)) -1L else r.getLong(1))).toSeq ==
       Seq(("c", 10L), ("a", 10L), ("b", -1L), ("d", -1L)))
+  }
+
+  test("as-of joins name themselves and the missing column") {
+    val left = Seq((1L, 10L, "a")).toDF("k", "t", "lv")
+    val right = Seq((1L, 10L, 1.0)).toDF("k", "when", "rv")
+    val joins: Seq[(String, (DataFrame, DataFrame, String, String) => DataFrame)] =
+      Seq("asofJoin" -> AsOf.asofJoin, "asofJoinForward" -> AsOf.asofJoinForward,
+        "asofJoinNearest" -> AsOf.asofJoinNearest)
+    joins.foreach { case (op, join) =>
+      val e = intercept[IllegalArgumentException](join(left, right, "k", "t"))
+      assert(e.getMessage.contains(s"$op: column 't' missing") &&
+        e.getMessage.contains("left: k,t,lv; right: k,when,rv"),
+        s"$op raised: ${e.getMessage}")
+    }
   }
 
   test("asofJoinForward equals the naive argmin theta join on the fixture") {

@@ -152,9 +152,31 @@ class DriverHotspotLintSpec extends AnyFunSuite {
         "graft/operators/Graph.scala" -> 1,
         "graft/operators/Ranks.scala" -> 1,
         "graft/operators/Relational.scala" -> 1,
-        "graft/operators/Similarity.scala" -> 35,
+        "graft/operators/Similarity.scala" -> 34,
         "graft/operators/Skew.scala" -> 1),
       under = Seq("graft/operators/", "graft/streaming/", "graft/multimodal/"))
+  }
+
+  test("exact-cents money is spelled once, in Relational.cents") {
+    // the Scala spelling `round(x * 100, 0)` outside oracle SQL (whose
+    // stripMargin lines start with `|`); every money sum goes through
+    // the one helper
+    assertCeilings("cents spelling", """(?m)^(?!\s*\|).*\* 100, 0\)""",
+      Map("graft/operators/Relational.scala" -> 1))
+  }
+
+  test("NTZ calendar buckets are spelled once, in Relational.ntzBucket") {
+    // `date_trunc(...)` directly followed by `.cast(TimestampNTZType)`
+    assertCeilings("NTZ calendar bucket",
+      """date_trunc\((?:[^()]|\([^()]*(?:\([^()]*\))?[^()]*\))*\)\s*""" +
+        """\.cast\(\s*(?:org\.apache\.spark\.sql\.types\.)?""" +
+        """TimestampNTZType\s*\)""",
+      Map(
+        // the helper
+        "graft/operators/Relational.scala" -> 1,
+        // the events cube's day and hour levels: the cube layer does not
+        // depend on the operator layer
+        "graft/cube/CubeCatalog.scala" -> 2))
   }
 
   test("TrieMap registries stay confined to Scratch and the schema memo") {

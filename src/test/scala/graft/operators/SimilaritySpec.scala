@@ -82,6 +82,13 @@ class SimilaritySpec extends SparkFunSuite {
       assert(e.getMessage.contains(s"$op: query vec_id=$missing not found"),
         s"$op raised: ${e.getMessage}")
     }
+    // the query is fetched first: no call wrote a layout for the key in
+    // this application (layout names carry the application id)
+    val root = new java.io.File(Similarity.indexRoot(spark))
+    val app = spark.sparkContext.applicationId
+    val written = Option(root.list()).toSeq.flatten
+      .filter(n => n.contains(s"_${app}_") && n.contains(key))
+    assert(written.isEmpty, s"layouts written before the query fetch: $written")
   }
 
   test("autoLshBits keeps occupancy-targeted growth with oracle-regime floor") {
