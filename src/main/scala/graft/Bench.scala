@@ -13,6 +13,52 @@ object Bench {
     */
   private val Passes = 3
 
+  /** Untimed warm-up of `names` on `dir`: pays the one-off JVM / codegen
+    * / parquet-footer costs so the timed passes measure the queries, not
+    * class loading. A failure is logged; the first timed pass then
+    * absorbs that query's one-off costs.
+    */
+  private[graft] def warmUp(spark: SparkSession, names: Seq[String], dir: String,
+      tag: String): Unit =
+    names.foreach { name =>
+      countOk(spark, name, dir, s"[$tag] warm-up of")
+      graft.operators.Scratch.releaseAll(spark)
+    }
+
+  /** `passes` timed passes over `names` on `sfDir`, as (name, seconds)
+    * samples. Each pass runs `onPass`, then [[graft.operators.Scratch.invalidate]]:
+    * the session memos (the shared near-dup pair frame, ANN index
+    * layouts, corpus counts) are cleared at the START of every pass, so
+    * the first consumer in every pass computes the real pipeline while
+    * the later consumers still measure the intended shared-frame shape.
+    * Each sample times the query's `count()`; the scratch release after
+    * it runs outside the timed window, so the next query starts with a
+    * storage pool free of its neighbor's blocks. A failed query samples
+    * -1 and logs its exception to stderr.
+    */
+  private[graft] def timedPasses(spark: SparkSession, names: Seq[String],
+      sfDir: String, passes: Int, tag: String)(onPass: => Unit): Seq[(String, Double)] =
+    (1 to passes).flatMap { _ =>
+      onPass
+      graft.operators.Scratch.invalidate(spark)
+      names.map { name =>
+        val t0 = System.nanoTime()
+        val ok = countOk(spark, name, sfDir, s"[$tag]")
+        val dt = (System.nanoTime() - t0) / 1e9
+        graft.operators.Scratch.releaseAll(spark)
+        name -> (if (ok) dt else -1.0)
+      }
+    }
+
+  private def countOk(spark: SparkSession, name: String, dir: String,
+      label: String): Boolean =
+    try { SparkEntry.queries(name)(spark, dir).count(); true }
+    catch { case e: Throwable =>
+      System.err.println(s"$label $name on $dir failed: " +
+        s"${e.getClass.getName}: ${e.getMessage}")
+      false
+    }
+
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.isEmpty) -1.0
@@ -43,16 +89,10 @@ object Bench {
       val (builds, rest) = all.partition(_.contains("index_build"))
       builds.sorted ++ rest
     }
-    // Untimed warmup at the smallest scale factor: pays the one-off JVM /
-    // codegen / parquet-footer costs so per-query timings measure the
-    // queries, not class loading. Warms only the selected names so a
-    // filtered dev loop doesn't pay the full 318-query warmup.
-    val warmDir = "/root/testdata/sf0.001"
-    names.foreach { name =>
-      try SparkEntry.queries(name)(spark, warmDir).count()
-      catch { case _: Throwable => () }
-      graft.operators.Scratch.releaseAll(spark)
-    }
+    // Untimed warmup at the smallest scale factor. Warms only the
+    // selected names so a filtered dev loop doesn't pay the full
+    // 318-query warmup.
+    warmUp(spark, names, "/root/testdata/sf0.001", "bench")
     // Self-identification: the emitted JSON names the active skip list
     // and each pass's wall-clock start, so a filtered run or one whose
     // timings straddle a host-contention window is self-diagnosing from
@@ -64,29 +104,12 @@ object Bench {
     // the stamp makes a contaminated pass self-diagnosing from the
     // artifact alone instead of requiring a re-bench to suspect it.
     val passLoads = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val samples = (1 to Passes).flatMap { _ =>
+    // Without the per-pass memo clear only the first sample of the first
+    // consumer would pay the pipeline, and the median would silently
+    // report checkpoint-read time as the query's cost.
+    val samples = timedPasses(spark, names, sfDir, Passes, "bench") {
       passStarts += System.currentTimeMillis() / 1000L
       passLoads += GraftSession.loadAvg1m()
-      // Session memos (the shared near-dup pair frame, ANN index
-      // layouts, corpus counts) are cleared at the START of every pass:
-      // otherwise only the first sample of the first consumer pays the
-      // pipeline, and the median silently reports checkpoint-read time as
-      // the query's cost. With a per-pass clear, the first consumer in EVERY
-      // pass computes the real pipeline (its median is honest) while the
-      // later consumers still measure the intended shared-frame shape.
-      graft.operators.Scratch.invalidate(spark)
-      names.map { name =>
-        val fn = SparkEntry.queries(name)
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-        catch { case _: Throwable => false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // outside the timed window: each sample starts with a storage
-        // pool free of the previous query's scratch blocks, so timings
-        // measure the query, not its neighbor's eviction pressure
-        graft.operators.Scratch.releaseAll(spark)
-        name -> (if (ok) dt else -1.0)
-      }
     }
     val results = names.map { name =>
       val xs = samples.collect { case (`name`, t) => t }

@@ -38,30 +38,11 @@ object Soak {
     // untimed warmup at the smallest sf: JVM/codegen/parquet-footer
     // one-off costs stay out of pass 1. A FAILED warmup silently
     // shifting those costs into the timed pass would skew ratio_cold,
-    // so failures are logged loudly even though the soak proceeds.
-    names.foreach { n =>
-      try SparkEntry.queries(n)(spark, warmupDir).count()
-      catch { case e: Throwable =>
-        System.err.println(
-          s"[soak] WARMUP FAILED for $n on $warmupDir (pass-1 times " +
-            s"will absorb one-off costs): ${e.getMessage}")
-      }
-      graft.operators.Scratch.releaseAll(spark)
-    }
+    // so failures are logged even though the soak proceeds.
+    Bench.warmUp(spark, names, warmupDir, "soak")
     val loads = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val samples = (1 to Passes).flatMap { _ =>
+    val samples = Bench.timedPasses(spark, names, sfDir, Passes, "soak") {
       loads += GraftSession.loadAvg1m()
-      graft.operators.Scratch.invalidate(spark)
-      names.map { name =>
-        val t0 = System.nanoTime()
-        val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[soak] $name failed: ${e.getMessage}"); false
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        graft.operators.Scratch.releaseAll(spark)
-        name -> (if (ok) dt else -1.0)
-      }
     }
     val qs = names.map { n =>
       val xs = samples.collect { case (`n`, t) => t }

@@ -22,15 +22,18 @@ object SparkEntry {
 
   private def eng(s: SparkSession, dir: String) = new Engine(s, dir)
 
-  /** Temp dir for the sink-roundtrip queries (q91/q93/q95), keyed by the
-    * Spark application id: two concurrent drivers (bench + correctness
-    * harness) on one machine must not Overwrite-delete files the other
-    * JVM is mid-read. Within one application the path is stable, so
-    * repeated invocations (bench passes) overwrite deterministically.
+  /** Temp dir for the sink-roundtrip queries (q91/q93/q95/q153), keyed by
+    * the Spark application id: two concurrent drivers (bench +
+    * correctness harness) on one machine must not Overwrite-delete files
+    * the other JVM is mid-read. Within one application the path is
+    * stable, so repeated invocations (bench passes) overwrite
+    * deterministically; the directory is deleted when the context stops
+    * ([[Scratch.ownedPath]]).
     */
   private def tmpPath(s: SparkSession, prefix: String, dataset: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/${prefix}_" +
-      s"${s.sparkContext.applicationId}_" + new java.io.File(dataset).getName
+    graft.operators.Scratch.ownedPath(s,
+      s"${System.getProperty("java.io.tmpdir")}/${prefix}_" +
+        s"${s.sparkContext.applicationId}_" + new java.io.File(dataset).getName)
 
   /** Roundtrip check of an LSH layout (q106, q154), in one pass over the
     * files at `path`: table 0 is one full corpus copy (`n_vecs`,
@@ -148,20 +151,20 @@ object SparkEntry {
     // postings hot key (and the oracle replicates the cap)
     "q136_jaccard_pairs" -> ((s, d) =>
       Dedup.jaccardPairs(eng(s, d).table("documents"), maxDf = 256,
-        datasetKey = Some(d))),
+        datasetKey = d)),
     // overlap-coefficient (containment) pairs over the SAME postings
     // index — catches quote-inclusion dups Jaccard structurally cannot
     // (short doc wholly inside a long one); threshold 0.8 aligns with
     // q136 so inclusions (high overlap, low jaccard) separate cleanly
     "q137_containment_pairs" -> ((s, d) =>
       Dedup.containmentPairs(eng(s, d).table("documents"),
-        threshold = 0.8, maxDf = 256, datasetKey = Some(d))),
+        threshold = 0.8, maxDf = 256, datasetKey = d)),
     // per-doc near-dup degree over the same postings index: the
     // boilerplate-density signal (many partners = template/chrome, one
     // partner = ordinary dup) that neighborhood-drop curation keys on
     "q139_dup_degree" -> ((s, d) =>
       Dedup.dupDegree(eng(s, d).table("documents"), maxDf = 256,
-        datasetKey = Some(d))),
+        datasetKey = d)),
     // --- [EXT] text analysis ---
     "q22_token_stats" -> ((s, d) => eng(s, d).table("documents")
       .groupBy(col("lang"))
@@ -357,7 +360,7 @@ object SparkEntry {
     // counts, bit-stable across engines
     "q191_jaccard_sweep" -> ((s, d) =>
       Dedup.jaccardThresholdSweep(eng(s, d).table("documents"),
-        maxDf = 256, datasetKey = Some(d))),
+        maxDf = 256, datasetKey = d)),
     // near-dup cluster size histogram over the shared pair frame
     "q192_cluster_sizes" -> ((s, d) => {
       val docs = eng(s, d).table("documents")
@@ -483,7 +486,7 @@ object SparkEntry {
     // held-out bigram LM eval: train-split model scores the val split
     "q238_heldout_perplexity" -> ((s, d) =>
       Corpus.heldoutPerplexity(eng(s, d).table("documents"),
-        datasetKey = Some(d))),
+        datasetKey = d)),
     // hash-sampling calibration at 10/25/50% against the full totals
     "q239_sampling_calibration" -> Relational.samplingCalibration _,
     // Heaps-law vocabulary growth over corpus deciles
@@ -777,12 +780,12 @@ object SparkEntry {
       Multimodal.resizeAndSample(eng(s, d).table("documents")).drop("checksum")),
     "q48_quality_filter" -> ((s, d) =>
       Corpus.qualityFilter(eng(s, d).table("documents"),
-        datasetKey = Some(d))),
+        datasetKey = d)),
     "q49_train_split" -> ((s, d) =>
       Corpus.trainSplitStats(eng(s, d).table("documents"))),
     "q50_tfidf" -> ((s, d) =>
       Corpus.tfidfTopTerms(eng(s, d).table("documents"),
-        datasetKey = Some(d))),
+        datasetKey = d)),
     "q51_asof_join" -> AsOf.clickLastPurchase _,
     "q52_pivot" -> Relational.returnFlagPivot _,
     "q53_range_join" -> ((s, d) => RangeJoin.nearbyEventCounts(s, d)),
@@ -793,7 +796,7 @@ object SparkEntry {
     "q56_curation" -> ((s, d) => {
       val docs = eng(s, d).table("documents")
       Corpus.curate(docs, Dedup.minhashPairsShared(docs, d),
-        datasetKey = Some(d))
+        datasetKey = d)
     }),
     // Gopher-style duplicate n-gram fractions: shingles() is distinct, so
     // dup ratio = 1 - distinct/(n_tokens - n + 1); single-pass per row
@@ -853,7 +856,7 @@ object SparkEntry {
     "q65_bloom_join" -> ((s, d) => RuntimeFilter.bloomNationLineitems(s, d)),
     "q66_inverted_index" -> ((s, d) =>
       Corpus.invertedIndex(eng(s, d).table("documents"),
-        datasetKey = Some(d))),
+        datasetKey = d)),
     "q67_chars_histogram" -> ((s, d) => Relational.charsHistogram(s, d)),
     "q68_daily_deltas" -> ((s, d) => Relational.dailyDeltas(s, d)),
     "q69_latest_snapshot" -> Relational.latestSnapshot _,
@@ -883,7 +886,7 @@ object SparkEntry {
     "q80_datacard" -> ((s, d) => {
       val docs = eng(s, d).table("documents")
       val kept = Corpus.curate(docs, Dedup.minhashPairsShared(docs, d),
-        datasetKey = Some(d))
+        datasetKey = d)
         .select(col("doc_id"), lit(1).as("kept"))
       docs.join(kept, Seq("doc_id"), "left")
         .groupBy(col("source"), col("lang"))
@@ -972,7 +975,7 @@ object SparkEntry {
     }),
     "q94_unigram_surprisal" -> ((s, d) =>
       Corpus.unigramSurprisal(eng(s, d).table("documents"),
-        datasetKey = Some(d))),
+        datasetKey = d)),
     // Two-phase (salted) aggregation parity: result must equal the plain
     // groupBy — the oracle IS the unsalted SQL aggregate, proving the
     // hot-key path's semantics on the data path. Aggregates chosen
@@ -1001,18 +1004,18 @@ object SparkEntry {
     "q98_event_transitions" -> EventAnalytics.eventTransitions _,
     "q99_bigram_surprisal" -> ((s, d) =>
       Corpus.bigramSurprisal(eng(s, d).table("documents"),
-        datasetKey = Some(d))),
+        datasetKey = d)),
     // CCNet-style head/middle/tail terciles over the corpus's own
     // unigram+bigram LM score — the quality-stratification cut mixture
     // recipes consume; global rank via the distributed Ranks machinery
     "q141_perplexity_buckets" -> ((s, d) =>
       Corpus.perplexityBuckets(eng(s, d).table("documents"),
-        datasetKey = Some(d))),
+        datasetKey = d)),
     // PMI collocations: adjacent pairs co-occurring beyond what unigram
     // frequencies predict, hapax-floored — the MWE/stop-phrase miner
     "q147_collocations" -> ((s, d) =>
       Corpus.collocations(eng(s, d).table("documents"),
-        minCount = 5, topK = 20, datasetKey = Some(d))),
+        minCount = 5, topK = 20, datasetKey = d)),
     // point-in-time enrichment: purchases joined to the SCD2 state
     // valid AT event time via the single-shuffle as-of — the
     // leak-free historical feature join
@@ -1025,7 +1028,7 @@ object SparkEntry {
     // types at k in {10,20,50,100} — the vocab-budget knee finder
     "q149_vocab_coverage" -> ((s, d) =>
       Corpus.vocabCoverage(eng(s, d).table("documents"),
-        datasetKey = Some(d))),
+        datasetKey = d)),
     // langid eval: labeled lang vs q24's predicted lang, the confusion
     // matrix of the heuristic classifier
     "q150_langid_confusion" -> ((s, d) => eng(s, d).table("documents")
@@ -1224,7 +1227,7 @@ object SparkEntry {
     // plus top-10 mass — the cross-ingest drift metric
     "q124_zipf_report" -> ((s, d) =>
       Corpus.zipfReport(eng(s, d).table("documents"),
-        datasetKey = Some(d))),
+        datasetKey = d)),
     // Best-of-per-group curation pick: top-5 quality docs per language
     // (merit-ordered complement of q55's hash-random cap)
     "q125_top_quality" -> ((s, d) =>
@@ -1527,10 +1530,7 @@ object SparkEntry {
         | CAST(grouping(year(o_orderdate)) * 2 + grouping(o_orderstatus) AS BIGINT) AS lvl
         |FROM orders GROUP BY ROLLUP(year(o_orderdate), o_orderstatus)
         |ORDER BY o_year ASC NULLS FIRST, o_orderstatus ASC NULLS FIRST""".stripMargin,
-    "q17_events_hourly" ->
-      """SELECT date_trunc('hour', ts) AS event_hour, event_type,
-        | count(*) AS event_count, round(sum(value), 2) AS total_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+    "q17_events_hourly" -> eventsHourlyOracle,
     "q18_events_propk" ->
       """SELECT CAST(regexp_extract(props, '"k": ([0-9]+)', 1) AS INTEGER) AS prop_k,
         | count(*) AS event_count, round(sum(value), 2) AS total_value
@@ -1780,10 +1780,7 @@ object SparkEntry {
         |SELECT label, CAST(any_value(n) AS BIGINT) AS n_members,
         | round(sqrt(sum(mv * mv)), 6) AS centroid_norm
         |FROM m GROUP BY label ORDER BY label""".stripMargin,
-    "q32_stream_hourly" ->
-      """SELECT date_trunc('hour', ts) AS event_hour, event_type,
-        | count(*) AS event_count, round(sum(value), 2) AS total_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+    "q32_stream_hourly" -> eventsHourlyOracle,
     "q33_stream_user_state" ->
       """SELECT user_id, count(*) AS n_events,
         | arg_max(event_type, ts) AS last_type,
@@ -1953,14 +1950,7 @@ object SparkEntry {
         | round(ln(CAST(sum(n) AS DOUBLE)) -
         |   sum(n * ln(CAST(n AS DOUBLE))) / sum(n), 3) AS lang_entropy
         |FROM c GROUP BY source ORDER BY source""".stripMargin,
-    "q160_active_7d" ->
-      """WITH ud AS (
-        | SELECT DISTINCT user_id, date_trunc('day', ts) AS day FROM events),
-        |x AS (
-        | SELECT user_id, unnest(generate_series(day, day + INTERVAL 6 DAY,
-        |   INTERVAL 1 DAY)) AS win_day FROM ud)
-        |SELECT win_day, count(DISTINCT user_id) AS active_7d
-        |FROM x GROUP BY win_day ORDER BY win_day""".stripMargin,
+    "q160_active_7d" -> activeUsers7dOracle,
     "q161_attribution" ->
       """WITH touched AS (
         | SELECT user_id, ts, event_type, value,
@@ -4732,30 +4722,7 @@ object SparkEntry {
         | JOIN sizes sa ON sa.source = inter.src_a
         | JOIN sizes sb ON sb.source = inter.src_b
         |ORDER BY jaccard DESC, src_a, src_b LIMIT 20""".stripMargin,
-    // identical to q170's oracle — the stream collapses the same log to
-    // the same latest ops and merges through the same code path
-    "q175_stream_cdc" ->
-      """WITH before AS (
-        | SELECT user_id, event_type AS last_type, value AS last_value,
-        |  row_number() OVER (PARTITION BY user_id
-        |    ORDER BY ts DESC, event_id DESC) AS rn
-        | FROM events WHERE ts < TIMESTAMP '2024-01-16 00:00:00'),
-        |snap AS (SELECT user_id, last_type, last_value FROM before WHERE rn = 1),
-        |logx AS (
-        | SELECT user_id, event_type, value,
-        |  row_number() OVER (PARTITION BY user_id
-        |    ORDER BY ts DESC, event_id DESC) AS rn
-        | FROM events WHERE ts >= TIMESTAMP '2024-01-16 00:00:00'),
-        |op AS (SELECT user_id, event_type, value, event_type = 'error' AS del
-        |       FROM logx WHERE rn = 1)
-        |SELECT COALESCE(s.user_id, o.user_id) AS user_id,
-        | CASE WHEN o.user_id IS NOT NULL THEN o.event_type
-        |      ELSE s.last_type END AS last_type,
-        | CASE WHEN o.user_id IS NOT NULL THEN o.value
-        |      ELSE s.last_value END AS last_value
-        |FROM snap s FULL OUTER JOIN op o ON s.user_id = o.user_id
-        |WHERE NOT COALESCE(o.del, false)
-        |ORDER BY user_id""".stripMargin,
+    "q175_stream_cdc" -> cdcApplyOracle,
     "q176_session_paths" ->
       """WITH flagged AS (
         | SELECT user_id, ts, event_id, event_type,
@@ -4828,28 +4795,7 @@ object SparkEntry {
         |SELECT channel, count(*) AS n_users, count(t1) AS viewed,
         | count(t2) AS clicked, count(t3) AS converted
         |FROM pu GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q170_cdc_apply" ->
-      """WITH before AS (
-        | SELECT user_id, event_type AS last_type, value AS last_value,
-        |  row_number() OVER (PARTITION BY user_id
-        |    ORDER BY ts DESC, event_id DESC) AS rn
-        | FROM events WHERE ts < TIMESTAMP '2024-01-16 00:00:00'),
-        |snap AS (SELECT user_id, last_type, last_value FROM before WHERE rn = 1),
-        |logx AS (
-        | SELECT user_id, event_type, value,
-        |  row_number() OVER (PARTITION BY user_id
-        |    ORDER BY ts DESC, event_id DESC) AS rn
-        | FROM events WHERE ts >= TIMESTAMP '2024-01-16 00:00:00'),
-        |op AS (SELECT user_id, event_type, value, event_type = 'error' AS del
-        |       FROM logx WHERE rn = 1)
-        |SELECT COALESCE(s.user_id, o.user_id) AS user_id,
-        | CASE WHEN o.user_id IS NOT NULL THEN o.event_type
-        |      ELSE s.last_type END AS last_type,
-        | CASE WHEN o.user_id IS NOT NULL THEN o.value
-        |      ELSE s.last_value END AS last_value
-        |FROM snap s FULL OUTER JOIN op o ON s.user_id = o.user_id
-        |WHERE NOT COALESCE(o.del, false)
-        |ORDER BY user_id""".stripMargin,
+    "q170_cdc_apply" -> cdcApplyOracle,
     "q169_join_fanout" ->
       """WITH le AS (
         | SELECT user_id AS key, count(*) AS n_events FROM events GROUP BY 1),
@@ -4924,16 +4870,7 @@ object SparkEntry {
         |           ln(CAST(n_b + 1 AS DOUBLE) / (df_b + 1))), 4) AS abs_drift
         |FROM df CROSS JOIN n
         |ORDER BY abs_drift DESC, token LIMIT 20""".stripMargin,
-    // identical semantics to the batch expansion — the stream's sliding
-    // 7d/1d windows with >=1 event are exactly the trailing win_days
-    "q163_stream_wau" ->
-      """WITH ud AS (
-        | SELECT DISTINCT user_id, date_trunc('day', ts) AS day FROM events),
-        |x AS (
-        | SELECT user_id, unnest(generate_series(day, day + INTERVAL 6 DAY,
-        |   INTERVAL 1 DAY)) AS win_day FROM ud)
-        |SELECT win_day, count(DISTINCT user_id) AS active_7d
-        |FROM x GROUP BY win_day ORDER BY win_day""".stripMargin,
+    "q163_stream_wau" -> activeUsers7dOracle,
     "q40_term_freq" ->
       """SELECT token, count(*) AS tf, count(DISTINCT doc_id) AS df FROM (
         | SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS token
@@ -6068,7 +6005,7 @@ object SparkEntry {
         |FROM tf t JOIN dfreq d USING (tok) JOIN lens l USING (doc_id), st
         |GROUP BY 1 ORDER BY 2 DESC, 1 LIMIT 10""".stripMargin,
     // per-query BM25 via the same Lucene form; the scored CTE mirrors
-    // Corpus.bm25Retrieval's FP op order exactly (shared bm25Score
+    // Corpus.bm25Retrieval's FP op order exactly (shared bm25Rollup
     // expression — constants written as the same folded expressions)
     "q115_bm25_join" ->
       raw"""WITH queries AS (
@@ -6566,4 +6503,48 @@ object SparkEntry {
       | FROM scored)
       |SELECT q_id, rk, vec_id, cos_sim FROM r WHERE rk <= 3
       |ORDER BY q_id, rk""".stripMargin
+
+  /** Oracle of q17's cube rollup and of q32's stream drain: the same
+    * (hour, type) counts and sums. */
+  private val eventsHourlyOracle: String =
+    """SELECT date_trunc('hour', ts) AS event_hour, event_type,
+      | count(*) AS event_count, round(sum(value), 2) AS total_value
+      |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+
+  /** Oracle of q160's batch expansion and of q163's stream: the sliding
+    * 7d/1d windows with >= 1 event are exactly the trailing win_days. */
+  private val activeUsers7dOracle: String =
+    """WITH ud AS (
+      | SELECT DISTINCT user_id, date_trunc('day', ts) AS day FROM events),
+      |x AS (
+      | SELECT user_id, unnest(generate_series(day, day + INTERVAL 6 DAY,
+      |   INTERVAL 1 DAY)) AS win_day FROM ud)
+      |SELECT win_day, count(DISTINCT user_id) AS active_7d
+      |FROM x GROUP BY win_day ORDER BY win_day""".stripMargin
+
+  /** Oracle of q170's batch merge and of q175's stream: the stream
+    * collapses the same log to the same latest ops and merges through the
+    * same code path. */
+  private val cdcApplyOracle: String =
+    """WITH before AS (
+      | SELECT user_id, event_type AS last_type, value AS last_value,
+      |  row_number() OVER (PARTITION BY user_id
+      |    ORDER BY ts DESC, event_id DESC) AS rn
+      | FROM events WHERE ts < TIMESTAMP '2024-01-16 00:00:00'),
+      |snap AS (SELECT user_id, last_type, last_value FROM before WHERE rn = 1),
+      |logx AS (
+      | SELECT user_id, event_type, value,
+      |  row_number() OVER (PARTITION BY user_id
+      |    ORDER BY ts DESC, event_id DESC) AS rn
+      | FROM events WHERE ts >= TIMESTAMP '2024-01-16 00:00:00'),
+      |op AS (SELECT user_id, event_type, value, event_type = 'error' AS del
+      |       FROM logx WHERE rn = 1)
+      |SELECT COALESCE(s.user_id, o.user_id) AS user_id,
+      | CASE WHEN o.user_id IS NOT NULL THEN o.event_type
+      |      ELSE s.last_type END AS last_type,
+      | CASE WHEN o.user_id IS NOT NULL THEN o.value
+      |      ELSE s.last_value END AS last_value
+      |FROM snap s FULL OUTER JOIN op o ON s.user_id = o.user_id
+      |WHERE NOT COALESCE(o.del, false)
+      |ORDER BY user_id""".stripMargin
 }

@@ -14,6 +14,25 @@ import org.apache.spark.sql.functions._
   * ((doc_id, token), then doc_id / token) are fine-grained and skew-free,
   * and every aggregate is map-side-partial (HashAggregateExec).
   *
+  * Two tokenizers, each with its own oracle form. [[words]] is the
+  * single-space split (`string_split(text, ' ')`): the counts frames
+  * ([[tokenCounts]], [[bigramCounts]]) and every operator built on
+  * them, the per-source token rollups, the span, prefix and repetition
+  * cuts, and the word counts ([[wordCount]]). `TextAnalysis.tokens` is
+  * the trimmed `\s+` split: the BM25 family ([[bm25TopDocs]],
+  * [[bm25Retrieval]], [[chunkRetrieval]]), [[oovRate]], the token
+  * budgets ([[packSequences]], [[curriculumEpochs]], [[chunkSpans]],
+  * [[mixtureSample]]) and the quality-score family
+  * ([[topQualityPerGroup]], [[qualityTierReport]], [[scoreCalibration]],
+  * [[tfidfCosinePairs]]' length floor).
+  *
+  * The shared counts frames are keyed: every operator that reads them
+  * takes a required `datasetKey` naming the exact docs frame. The frame
+  * is built once per (session, kind, key) and lives until
+  * [[Scratch.invalidate]]; a keyed call whose docs frame is not
+  * semantically the one the entry was built from fails fast (the
+  * `sameResult` guard in [[sharedCounts]]).
+  *
   * The reference has no text operators (its whole surface is the OLAP
   * client in `oec.py`); these belong to the [EXT] pipeline scope
   * (SURVEY §2.11).
@@ -33,34 +52,75 @@ object Corpus {
   def docHash(id: Column): Column =
     id.bitwiseAND(lit(0x7FFFFFFFL)) * lit(2654435761L)
 
+  /** The deterministic membership draw every sampler here uses: a doc is
+    * kept when its [[docHash]] bucket out of 1e6 falls under
+    * `floor(rate · 1e6)`. */
+  private[graft] def hashDraw(rate: Column): Column =
+    pmod(docHash(col("doc_id")), lit(1000000L)) < floor(rate * lit(1000000.0))
+
+  /** The single-space word split of a text column. */
+  private[graft] def words(text: Column): Column = split(text, " ")
+
+  /** The number of [[words]] of a text column, as a long. */
+  private[graft] def wordCount(text: Column): Column =
+    size(words(text)).cast("long")
+
+  /** (doc_id, gram): each doc's distinct word `n`-gram shingles. */
+  private[graft] def grams(docs: DataFrame, n: Int): DataFrame =
+    docs.select(col("doc_id"),
+      explode(graft.functions.TextAnalysis.shingles(col("text"), n)).as("gram"))
+
+  /** ceil(`tokens` / `chunkTokens`) in integer arithmetic. */
+  private[graft] def chunkCount(tokens: String, chunkTokens: Int): Column =
+    expr(s"($tokens + ${chunkTokens - 1}) div $chunkTokens")
+
+  /** Shannon entropy in nats, 3 dp, of the counts `n` of one group — an
+    * aggregate, by the identity H = ln N − Σ n·ln n / N, so the inner
+    * term is a plain map-side-combinable SUM (no ratio inside the
+    * aggregate, no second pass). */
+  private[graft] def entropy(n: Column): Column =
+    round(log(sum(n).cast("double")) - sum(n * log(n.cast("double"))) / sum(n), 3)
+
+  /** Text lowercased, stripped to `[a-z0-9 ]`, with runs of spaces
+    * squeezed and the ends trimmed — the normalizing-dedup key. */
+  private[graft] def normText(text: Column): Column =
+    trim(regexp_replace(regexp_replace(lower(text), "[^a-z0-9 ]", ""), " +", " "))
+
+  /** `df` left-joined on doc_id with a keep-list: `__k` is 1 for kept
+    * docs and null otherwise. */
+  private[graft] def keepFlag(keep: DataFrame)(df: DataFrame): DataFrame =
+    df.join(keep.select(col("doc_id"), lit(1).as("__k")), Seq("doc_id"), "left")
+
+  /** An id-ordered pair frame (doc_a, doc_b, …) seen from both ends:
+    * (doc_id, partner, `carry`…) once per endpoint. */
+  private[graft] def bothWays(pairs: DataFrame, carry: Column*): DataFrame =
+    pairs.select(col("doc_a").as("doc_id") +: col("doc_b").as("partner") +: carry: _*)
+      .unionAll(pairs.select(
+        col("doc_b").as("doc_id") +: col("doc_a").as("partner") +: carry: _*))
+
   /** Exploded per-document token counts: (doc_id, tok, cnt). Documents
     * are single-space tokenized (matches the fixture corpus and the
     * ANSI-SQL `string_split(text, ' ')` oracle form exactly).
     */
   def tokenCounts(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+    docs.select(col("doc_id"), explode(words(col("text"))).as("tok"))
       .groupBy(col("doc_id"), col("tok"))
       .agg(count(lit(1)).as("cnt"))
 
   /** Session-memoized full-corpus counts frames — the token-level analog
     * of the [[Dedup]] pair memo: eight registered queries aggregate the
     * exploded (doc_id, tok, cnt) relation and three the bigram form,
-    * each over the same documents table, so with a `datasetKey` the
-    * tokenize+explode+count shuffle is paid once per session instead of
-    * once per consumer (8 corpus scans → 1 at any corpus size — at the
-    * 100 TB point that is the difference between reading the text eight
-    * times and once). A [[Scratch.memo]] keyed by (session, kind,
-    * datasetKey); an entry lives until [[Scratch.invalidate]] — a caller
-    * rewriting the dataset mid-session must invalidate, the pair-memo
-    * contract. Without a key the frame is built per call, exactly as
-    * before.
+    * each over the same documents table, so the tokenize+explode+count
+    * shuffle is paid once per session instead of once per consumer
+    * (8 corpus scans → 1 at any corpus size — at the 100 TB point that
+    * is the difference between reading the text eight times and once).
+    * A [[Scratch.memo]] keyed by (session, kind, datasetKey); an entry
+    * lives until [[Scratch.invalidate]] — a caller rewriting the dataset
+    * mid-session must invalidate, the pair-memo contract.
     *
     * The key is TRUSTED and the docs frame is otherwise ignored on a
     * hit, so `datasetKey` must uniquely identify the EXACT docs frame —
-    * a filtered/derived frame must pass `None` (per-call plan) or its
-    * own distinct key. Unlike the Dedup/Similarity memos, datasetKey
-    * here is a defaulted parameter on many public operators
-    * (qualityFilter, invertedIndex, zipfReport, …), so misuse is
+    * a filtered/derived frame passes its own distinct key. Misuse is
     * guarded: each entry retains the analyzed docs plan it was built
     * from and compares with `sameResult` (full canonicalized-plan
     * equality, not a hash — an Int `semanticHash` could collide and
@@ -70,39 +130,31 @@ object Corpus {
     * silently returning another frame's counts.
     */
   private def sharedCounts(docs: DataFrame, kind: String,
-      datasetKey: Option[String])(build: DataFrame => DataFrame): DataFrame =
-    datasetKey match {
-      case Some(k) =>
-        // sameResult is plan-analysis only (no job): same source +
-        // same transformations compare equal, a different or filtered
-        // frame reusing the key is caught at the call site. The
-        // retained plan is an analyzed tree (columns + source paths),
-        // driver-heap noise next to the memoized frame's blocks.
-        val docsPlan = docs.queryExecution.analyzed
-        val (memoPlan, frame) = Scratch.memo(docs.sparkSession,
-          "corpusCounts", (kind, k))(
-          (docsPlan, build(docs).transform(Scratch.stageShared)))
-        require(memoPlan.sameResult(docsPlan),
-          s"shared counts memo for datasetKey='$k' (kind=$kind) was built " +
-            "from a semantically different docs frame — a datasetKey must " +
-            "uniquely identify the exact docs frame; pass None (or a " +
-            "distinct key) for filtered/derived frames, or " +
-            "Scratch.invalidate first if the dataset was rewritten")
-        frame
-      case None =>
-        build(docs).transform(Scratch.staged)
-    }
+      datasetKey: String)(build: DataFrame => DataFrame): DataFrame = {
+    // sameResult is plan-analysis only (no job): same source + same
+    // transformations compare equal, a different or filtered frame
+    // reusing the key is caught at the call site. The retained plan is
+    // an analyzed tree (columns + source paths), driver-heap noise next
+    // to the memoized frame's blocks.
+    val docsPlan = docs.queryExecution.analyzed
+    val (memoPlan, frame) = Scratch.memo(docs.sparkSession,
+      "corpusCounts", (kind, datasetKey))(
+      (docsPlan, build(docs).transform(Scratch.stageShared)))
+    require(memoPlan.sameResult(docsPlan),
+      s"shared counts memo for datasetKey='$datasetKey' (kind=$kind) was " +
+        "built from a semantically different docs frame — a datasetKey " +
+        "must uniquely identify the exact docs frame; pass a distinct key " +
+        "for filtered/derived frames, or Scratch.invalidate first if the " +
+        "dataset was rewritten")
+    frame
+  }
 
-  /** [[tokenCounts]] through the session memo (keyed) or as per-call
-    * scratch (no key) — the multi-consumer entry point. */
-  def tokenCountsShared(docs: DataFrame,
-      datasetKey: Option[String] = None): DataFrame =
+  /** [[tokenCounts]] through the session memo. */
+  def tokenCountsShared(docs: DataFrame, datasetKey: String): DataFrame =
     sharedCounts(docs, "tok", datasetKey)(tokenCounts)
 
-  /** [[bigramCounts]] through the session memo (keyed) or as per-call
-    * scratch (no key). */
-  def bigramCountsShared(docs: DataFrame,
-      datasetKey: Option[String] = None): DataFrame =
+  /** [[bigramCounts]] through the session memo. */
+  def bigramCountsShared(docs: DataFrame, datasetKey: String): DataFrame =
     sharedCounts(docs, "bg", datasetKey)(bigramCounts)
 
   /** Forwards to [[Scratch.invalidate]], which drops EVERY memo kind of
@@ -121,17 +173,14 @@ object Corpus {
     * compute them with the identical op order, so the flag is stable);
     * the reported ratios are rounded for the result surface.
     */
-  def qualityFilter(docs: DataFrame, datasetKey: Option[String] = None): DataFrame = {
+  def qualityFilter(docs: DataFrame, datasetKey: String): DataFrame = {
     val minTokens = 20
     val maxDupRatio = 0.6
     val maxTopRatio = 0.15
     val total = col("n_tokens").cast("double")
     val dup = lit(1.0) - col("distinct_tokens").cast("double") / total
     val top = col("top_count").cast("double") / total
-    // single consumer: un-keyed calls keep the streamlined one-pass plan
-    // (no materialization); keyed calls read the shared counts frame
-    datasetKey.map(_ => tokenCountsShared(docs, datasetKey))
-      .getOrElse(tokenCounts(docs))
+    tokenCountsShared(docs, datasetKey)
       .groupBy(col("doc_id"))
       .agg(sum(col("cnt")).cast("int").as("n_tokens"),
         count(lit(1)).cast("int").as("distinct_tokens"),
@@ -225,12 +274,10 @@ object Corpus {
     */
   def decontaminateMany(docs: DataFrame, benches: Seq[(String, DataFrame)],
       n: Int = 8): DataFrame = {
-    val grams = (d: DataFrame) => d.select(col("doc_id"),
-      explode(graft.functions.TextAnalysis.shingles(col("text"), n)).as("gram"))
     val tagged = benches.map { case (name, b) =>
-      grams(b).select(lit(name).as("eval_set"), col("gram")).distinct()
+      grams(b, n).select(lit(name).as("eval_set"), col("gram")).distinct()
     }.reduce(_ unionAll _)
-    grams(docs)
+    grams(docs, n)
       .join(broadcast(tagged), "gram")
       .groupBy(col("doc_id"), col("eval_set"))
       .agg(count(lit(1)).cast("int").as("n_hit_grams"))
@@ -270,8 +317,7 @@ object Corpus {
     * full text never travels past its own stage's shuffle; the
     * deliverable joins back to `docs` by doc_id.
     */
-  def curate(docs: DataFrame, pairs: DataFrame,
-      datasetKey: Option[String] = None): DataFrame = {
+  def curate(docs: DataFrame, pairs: DataFrame, datasetKey: String): DataFrame = {
     val qualityKeep =
       qualityFilter(docs, datasetKey)
       .filter(col("keep")).select(col("doc_id"))
@@ -295,12 +341,8 @@ object Corpus {
     * counts distinct leaked grams without a countDistinct.
     */
   def decontaminate(docs: DataFrame, bench: DataFrame, n: Int = 8): DataFrame = {
-    val benchGrams = bench
-      .select(explode(graft.functions.TextAnalysis.shingles(col("text"), n)).as("gram"))
-      .distinct()
-    docs
-      .select(col("doc_id"),
-        explode(graft.functions.TextAnalysis.shingles(col("text"), n)).as("gram"))
+    val benchGrams = grams(bench, n).select(col("gram")).distinct()
+    grams(docs, n)
       .join(broadcast(benchGrams), "gram")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).cast("int").as("n_hit_grams"))
@@ -313,63 +355,31 @@ object Corpus {
     * packing. Emits each document's global token `offset`, its `bin`, and
     * its starting `bin_offset`.
     *
-    * Scale shape: the global prefix sum is computed DISTRIBUTED, not with
-    * a single-partition window — range-repartition by the order key, an
-    * intra-partition running sum (parallel window per partition), then a
-    * per-partition-totals exclusive cumsum (one tiny row per partition)
-    * broadcast back. Offsets depend only on the total order (key, doc_id),
-    * not on where partitions were cut, so the result is identical on any
-    * cluster size. The ranged frame is localCheckpoint'ed because range
-    * boundaries are sampled per materialization — both consumers (rows
-    * and totals) must observe the SAME partitioning.
+    * Scale shape: the global prefix sum is [[Ranks.globalPrefixSum]] —
+    * distributed, never a single-partition window — and the offset is
+    * its exclusive form (running sum minus the doc's own tokens). Token
+    * counts are integers, so the offsets depend only on the total order
+    * (key, doc_id), not on where partitions were cut.
     */
   def packSequences(docs: DataFrame, budget: Int = 2048): DataFrame = {
     val sized = docs.select(
       col("doc_id"),
       graft.functions.TextAnalysis.tokenCount(col("text")).as("n_tokens"),
       pmod(docHash(col("doc_id")), lit(1000000007L)).as("__key"))
-    tokenPrefixSum(sized, Seq(col("__key"), col("doc_id")))
-      .select(col("doc_id"), col("n_tokens"), col("tok_offset"))
+    tokenOffsets(sized, Seq(col("__key"), col("doc_id")))
       .withColumn("bin", expr(s"tok_offset div $budget"))
       .withColumn("bin_offset", pmod(col("tok_offset"), lit(budget.toLong)))
       .orderBy(col("doc_id"))
   }
 
-  /** The distributed EXCLUSIVE prefix sum over `n_tokens` under the total
-    * order `order` — the engine's one prefix-sum implementation, shared
-    * by [[packSequences]] (hash order) and [[curriculumEpochs]] (merit
-    * order). Range-repartition by the order key, an intra-partition
-    * running sum (parallel window per partition), then a per-partition-
-    * totals exclusive cumsum (one tiny row per partition) broadcast
-    * back. Offsets depend only on the total order — which MUST be
-    * deterministic (include a tie-break key) — not on where partitions
-    * were cut, so the result is identical on any cluster size. The
-    * ranged frame is localCheckpoint'ed because range boundaries are
-    * sampled per materialization, and both consumers (rows and totals)
-    * must observe the SAME partitioning. Returns the input columns plus
-    * `tok_offset`.
-    */
-  private def tokenPrefixSum(sized: DataFrame, order: Seq[Column]): DataFrame = {
-    val ranged = sized
-      .repartitionByRange(order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .transform(Scratch.staged)
-    val wRow = Window.partitionBy(col("__pid"))
-      .orderBy(order: _*)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wPart = Window.orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val partOffsets = ranged.groupBy(col("__pid"))
-      .agg(sum(col("n_tokens")).as("__ptot"))
-      .withColumn("__poff", coalesce(sum(col("__ptot")).over(wPart), lit(0L)))
-      .select(col("__pid"), col("__poff"))
-    ranged
-      .withColumn("__local",
-        coalesce(sum(col("n_tokens")).over(wRow).cast("long"), lit(0L)))
-      .join(broadcast(partOffsets), "__pid")
-      .withColumn("tok_offset", col("__local") + col("__poff"))
-      .drop("__pid", "__local", "__poff")
-  }
+  /** (doc_id, n_tokens, tok_offset): the EXCLUSIVE prefix sum of
+    * `n_tokens` under the total order `order`, shared by
+    * [[packSequences]] (hash order) and [[curriculumEpochs]] (merit
+    * order). */
+  private def tokenOffsets(sized: DataFrame, order: Seq[Column]): DataFrame =
+    Ranks.globalPrefixSum(sized, order, "n_tokens", "__cum")
+      .select(col("doc_id"), col("n_tokens"),
+        (col("__cum") - col("n_tokens")).as("tok_offset"))
 
   /** Curriculum epoch assignment: order the corpus by MERIT (the
     * bit-portable quality score, best first), run the token prefix sum,
@@ -378,7 +388,7 @@ object Corpus {
     * quality-curriculum trainer (clean-data-first schedules; anneal or
     * drop the tail) consumes the corpus in epoch order. The merit-order
     * twin of [[packSequences]]' hash-order layout, riding the same
-    * distributed prefix sum ([[tokenPrefixSum]]) — ordering 100 TB by
+    * distributed prefix sum ([[Ranks.globalPrefixSum]]) — ordering 100 TB by
     * quality costs one range exchange, never a global sort to one node.
     * Ties break to the lowest doc_id; the negated score keys the
     * ascending range partitioner, so best-quality rows land first.
@@ -388,7 +398,7 @@ object Corpus {
       col("doc_id"),
       graft.functions.TextAnalysis.tokenCount(col("text")).as("n_tokens"),
       (-graft.functions.TextAnalysis.qualityScore(col("text"))).as("__negq"))
-    tokenPrefixSum(sized, Seq(col("__negq"), col("doc_id")))
+    tokenOffsets(sized, Seq(col("__negq"), col("doc_id")))
       // the score itself stays OFF the output surface deliberately: the
       // ORDER consumes the unrounded, bit-portable double (identical on
       // any ANSI engine), but a rounded score column would sit on the
@@ -422,9 +432,7 @@ object Corpus {
       .select(col("lang"), col("n_docs"), col("rate"))
     docs.select(col("doc_id"), col("lang"))
       .join(broadcast(rated), "lang")
-      .withColumn("keep",
-        pmod(docHash(col("doc_id")), lit(1000000L)) <
-          floor(col("rate") * lit(1000000.0)))
+      .withColumn("keep", hashDraw(col("rate")))
       .groupBy(col("lang"))
       .agg(first(col("n_docs")).as("n_docs"),
         round(first(col("rate")), 4).as("keep_rate"),
@@ -443,8 +451,7 @@ object Corpus {
     val n = graft.functions.TextAnalysis.tokenCount(col("text")).cast("long")
     docs
       .select(col("doc_id"), n.as("n_tokens"))
-      .withColumn("n_chunks",
-        expr(s"(n_tokens + ${chunkTokens - 1}) div $chunkTokens"))
+      .withColumn("n_chunks", chunkCount("n_tokens", chunkTokens))
       .select(col("doc_id"), col("n_tokens"),
         explode(sequence(lit(0L), col("n_chunks") - 1)).as("chunk_idx"))
       .select(col("doc_id"), col("n_tokens").cast("int").as("n_tokens"),
@@ -468,10 +475,9 @@ object Corpus {
     * partitioning, so the cap costs no extra shuffle.
     */
   def invertedIndex(docs: DataFrame, maxPostings: Int = 20,
-      datasetKey: Option[String] = None): DataFrame = {
+      datasetKey: String): DataFrame = {
     val w = Window.partitionBy(col("tok")).orderBy(col("doc_id"))
-    datasetKey.map(_ => tokenCountsShared(docs, datasetKey))
-      .getOrElse(tokenCounts(docs))
+    tokenCountsShared(docs, datasetKey)
       .withColumn("rn", row_number().over(w))
       .groupBy(col("tok").as("token"))
       .agg(count(lit(1)).as("df"),
@@ -499,29 +505,28 @@ object Corpus {
     * the 1-row corpus total is broadcast. Two aggregations + one join,
     * all over the exploded (doc_id, tok) relation.
     */
-  def unigramSurprisal(docs: DataFrame,
-      datasetKey: Option[String] = None): DataFrame = {
-    // Three consumers read the exploded counts frame (the LM aggregation,
-    // the corpus total, and the probe side of the join) — without a
-    // materialization each re-runs tokenize/explode over the whole corpus,
-    // i.e. 3 corpus scans where 1 suffices. Same discipline as the
-    // minhash shingle frame (Dedup.minhashPairs): localCheckpoint the
-    // post-aggregation (doc_id, tok, cnt) frame — orders of magnitude
-    // smaller than the text it replaces re-scanning. Lifetime: keyed
-    // calls ride the session counts memo (shared with every other
-    // full-corpus token consumer); un-keyed checkpoints are SCRATCH —
-    // registered for deterministic release at the harness's next query
-    // boundary (Scratch.releaseAll).
-    val tc = tokenCountsShared(docs, datasetKey)
-    val unigram = tc.groupBy(col("tok")).agg(sum(col("cnt")).as("tf"))
-    val total = tc.agg(sum(col("cnt")).cast("double").as("corpus_tokens"))
-    tc.join(unigram, "tok")
+  def unigramSurprisal(docs: DataFrame, datasetKey: String): DataFrame =
+    surprisal(tokenCountsShared(docs, datasetKey), "tok", "tf", "tokens")
+
+  /** Per-document average surprisal under the corpus' own LM over a
+    * (doc_id, `gram`, cnt) counts frame: the LM aggregate (`lm` per
+    * gram), the 1-row corpus total, their join, then
+    * `-Σ cnt·log2(lm / total) / Σ cnt` per doc, reported with the doc's
+    * gram count `n_<unit>`. The counts frame has three consumers (the
+    * LM, the total and the probe side of the join), so it is always the
+    * session-shared, materialized one — never three tokenize passes.
+    */
+  private def surprisal(counts: DataFrame, gram: String, lm: String,
+      unit: String): DataFrame = {
+    val model = counts.groupBy(col(gram)).agg(sum(col("cnt")).as(lm))
+    val total = counts.agg(sum(col("cnt")).cast("double").as(s"corpus_$unit"))
+    counts.join(model, gram)
       .crossJoin(broadcast(total))
       .groupBy(col("doc_id"))
-      .agg(sum(col("cnt")).cast("int").as("n_tokens"),
+      .agg(sum(col("cnt")).cast("int").as(s"n_$unit"),
         round(
           -sum(col("cnt").cast("double") *
-            log2(col("tf").cast("double") / col("corpus_tokens"))) /
+            log2(col(lm).cast("double") / col(s"corpus_$unit"))) /
             sum(col("cnt")).cast("double"), 4).as("avg_surprisal"))
       .orderBy(col("doc_id"))
   }
@@ -532,7 +537,7 @@ object Corpus {
     * counts DOWN, it is not empty.
     */
   def bigramCounts(docs: DataFrame): DataFrame = {
-    val toks = split(col("text"), " ")
+    val toks = words(col("text"))
     val idx = when(size(toks) >= 2, sequence(lit(1), size(toks) - 1))
       .otherwise(array().cast("array<int>"))
     val bgs = transform(idx, i =>
@@ -554,24 +559,8 @@ object Corpus {
     * skew-free) and NOT broadcast; one shuffle join + two aggregations
     * over the exploded relation; only the 1-row total is broadcast.
     */
-  def bigramSurprisal(docs: DataFrame,
-      datasetKey: Option[String] = None): DataFrame = {
-    // Same 3-consumer shape as unigramSurprisal: materialize the exploded
-    // (doc_id, bg, cnt) frame once instead of re-running the bigram
-    // generate+explode three times over the corpus.
-    val bc = bigramCountsShared(docs, datasetKey)
-    val lm = bc.groupBy(col("bg")).agg(sum(col("cnt")).as("bf"))
-    val total = bc.agg(sum(col("cnt")).cast("double").as("corpus_bigrams"))
-    bc.join(lm, "bg")
-      .crossJoin(broadcast(total))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("cnt")).cast("int").as("n_bigrams"),
-        round(
-          -sum(col("cnt").cast("double") *
-            log2(col("bf").cast("double") / col("corpus_bigrams"))) /
-            sum(col("cnt")).cast("double"), 4).as("avg_surprisal"))
-      .orderBy(col("doc_id"))
-  }
+  def bigramSurprisal(docs: DataFrame, datasetKey: String): DataFrame =
+    surprisal(bigramCountsShared(docs, datasetKey), "bg", "bf", "bigrams")
 
   /** CCNet-style perplexity bucketing: score every document with an
     * n-gram language-model surprisal, rank the corpus, and cut it into
@@ -601,8 +590,7 @@ object Corpus {
     * scores (hash-stable across engines, q94/q99-proven) with doc_id as
     * the tie-break, so the cut is deterministic everywhere.
     */
-  def perplexityBuckets(docs: DataFrame,
-      datasetKey: Option[String] = None): DataFrame = {
+  def perplexityBuckets(docs: DataFrame, datasetKey: String): DataFrame = {
     val uni = unigramSurprisal(docs, datasetKey)
       .select(col("doc_id"), col("avg_surprisal").as("__u"))
     val bi = bigramSurprisal(docs, datasetKey)
@@ -632,8 +620,7 @@ object Corpus {
     * (coverage 1.0 via the null-join coalesce).
     */
   def vocabCoverage(docs: DataFrame,
-      ks: Seq[Int] = Seq(10, 20, 50, 100),
-      datasetKey: Option[String] = None): DataFrame = {
+      ks: Seq[Int] = Seq(10, 20, 50, 100), datasetKey: String): DataFrame = {
     require(ks.nonEmpty && ks.forall(_ > 0), "vocabCoverage needs positive probes")
     import docs.sparkSession.implicits._
     val tc = tokenCountsShared(docs, datasetKey)
@@ -674,7 +661,7 @@ object Corpus {
     * after the count floor is vocabulary-sized, not corpus-sized.
     */
   def collocations(docs: DataFrame, minCount: Long = 5,
-      topK: Int = 20, datasetKey: Option[String] = None): DataFrame = {
+      topK: Int = 20, datasetKey: String): DataFrame = {
     val bc = bigramCountsShared(docs, datasetKey)
     val tc = tokenCountsShared(docs, datasetKey)
     val bf = bc.groupBy(col("bg")).agg(sum(col("cnt")).as("n"))
@@ -682,8 +669,8 @@ object Corpus {
     val tf = tc.groupBy(col("tok")).agg(sum(col("cnt")).as("tf"))
     val totT = tc.agg(sum(col("cnt")).cast("double").as("tt"))
     bf.filter(col("n") >= minCount)
-      .withColumn("__a", element_at(split(col("bg"), " "), 1))
-      .withColumn("__b", element_at(split(col("bg"), " "), 2))
+      .withColumn("__a", element_at(words(col("bg")), 1))
+      .withColumn("__b", element_at(words(col("bg")), 2))
       .join(tf.select(col("tok").as("__a"), col("tf").as("__tfa")), "__a")
       .join(tf.select(col("tok").as("__b"), col("tf").as("__tfb")), "__b")
       .crossJoin(broadcast(totB))
@@ -712,9 +699,7 @@ object Corpus {
     docs.select(col("doc_id"), col("lang"), col("n_chars"))
       .crossJoin(broadcast(mx))
       .withColumn("keep",
-        pmod(docHash(col("doc_id")), lit(1000000L)) <
-          floor(col("n_chars").cast("double") / col("max_chars") *
-            lit(rate) * lit(1000000.0)))
+        hashDraw(col("n_chars").cast("double") / col("max_chars") * lit(rate)))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("keep"), 1L).otherwise(0L)).as("n_kept"),
@@ -760,36 +745,49 @@ object Corpus {
       .select(col("doc_id"), size(col("__toks")).cast("double").as("dl"),
         filter(col("__toks"), t => t.isin(terms: _*)).as("__kept"))
       .transform(Scratch.staged)
-    val stats = perDoc.agg(count(lit(1)).cast("double").as("n_docs"),
-      avg(col("dl")).as("avgdl"))
     // tf's two consumers (df and the score join) share the aggregate's
     // exchange via ReusedExchange; the frame is query-term rows only.
-    val tf = perDoc
-      .select(col("doc_id"), col("dl"), explode(col("__kept")).as("tok"))
-      .groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).as("cnt"), first(col("dl")).as("dl"))
-    val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).cast("double").as("df"))
-    tf.join(broadcast(dfreq), "tok")
-      .crossJoin(broadcast(stats))
-      .groupBy(col("doc_id"))
-      .agg(round(sum(bm25Score), 4).as("bm25"),
-        count(lit(1)).cast("int").as("n_terms"))
+    val (tf, stats) = bm25Terms(perDoc)
+    bm25Rollup(tf.join(broadcast(docFreq(tf)), "tok")
+        .crossJoin(broadcast(stats)), col("doc_id"))
       .orderBy(col("bm25").desc, col("doc_id"))
       .limit(topK)
   }
 
-  /** The per-(doc, term) BM25 summand over columns (cnt, dl, df, n_docs,
-    * avgdl) at k1 = 1.2, b = 0.75 — one expression shared by
-    * [[bm25TopDocs]], [[bm25Retrieval]] and [[chunkRetrieval]] so all
+  /** BM25 summed per `keys` over rows carrying (cnt, dl, df, n_docs,
+    * avgdl): (keys…, bm25 rounded to 4 dp, n_terms). The per-(doc, term)
+    * summand at k1 = 1.2, b = 0.75 is written here once for
+    * [[bm25TopDocs]], [[bm25Retrieval]] and [[chunkRetrieval]], so all
     * three stay FP-op-order-identical to the oracle.
     */
-  private def bm25Score: Column = {
+  private def bm25Rollup(scored: DataFrame, keys: Column*): DataFrame = {
     val (k1, b) = (1.2, 0.75)
     val idf = log(lit(1.0) +
       (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-    idf * (col("cnt").cast("double") * (lit(k1) + lit(1.0))) /
+    val score = idf * (col("cnt").cast("double") * (lit(k1) + lit(1.0))) /
       (col("cnt").cast("double") +
         lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl")))
+    scored.groupBy(keys: _*)
+      .agg(round(sum(score), 4).as("bm25"),
+        count(lit(1)).cast("int").as("n_terms"))
+  }
+
+  /** A term frame's document frequency per term: (tok, df). */
+  private def docFreq(tf: DataFrame): DataFrame =
+    tf.groupBy(col("tok")).agg(count(lit(1)).cast("double").as("df"))
+
+  /** The single-scan BM25 frames over a staged per-doc frame of
+    * (doc_id, dl, __kept — the doc's query-term occurrences pruned in
+    * row): the term frame (doc_id, tok, cnt, dl) and the 1-row corpus
+    * stats (n_docs, avgdl), both read from the same blocks. */
+  private def bm25Terms(perDoc: DataFrame): (DataFrame, DataFrame) = {
+    val tf = perDoc
+      .select(col("doc_id"), col("dl"), explode(col("__kept")).as("tok"))
+      .groupBy(col("doc_id"), col("tok"))
+      .agg(count(lit(1)).as("cnt"), first(col("dl")).as("dl"))
+    val stats = perDoc.agg(count(lit(1)).cast("double").as("n_docs"),
+      avg(col("dl")).as("avgdl"))
+    (tf, stats)
   }
 
   /** Batch BM25 retrieval join — per-query top-k over a query TABLE of
@@ -849,13 +847,7 @@ object Corpus {
             filter(col("__toks"),
               t => array_contains(col("__qs"), t)).as("__kept"))
           .transform(Scratch.staged)
-        val tf0 = perDoc
-          .select(col("doc_id"), col("dl"), explode(col("__kept")).as("tok"))
-          .groupBy(col("doc_id"), col("tok"))
-          .agg(count(lit(1)).as("cnt"), first(col("dl")).as("dl"))
-        val st = perDoc.agg(count(lit(1)).cast("double").as("n_docs"),
-          avg(col("dl")).as("avgdl"))
-        (tf0, st)
+        bm25Terms(perDoc)
       } else {
         val st = docs.agg(count(lit(1)).cast("double").as("n_docs"),
           avg(size(toks).cast("double")).as("avgdl"))
@@ -864,13 +856,11 @@ object Corpus {
           .transform(Scratch.staged)
         (tf0, st)
       }
-    val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).cast("double").as("df"))
-    val scored = tf.join(Similarity.queryRegime(dfreq, broadcastQueries), "tok")
-      .crossJoin(broadcast(stats))
-      .join(Similarity.queryRegime(qterms, broadcastQueries), "tok")
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(round(sum(bm25Score), 4).as("bm25"),
-        count(lit(1)).cast("int").as("n_terms"))
+    val scored = bm25Rollup(
+      tf.join(Similarity.queryRegime(docFreq(tf), broadcastQueries), "tok")
+        .crossJoin(broadcast(stats))
+        .join(Similarity.queryRegime(qterms, broadcastQueries), "tok"),
+      col("query_id"), col("doc_id"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("bm25").desc, col("doc_id"))
     scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= topK)
@@ -917,8 +907,7 @@ object Corpus {
     val lens = docs
       .select(col("doc_id"), size(toksArr).cast("long").as("__n"))
       .select(col("doc_id"), col("__n"),
-        explode(sequence(lit(0L),
-          expr(s"(__n + ${chunkTokens - 1}) div $chunkTokens") - 1))
+        explode(sequence(lit(0L), chunkCount("__n", chunkTokens) - 1))
           .as("chunk_idx"))
       .select(col("doc_id"), col("chunk_idx"),
         least(lit(chunkTokens.toLong),
@@ -933,14 +922,12 @@ object Corpus {
       .groupBy(col("doc_id"), col("chunk_idx"), col("tok"))
       .agg(count(lit(1)).as("cnt"))
       .transform(Scratch.staged)
-    val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).cast("double").as("df"))
-    val scored = tf.join(broadcast(dfreq), "tok")
-      .join(lens, Seq("doc_id", "chunk_idx"))
-      .crossJoin(broadcast(stats))
-      .join(broadcast(qterms), "tok")
-      .groupBy(col("query_id"), col("doc_id"), col("chunk_idx"))
-      .agg(round(sum(bm25Score), 4).as("bm25"),
-        count(lit(1)).cast("int").as("n_terms"))
+    val scored = bm25Rollup(
+      tf.join(broadcast(docFreq(tf)), "tok")
+        .join(lens, Seq("doc_id", "chunk_idx"))
+        .crossJoin(broadcast(stats))
+        .join(broadcast(qterms), "tok"),
+      col("query_id"), col("doc_id"), col("chunk_idx"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("bm25").desc, col("doc_id"), col("chunk_idx"))
     scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= topK)
@@ -1028,9 +1015,7 @@ object Corpus {
         lit(tokenBudget.toDouble) * col("target_w") /
           col("avail_tokens").cast("double")))
     perDoc.join(broadcast(rates), "source")
-      .withColumn("keep",
-        pmod(docHash(col("doc_id")), lit(1000000L)) <
-          floor(col("rate") * lit(1000000.0)))
+      .withColumn("keep", hashDraw(col("rate")))
       .groupBy(col("source"))
       .agg(first(col("n_docs")).as("n_docs"),
         first(col("avail_tokens")).cast("long").as("avail_tokens"),
@@ -1101,7 +1086,7 @@ object Corpus {
     * broken by term; the surfaced score is rounded.
     */
   def tfidfTopTerms(docs: DataFrame, topK: Int = 3,
-      datasetKey: Option[String] = None): DataFrame = {
+      datasetKey: String): DataFrame = {
     // Two consumers (the scored frame and its df side) — materialize the
     // exploded counts once, as in the surprisal family.
     val tc = tokenCountsShared(docs, datasetKey)
@@ -1147,11 +1132,7 @@ object Corpus {
     */
   def leakageAudit(docs: DataFrame, datasetKey: String): DataFrame = {
     val pairs = Dedup.minhashPairsShared(docs, datasetKey)
-    val sym = pairs
-      .select(col("doc_a").as("doc_id"), col("doc_b").as("partner"),
-        col("jaccard"))
-      .unionAll(pairs.select(col("doc_b").as("doc_id"),
-        col("doc_a").as("partner"), col("jaccard")))
+    val sym = bothWays(pairs, col("jaccard"))
     val splits = splitAssign(docs).select(col("doc_id"), col("split"))
     // shuffle joins on doc ids, PINNED (Par.shuffleJoin): both the split
     // flags and the pair frame grow with the corpus, and AQE's "measured
@@ -1184,10 +1165,7 @@ object Corpus {
     */
   def leakageFreeSplit(docs: DataFrame, datasetKey: String): DataFrame = {
     val pairs = Dedup.minhashPairsShared(docs, datasetKey)
-    val sym = pairs
-      .select(col("doc_a").as("doc_id"), col("doc_b").as("partner"))
-      .unionAll(pairs.select(col("doc_b").as("doc_id"),
-        col("doc_a").as("partner")))
+    val sym = bothWays(pairs)
     val splits = splitAssign(docs).select(col("doc_id"), col("split"))
     val leaky = splits.join(sym, "doc_id")
       .join(splits.select(col("doc_id").as("partner"),
@@ -1217,10 +1195,8 @@ object Corpus {
     * single-partition window; the final regression is a 1-row aggregate
     * (`regr_slope`, sum-based and engine-portable inside round(4)).
     */
-  def zipfReport(docs: DataFrame,
-      datasetKey: Option[String] = None): DataFrame = {
-    val tf = datasetKey.map(_ => tokenCountsShared(docs, datasetKey))
-      .getOrElse(tokenCounts(docs))
+  def zipfReport(docs: DataFrame, datasetKey: String): DataFrame = {
+    val tf = tokenCountsShared(docs, datasetKey)
       .groupBy(col("tok")).agg(sum(col("cnt")).as("f"))
     val ranked = Ranks.globalRowNumber(tf,
       Seq(col("f").desc, col("tok")), "rk")
@@ -1319,7 +1295,7 @@ object Corpus {
     */
   def dedupSpans(docs: DataFrame): DataFrame = {
     val n = 3
-    val toks = split(col("text"), " ")
+    val toks = words(col("text"))
     // ceil(size/n) blocks; sequence(0,-1) counts DOWN, so guard empties
     val base = docs.select(col("doc_id"), toks.as("__t"))
       .withColumn("__nb", when(size(col("__t")) > 0,
@@ -1403,7 +1379,7 @@ object Corpus {
     val contextLen = 512
     val binWidth = 64
     val kept = least(col("n_tok"), lit(contextLen.toLong))
-    docs.select(size(split(col("text"), " ")).cast("long").as("n_tok"))
+    docs.select(wordCount(col("text")).as("n_tok"))
       .withColumn("bin", floor(col("n_tok") / binWidth).cast("long"))
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n_docs"),
@@ -1431,7 +1407,7 @@ object Corpus {
     */
   def tokenGini(docs: DataFrame): DataFrame = {
     val d = docs.select(col("source"), col("doc_id"),
-      size(split(col("text"), " ")).cast("long").as("n_tok"))
+      wordCount(col("text")).as("n_tok"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source")).orderBy(col("n_tok"), col("doc_id"))
     d.withColumn("i", row_number().over(w).cast("long"))
@@ -1462,7 +1438,7 @@ object Corpus {
     val k = 5
     val minDocs = 3
     docs
-      .select(array_join(slice(split(col("text"), " "), 1, k), " ")
+      .select(array_join(slice(words(col("text")), 1, k), " ")
         .as("prefix"), col("doc_id"), col("source"))
       .groupBy(col("prefix"))
       .agg(count(lit(1)).as("n_docs"),
@@ -1474,9 +1450,8 @@ object Corpus {
 
   /** Character-level Shannon entropy per language — the "does this text
     * look like language at all?" quality signal (mojibake, base64 blobs,
-    * and markup soup sit far from natural-language char entropy). Same
-    * sum-friendly identity as [[sourceLangMix]], over the char
-    * distribution.
+    * and markup soup sit far from natural-language char entropy).
+    * [[entropy]] over the char distribution.
     *
     * Scale shape: the char explode is the only amplification (bounded by
     * corpus chars); counts combine map-side and the entropy aggregation
@@ -1491,9 +1466,7 @@ object Corpus {
     counts.groupBy(col("lang"))
       .agg(sum(col("n")).as("n_chars"),
         count(lit(1)).as("distinct_chars"),
-        round(log(sum(col("n")).cast("double")) -
-          sum(col("n") * log(col("n").cast("double"))) / sum(col("n")), 3)
-          .as("char_entropy"))
+        entropy(col("n")).as("char_entropy"))
       .orderBy(col("lang"))
   }
 
@@ -1514,7 +1487,7 @@ object Corpus {
     val topK = 20
     val st = docs
       .select(col("source"),
-        explode(array_distinct(split(col("text"), " "))).as("token"))
+        explode(array_distinct(words(col("text")))).as("token"))
       .distinct()
     val sizes = st.groupBy(col("source"))
       .agg(count(lit(1)).as("vocab"))
@@ -1537,19 +1510,6 @@ object Corpus {
       .limit(topK)
   }
 
-  /** Per-source language-mixture report: how many languages each crawl
-    * source emits, the dominant language's share, and the Shannon entropy
-    * (nats) of the mix. The curation dashboard's "is this source really
-    * monolingual?" probe — a source whose entropy drifts up between
-    * snapshots started leaking another language (template change, domain
-    * takeover) and needs its langid gate re-run.
-    *
-    * Entropy uses the aggregation-friendly identity
-    * H = ln(N) - (1/N) * sum(n_i * ln(n_i)) so the inner term is a plain
-    * map-side-combinable SUM over (source, lang) counts — no ratio inside
-    * the aggregate, no second pass. Two hash aggregations total, both
-    * partial-combined; the wide text column never shuffles.
-    */
   /** Vocabulary drift between two corpus snapshots (here: the doc_id
     * parity halves, standing in for consecutive crawl snapshots): per
     * token, the smoothed IDF ln((N+1)/(df+1)) in each half and the top-k
@@ -1568,7 +1528,7 @@ object Corpus {
     val k = 20
     val toks = docs
       .select(col("doc_id"), (col("doc_id") % 2 === 0).as("half_a"),
-        explode(array_distinct(split(col("text"), " "))).as("token"))
+        explode(array_distinct(words(col("text")))).as("token"))
     val df = toks.groupBy(col("token"))
       .agg(count(when(col("half_a"), lit(1))).as("df_a"),
         count(when(!col("half_a"), lit(1))).as("df_b"))
@@ -1591,6 +1551,17 @@ object Corpus {
       .limit(k)
   }
 
+  /** Per-source language-mixture report: how many languages each crawl
+    * source emits, the dominant language's share, and the Shannon entropy
+    * (nats) of the mix. The curation dashboard's "is this source really
+    * monolingual?" probe — a source whose entropy drifts up between
+    * snapshots started leaking another language (template change, domain
+    * takeover) and needs its langid gate re-run.
+    *
+    * Entropy is [[entropy]] over the (source, lang) counts. Two hash
+    * aggregations total, both partial-combined; the wide text column
+    * never shuffles.
+    */
   def sourceLangMix(docs: DataFrame): DataFrame = {
     val counts = docs.groupBy(col("source"), col("lang"))
       .agg(count(lit(1)).as("n"))
@@ -1600,9 +1571,7 @@ object Corpus {
         count(lit(1)).as("n_langs"),
         round(max(col("n")).cast("double") / sum(col("n")), 4)
           .as("dominant_share"),
-        round(log(sum(col("n")).cast("double")) -
-          sum(col("n") * log(col("n").cast("double"))) / sum(col("n")), 3)
-          .as("lang_entropy"))
+        entropy(col("n")).as("lang_entropy"))
       .orderBy(col("source"))
   }
 
@@ -1618,7 +1587,7 @@ object Corpus {
     */
   def readability(docs: DataFrame): DataFrame = {
     val counted = docs.select(col("lang"),
-      size(split(col("text"), " ")).cast("long").as("w"),
+      wordCount(col("text")).as("w"),
       size(regexp_extract_all(col("text"), lit("[.!?]"), lit(0))).cast("long")
         .as("s"),
       size(regexp_extract_all(lower(col("text")), lit("[aeiouy]+"), lit(0)))
@@ -1650,9 +1619,7 @@ object Corpus {
     * the scan projection and never stored.
     */
   def normDupRate(docs: DataFrame): DataFrame = {
-    val norm = trim(regexp_replace(regexp_replace(lower(col("text")),
-      "[^a-z0-9 ]", ""), " +", " "))
-    docs.select(col("source"), col("text"), norm.as("__norm"))
+    docs.select(col("source"), col("text"), normText(col("text")).as("__norm"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         countDistinct(col("text")).as("distinct_raw"),
@@ -1675,10 +1642,8 @@ object Corpus {
     */
   def dedupTokenSavings(docs: DataFrame, keep: DataFrame): DataFrame = {
     val toks = docs.select(col("doc_id"), col("source"),
-      (length(col("text")) - length(translate(col("text"), " ", "")) + 1)
-        .cast("long").as("toks"))
-    toks.join(keep.select(col("doc_id"), lit(1).as("__k")),
-        Seq("doc_id"), "left")
+      wordCount(col("text")).as("toks"))
+    toks.transform(keepFlag(keep))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("__k").isNotNull, 1L).otherwise(0L)).as("n_kept"),
@@ -1701,9 +1666,7 @@ object Corpus {
     */
   def sqrtBudgetAllocation(docs: DataFrame): DataFrame = {
     val budgetTokens = 500000L
-    val perSource = docs.select(col("source"),
-        (length(col("text")) - length(translate(col("text"), " ", "")) + 1)
-          .cast("long").as("toks"))
+    val perSource = docs.select(col("source"), wordCount(col("text")).as("toks"))
       .groupBy(col("source")).agg(sum(col("toks")).as("tokens"))
       .withColumn("w", sqrt(col("tokens").cast("double")))
     val total = perSource.agg(sum(col("w")).as("sum_w"))
@@ -1780,12 +1743,9 @@ object Corpus {
     * the shared minhash keep-list), composed, not recomputed.
     */
   def dedupFunnel(docs: DataFrame, keep: DataFrame): DataFrame = {
-    val norm = trim(regexp_replace(regexp_replace(lower(col("text")),
-      "[^a-z0-9 ]", ""), " +", " "))
     docs.select(col("doc_id"), col("source"), col("text"),
-        norm.as("__norm"))
-      .join(keep.select(col("doc_id"), lit(1).as("__k")),
-        Seq("doc_id"), "left")
+        normText(col("text")).as("__norm"))
+      .transform(keepFlag(keep))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         countDistinct(col("text")).as("n_exact"),
@@ -1851,23 +1811,15 @@ object Corpus {
     * floating point. One gram-keyed shuffle for the LM, one for the
     * scoring join — text itself never reshuffles.
     */
-  def heldoutPerplexity(docs: DataFrame,
-      datasetKey: Option[String] = None): DataFrame = {
+  def heldoutPerplexity(docs: DataFrame, datasetKey: String): DataFrame = {
     // Bigrams never cross document boundaries, so the per-doc counts of
     // each split are exactly the full-corpus counts frame filtered by
-    // split membership — derive both sides from ONE (possibly shared)
-    // bigram counts frame instead of generating+exploding the text once
-    // per split (2 corpus scans → 0 when another token query already
-    // built the memo this session). The split flag joins on via the
-    // doc-grain (doc_id, split, lang) projection, never the text.
-    // INTENTIONAL divergence from the "un-keyed calls keep their old
-    // per-call plans" convention (qualityFilter/zipfReport): the old
-    // un-keyed path tokenized the corpus TWICE (once per split, ~90% of
-    // rows total); the shared-frame path tokenizes once (100% of rows,
-    // including the unused test split) — scan+explode dominates the
-    // extra split's aggregation mass, so one full pass beats two
-    // near-full passes even without a memo hit. Un-keyed, the frame is
-    // per-call scratch (registered, drained at the query boundary).
+    // split membership — derive both sides from the ONE shared bigram
+    // counts frame instead of generating+exploding the text once per
+    // split (2 corpus scans → 0 when another token query already built
+    // the memo this session; one full pass beats two near-full ones even
+    // on a miss). The split flag joins on via the doc-grain
+    // (doc_id, split, lang) projection, never the text.
     val s = splitAssign(docs).select(col("doc_id"), col("split"), col("lang"))
     val bySplit = bigramCountsShared(docs, datasetKey)
       .join(s, "doc_id")
@@ -1929,19 +1881,6 @@ object Corpus {
               col("n").cast("double")), 6).as("eta2"))
   }
 
-  /** Stylometric profile divergence per source: the corpus picks its own
-    * "function words" (global top-`k` (10) tokens, count-desc/word-asc — a
-    * deterministic, data-derived list, since a synthetic corpus has no
-    * English stopwords), then each source's frequency profile over that
-    * list is compared to the global profile by L1 distance — the
-    * authorship/contamination triage (a source whose common-word
-    * rhythm diverges is machine-generated, templated, or mislabeled;
-    * Burrows' Delta simplified to rates). The profile grid is dense
-    * (source × k, absent words at rate 0 — absence IS signal). Token
-    * counts shuffle at (source, word) grain; the top-k list and the
-    * per-source totals broadcast back, so the text itself never moves
-    * twice.
-    */
   /** Source language purity: each source's majority language and the
     * share of its documents in it — the "is this feed monolingual"
     * triage before routing sources to per-language pipelines. Majority
@@ -2068,10 +2007,23 @@ object Corpus {
       .orderBy(col("source"))
   }
 
+  /** Stylometric profile divergence per source: the corpus picks its own
+    * "function words" (global top-`k` (10) tokens, count-desc/word-asc — a
+    * deterministic, data-derived list, since a synthetic corpus has no
+    * English stopwords), then each source's frequency profile over that
+    * list is compared to the global profile by L1 distance — the
+    * authorship/contamination triage (a source whose common-word
+    * rhythm diverges is machine-generated, templated, or mislabeled;
+    * Burrows' Delta simplified to rates). The profile grid is dense
+    * (source × k, absent words at rate 0 — absence IS signal). Token
+    * counts shuffle at (source, word) grain; the top-k list and the
+    * per-source totals broadcast back, so the text itself never moves
+    * twice.
+    */
   def stylometryProfile(docs: DataFrame): DataFrame = {
     val k = 10
     val tokens = docs.select(col("source"),
-      explode(split(lower(col("text")), " ")).as("w"))
+      explode(words(lower(col("text")))).as("w"))
     val bySourceWord = tokens.groupBy(col("source"), col("w"))
       .agg(count(lit(1)).as("cnt"))
     val bySource = bySourceWord.groupBy(col("source"))
@@ -2116,7 +2068,7 @@ object Corpus {
     */
   def sourceJsd(docs: DataFrame): DataFrame = {
     val tf = docs
-      .select(col("source"), explode(split(col("text"), " ")).as("tok"))
+      .select(col("source"), explode(words(col("text"))).as("tok"))
       .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("cnt"))
     val totals = tf.groupBy(col("source")).agg(sum(col("cnt")).as("tot"))
     val p = tf.join(broadcast(totals), "source")
@@ -2174,7 +2126,7 @@ object Corpus {
   def sourceCoherence(docs: DataFrame): DataFrame = {
     val m = 5
     val toks = docs.select(col("doc_id"), col("source"),
-      explode(split(col("text"), " ")).as("tok"))
+      explode(words(col("text"))).as("tok"))
     val top = toks.groupBy(col("source"), col("tok"))
       .agg(count(lit(1)).as("cnt"))
       .withColumn("__r", row_number().over(
@@ -2229,7 +2181,7 @@ object Corpus {
     */
   def repetitionProfile(docs: DataFrame): DataFrame = {
     val base = docs.select(col("doc_id"), col("source"),
-        split(col("text"), " ").as("t"))
+        words(col("text")).as("t"))
       .filter(size(col("t")) >= 2)
     val uni = base.select(col("doc_id"), col("source"),
         explode(col("t")).as("g"))

@@ -221,7 +221,7 @@ object Dedup {
     * same df rule, so the contract stays hash-exact either way.
     */
   def jaccardPairs(docs: DataFrame, maxDf: Int = 1000,
-      datasetKey: Option[String] = None): DataFrame =
+      datasetKey: String): DataFrame =
     pairIntersections(docs, maxDf, datasetKey)
       // threshold the UNROUNDED ratio, same discipline as [[verifyJaccard]]
       .withColumn("__j", col("__i").cast("double") /
@@ -236,7 +236,7 @@ object Dedup {
     * (doc_a, doc_b, __i, __na, __nb). Pairs with an empty (fully
     * capped) intersection do not appear.
     *
-    * With a `datasetKey` the frame is session-memoized and
+    * The frame is session-memoized under (`datasetKey`, `maxDf`) and
     * localCheckpoint'ed (the [[minhashPairsShared]] discipline): four
     * registered queries consume this exact frame at the same
     * maxDf, and the postings self-join — the expensive part
@@ -246,16 +246,12 @@ object Dedup {
     * bounds the join itself; [[Scratch.invalidate]] releases it.
     */
   private def pairIntersections(docs: DataFrame, maxDf: Int,
-      datasetKey: Option[String]): DataFrame =
-    datasetKey match {
-      case Some(k) => Scratch.memo(docs.sparkSession, "pairIntersections",
-          (k, maxDf))(
-        computePairIntersections(docs, maxDf)
-          .transform(Scratch.stageShared))
-      case None => computePairIntersections(docs, maxDf)
-    }
+      datasetKey: String): DataFrame =
+    Scratch.memo(docs.sparkSession, "pairIntersections", (datasetKey, maxDf))(
+      computePairIntersections(docs, maxDf).transform(Scratch.stageShared))
 
-  private def computePairIntersections(docs: DataFrame, maxDf: Int): DataFrame = {
+  /** The build behind [[pairIntersections]]' memo. */
+  private[graft] def computePairIntersections(docs: DataFrame, maxDf: Int): DataFrame = {
     val withSh = docs
       .select(col("doc_id"), TextAnalysis.shingles(col("text"), ShingleN).as("sh"))
       .transform(Scratch.staged)
@@ -303,7 +299,7 @@ object Dedup {
     * is bit-stable across engines.
     */
   def jaccardThresholdSweep(docs: DataFrame, maxDf: Int = 1000,
-      datasetKey: Option[String] = None): DataFrame = {
+      datasetKey: String): DataFrame = {
     val thresholds = Seq(0.5, 0.6, 0.7, 0.8, 0.9)
     val j = pairIntersections(docs, maxDf, datasetKey)
       .withColumn("__j", col("__i").cast("double") /
@@ -349,7 +345,7 @@ object Dedup {
     */
   def containmentPairs(docs: DataFrame,
       threshold: Double = 0.9, maxDf: Int = 1000,
-      datasetKey: Option[String] = None): DataFrame =
+      datasetKey: String): DataFrame =
     pairIntersections(docs, maxDf, datasetKey)
       .withColumn("__c", col("__i").cast("double") / least(col("__na"), col("__nb")))
       .filter(col("__c") >= threshold)
@@ -376,7 +372,7 @@ object Dedup {
     * bounded-key groupBy on doc_id.
     */
   def dupDegree(docs: DataFrame, maxDf: Int = 1000,
-      datasetKey: Option[String] = None): DataFrame = {
+      datasetKey: String): DataFrame = {
     val pairs = pairIntersections(docs, maxDf, datasetKey)
       .withColumn("__j", col("__i").cast("double") /
         (col("__na") + col("__nb") - col("__i")))

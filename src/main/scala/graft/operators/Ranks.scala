@@ -13,9 +13,10 @@ import org.apache.spark.sql.functions._
   * web-scale token vocabulary with its typo/URL/code tail). Instead:
   * range-partition on the total order, sort within partitions, index
   * rows POSITIONALLY per partition, then add broadcast per-partition
-  * row-count offsets — the same prefix-sum shape [[Corpus.packSequences]]
-  * proves. The only un-partitioned window left runs over ONE ROW PER
-  * PARTITION, bounded by cluster size, not data size.
+  * row-count offsets — a two-level prefix sum ([[rangeOffsets]]), the
+  * same shape [[globalPrefixSum]] uses for value sums. The only
+  * un-partitioned window left runs over ONE ROW PER PARTITION, bounded
+  * by cluster size, not data size.
   */
 object Ranks {
 
@@ -50,19 +51,10 @@ object Ranks {
     require(clash.isEmpty,
       s"globalRowNumber: input already has column(s) ${clash.mkString(", ")} " +
         "— withColumn would silently replace them; rename before ranking")
-    val ranged = df
-      .repartitionByRange(order: _*)
-      .sortWithinPartitions(order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__mid", monotonically_increasing_id())
-      .transform(Scratch.staged)
-    val wPrev = Window.orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
+    val (ranged, offsets0) = rangeOffsets(df, order, "__pn", count(lit(1)),
+      _.withColumn("__mid", monotonically_increasing_id()))
     val wAll = Window.orderBy(col("__pid"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val offsets0 = ranged.groupBy(col("__pid"))
-      .agg(count(lit(1)).as("__pn"))
-      .withColumn("__poff", coalesce(sum(col("__pn")).over(wPrev), lit(0L)))
     val offsets = totalCol match {
       case Some(t) => offsets0.withColumn(t, sum(col("__pn")).over(wAll))
         .select(col("__pid"), col("__poff"), col(t))
@@ -75,6 +67,31 @@ object Ranks {
       .withColumn(rankCol,
         col("__mid").bitwiseAND(lit((1L << 33) - 1)) + col("__poff") + lit(1L))
       .drop("__pid", "__mid", "__poff")
+  }
+
+  /** The range stage both global operators share: `df` range-partitioned
+    * and sorted on `order`, tagged with its partition id `__pid` (then
+    * `tag`) and staged; and one row per partition carrying `part` — a
+    * per-partition aggregate named `partCol` — and `__poff`, the
+    * EXCLUSIVE sum of `partCol` over the earlier partitions. The ranged
+    * frame is staged because range boundaries are sampled per
+    * materialization, and the rows and the offsets must observe the SAME
+    * cut.
+    */
+  private def rangeOffsets(df: DataFrame, order: Seq[Column], partCol: String,
+      part: Column, tag: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+    val ranged = df
+      .repartitionByRange(order: _*)
+      .sortWithinPartitions(order: _*)
+      .withColumn("__pid", spark_partition_id())
+      .transform(tag)
+      .transform(Scratch.staged)
+    val wPrev = Window.orderBy(col("__pid"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val offsets = ranged.groupBy(col("__pid"))
+      .agg(part.as(partCol))
+      .withColumn("__poff", coalesce(sum(col(partCol)).over(wPrev), lit(0L)))
+    (ranged, offsets)
   }
 
   /** Distributed running (prefix) sum of an INTEGER-valued column under
@@ -106,20 +123,11 @@ object Ranks {
         org.apache.spark.sql.types.LongType).contains(vt),
       s"globalPrefixSum: '$valueCol' is $vt — only integer values keep " +
         "the partitioned prefix sum independent of partition boundaries")
-    val ranged = df
-      .repartitionByRange(order: _*)
-      .sortWithinPartitions(order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .transform(Scratch.staged)
-    val wPrev = Window.orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = ranged.groupBy(col("__pid"))
-      .agg(sum(col(valueCol)).as("__psum"))
-      .withColumn("__poff", coalesce(sum(col("__psum")).over(wPrev), lit(0L)))
-      .select(col("__pid"), col("__poff"))
+    val (ranged, offsets) = rangeOffsets(df, order, "__psum", sum(col(valueCol)),
+      identity)
     val wLocal = Window.partitionBy(col("__pid")).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ranged.join(broadcast(offsets), "__pid")
+    ranged.join(broadcast(offsets.select(col("__pid"), col("__poff"))), "__pid")
       .withColumn(outCol, sum(col(valueCol)).over(wLocal) + col("__poff"))
       .drop("__pid", "__poff")
   }

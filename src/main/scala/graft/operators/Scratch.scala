@@ -24,6 +24,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * rewrite, or per bench pass so timings include the build — or until
   * the session is stopped.
   *
+  * APPLICATION scope — [[ownedPath]] directory trees: the ANN index
+  * layouts and the sink-roundtrip outputs a session writes under the
+  * temp or index root. They outlive [[invalidate]] (q154's disk-memoized
+  * base layout must survive it) and are deleted when the session's
+  * SparkContext stops.
+  *
   * LOCAL vs RELIABLE checkpoints — the decision, made once here, in
   * [[stage]], the ONLY checkpoint call site in the engine (lint-gated by
   * CheckpointModeSpec): the default is `localCheckpoint` (executor-local
@@ -74,6 +80,11 @@ object Scratch {
   // TrieMap's getOrElseUpdate runs the build outside any lock, so builds
   // may nest (ConcurrentHashMap.computeIfAbsent throws on that).
   private val memos = TrieMap.empty[(SparkSession, String, Any), Any]
+
+  // Directory trees recorded by ownedPath, keyed by session; deleted at
+  // context stop or by the prune of a dead session, never dropped
+  // without being deleted.
+  private val owned = TrieMap.empty[SparkSession, scala.collection.mutable.Set[String]]
 
   // JVM-wide [hits, misses] per memo kind.
   private val counts =
@@ -158,21 +169,50 @@ object Scratch {
   def memoCounts: Map[String, (Long, Long)] =
     counts.map { case (k, c) => k -> (c.get(0), c.get(1)) }.toMap
 
+  /** Record `path` as a directory tree of `spark`'s application and
+    * return it. The tree survives [[releaseAll]] and [[invalidate]] and
+    * is deleted when the session's SparkContext stops (a listener on the
+    * application end, registered with the session's first path), so an
+    * application leaves none of its layouts or roundtrip outputs behind.
+    * Only recorded paths are deleted; the root is never listed.
+    */
+  def ownedPath(spark: SparkSession, path: String): String = {
+    val fresh = scala.collection.mutable.Set.empty[String]
+    val paths = owned.putIfAbsent(spark, fresh).getOrElse {
+      spark.sparkContext.addSparkListener(
+        new org.apache.spark.scheduler.SparkListener {
+          override def onApplicationEnd(
+              end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
+            pruneStopped(_ eq spark)
+        })
+      fresh
+    }
+    paths.synchronized { paths += path }
+    path
+  }
+
   /** Drop registry entries and memos whose session is dead — without
     * this, the map keys strongly retain every stopped SparkSession (and
     * its ids and memoized frames) for the driver's lifetime, so a
     * long-lived driver cycling sessions leaks them through the hygiene
     * mechanism itself. A stopped context has already torn down its block
     * manager, so there is nothing left to unpersist — dropping the entry
-    * is the release. Runs at every entry point; the predicate is
+    * is the release. A dead session's [[ownedPath]] trees are deleted
+    * here, the stop listener's work. Runs at every entry point; the predicate is
     * injectable so tests can exercise the prune without stopping the
     * JVM-wide shared context. Returns how many sessions were pruned.
     */
   private[operators] def pruneStopped(
       isStopped: SparkSession => Boolean): Int = {
-    val dead = (reg.keys.map(_._1) ++ memos.keys.map(_._1)).toSet.filter(isStopped)
+    val dead = (reg.keys.map(_._1) ++ memos.keys.map(_._1) ++ owned.keys)
+      .toSet.filter(isStopped)
     reg.keys.filter(k => dead(k._1)).foreach(reg.remove)
     memos.keys.filter(k => dead(k._1)).foreach(memos.remove)
+    dead.foreach { s =>
+      owned.remove(s).foreach { paths =>
+        paths.synchronized { paths.toList }.foreach(deleteTree(s, _))
+      }
+    }
     dead.size
   }
 
@@ -190,14 +230,15 @@ object Scratch {
       val persistent = spark.sparkContext.getPersistentRDDs
       entries.foreach { case (id, file) =>
         persistent.get(id).foreach(_.unpersist(blocking = false))
-        file.foreach { f =>
-          val path = new org.apache.hadoop.fs.Path(f)
-          path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(path, true)
-        }
+        file.foreach(deleteTree(spark, _))
       }
       entries.size
     }.getOrElse(0)
+  }
+
+  private def deleteTree(spark: SparkSession, p: String): Unit = {
+    val path = new org.apache.hadoop.fs.Path(p)
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(path, true)
   }
 
   /** Release every registered scratch frame of `spark` — the query

@@ -325,8 +325,8 @@ object Similarity {
     // basename of the dataset key by pure string ops (the key is an
     // opaque identifier, often a path — never touch the local FS for it)
     val base = datasetKey.split('/').filter(_.nonEmpty).lastOption.getOrElse("ds")
-    s"${indexRoot(spark)}/graft_${kind}_idx_" +
-      s"${spark.sparkContext.applicationId}_$base"
+    Scratch.ownedPath(spark, s"${indexRoot(spark)}/graft_${kind}_idx_" +
+      s"${spark.sparkContext.applicationId}_$base")
   }
 
   /** An LSH layout on disk plus the directory-granularity shift its

@@ -239,9 +239,10 @@ object EventsStream {
     * trigger count. Rooted at the index layouts' root
     * ([[graft.operators.Similarity.indexRoot]]: `spark.graft.indexDir`,
     * a shared filesystem on a cluster, else the local tmpdir); keyed by
-    * applicationId so concurrent sessions never collide. All path ops go
-    * through the Hadoop FS API, mirroring [[graft.operators.Similarity]]'s
-    * index layouts.
+    * applicationId so concurrent sessions never collide, and deleted
+    * when the context stops ([[graft.operators.Scratch.ownedPath]]). All
+    * path ops go through the Hadoop FS API, mirroring
+    * [[graft.operators.Similarity]]'s index layouts.
     */
   private def batchSink(spark: SparkSession, name: String): String = {
     // `spark.graft.streaming.pinnedSinkRoot`: a STABLE per-drain sink
@@ -253,7 +254,8 @@ object EventsStream {
       case Some(root) => s"$root/graft_${name}_sink"
       case None =>
         val root = graft.operators.Similarity.indexRoot(spark)
-        s"$root/graft_${name}_sink_${spark.sparkContext.applicationId}"
+        graft.operators.Scratch.ownedPath(spark,
+          s"$root/graft_${name}_sink_${spark.sparkContext.applicationId}")
     }
   }
 

@@ -26,4 +26,12 @@ object SparkTestBase {
 abstract class SparkFunSuite extends AnyFunSuite {
   def spark: SparkSession = SparkTestBase.spark
   def sf: String = SparkTestBase.sf
+
+  /** Runs `body` with a fresh dataset key for the keyed corpus and dedup
+    * operators (their shared frames are memoized per key), then drops
+    * the shared session's memos so the key's frames end with the test.
+    */
+  def withKey[T](prefix: String)(body: String => T): T =
+    try body(s"${prefix}_${System.nanoTime()}")
+    finally graft.operators.Scratch.invalidate(spark)
 }

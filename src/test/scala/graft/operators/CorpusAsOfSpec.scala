@@ -167,7 +167,7 @@ class CorpusAsOfSpec extends SparkFunSuite {
 
   test("qualityFilter computes exact ratios on a known doc") {
     val docs = Seq((1L, "a a a b c")).toDF("doc_id", "text")
-    val r = Corpus.qualityFilter(docs).collect().head
+    val r = withKey("quality")(k => Corpus.qualityFilter(docs, k).collect()).head
     assert(r.getInt(1) == 5)            // n_tokens
     assert(r.getInt(2) == 3)            // distinct
     assert(r.getDouble(3) == 0.4)       // dup_ratio = 1 - 3/5
@@ -179,8 +179,8 @@ class CorpusAsOfSpec extends SparkFunSuite {
     val docs = Seq(
       (1L, "x x y"), (2L, "y y y"), (3L, "y z z")
     ).toDF("doc_id", "text")
-    val top = Corpus.tfidfTopTerms(docs, topK = 1)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val top = withKey("tfidf")(k =>
+      Corpus.tfidfTopTerms(docs, topK = 1, datasetKey = k).collect()).map(r => r.getLong(0) -> r.getString(1)).toMap
     // 'y' appears in every doc (idf=0); doc-unique terms win
     assert(top == Map(1L -> "x", 2L -> "y", 3L -> "z"))
   }

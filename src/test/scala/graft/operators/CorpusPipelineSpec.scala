@@ -67,8 +67,9 @@ class CorpusPipelineSpec extends SparkFunSuite {
   test("invertedIndex caps postings but counts full document frequency") {
     val docs = (1L to 30L).map(i => (i, if (i <= 25) "common word" else "word"))
       .toDF("doc_id", "text")
-    val out = Corpus.invertedIndex(docs, maxPostings = 5)
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getString(2))).toMap
+    val out = withKey("postings")(k =>
+      Corpus.invertedIndex(docs, maxPostings = 5, datasetKey = k).collect())
+      .map(r => r.getString(0) -> (r.getLong(1), r.getString(2))).toMap
     // "common" appears in 25 docs: df keeps all, postings cap at first 5
     assert(out("common") == (25L, "1,2,3,4,5"))
     assert(out("word")._1 == 30L && out("word")._2 == "1,2,3,4,5")
@@ -103,7 +104,7 @@ class CorpusPipelineSpec extends SparkFunSuite {
       (3L, "the cat the cat the cat"),
       (4L, "zyx wvu qpo nml kji hgf")
     ).toDF("doc_id", "text")
-    val out = Corpus.unigramSurprisal(df).collect()
+    val out = withKey("unigram")(k => Corpus.unigramSurprisal(df, k).collect())
       .map(r => r.getLong(0) -> (r.getInt(1), r.getDouble(2))).toMap
     assert(out.keySet == Set(1L, 2L, 3L, 4L))
     assert(out(1L)._1 == 6 && out(4L)._1 == 6)
@@ -151,7 +152,7 @@ class CorpusPipelineSpec extends SparkFunSuite {
     // every bigram occurs exactly once corpus-wide -> p = 1/4 for all,
     // avg surprisal = 2 bits for every doc
     val docs = Seq((1L, "a b c"), (2L, "d e f")).toDF("doc_id", "text")
-    val out = Corpus.bigramSurprisal(docs).collect()
+    val out = withKey("bigram")(k => Corpus.bigramSurprisal(docs, k).collect())
       .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
     assert(out == Seq((1L, 2, 2.0), (2L, 2, 2.0)))
   }
@@ -297,7 +298,7 @@ class CorpusPipelineSpec extends SparkFunSuite {
       (1L, (Seq.fill(8)("a") ++ Seq.fill(4)("b") ++ Seq.fill(2)("c") ++ Seq("d"))
         .mkString(" "))
     ).toDF("doc_id", "text")
-    val r = Corpus.zipfReport(docs).collect().head
+    val r = withKey("zipf")(k => Corpus.zipfReport(docs, k).collect()).head
     assert(r.getLong(0) == 4L && r.getLong(1) == 15L)
     assert(math.abs(r.getDouble(2) + 1.4591) < 0.01, s"slope ${r.getDouble(2)}")
     assert(r.getDouble(3) == 1.0)
@@ -498,7 +499,7 @@ class CorpusPipelineSpec extends SparkFunSuite {
 
   test("perplexityBuckets cuts balanced terciles ordered by score, dropping no doc") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val out = Corpus.perplexityBuckets(docs).collect()
+    val out = withKey("buckets")(k => Corpus.perplexityBuckets(docs, k).collect())
       .map(r => (r.getLong(0), r.getDouble(1), r.getString(2)))
     val n = docs.count()
     assert(out.length == n, "every doc gets a bucket")
@@ -519,13 +520,15 @@ class CorpusPipelineSpec extends SparkFunSuite {
       (1L, "aa"), (2L, "aa bb"), (3L, "aa bb cc"), (4L, "bb cc"),
       (5L, "cc dd ee"), (6L, "dd ee ff gg")
     ).toDF("doc_id", "text")
-    val out = Corpus.perplexityBuckets(docs).collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).sortBy(_._1)
+    val (out, uni) = withKey("fallback") { k =>
+      (Corpus.perplexityBuckets(docs, k).collect()
+        .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).sortBy(_._1),
+        Corpus.unigramSurprisal(docs, k)
+          .filter(col("doc_id") === 1L).collect()(0).getDouble(2))
+    }
     assert(out.map(_._1).toSeq == Seq(1L, 2L, 3L, 4L, 5L, 6L),
       "the bigram-less doc must not be dropped by the left join")
     // doc 1 has no bigram: its score doubles the unigram component
-    val uni = Corpus.unigramSurprisal(docs)
-      .filter(col("doc_id") === 1L).collect()(0).getDouble(2)
     assert(math.abs(out.head._2 - 2 * uni) < 1e-9)
   }
 
@@ -585,7 +588,8 @@ class CorpusPipelineSpec extends SparkFunSuite {
   test("vocabCoverage is monotone in k and saturates at 1.0 beyond the vocabulary") {
     val docs = Seq(
       (1L, "a a a a b b c"), (2L, "a b b d"), (3L, "a c d e")).toDF("doc_id", "text")
-    val out = Corpus.vocabCoverage(docs, ks = Seq(1, 2, 5, 100)).collect()
+    val out = withKey("coverage")(k =>
+      Corpus.vocabCoverage(docs, ks = Seq(1, 2, 5, 100), datasetKey = k).collect())
       .map(r => (r.getInt(0), r.getDouble(1))).sortBy(_._1)
     // counts: a=6, b=4, c=2, d=2, e=1 (15 total); rank: a, b, c, d, e
     assert(out.map(_._1).toSeq == Seq(1, 2, 5, 100))
@@ -603,8 +607,8 @@ class CorpusPipelineSpec extends SparkFunSuite {
     val docs = (0 until 6).map(i =>
       (i.toLong, s"new york w${i}a w${i}b w${i}c")) :+
       (99L, "rare gem w99a w99b")
-    val out = Corpus.collocations(docs.toDF("doc_id", "text"),
-      minCount = 5, topK = 5).collect()
+    val out = withKey("colloc")(k => Corpus.collocations(docs.toDF("doc_id", "text"),
+      minCount = 5, topK = 5, datasetKey = k).collect())
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(out.map(_._1).toSeq == Seq("new york"),
       s"only the planted collocation survives the floor, got ${out.toSeq}")

@@ -97,8 +97,8 @@ class DedupTextSpec extends SparkFunSuite {
     // relation — same pairs, same rounded jaccard
     val real = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val exact = Dedup.jaccardPairs(real)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val exact = withKey("exact")(k => Dedup.jaccardPairs(real, datasetKey = k).collect())
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val banded = Dedup.minhashPairs(real)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(exact == banded, "exact and banded pipelines must agree here")
@@ -112,12 +112,14 @@ class DedupTextSpec extends SparkFunSuite {
     // UNDETECTED (recall loss) but nothing is invented (no false
     // positive), and set sizes keep the capped grams
     val hot = (1L to 6L).map(i => (i, "x y z w v u")).toList
-    val out = Dedup.jaccardPairs(docs(hot: _*), maxDf = 5)
-    assert(out.count() == 0, "capped grams must not pair")
-    val uncapped = Dedup.jaccardPairs(docs(hot: _*), maxDf = 6)
-    assert(uncapped.count() == 15 &&
-      uncapped.filter(col("jaccard") === 1.0).count() == 15,
-      "with the cap above df the identical pairs all surface at j=1")
+    withKey("hot") { k =>
+      val out = Dedup.jaccardPairs(docs(hot: _*), maxDf = 5, datasetKey = k)
+      assert(out.count() == 0, "capped grams must not pair")
+      val uncapped = Dedup.jaccardPairs(docs(hot: _*), maxDf = 6, datasetKey = k)
+      assert(uncapped.count() == 15 &&
+        uncapped.filter(col("jaccard") === 1.0).count() == 15,
+        "with the cap above df the identical pairs all surface at j=1")
+    }
     Scratch.releaseAll(spark)
   }
 
@@ -383,15 +385,17 @@ class DedupTextSpec extends SparkFunSuite {
 
   test("dupDegree is exactly the endpoint histogram of jaccardPairs") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val pairs = Dedup.jaccardPairs(docs, maxDf = 256).collect()
+    val key = s"degree_${System.nanoTime()}"
+    val pairs = Dedup.jaccardPairs(docs, maxDf = 256, datasetKey = key).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(pairs.nonEmpty, "fixture must contain near-dup pairs")
     val expected = (pairs.map(p => p._1 -> p._3) ++ pairs.map(p => p._2 -> p._3))
       .groupBy(_._1)
       .map { case (id, xs) => (id, xs.length, xs.map(_._2).max) }
       .toSet
-    val got = Dedup.dupDegree(docs, maxDf = 256).collect()
+    val got = Dedup.dupDegree(docs, maxDf = 256, datasetKey = key).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
+    Scratch.invalidate(spark)
     // max over per-pair ROUNDED jaccards equals round(max(unrounded)):
     // rounding is monotonic, so the two orders of max/round agree
     assert(got.toSet == expected)

@@ -146,8 +146,8 @@ class DriverHotspotLintSpec extends AnyFunSuite {
       """[(,]\s*\w+\s*:\s*(?:[\w.\s]|\[[^\[\]]*(?:\[[^\[\]]*\][^\[\]]*)*\]|""" +
         """\([^()]*\)|=>)+?\s*=(?![=>])""",
       Map(
-        "graft/operators/Corpus.scala" -> 31,
-        "graft/operators/Dedup.scala" -> 12,
+        "graft/operators/Corpus.scala" -> 18,
+        "graft/operators/Dedup.scala" -> 8,
         "graft/operators/Fuzzy.scala" -> 1,
         "graft/operators/Graph.scala" -> 1,
         "graft/operators/Ranks.scala" -> 1,
@@ -179,13 +179,30 @@ class DriverHotspotLintSpec extends AnyFunSuite {
         "graft/cube/CubeCatalog.scala" -> 2))
   }
 
+  test("the single-space word split is spelled once, in Corpus.words") {
+    // `split(<text>, " ")`; TextAnalysis.tokens' trimmed `\s+` split is
+    // the other tokenizer and a different pattern
+    assertCeilings("single-space split",
+      """\bsplit\((?:[^()]|\([^()]*(?:\([^()]*\))?[^()]*\))*,\s*" "\)""",
+      Map("graft/operators/Corpus.scala" -> 1),
+      under = Seq("graft/operators/Corpus.scala"))
+  }
+
+  test("the shared text frames take a required dataset key") {
+    // every memoized corpus and dedup frame is keyed; an optional key
+    // would restore the un-keyed per-call path no registered query takes
+    assertCeilings("optional datasetKey", """datasetKey\s*:\s*Option\b""",
+      Map.empty, under = Seq("graft/operators/"))
+  }
+
   test("TrieMap registries stay confined to Scratch and the schema memo") {
     // Scratch owns all session-scoped state (scratch ids, session memos,
     // memo counts); a hand-made registry elsewhere duplicates its
     // release and prune logic
     assertCeilings("TrieMap", """\bTrieMap\b""", Map(
-      // import + scope ids + session memos + memo counts, and a comment
-      "graft/operators/Scratch.scala" -> 5,
+      // import + scope ids + session memos + owned trees + memo counts,
+      // and a comment
+      "graft/operators/Scratch.scala" -> 6,
       // JVM-lifetime schema cache keyed by path+mtime; holds no blocks
       "graft/cube/Engine.scala" -> 1))
   }

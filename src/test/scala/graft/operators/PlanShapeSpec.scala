@@ -85,10 +85,10 @@ class PlanShapeSpec extends SparkFunSuite {
     // 20x+ -- q27 died at the 100x fixture collecting 1.4 GiB of task
     // results into BroadcastExchange. Par.shuffleJoin pins these joins
     // to the shuffle-hash regime at every scale; this lint keeps them pinned.
-    // Direct un-keyed operator calls: the keyed (memoized) registrations
-    // eagerly stage the pair frame in a separate query execution, which
-    // would hide the verification joins from the registered query's
-    // executed plan — the build plans below contain every join.
+    // Build plans: the keyed (memoized) registrations eagerly stage the
+    // pair frame in a separate query execution, which would hide the
+    // verification joins from the registered query's executed plan —
+    // the memo builds below contain every join.
     import org.apache.spark.sql.functions.col
     val docs = new graft.cube.Engine(spark, sf).table("documents")
     def assertShuffleOnly(name: String,
@@ -114,7 +114,8 @@ class PlanShapeSpec extends SparkFunSuite {
       graft.operators.Scratch.releaseAll(spark)
     }
     assertShuffleOnly("jaccardPairs",
-      graft.operators.Dedup.jaccardPairs(docs), forecastWidth = true)
+      graft.operators.Dedup.computePairIntersections(docs, 1000),
+      forecastWidth = true)
     assertShuffleOnly("minhashPairs",
       graft.operators.Dedup.minhashPairs(docs))
     assertShuffleOnly("simhashPairs",
@@ -224,10 +225,10 @@ class PlanShapeSpec extends SparkFunSuite {
   test("token pipeline scans only the columns it projects") {
     // The registered q48 consumes the shared counts memo (its executed
     // plan scans the checkpointed (doc_id, tok, cnt) ExistingRDD), so
-    // the column-pruning contract lives in the memo's BUILD plan —
-    // identical to the direct un-keyed operator call asserted here.
+    // the column-pruning contract lives in the memo's BUILD plan,
+    // asserted here.
     val docs = new graft.cube.Engine(spark, sf).table("documents")
-    val df = graft.operators.Corpus.qualityFilter(docs)
+    val df = graft.operators.Corpus.tokenCounts(docs)
     df.collect()
     assert(df.queryExecution.executedPlan.toString
       .contains("ReadSchema: struct<doc_id:bigint,text:string>"))

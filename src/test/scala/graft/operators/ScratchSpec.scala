@@ -16,9 +16,9 @@ class ScratchSpec extends SparkFunSuite {
     val docs = Seq((1L, "a b c d e f"), (2L, "g h i j k l")).toDF("doc_id", "text")
     assert(docs.sparkSession eq s2)
     assert(Scratch.releaseAll(s2) == 0)
-    Corpus.unigramSurprisal(docs).collect()
+    Corpus.oovRate(docs).collect()
     assert(Scratch.releaseAll(s2) >= 1,
-      "surprisal must register its exploded counts frame as scratch")
+      "oovRate must register its exploded counts frame as scratch")
     assert(Scratch.releaseAll(s2) == 0, "registry must drain on release")
   }
 
@@ -44,7 +44,7 @@ class ScratchSpec extends SparkFunSuite {
     val s2 = spark.newSession()
     import s2.implicits._
     val docs = Seq((1L, "a b c d e f"), (2L, "g h i j k l")).toDF("doc_id", "text")
-    Corpus.unigramSurprisal(docs).collect()
+    Corpus.oovRate(docs).collect()
     // a session memo too: the prune must drop memo entries, not only ids
     val key = s"prunespec_${System.nanoTime()}"
     Dedup.minhashPairsShared(docs, key)
@@ -68,37 +68,37 @@ class ScratchSpec extends SparkFunSuite {
     val s3 = spark.newSession()
     val docs3 = { import s3.implicits._
       Seq((1L, "a b c d e f"), (2L, "g h i j k l")).toDF("doc_id", "text") }
-    Corpus.unigramSurprisal(docs3).collect()
+    Corpus.oovRate(docs3).collect()
     assert(Scratch.pruneStopped(_ eq s2) == 0)
     assert(Scratch.releaseAll(s3) >= 1, "live session entries must survive")
   }
 
-  test("shared counts memo: keyed frames survive release, match un-keyed results") {
+  test("shared counts memo: keyed frames survive release, rebuild after invalidate") {
     val s2 = spark.newSession()
     import s2.implicits._
     val docs = Seq((1L, "a b a c"), (2L, "b b c d"), (3L, "e"))
       .toDF("doc_id", "text")
     val key = s"countsspec_${System.nanoTime()}"
     // collect() row order is plan-dependent (AQE coalesce can reorder
-    // partitions between the keyed and un-keyed plans) — compare sorted
+    // partitions between a build and a memo read) — compare sorted
     def sorted(rows: Array[org.apache.spark.sql.Row]): Seq[String] =
       rows.map(_.toString).sorted.toSeq
-    val plain = sorted(Corpus.unigramSurprisal(docs).collect())
-    Scratch.releaseAll(s2)
-    val keyed = sorted(Corpus.unigramSurprisal(docs, Some(key)).collect())
-    assert(keyed == plain, "memoized counts must not change results")
+    def misses = Scratch.memoCounts.get("corpusCounts").fold(0L)(_._2)
+    val uni = sorted(Corpus.unigramSurprisal(docs, key).collect())
+    val bi = sorted(Corpus.bigramSurprisal(docs, key).collect())
     // the memo survives the scratch drain and keeps serving consumers
     Scratch.releaseAll(s2)
+    val built = misses
     assert(Corpus.collocations(docs, minCount = 1, topK = 5,
-      datasetKey = Some(key)).count() >= 1)
-    assert(Corpus.zipfReport(docs, Some(key)).count() == 1)
-    // bigram memo: keyed equals un-keyed for the second-order family too
-    val biPlain = sorted(Corpus.bigramSurprisal(docs).collect())
-    Scratch.releaseAll(s2)
-    assert(sorted(Corpus.bigramSurprisal(docs, Some(key)).collect()) == biPlain)
+      datasetKey = key).count() >= 1)
+    assert(Corpus.zipfReport(docs, key).count() == 1)
+    assert(sorted(Corpus.unigramSurprisal(docs, key).collect()) == uni)
+    assert(sorted(Corpus.bigramSurprisal(docs, key).collect()) == bi)
+    assert(misses == built, "released memo entries must still be hits")
     Scratch.invalidate(s2)
     // after invalidation a fresh build still answers correctly
-    assert(sorted(Corpus.unigramSurprisal(docs, Some(key)).collect()) == plain)
+    assert(sorted(Corpus.unigramSurprisal(docs, key).collect()) == uni)
+    assert(misses == built + 1, "an invalidated memo must rebuild")
     Scratch.invalidate(s2)
   }
 
@@ -110,15 +110,15 @@ class ScratchSpec extends SparkFunSuite {
     import s2.implicits._
     val docs = Seq((1L, "a b a"), (2L, "c d")).toDF("doc_id", "text")
     val key = s"guardspec_${System.nanoTime()}"
-    Corpus.unigramSurprisal(docs, Some(key)).collect()
+    Corpus.unigramSurprisal(docs, key).collect()
     val filtered = docs.filter($"doc_id" === 1L)
     val e = intercept[IllegalArgumentException] {
-      Corpus.unigramSurprisal(filtered, Some(key)).collect()
+      Corpus.unigramSurprisal(filtered, key).collect()
     }
     assert(e.getMessage.contains("datasetKey"))
     // the same frame re-built identically still hits the memo
     val again = Seq((1L, "a b a"), (2L, "c d")).toDF("doc_id", "text")
-    assert(Corpus.unigramSurprisal(again, Some(key)).count() > 0)
+    assert(Corpus.unigramSurprisal(again, key).count() > 0)
     Scratch.invalidate(s2)
   }
 
@@ -135,6 +135,30 @@ class ScratchSpec extends SparkFunSuite {
       "q106 must build the layout once and q29 must hit it")
     Scratch.releaseAll(s2)
     Scratch.invalidate(s2)
+  }
+
+  test("owned layout and roundtrip trees outlive invalidate, go when the context stops") {
+    // the ANN layouts and the sink-roundtrip outputs a session writes are
+    // recorded; invalidate keeps them (q154's disk-memoized base layout
+    // must survive it), and the stop listener's prune deletes them all
+    val s2 = spark.newSession()
+    val emb = new graft.cube.Engine(s2, sf).table("embeddings")
+    val key = s"ownedspec_${System.nanoTime()}"
+    val lsh = Similarity.lshIndex(emb, key).path
+    val ivf = Similarity.ivfIndex(emb, key).path
+    graft.SparkEntry.queries("q91_shard_manifest")(s2, sf).collect()
+    val shards = s"${System.getProperty("java.io.tmpdir")}/graft_shards_" +
+      s"${s2.sparkContext.applicationId}_" + new java.io.File(sf).getName
+    val trees = Seq(lsh, ivf, shards).map(java.nio.file.Paths.get(_))
+    assert(trees.forall(java.nio.file.Files.exists(_)), s"not written: $trees")
+    Scratch.releaseAll(s2)
+    Scratch.invalidate(s2)
+    assert(trees.forall(java.nio.file.Files.exists(_)),
+      "invalidate must not delete a session's owned trees")
+    // what the application-end listener runs for s2
+    Scratch.pruneStopped(_ eq s2)
+    val left = trees.filter(java.nio.file.Files.exists(_))
+    assert(left.isEmpty, s"trees left after the stop hook: $left")
   }
 
   test("graph operators register their checkpoint frames as scratch") {

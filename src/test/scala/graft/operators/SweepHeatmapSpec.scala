@@ -8,8 +8,9 @@ class SweepHeatmapSpec extends SparkFunSuite {
 
   test("jaccard sweep: pair and doc counts decrease as the threshold rises") {
     val docs = new graft.cube.Engine(spark, sf).table("documents")
-    val rows = Dedup.jaccardThresholdSweep(docs, maxDf = 256).collect()
-      .sortBy(_.getDouble(0))
+    val key = s"sweep_${System.nanoTime()}"
+    val rows = Dedup.jaccardThresholdSweep(docs, maxDf = 256, datasetKey = key)
+      .collect().sortBy(_.getDouble(0))
     assert(rows.nonEmpty)
     rows.sliding(2).foreach {
       case Array(lo, hi) =>
@@ -19,7 +20,8 @@ class SweepHeatmapSpec extends SparkFunSuite {
     }
     // the 0.8 rung must agree with q136's thresholded pair count
     val at08 = rows.find(_.getDouble(0) == 0.8).get.getLong(1)
-    assert(at08 == Dedup.jaccardPairs(docs, maxDf = 256).count())
+    assert(at08 == Dedup.jaccardPairs(docs, maxDf = 256, datasetKey = key).count())
+    Scratch.invalidate(spark)
   }
 
   test("cluster size histogram mass equals the clustered doc count") {
