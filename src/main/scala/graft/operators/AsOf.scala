@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.cube.Engine
+import Relational.{MicrosPerMinute, elapsed, whole}
 
 /** As-of join — for each left row, the latest right row with the same
   * key and right.time <= left.time. Spark has no native as-of operator;
@@ -65,10 +66,8 @@ object AsOf {
     */
   def asofJoinNearest(left: DataFrame, right: DataFrame,
       key: String, time: String): DataFrame = {
-    val dtB = expr(s"unix_micros(CAST($time AS TIMESTAMP)) - " +
-      s"unix_micros(CAST(_rb.$time AS TIMESTAMP))")
-    val dtF = expr(s"unix_micros(CAST(_rf.$time AS TIMESTAMP)) - " +
-      s"unix_micros(CAST($time AS TIMESTAMP))")
+    val dtB = elapsed(col(s"_rb.$time"), col(time))
+    val dtF = elapsed(col(time), col(s"_rf.$time"))
     tagged("asofJoinNearest", left, right, key, time, leftSide = 1,
       ord => Seq(
         "_rb" -> last(col("_r"), ignoreNulls = true)
@@ -139,9 +138,7 @@ object AsOf {
       .select(col("event_id"), col("user_id"), col("ts"),
         col("r_ts").as("purchase_ts"),
         col("r_purchase_value").as("purchase_value"),
-        expr("abs(unix_micros(CAST(r_ts AS TIMESTAMP)) - " +
-          "unix_micros(CAST(ts AS TIMESTAMP))) div 60000000")
-          .as("minutes_abs"),
+        whole(abs(elapsed(col("ts"), col("r_ts"))), MicrosPerMinute).as("minutes_abs"),
         when(col("r_ts").isNull, lit(null).cast("int"))
           .when(col("r_ts") < col("ts"), lit(-1))
           .when(col("r_ts") === col("ts"), lit(0))
@@ -159,8 +156,7 @@ object AsOf {
       .select(col("event_id"), col("user_id"), col("ts"),
         col("r_ts").as("purchase_ts"),
         col("r_purchase_value").as("purchase_value"),
-        expr("(unix_micros(CAST(r_ts AS TIMESTAMP)) - " +
-          "unix_micros(CAST(ts AS TIMESTAMP))) div 60000000")
+        whole(elapsed(col("ts"), col("r_ts")), MicrosPerMinute)
           .as("minutes_to_purchase"))
       .orderBy(col("event_id"))
   }

@@ -1,15 +1,32 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import Relational.{cents, ntzBucket}
+import Relational.{MicrosPerDay, MicrosPerHour, MicrosPerMinute, MicrosPerSecond,
+  cents, elapsed, micros, ntzBucket, whole}
 
 /** Ordered-sequence event analytics: conversion funnels and cohort
   * retention. Absent in the reference (whose events surface stops at
   * calendar aggregation) — provided as first-class engine ops for the
   * product-analytics query family.
+  *
+  * The event-log conventions, each stated once and shared by `Relational`,
+  * `Merge`, `AsOf` and [[graft.streaming.EventsStream]]:
+  *  - A user's events are ordered by `(ts, event_id)` ([[timeline]]);
+  *    `event_id` breaks equal timestamps, so lag/lead/first chains are
+  *    deterministic. The latest event is the same order read backwards
+  *    ([[latestPerUser]]).
+  *  - Event-time arithmetic is exact integer microseconds
+  *    (`Relational.micros`, `elapsed`, `whole`), never interval or double
+  *    math.
+  *  - A session ends after a gap of MORE than [[SessionGap]]: an event
+  *    exactly 30 minutes after the previous one stays in the session. The
+  *    lag form ([[sessionIds]]) and `session_window` ([[sessionWindow]])
+  *    agree on that boundary.
+  *  - The view → click → purchase funnel is strict ([[funnelStages]]):
+  *    each stage counts only after the previous stage's earliest event.
   *
   * Scale notes: the funnel's three conditional stage times are chained
   * window aggregates over the SAME `user_id` partitioning, so Catalyst
@@ -33,21 +50,59 @@ object EventAnalytics {
     * [[graft.streaming.EventsStream.streamingDebounce]]. */
   private[graft] val DebounceGapSeconds = 300L
 
+  /** The inactivity gap that closes a session. */
+  private[graft] val SessionGap = "30 minutes"
+
+  /** Each user's event timeline, optionally split further by `keys`:
+    * partitioned by `user_id` and `keys`, ordered by `(ts, event_id)`.
+    * Callers add their own frame. */
+  private[graft] def timeline(keys: String*): WindowSpec =
+    Window.partitionBy(("user_id" +: keys).map(col): _*)
+      .orderBy(col("ts"), col("event_id"))
+
+  /** Each user's latest event in `events`: the top row under
+    * `(ts desc, event_id desc)`, the [[timeline]] read backwards. A
+    * top-1 `row_number` filter, which plans as a WindowGroupLimit, so
+    * each map partition forwards at most one row per user. */
+  private[graft] def latestPerUser(events: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("user_id"))
+      .orderBy(col("ts").desc, col("event_id").desc)
+    events.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      .drop("rn")
+  }
+
+  /** The strict funnel's stage times, added to every row of `events`:
+    * per user, `t1` is the earliest view, `t2` the earliest click
+    * strictly after `t1`, and `t3` the earliest purchase strictly after
+    * `t2` (null when the stage is not reached). Unordered conditional
+    * `min`s over one `user_id` window. */
+  private def funnelStages(events: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("user_id"))
+    events
+      .withColumn("t1", min(when(col("event_type") === stages(0), col("ts"))).over(w))
+      .withColumn("t2", min(when(col("event_type") === stages(1) && col("ts") > col("t1"),
+        col("ts"))).over(w))
+      .withColumn("t3", min(when(col("event_type") === stages(2) && col("ts") > col("t2"),
+        col("ts"))).over(w))
+  }
+
+  /** Per-type drop rate of debounce keep flags: `flags` has one row per
+    * event with `event_type` and `kept` (1 or 0). Shared by the batch
+    * [[debounceReport]] and its streaming twin. */
+  private[graft] def dropRates(flags: DataFrame): DataFrame =
+    flags.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n_events"), sum(col("kept")).as("n_kept"))
+      .withColumn("drop_rate", round(lit(1.0) -
+        col("n_kept").cast("double") / col("n_events").cast("double"), 6))
+      .orderBy(col("event_type"))
+
   /** Strictly-ordered conversion funnel view → click → purchase: a user
     * counts at stage k only if each stage-k event happened strictly after
     * their earliest qualifying stage-(k-1) event. Returns one row per
     * funnel stage with the surviving user count.
     */
   def funnel(spark: SparkSession, dir: String): DataFrame = {
-    val events = new graft.cube.Engine(spark, dir).table("events")
-    val w = Window.partitionBy(col("user_id"))
-    val staged = events
-      .withColumn("t1", min(when(col("event_type") === stages(0), col("ts"))).over(w))
-      .withColumn("t2", min(when(col("event_type") === stages(1) && col("ts") > col("t1"),
-        col("ts"))).over(w))
-      .withColumn("t3", min(when(col("event_type") === stages(2) && col("ts") > col("t2"),
-        col("ts"))).over(w))
-    val perUser = staged
+    val perUser = funnelStages(new graft.cube.Engine(spark, dir).table("events"))
       .groupBy(col("user_id"))
       .agg(max(col("t1")).as("t1"), max(col("t2")).as("t2"), max(col("t3")).as("t3"))
     perUser
@@ -148,11 +203,9 @@ object EventAnalytics {
     * cardinality key. The fact table is never shuffled twice.
     */
   def eventTransitions(spark: SparkSession, dir: String): DataFrame = {
-    val events = new graft.cube.Engine(spark, dir).table("events")
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    events
+    new graft.cube.Engine(spark, dir).table("events")
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("prev_type", lag(col("event_type"), 1).over(w))
+      .withColumn("prev_type", lag(col("event_type"), 1).over(timeline()))
       .filter(col("prev_type").isNotNull)
       .groupBy(col("prev_type"), col("event_type"))
       .agg(count(lit(1)).as("n_transitions"),
@@ -160,23 +213,6 @@ object EventAnalytics {
       .orderBy(col("prev_type"), col("event_type"))
   }
 
-  /** Trailing 7-day active users (the product-analytics WAU curve): for
-    * every calendar day, the count of distinct users with >=1 event in
-    * the 7-day window ENDING that day. Windowed COUNT(DISTINCT) does not
-    * exist as a window function (in Spark or anywhere — distinct state
-    * is not frame-shrinkable), and the range-self-join formulation
-    * re-scans the fact per day; instead each (user, active-day) pair is
-    * EXPANDED to the 7 window-days it contributes to, and a plain
-    * two-level distinct aggregation does the rest.
-    *
-    * Scale shape: the fact first collapses to distinct (user, day) —
-    * map-side combined, the only pass over raw events. The 7x expansion
-    * then amplifies only that collapsed frame (bounded by users x days,
-    * orders of magnitude below event count), and countDistinct plans as
-    * the standard two-stage partial-distinct aggregate. No join, no
-    * per-day rescan; cost is linear in user-days, independent of how hot
-    * a user's event stream is.
-    */
   /** Weekly growth accounting: every active week decomposed into
     * new / retained / resurrected users, with churn derived as
     * last week's actives minus this week's retained — the standard
@@ -227,10 +263,8 @@ object EventAnalytics {
         .groupBy(col("user_id"))
         .agg(max_by(col("event_type"), struct(col("n"), col("event_type")))
           .as(out))
-    val cutoff = lit(Merge.SnapshotCutoff).cast("timestamp_ntz")
-    val a = dominant(events.filter(col("ts") < cutoff), "dominant_before")
-    val b = dominant(events.filter(col("ts") >= cutoff), "dominant_after")
-    a.join(b, "user_id")
+    val (before, after) = Merge.splitAtCutoff(events)
+    dominant(before, "dominant_before").join(dominant(after, "dominant_after"), "user_id")
       .groupBy(col("dominant_before"), col("dominant_after"))
       .agg(count(lit(1)).as("n_users"))
       .orderBy(col("dominant_before"), col("dominant_after"))
@@ -321,18 +355,10 @@ object EventAnalytics {
     * (channel, 3-counters) rows.
     */
   def funnelByChannel(spark: SparkSession, dir: String): DataFrame = {
-    val events = new graft.cube.Engine(spark, dir).table("events")
-    val w = Window.partitionBy(col("user_id"))
-    val wOrd = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
+    val wOrd = timeline()
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val staged = events
-      .withColumn("channel", first(col("event_type")).over(wOrd))
-      .withColumn("t1", min(when(col("event_type") === stages(0), col("ts"))).over(w))
-      .withColumn("t2", min(when(col("event_type") === stages(1) && col("ts") > col("t1"),
-        col("ts"))).over(w))
-      .withColumn("t3", min(when(col("event_type") === stages(2) && col("ts") > col("t2"),
-        col("ts"))).over(w))
+    val staged = funnelStages(new graft.cube.Engine(spark, dir).table("events")
+        .withColumn("channel", first(col("event_type")).over(wOrd)))
       .groupBy(col("user_id"))
       .agg(max(col("channel")).as("channel"), max(col("t1")).as("t1"),
         max(col("t2")).as("t2"), max(col("t3")).as("t3"))
@@ -396,19 +422,11 @@ object EventAnalytics {
     * longs.
     */
   def funnelTiming(spark: SparkSession, dir: String): DataFrame = {
-    val events = new graft.cube.Engine(spark, dir).table("events")
-    val w = Window.partitionBy(col("user_id"))
-    val perUser = events
-      .withColumn("t1", min(when(col("event_type") === stages(0), col("ts"))).over(w))
-      .withColumn("t2", min(when(col("event_type") === stages(1) && col("ts") > col("t1"),
-        col("ts"))).over(w))
-      .withColumn("t3", min(when(col("event_type") === stages(2) && col("ts") > col("t2"),
-        col("ts"))).over(w))
+    val perUser = funnelStages(new graft.cube.Engine(spark, dir).table("events"))
       .groupBy(col("user_id"))
       .agg(max(col("t1")).as("t1"), max(col("t3")).as("t3"))
       .filter(col("t3").isNotNull)
-      .select(expr("(unix_micros(CAST(t3 AS TIMESTAMP)) - " +
-        "unix_micros(CAST(t1 AS TIMESTAMP))) div 60000000").as("minutes"))
+      .select(whole(elapsed(col("t1"), col("t3")), MicrosPerMinute).as("minutes"))
     perUser.agg(
       count(lit(1)).as("n_converted"),
       round(expr("percentile(minutes, 0.5)"), 4).as("p50_minutes"),
@@ -427,11 +445,8 @@ object EventAnalytics {
     * [[funnel]].
     */
   def lastTouchAttribution(spark: SparkSession, dir: String): DataFrame = {
-    val events = new graft.cube.Engine(spark, dir).table("events")
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    events
+    val w = timeline().rowsBetween(Window.unboundedPreceding, -1)
+    new graft.cube.Engine(spark, dir).table("events")
       .select(col("user_id"), col("ts"), col("event_id"),
         col("event_type"), col("value"))
       .withColumn("lt", last(
@@ -449,6 +464,23 @@ object EventAnalytics {
       .orderBy(col("channel"))
   }
 
+  /** Trailing 7-day active users (the product-analytics WAU curve): for
+    * every calendar day, the count of distinct users with >=1 event in
+    * the 7-day window ENDING that day. Windowed COUNT(DISTINCT) does not
+    * exist as a window function (in Spark or anywhere — distinct state
+    * is not frame-shrinkable), and the range-self-join formulation
+    * re-scans the fact per day; instead each (user, active-day) pair is
+    * EXPANDED to the 7 window-days it contributes to, and a plain
+    * two-level distinct aggregation does the rest.
+    *
+    * Scale shape: the fact first collapses to distinct (user, day) —
+    * map-side combined, the only pass over raw events. The 7x expansion
+    * then amplifies only that collapsed frame (bounded by users x days,
+    * orders of magnitude below event count), and countDistinct plans as
+    * the standard two-stage partial-distinct aggregate. No join, no
+    * per-day rescan; cost is linear in user-days, independent of how hot
+    * a user's event stream is.
+    */
   def rollingActiveUsers(spark: SparkSession, dir: String): DataFrame = {
     val events = new graft.cube.Engine(spark, dir).table("events")
     val userDays = events
@@ -495,12 +527,10 @@ object EventAnalytics {
   def decayedEngagement(spark: SparkSession, dir: String): DataFrame = {
     val halfLifeDays = 30.0
     val ev = new graft.cube.Engine(spark, dir).table("events")
-    val horizon = ev.agg(
-      expr("max(unix_micros(CAST(ts AS TIMESTAMP)))").as("h"))
+    val horizon = ev.agg(max(micros(col("ts"))).as("h"))
     ev.crossJoin(broadcast(horizon))
       .withColumn("age_days",
-        (col("h") - expr("unix_micros(CAST(ts AS TIMESTAMP))"))
-          .cast("double") / lit(86400000000.0))
+        (col("h") - micros(col("ts"))).cast("double") / lit(MicrosPerDay.toDouble))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         round(sum(col("value") *
@@ -538,15 +568,6 @@ object EventAnalytics {
       .orderBy(col("type_a"), col("type_b"))
   }
 
-  /** Burst-collapse debounce report: within each (user, event_type)
-    * stream, an event survives when it opens a burst — its predecessor
-    * is absent or at least [[DebounceGapSeconds]] older. Survivor count equals
-    * burst count, so the per-type drop rate is the duplicate-burst
-    * pressure a throttling ingest stage would remove. One lag window
-    * per (user, type) key (event_id tiebreaks equal timestamps so the
-    * lag chain is deterministic), exact microsecond arithmetic, bounded
-    * per-type rollup.
-    */
   /** January activity bitmasks: each user's active days packed into one
     * BIGINT (`bit_or(1 << day_offset)`), then the distribution of
     * active-day counts via `bit_count` — the bitmap-index form of
@@ -570,21 +591,21 @@ object EventAnalytics {
       .orderBy(col("n_active_days"))
   }
 
-  def debounceReport(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"), col("event_type"))
-      .orderBy(col("ts"), col("event_id"))
-    new graft.cube.Engine(spark, dir).table("events")
-      .withColumn("prev", lag(col("ts"), 1).over(w))
+  /** Burst-collapse debounce report: within each (user, event_type)
+    * stream, an event survives when it opens a burst — its predecessor
+    * is absent or at least [[DebounceGapSeconds]] older. Survivor count equals
+    * burst count, so the per-type drop rate is the duplicate-burst
+    * pressure a throttling ingest stage would remove. One lag window
+    * per (user, type) key (event_id tiebreaks equal timestamps so the
+    * lag chain is deterministic), exact microsecond arithmetic, bounded
+    * per-type rollup.
+    */
+  def debounceReport(spark: SparkSession, dir: String): DataFrame =
+    dropRates(new graft.cube.Engine(spark, dir).table("events")
+      .withColumn("prev", lag(col("ts"), 1).over(timeline("event_type")))
       .withColumn("kept", when(col("prev").isNull ||
-        expr("unix_micros(CAST(ts AS TIMESTAMP)) - " +
-          "unix_micros(CAST(prev AS TIMESTAMP))") >=
-          DebounceGapSeconds * 1000000L, 1L).otherwise(0L))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum(col("kept")).as("n_kept"))
-      .withColumn("drop_rate", round(lit(1.0) -
-        col("n_kept").cast("double") / col("n_events").cast("double"), 6))
-      .orderBy(col("event_type"))
-  }
+        elapsed(col("prev"), col("ts")) >= DebounceGapSeconds * MicrosPerSecond, 1L)
+        .otherwise(0L)))
 
   /** Two-sample Kolmogorov–Smirnov drift audit: for every event type,
     * the KS statistic between its `value` distribution and the pooled
@@ -724,23 +745,28 @@ object EventAnalytics {
       .orderBy(col("n_types"))
   }
 
-  /** The 30-minute-gap sessionization q272, q289 and q294 share: per
-    * user in (ts, event_id) order, `prev` is the previous event's ts,
-    * `new_s` flags an event that opens a session (first event, or more
-    * than 30 minutes after `prev`), and the running sum of `new_s` is the
+  /** The lag-form sessionization q272, q289 and q294 share: along each
+    * user's [[timeline]], `prev` is the previous event's ts, `new_s`
+    * flags an event that opens a session (first event, or more than
+    * [[SessionGap]] after `prev`), and the running sum of `new_s` is the
     * session id `sid`. Needs (user_id, ts, event_id).
     */
   private def sessionIds(events: DataFrame): DataFrame = {
-    val wu = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
+    val wu = timeline()
     events
       .withColumn("prev", lag(col("ts"), 1).over(wu))
       .withColumn("new_s", when(col("prev").isNull ||
-        col("ts") > col("prev") + expr("INTERVAL 30 MINUTES"), 1L)
+        col("ts") > col("prev") + expr(s"INTERVAL $SessionGap"), 1L)
         .otherwise(0L))
       .withColumn("sid", sum(col("new_s")).over(
         wu.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
   }
+
+  /** The `session_window` form of the same sessions, named `w`, over the
+    * TIMESTAMP column `time`: a session closes only when the next event
+    * is more than [[SessionGap]] later, as in [[sessionIds]]. */
+  private[graft] def sessionWindow(time: String): Column =
+    session_window(col(time), SessionGap).as("w")
 
   /** Session value by entry channel: which first-touch surface opens the
     * sessions that go on to purchase — per entry event type: session
@@ -780,12 +806,10 @@ object EventAnalytics {
       .filter(col("event_type").isin("signup", "purchase"))
       .groupBy(col("user_id"))
       .agg(
-        min(when(col("event_type") === "signup",
-          expr("unix_micros(CAST(ts AS TIMESTAMP))"))).as("su"),
-        min(when(col("event_type") === "purchase",
-          expr("unix_micros(CAST(ts AS TIMESTAMP))"))).as("pu"))
+        min(when(col("event_type") === "signup", micros(col("ts")))).as("su"),
+        min(when(col("event_type") === "purchase", micros(col("ts")))).as("pu"))
       .filter(col("su").isNotNull)
-    val h = 3600L * 1000000L
+    val h = MicrosPerHour
     val bucket = when(col("pu").isNull || col("pu") < col("su"), "6_never")
       .when(col("pu") - col("su") <= h, "1_within_1h")
       .when(col("pu") - col("su") <= 6 * h, "2_within_6h")
@@ -889,10 +913,8 @@ object EventAnalytics {
     */
   def markovStationary(spark: SparkSession, dir: String): DataFrame = {
     val iters = 12
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
     val trans = new graft.cube.Engine(spark, dir).table("events")
-      .withColumn("nxt", lead(col("event_type"), 1).over(w))
+      .withColumn("nxt", lead(col("event_type"), 1).over(timeline()))
       .filter(col("nxt").isNotNull)
       .groupBy(col("event_type").as("cur"), col("nxt"))
       .agg(count(lit(1)).as("cnt"))
@@ -947,13 +969,10 @@ object EventAnalytics {
     * (user_id, ts, event_id, event_type).
     */
   def interArrivalBurstinessOf(events: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("user_id"), col("event_type"))
-      .orderBy(col("ts"), col("event_id"))
     events
-      .withColumn("prev", lag(col("ts"), 1).over(w))
+      .withColumn("prev", lag(col("ts"), 1).over(timeline("event_type")))
       .filter(col("prev").isNotNull)
-      .withColumn("gap", expr("(unix_micros(CAST(ts AS TIMESTAMP)) - " +
-        "unix_micros(CAST(prev AS TIMESTAMP))) div 1000000"))
+      .withColumn("gap", whole(elapsed(col("prev"), col("ts")), MicrosPerSecond))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_gaps"), sum(col("gap")).as("sx"),
         sum(col("gap") * col("gap")).as("sxx"))
@@ -978,10 +997,8 @@ object EventAnalytics {
     * (ts, event_id) — unique, so portable.
     */
   def attributionCompare(spark: SparkSession, dir: String): DataFrame = {
-    val horizonUs = AttributionHorizonDays * 86400L * 1000000L
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(expr("unix_micros(CAST(ts AS TIMESTAMP))"))
-      .rangeBetween(-horizonUs, -1)
+    val w = Window.partitionBy(col("user_id")).orderBy(micros(col("ts")))
+      .rangeBetween(-AttributionHorizonDays * MicrosPerDay, -1)
     val touch = when(col("event_type") =!= "purchase",
       struct(col("ts"), col("event_id"), col("event_type")))
     // each purchase contributes one row per model; a single rollup then
@@ -1055,15 +1072,13 @@ object EventAnalytics {
     * exact interpolated percentile (the q45 contract).
     */
   def transitionDwell(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
+    val w = timeline()
     new graft.cube.Engine(spark, dir).table("events")
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       .withColumn("prev_type", lag(col("event_type"), 1).over(w))
       .withColumn("prev_ts", lag(col("ts"), 1).over(w))
       .filter(col("prev_type").isNotNull)
-      .withColumn("gap_s", expr("(unix_micros(CAST(ts AS TIMESTAMP)) - " +
-        "unix_micros(CAST(prev_ts AS TIMESTAMP))) div 1000000"))
+      .withColumn("gap_s", whole(elapsed(col("prev_ts"), col("ts")), MicrosPerSecond))
       .groupBy(col("prev_type"), col("event_type").as("next_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("gap_s")).as("gap_sum"),

@@ -30,6 +30,20 @@ object Merge {
     * and [[EventAnalytics.behaviorSwitchers]]. */
   val SnapshotCutoff = "2024-01-16 00:00:00"
 
+  /** `events` split at [[SnapshotCutoff]]: (rows before it, rows at or
+    * after it). The cutoff takes the type of `events`' `ts`, so the same
+    * split serves the NTZ batch table and the TIMESTAMP stream. */
+  private[graft] def splitAtCutoff(events: DataFrame): (DataFrame, DataFrame) = {
+    val cutoff = lit(SnapshotCutoff).cast(events.schema("ts").dataType)
+    (events.filter(col("ts") < cutoff), events.filter(col("ts") >= cutoff))
+  }
+
+  /** The events columns the merge and CDC paths read. */
+  private[graft] def logColumns(spark: SparkSession, dir: String): DataFrame =
+    new Engine(spark, dir).table("events")
+      .select(col("user_id"), col("event_id"), col("event_type"),
+        col("ts"), col("value"))
+
   /** Generic MERGE: full-outer on `keys`; change rows win wholesale. */
   def mergeUpsert(target: DataFrame, changes: DataFrame,
       keys: Seq[String]): DataFrame = {
@@ -58,27 +72,19 @@ object Merge {
     * path, while the q69 oracle already pins the full-recompute shape.
     */
   def latestStateMerge(spark: SparkSession, dir: String): DataFrame = {
-    val ev = new Engine(spark, dir).table("events")
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        col("ts"), col("value"))
-    val cutoff = lit(SnapshotCutoff).cast("timestamp_ntz")
-    val snapshot = latestState(ev.filter(col("ts") < cutoff))
-    val changes = latestState(ev.filter(col("ts") >= cutoff))
-    mergeUpsert(snapshot, changes, Seq("user_id"))
+    val (before, after) = splitAtCutoff(logColumns(spark, dir))
+    mergeUpsert(latestState(before), latestState(after), Seq("user_id"))
       .orderBy(col("user_id"))
   }
 
   /** Latest per-user event state of a log slice (shared by the merge and
-    * CDC paths): top-1 per user under (ts, event_id) desc.
+    * CDC paths): [[EventAnalytics.latestPerUser]] as
+    * (user_id, last_type, last_value).
     */
-  private[graft] def latestState(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").desc, col("event_id").desc)
-    df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+  private[graft] def latestState(df: DataFrame): DataFrame =
+    EventAnalytics.latestPerUser(df)
       .select(col("user_id"), col("event_type").as("last_type"),
         col("value").as("last_value"))
-  }
 
   /** CDC apply with tombstones — the piece [[mergeUpsert]] deliberately
     * lacks: the change LOG carries operations, not states, so the apply
@@ -101,18 +107,9 @@ object Merge {
     * second pass.
     */
   def cdcApply(spark: SparkSession, dir: String): DataFrame = {
-    val ev = new Engine(spark, dir).table("events")
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        col("ts"), col("value"))
-    val cutoff = lit(SnapshotCutoff).cast("timestamp_ntz")
-    val snapshot = latestState(ev.filter(col("ts") < cutoff))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id"))
-      .orderBy(col("ts").desc, col("event_id").desc)
-    val latestOp = ev.filter(col("ts") >= cutoff)
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("user_id"), col("event_type"), col("value"))
-    applyLatestOps(snapshot, latestOp)
+    val (before, after) = splitAtCutoff(logColumns(spark, dir))
+    applyLatestOps(latestState(before), EventAnalytics.latestPerUser(after)
+      .select(col("user_id"), col("event_type"), col("value")))
   }
 
   /** Merge a collapsed latest-op frame (user_id, event_type, value — one

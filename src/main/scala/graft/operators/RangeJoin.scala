@@ -2,9 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.TimestampType
-
 import graft.cube.Engine
+import Relational.{MicrosPerSecond, micros}
 
 /** Banded range (temporal proximity) join. A |l.t - r.t| <= w theta join
   * has no equi key, so Spark would fall back to a broadcast nested-loop
@@ -25,11 +24,9 @@ object RangeJoin {
     */
   def nearbyEventCounts(spark: SparkSession, dir: String): DataFrame = {
     val windowSec: Long = 60
-    val windowUs = windowSec * 1000000L
+    val windowUs = windowSec * MicrosPerSecond
     val ev = new Engine(spark, dir).table("events")
-      // NTZ -> TZ cast reads the naive wall clock in the session tz
-      // (pinned UTC), so epoch micros match the oracle's epoch_us exactly
-      .select(col("event_id"), unix_micros(col("ts").cast(TimestampType)).as("us"))
+      .select(col("event_id"), micros(col("ts")).as("us"))
     val left = ev.withColumn("bucket", floor(col("us") / windowUs))
     val right = ev.select(col("event_id").as("r_id"), col("us").as("r_us"))
       .withColumn("r_bucket", explode(array(

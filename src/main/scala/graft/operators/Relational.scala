@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.TimestampNTZType
+import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 import graft.cube.Engine
 
 /** Relational operators over the TPC-H star and the event log, beyond the
@@ -20,6 +20,9 @@ import graft.cube.Engine
   *  - Calendar buckets surface as `TIMESTAMP_NTZ` ([[ntzBucket]]): Spark's
   *    `date_trunc` returns a session-zone TIMESTAMP, the oracle's a naive
   *    one; the cast keeps the naive wall clock (the session runs in UTC).
+  *  - Event-time arithmetic is exact integer microseconds ([[micros]],
+  *    [[elapsed]]), converted to coarser units only by truncating
+  *    integer division ([[whole]]); no interval or double time math.
   *
   * Scale notes: every operator here is a declarative plan — top-k is
   * `ORDER BY ... LIMIT k` which Spark executes as per-partition top-k
@@ -37,6 +40,26 @@ object Relational {
   /** The `unit` calendar bucket of `c` as a `TIMESTAMP_NTZ`. */
   private[graft] def ntzBucket(unit: String, c: Column): Column =
     date_trunc(unit, c).cast(TimestampNTZType)
+
+  /** Microseconds per second, minute, hour and day. */
+  private[graft] val MicrosPerSecond = 1000000L
+  private[graft] val MicrosPerMinute = 60 * MicrosPerSecond
+  private[graft] val MicrosPerHour = 60 * MicrosPerMinute
+  private[graft] val MicrosPerDay = 24 * MicrosPerHour
+
+  /** Epoch microseconds of the instant `c` (BIGINT). An NTZ `c` reads as
+    * its wall clock in the session zone, which is pinned to UTC. */
+  private[graft] def micros(c: Column): Column = unix_micros(c.cast(TimestampType))
+
+  /** Exact microseconds from the instant `from` to the instant `to`. */
+  private[graft] def elapsed(from: Column, to: Column): Column =
+    micros(to) - micros(from)
+
+  /** Whole `unit`s in the microsecond count `us`: integer `div`, which
+    * truncates toward zero and agrees with the oracle's floor division
+    * only on a non-negative `us`. */
+  private[graft] def whole(us: Column, unit: Long): Column =
+    call_function("div", us, lit(unit))
 
   /** `li` (a lineitem frame) with each line's `p_brand`, plus any `extra`
     * part columns, from the broadcast part dim; for `.transform`. */
@@ -439,17 +462,9 @@ object Relational {
     * shuffle — compaction of a 100 TB changelog moves ~one row per key,
     * not the full history.
     */
-  def latestSnapshot(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts").desc, col("event_id").desc)
-    e(spark, dir).table("events")
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        col("ts"), col("value"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn")
+  def latestSnapshot(spark: SparkSession, dir: String): DataFrame =
+    EventAnalytics.latestPerUser(Merge.logColumns(spark, dir))
       .orderBy(col("user_id"))
-  }
 
   /** SCD2 (slowly-changing-dimension type 2) build: collapse each user's
     * event-type changelog into validity intervals — a row per state
@@ -461,8 +476,7 @@ object Relational {
     * runs between them so the lead only scans change rows.
     */
   def scd2(spark: SparkSession, dir: String): DataFrame = {
-    val wOrd = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
+    val wOrd = EventAnalytics.timeline()
     e(spark, dir).table("events")
       .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
       .withColumn("prev_type", lag(col("event_type"), 1).over(wOrd))
@@ -1997,14 +2011,13 @@ object Relational {
     */
   def burstiness(spark: SparkSession, dir: String): DataFrame = {
     val ev = e(spark, dir).table("events")
-      .select(col("user_id"), col("event_id"),
-        expr("unix_micros(CAST(ts AS TIMESTAMP))").as("us"))
+      .select(col("user_id"), col("event_id"), micros(col("ts")).as("us"))
     val b = ev.select(col("user_id"), col("us").as("us2"))
     // anchors key on event_id — two events sharing a timestamp must stay
     // separate anchors or their window counts double
     val perUser = ev.join(b, "user_id")
       .filter(col("us2") >= col("us") &&
-        col("us2") < col("us") + lit(3600000000L))
+        col("us2") < col("us") + lit(MicrosPerHour))
       .groupBy(col("user_id"), col("event_id"))
       .agg(count(lit(1)).as("in_window"))
       .groupBy(col("user_id"))

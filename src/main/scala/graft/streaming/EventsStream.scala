@@ -1,12 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.types._
-import graft.operators.Relational.ntzBucket
+import graft.operators.{EventAnalytics, Merge}
+import graft.operators.EventAnalytics.sessionWindow
+import graft.operators.Relational.{MicrosPerHour, MicrosPerMinute, MicrosPerSecond,
+  elapsed, micros, ntzBucket, whole}
 
 /** Structured Streaming over the events table (absent in the reference —
   * batch-only, SURVEY §2.9 — provided as [EXT] engine surface).
@@ -336,15 +339,9 @@ object EventsStream {
     * at scale that sink IS the periodic snapshot publish.
     */
   def cdcStream(spark: SparkSession, dir: String): DataFrame = {
-    val ev = new graft.cube.Engine(spark, dir).table("events")
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        col("ts"), col("value"))
-    val cutoff = lit(graft.operators.Merge.SnapshotCutoff)
-    val snapshot = graft.operators.Merge.latestState(
-      ev.filter(col("ts") < cutoff.cast("timestamp_ntz")))
+    val snapshot = Merge.latestState(Merge.splitAtCutoff(Merge.logColumns(spark, dir))._1)
     val (stream, bytes) = streamingEvents(spark, dir)
-    val log = stream.filter(col("ts") >= cutoff.cast("timestamp"))
-    val latestOp = log.groupBy(col("user_id"))
+    val latestOp = Merge.splitAtCutoff(stream)._2.groupBy(col("user_id"))
       .agg(max_by(
         struct(col("event_type"), col("value")),
         struct(col("ts"), col("event_id"))).as("op"))
@@ -353,7 +350,7 @@ object EventsStream {
     val drained = drain(latestOp, bytes, "cdc", OutputMode.Complete(), Overwrite(
       _.select(col("user_id"), col("op.event_type").as("event_type"),
         col("op.value").as("value"))))
-    graft.operators.Merge.applyLatestOps(snapshot, drained)
+    Merge.applyLatestOps(snapshot, drained)
   }
 
   /** Session path mining: the top-5 opening event-type sequences (first
@@ -369,7 +366,7 @@ object EventsStream {
     val events = new graft.cube.Engine(spark, dir).table("events")
     events
       .withColumn("tsq", col("ts").cast(TimestampType))
-      .groupBy(col("user_id"), session_window(col("tsq"), "30 minutes"))
+      .groupBy(col("user_id"), sessionWindow("tsq"))
       .agg(array_join(
         slice(transform(
           array_sort(collect_list(
@@ -398,7 +395,7 @@ object EventsStream {
     val events = new graft.cube.Engine(spark, dir).table("events")
     events
       .withColumn("ts", col("ts").cast(TimestampType))
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
+      .groupBy(col("user_id"), sessionWindow("ts"))
       .agg(count(lit(1)).as("n_events"),
         round(sum(col("value")), 2).as("total_value"))
       .select(col("user_id"),
@@ -420,7 +417,7 @@ object EventsStream {
     val events = new graft.cube.Engine(spark, dir).table("events")
     events
       .withColumn("tsq", col("ts").cast(TimestampType))
-      .groupBy(col("user_id"), session_window(col("tsq"), "30 minutes").as("w"))
+      .groupBy(col("user_id"), sessionWindow("tsq"))
       .agg(count(lit(1)).as("n_events"),
         min(col("ts")).as("__first"), max(col("ts")).as("__last"),
         sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
@@ -428,9 +425,7 @@ object EventsStream {
         round(sum(col("value")), 2).as("session_value"))
       .select(col("user_id"), col("__first").as("session_start"),
         col("n_events"),
-        expr("(unix_micros(CAST(__last AS TIMESTAMP)) - " +
-          "unix_micros(CAST(__first AS TIMESTAMP))) div 1000000")
-          .as("duration_s"),
+        whole(elapsed(col("__first"), col("__last")), MicrosPerSecond).as("duration_s"),
         col("n_purchases"), (col("n_purchases") > 0).as("converted"),
         col("session_value"))
       .orderBy(col("user_id"), col("session_start"))
@@ -586,7 +581,7 @@ object EventsStream {
     val watermarkDelay = "10 seconds"
     val spark = events.sparkSession
     import spark.implicits._
-    val gapUs = gapMinutes * 60L * 1000000L
+    val gapUs = gapMinutes * MicrosPerMinute
     events
       .withWatermark("ts", watermarkDelay)
       .select(col("user_id"), col("ts"), col("value"))
@@ -616,7 +611,7 @@ object EventsStream {
               }
             state.update(cur)
             // fire when the watermark passes the gap after the last event
-            state.setTimeoutTimestamp(cur.end / 1000 + gapMinutes * 60L * 1000L)
+            state.setTimeoutTimestamp((cur.end + gapUs) / 1000)
             closed.iterator
           }
       }
@@ -626,17 +621,6 @@ object EventsStream {
   case class DebState(lastUs: Long)
   case class DebOut(event_type: String, kept: Long)
 
-  /** Streaming burst-collapse debounce — the stateful twin of the batch
-    * debounce report (same oracle): per (user, event_type) the state is
-    * the LAST SEEN event time; an event is kept when it opens a burst
-    * (no predecessor, or the gap reached
-    * [[graft.operators.EventAnalytics.DebounceGapSeconds]]). One tiny fixed
-    * state record per key — this is the bounded-memory shape an
-    * unbounded throttling ingest needs; equal-timestamp events collapse
-    * identically under any intra-batch order, so the batch oracle's
-    * event_id tiebreak has no observable effect on the rollup. Emits a
-    * flag per event; the per-type rollup runs on the sunk table.
-    */
   /** The per-event keep/drop flag stage of [[streamingDebounce]], over
     * any (user_id, event_type, ts) stream — factored out so the
     * cross-batch state carry is testable on a MemoryStream.
@@ -645,7 +629,7 @@ object EventsStream {
       gapSeconds: Long): Dataset[DebOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val gapUs = gapSeconds * 1000000L
+    val gapUs = gapSeconds * MicrosPerSecond
     events
       .select(col("user_id"), col("event_type"), col("ts"))
       .as[DebEv]
@@ -655,7 +639,7 @@ object EventsStream {
         case ((_, typ), evs, state: GroupState[DebState]) =>
           var last = state.getOption.map(_.lastUs).getOrElse(Long.MinValue)
           val outs = evs.toSeq
-            .map(e => e.ts.toInstant.getEpochSecond * 1000000L +
+            .map(e => e.ts.toInstant.getEpochSecond * MicrosPerSecond +
               e.ts.toInstant.getNano / 1000L)
             .sorted.map { us =>
               val kept =
@@ -668,17 +652,37 @@ object EventsStream {
       }
   }
 
+  /** Streaming burst-collapse debounce — the stateful twin of the batch
+    * debounce report (same oracle): per (user, event_type) the state is
+    * the LAST SEEN event time; an event is kept when it opens a burst
+    * (no predecessor, or the gap reached
+    * [[graft.operators.EventAnalytics.DebounceGapSeconds]]). One tiny fixed
+    * state record per key — this is the bounded-memory shape an
+    * unbounded throttling ingest needs; equal-timestamp events collapse
+    * identically under any intra-batch order, so the batch oracle's
+    * event_id tiebreak has no observable effect on the rollup. Emits a
+    * flag per event; the per-type rollup runs on the sunk table.
+    */
   def streamingDebounce(spark: SparkSession, dir: String): DataFrame = {
     val (ev, bytes) = streamingEvents(spark, dir)
-    drain(debounceFlags(ev, graft.operators.EventAnalytics.DebounceGapSeconds).toDF(),
-      bytes, "debounce",
-      OutputMode.Append(), Memory)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum(col("kept")).as("n_kept"))
-      .withColumn("drop_rate", round(lit(1.0) -
-        col("n_kept").cast("double") / col("n_events").cast("double"), 6))
-      .orderBy(col("event_type"))
+    EventAnalytics.dropRates(drain(debounceFlags(ev, EventAnalytics.DebounceGapSeconds).toDF(),
+      bytes, "debounce", OutputMode.Append(), Memory))
   }
+
+  /** The interval-join condition of both attribution joins: the same
+    * user's purchase within the hour up to and including the click. */
+  private def purchaseInClickHour: Column =
+    col("user_id") === col("p_user") &&
+      col("purchase_ts") >= col("click_ts") - expr("INTERVAL 1 HOUR") &&
+      col("purchase_ts") <= col("click_ts")
+
+  /** The output rows of both attribution joins, read from the drain. */
+  private def attributionRows(drained: DataFrame): DataFrame =
+    drained.select(col("click_id"), col("user_id"),
+        col("click_ts").cast(TimestampNTZType).as("click_ts"),
+        col("purchase_ts").cast(TimestampNTZType).as("purchase_ts"),
+        col("purchase_value"))
+      .orderBy(col("click_id"), col("purchase_ts"))
 
   /** Stream-stream interval join: each click paired with the same user's
     * purchases in the hour leading up to it (purchase attribution).
@@ -700,16 +704,8 @@ object EventsStream {
       .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"),
         col("value").as("purchase_value"))
       .withWatermark("purchase_ts", "1 hour")
-    val joined = clicks.join(purchases,
-      col("user_id") === col("p_user") &&
-        col("purchase_ts") >= col("click_ts") - expr("INTERVAL 1 HOUR") &&
-        col("purchase_ts") <= col("click_ts"))
-    drain(joined, bytes, "attrib", OutputMode.Append(), Memory)
-      .select(col("click_id"), col("user_id"),
-        col("click_ts").cast(TimestampNTZType).as("click_ts"),
-        col("purchase_ts").cast(TimestampNTZType).as("purchase_ts"),
-        col("purchase_value"))
-      .orderBy(col("click_id"), col("purchase_ts"))
+    attributionRows(drain(clicks.join(purchases, purchaseInClickHour),
+      bytes, "attrib", OutputMode.Append(), Memory))
   }
 
   /** Stream-stream LEFT OUTER interval join — the attribution variant a
@@ -741,24 +737,22 @@ object EventsStream {
     */
   def purchaseAttributionOuter(spark: SparkSession, dir: String): DataFrame = {
     // typed timestamp math end-to-end: adaptTs normalizes whatever the
-    // fixture physically stored, unix_micros reads it back — no
+    // fixture physically stored, `micros` reads it back — no
     // physical-type assumption (the old getLong-of-nanos math broke when
     // the fixture moved to timestamp[us])
     val cutoffMicros = graft.cube.Engine
       .adaptTs(graft.cube.Engine.datasetTable(spark, s"$dir/events.parquet"))
       .agg(least(
-        max(when(col("event_type") === "click",
-          unix_micros(col("ts").cast(TimestampType)))),
-        max(when(col("event_type") === "purchase",
-          unix_micros(col("ts").cast(TimestampType))))))
-      .collect()(0).getLong(0) - 2L * 3600L * 1000000L
+        max(when(col("event_type") === "click", micros(col("ts")))),
+        max(when(col("event_type") === "purchase", micros(col("ts"))))))
+      .collect()(0).getLong(0) - 2 * MicrosPerHour
     val (ev, bytes) = streamingEvents(spark, dir)
     val clicks = ev
       .select(col("event_id").as("click_id"), col("user_id"),
         col("ts").as("click_ts"), col("event_type"))
       .withWatermark("click_ts", "1 hour")
       .filter(col("event_type") === "click" &&
-        unix_micros(col("click_ts")) <= cutoffMicros)
+        micros(col("click_ts")) <= cutoffMicros)
       .drop("event_type")
     val purchases = ev
       .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"),
@@ -766,17 +760,24 @@ object EventsStream {
       .withWatermark("purchase_ts", "1 hour")
       .filter(col("event_type") === "purchase")
       .drop("event_type")
-    val joined = clicks.join(purchases,
-      col("user_id") === col("p_user") &&
-        col("purchase_ts") >= col("click_ts") - expr("INTERVAL 1 HOUR") &&
-        col("purchase_ts") <= col("click_ts"),
-      "left_outer")
-    drain(joined, bytes, "attrib_outer", OutputMode.Append(), Memory)
-      .select(col("click_id"), col("user_id"),
-        col("click_ts").cast(TimestampNTZType).as("click_ts"),
-        col("purchase_ts").cast(TimestampNTZType).as("purchase_ts"),
-        col("purchase_value"))
-      .orderBy(col("click_id"), col("purchase_ts"))
+    attributionRows(drain(clicks.join(purchases, purchaseInClickHour, "left_outer"),
+      bytes, "attrib_outer", OutputMode.Append(), Memory))
+  }
+
+  /** The final per-user state of an Update-mode changelog drained into
+    * the memory table, which holds one row per (user, trigger that
+    * touched it): `n_events` grows strictly per user, so the row with the
+    * largest one is the final state. Returns `user_id`, `n_events`, the
+    * `fields`, and `total_value` rounded to 2dp. Without this fold a
+    * drain is correct only when the fixture runs as one micro-batch
+    * (caught by the multi-batch driver-restart chaos probe). */
+  private def finalState(changelog: DataFrame, fields: String*): DataFrame = {
+    val kept = "n_events" +: fields
+    changelog.groupBy(col("user_id"))
+      .agg(max_by(struct((kept :+ "total_value").map(col): _*), col("n_events")).as("__s"))
+      .select(col("user_id") +: kept.map(f => col(s"__s.$f").as(f)) :+
+        round(col("__s.total_value"), 2).as("total_value"): _*)
+      .orderBy(col("user_id"))
   }
 
   /** Custom per-key state via mapGroupsWithState: per-user event count,
@@ -788,7 +789,7 @@ object EventsStream {
     import spark.implicits._
     val (ev, bytes) = streamingEvents(spark, dir)
     val evs = ev
-      .select(col("user_id"), unix_micros(col("ts")).as("tsMicros"),
+      .select(col("user_id"), micros(col("ts")).as("tsMicros"),
         col("event_type"), col("value"))
       .as[Ev]
     val summarized = evs.groupByKey(_.user_id)
@@ -806,20 +807,8 @@ object EventsStream {
           state.update(next)
           UserSummary(uid, next.n, next.lastType, next.total)
       }
-    // latest-state read of the Update-mode changelog: the memory table
-    // holds one row per (user, trigger that touched it) — per-user the
-    // running n_events is strictly monotone, so max_by(n_events) IS the
-    // final state. Without this fold the drain was only correct when
-    // the fixture drove as a single micro-batch (caught live by the
-    // multi-batch driver-restart chaos probe).
-    drain(summarized.toDF(), bytes, "users", OutputMode.Update(), Memory)
-      .groupBy(col("user_id"))
-      .agg(max_by(struct(col("n_events"), col("last_type"),
-        col("total_value")), col("n_events")).as("__s"))
-      .select(col("user_id"), col("__s.n_events").as("n_events"),
-        col("__s.last_type").as("last_type"),
-        round(col("__s.total_value"), 2).as("total_value"))
-      .orderBy(col("user_id"))
+    finalState(drain(summarized.toDF(), bytes, "users", OutputMode.Update(), Memory),
+      "last_type")
   }
 
   // ---- state API v2 (transformWithState, Spark 4) ----
@@ -857,21 +846,12 @@ object EventsStream {
     import spark.implicits._
     val (ev, bytes) = streamingEvents(spark, dir)
     val evs = ev
-      .select(col("user_id"), unix_micros(col("ts")).as("tsMicros"),
+      .select(col("user_id"), micros(col("ts")).as("tsMicros"),
         col("event_type"), col("value"))
       .as[Ev]
     val out = evs.groupByKey(_.user_id)
       .transformWithState(new SpendProcessor, TimeMode.None(), OutputMode.Update())
-    // latest-state changelog fold — see userSummaries: one row per
-    // (user, touching trigger) in Update mode; monotone n_events
-    // selects the final state
-    drain(out.toDF(), bytes, "tws", OutputMode.Update(), Memory)
-      .groupBy(col("user_id"))
-      .agg(max_by(struct(col("n_events"), col("total_value")),
-        col("n_events")).as("__s"))
-      .select(col("user_id"), col("__s.n_events").as("n_events"),
-        round(col("__s.total_value"), 2).as("total_value"))
-      .orderBy(col("user_id"))
+    finalState(drain(out.toDF(), bytes, "tws", OutputMode.Update(), Memory))
   }
 
   /** Streaming trending leaderboard: tumbling 6-hour windows of

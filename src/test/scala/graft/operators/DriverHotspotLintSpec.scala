@@ -195,6 +195,30 @@ class DriverHotspotLintSpec extends AnyFunSuite {
       Map.empty, under = Seq("graft/operators/"))
   }
 
+  test("epoch microseconds are spelled once, in Relational.micros") {
+    // `unix_micros(` outside the oracle SQL in SparkEntry; every
+    // event-time difference goes through micros / elapsed / whole
+    assertCeilings("unix_micros", """unix_micros\(""",
+      Map("graft/operators/Relational.scala" -> 1),
+      under = Seq("graft/operators/", "graft/streaming/"))
+  }
+
+  test("the per-user (ts, event_id) order is spelled once, in EventAnalytics.timeline") {
+    assertCeilings("(ts, event_id) order",
+      """orderBy\(col\("ts"\), col\("event_id"\)\)""",
+      Map("graft/operators/EventAnalytics.scala" -> 1,
+        // the fixture splitter's one global order, not a per-user timeline
+        "graft/SplitFixture.scala" -> 1))
+  }
+
+  test("the 30-minute session gap is spelled once, in EventAnalytics.SessionGap") {
+    // the lag form's INTERVAL and session_window's duration string;
+    // the oracle SQL in SparkEntry keeps its own text
+    assertCeilings("30-minute gap", """(?i)(?:"|INTERVAL )30 minutes""",
+      Map("graft/operators/EventAnalytics.scala" -> 1),
+      under = Seq("graft/operators/", "graft/streaming/"))
+  }
+
   test("TrieMap registries stay confined to Scratch and the schema memo") {
     // Scratch owns all session-scoped state (scratch ids, session memos,
     // memo counts); a hand-made registry elsewhere duplicates its

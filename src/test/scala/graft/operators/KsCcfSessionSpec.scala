@@ -68,6 +68,23 @@ class KsCcfSessionSpec extends SparkFunSuite {
     assert(math.abs(rows.map(_._4).sum - 1.0) < 2e-6) // shares ~ sum to 1
   }
 
+  test("the shared session_window column keeps the exactly-30-minute gap in one session") {
+    val s = spark
+    import s.implicits._
+    // the lag-form case above, through the session_window form q39, q155
+    // and q176 use: 10:30 is exactly 30 minutes after 10:00 (same
+    // session); 11:00:00.000001 is 30 minutes + 1 µs after 10:30 (new one)
+    val df = Seq(
+      (1L, ts("2024-01-01 10:00:00")),
+      (1L, ts("2024-01-01 10:30:00")),
+      (1L, ts("2024-01-01 11:00:00.000001")))
+      .toDF("user_id", "ts")
+    val sizes = df.groupBy(col("user_id"), EventAnalytics.sessionWindow("ts"))
+      .agg(count(lit(1)).as("n"))
+      .orderBy(col("w.start")).collect().map(_.getLong(2)).toSeq
+    assert(sizes == Seq(2L, 1L))
+  }
+
   test("eventCcf lag 0 on the fixture is a valid correlation and every lag is bounded") {
     val out = EventAnalytics.eventCcf(spark, sf).collect()
     assert(out.map(_.getInt(0)).toSeq == Seq(-3, -2, -1, 0, 1, 2, 3))
