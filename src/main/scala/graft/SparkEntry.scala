@@ -6448,9 +6448,6 @@ object SparkEntry {
       |SELECT q_id, rk, vec_id, neg_label, cos_sim FROM r WHERE rk <= 3
       |ORDER BY q_id, rk""".stripMargin
 
-  /** Shared exact-kNN-join oracle (q97 exact path; q101 indexed path in
-    * its exhaustive regime — both must produce THIS relation).
-    */
   /** q29's full LSH probe recomputation (portable md5-bit planes, 4
     * tables × 8 bits, Hamming-1 multiprobe, exact-cosine re-rank) —
     * shared by q29 (built layout) and q151 (appended layout): the two
@@ -6488,6 +6485,9 @@ object SparkEntry {
       |FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding, label FROM embeddings) e JOIN cand USING (vec_id), q
       |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin
 
+  /** Shared exact-kNN-join oracle (q97 exact path; q101 indexed path in
+    * its exhaustive regime — both must produce THIS relation).
+    */
   private val knnJoinOracle: String =
     """WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb
       |           FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding, label FROM embeddings) embeddings WHERE vec_id < 5),

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions.{col, ntile}
 import org.apache.spark.sql.expressions.Window
 
+import graft.cube.Engine
+
 /** Dev/harness tooling: re-materialize a fixture directory with its
   * stream-read tables (events/documents/embeddings) written as
   * multi-file parquet DIRECTORIES instead of single files — the layout
@@ -36,12 +38,12 @@ object SplitFixture {
     val n = if (args.length > 2) args(2).toInt else 12
     val spark = GraftSession.local()
     tables.foreach { t =>
-      val df = spark.read.parquet(s"$src/$t.parquet")
+      val df = spark.read.parquet(Engine.tablePath(src, t))
       if (t == "events") {
         // sequential time-slice appends: strictly increasing file
         // mtimes in ts order, so the file stream source's oldest-first
         // listing replays the log in event-time order
-        val path = s"$dst/events.parquet"
+        val path = Engine.tablePath(dst, "events")
         val p = new org.apache.hadoop.fs.Path(path)
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         if (fs.exists(p)) fs.delete(p, true)
@@ -56,7 +58,7 @@ object SplitFixture {
         sliced.unpersist()
       } else {
         val out = if (split(t)) df.repartition(n) else df.coalesce(1)
-        out.write.mode("overwrite").parquet(s"$dst/$t.parquet")
+        out.write.mode("overwrite").parquet(Engine.tablePath(dst, t))
       }
     }
     spark.stop()

@@ -1,5 +1,6 @@
 package graft.cube
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,6 +15,11 @@ import org.apache.spark.sql.types._
   * order — required for oracle hash-parity and harmless semantically.
   */
 object CubeCatalog {
+
+  /** A line's price net of its discount,
+    * `l_extendedprice * (1 - l_discount)`. */
+  private[graft] val netPrice: Column =
+    col("l_extendedprice") * (lit(1.0) - col("l_discount"))
 
   /** trade cube — the analog of the reference docstring cube
     * 'trade_i_baci_a_92' (`oec.py:16`, `oec.py:36`) over the lineitem star.
@@ -71,11 +77,9 @@ object CubeCatalog {
       // 'Trade Value' (`oec.py:35`) analog: SUM over the fact measure column
       MeasureDef("Trade Value", round(sum(col("l_extendedprice")), 2)),
       MeasureDef("Quantity", sum(col("l_quantity"))), // integer-valued: exact
-      MeasureDef("Discounted Value",
-        round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)),
+      MeasureDef("Discounted Value", round(sum(netPrice), 2)),
       MeasureDef("Charged Value",
-        round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-          * (lit(1.0) + col("l_tax"))), 2)),
+        round(sum(netPrice * (lit(1.0) + col("l_tax"))), 2)),
       MeasureDef("Line Count", count(lit(1))),
       MeasureDef("Order Count", countDistinct(col("l_orderkey"))),
       MeasureDef("Avg Quantity", round(avg(col("l_quantity")), 4)),

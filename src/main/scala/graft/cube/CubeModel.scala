@@ -111,17 +111,21 @@ case class CubeDef(
     measureByName.getOrElse(n, throw new IllegalArgumentException(
       s"cube '$name' has no measure '$n'; known: ${measures.map(_.name).mkString(", ")}"))
 
+  /** The join edge of dim `alias`. */
+  def dim(alias: String): DimJoin = joinByAlias(alias)
+
   /** Transitive closure of dim aliases required to evaluate the given
-    * aliases — join pruning: a query touching only fact columns joins
-    * nothing at all.
+    * aliases from `root` ("fact", or a dim alias when the join starts at
+    * that dim) — join pruning: a query touching only `root`'s columns
+    * joins nothing at all.
     */
-  def requiredAliases(roots: Set[String]): Seq[DimJoin] = {
+  def requiredAliases(root: String, roots: Set[String]): Seq[DimJoin] = {
     @annotation.tailrec
     def close(need: Set[String]): Set[String] = {
-      val more = need.flatMap(a => joinByAlias.get(a).map(_.parent)).filter(_ != "fact")
+      val more = need.flatMap(a => joinByAlias.get(a).map(_.parent)) - root
       if (more.subsetOf(need)) need else close(need ++ more)
     }
-    val needed = close(roots - "fact")
+    val needed = close(roots - root)
     // preserve declaration order: parents are declared before children
     joins.filter(j => needed.contains(j.alias))
   }

@@ -22,6 +22,11 @@ import org.apache.spark.sql.types._
   *     with automatic partial (map-side) aggregation, so the shuffle
   *     carries only group keys + partial sums.
   *
+  * The relational operators read the same star through [[joined]], rooted
+  * at the fact or at a dim, so the join graph is written down once, in
+  * [[CubeCatalog.trade]]; their money leaves through
+  * `Relational.cents`/`Relational.dollars`.
+  *
   * @param dir directory of the parquet star schema (one file per table)
   */
 class Engine(spark: SparkSession, dir: String) {
@@ -40,7 +45,7 @@ class Engine(spark: SparkSession, dir: String) {
     * bit-identical with ANSI-SQL engines regardless of reader timezone.
     */
   def table(name: String): DataFrame = {
-    val df0 = Engine.datasetTable(spark, s"$dir/$name.parquet")
+    val df0 = Engine.datasetTable(spark, Engine.tablePath(dir, name))
     val df = if (name == "events") Engine.adaptTs(df0) else df0
     val cols = df.schema.fields.map { f =>
       if (f.dataType == TimestampType) col(f.name).cast(TimestampNTZType).as(f.name)
@@ -74,11 +79,22 @@ class Engine(spark: SparkSession, dir: String) {
     case _ => v
   }
 
-  /** Join the fact to exactly the dims `roots` requires (star/snowflake). */
-  private def joined(cube: CubeDef, roots: Set[String]): DataFrame =
-    cube.requiredAliases(roots).foldLeft(table(cube.fact)) { (acc, j) =>
+  /** The star of cube `cubeName` read from `root` — its fact table or
+    * one of its dim aliases — joined to exactly the dims `dims` requires
+    * (star/snowflake), along the declared graph: its foreign keys, inner
+    * joins and broadcast choices. The one spelling of a star join; the
+    * operators read the TPC-H star through it too, e.g.
+    * `joined("trade", "lineitem", "customer")` or
+    * `joined("trade", "orders", "nation")`.
+    */
+  private[graft] def joined(cubeName: String, root: String, dims: String*): DataFrame = {
+    val cube = CubeCatalog(cubeName)
+    val (from, base) =
+      if (root == cube.fact) ("fact", table(cube.fact)) else (root, dimDf(cube.dim(root)))
+    cube.requiredAliases(from, dims.toSet).foldLeft(base) { (acc, j) =>
       acc.join(dimDf(j), col(j.parentKey) === col(j.key), "inner")
     }
+  }
 
   /** The shared front half of [[getData]] and [[getDataMulti]]: resolve
     * the drilldown levels, cuts, range cuts and measures of `q`, join the
@@ -96,7 +112,8 @@ class Engine(spark: SparkSession, dir: String) {
 
     val roots = (dds.map(_.dim) ++ cuts.keys.map(_.dim) ++
       ranges.keys.map(_.dim) ++ msrs.flatMap(_.dims)).toSet
-    val filtered0 = cuts.foldLeft(joined(cube, roots)) { case (df, (lvl, vs)) =>
+    val star = joined(q.cube, cube.fact, roots.toSeq: _*)
+    val filtered0 = cuts.foldLeft(star) { case (df, (lvl, vs)) =>
       val lits = vs.map(v => lit(coerce(v, lvl.dataType)))
       df.filter(if (lits.size == 1) lvl.expr === lits.head
                 else lvl.expr.isin(lits: _*))
@@ -171,12 +188,7 @@ class Engine(spark: SparkSession, dir: String) {
   def getMembers(cubeName: String, levelName: String): DataFrame = {
     val cube = CubeCatalog(cubeName)
     val lvl = cube.level(levelName)
-    val base =
-      if (lvl.dim == "fact") table(cube.fact)
-      else {
-        val j = cube.requiredAliases(Set(lvl.dim)).find(_.alias == lvl.dim).get
-        dimDf(j)
-      }
+    val base = joined(cubeName, if (lvl.dim == "fact") cube.fact else lvl.dim)
     val cols = Seq(lvl.expr.as("ID")) ++ lvl.memberLabel.map(_.as("Label"))
     Normalize(base.select(cols: _*).distinct()).orderBy(col("id"))
   }
@@ -184,8 +196,13 @@ class Engine(spark: SparkSession, dir: String) {
 
 object Engine {
 
+  /** Where dataset table `name` of the dataset in `dir` lives: one
+    * parquet file or directory per table (`TESTDATA.md`). */
+  private[graft] def tablePath(dir: String, name: String): String =
+    s"$dir/$name.parquet"
+
   /** Inferred-schema memo for DATASET tables — the immutable parquet
-    * inputs every query reads (`$dir/<table>.parquet`). A bare
+    * inputs every query reads ([[tablePath]]). A bare
     * `spark.read.parquet(path)` pays schema INFERENCE on every call: a
     * driver-side footer-read job (~60 ms measured at sf0.1 — listing +
     * one-task job + footer parse) that a suite issuing hundreds of
@@ -218,7 +235,7 @@ object Engine {
     * Falls back to a plain inferring read if the path cannot be stat'd
     * (the read itself then raises the real error).
     */
-  private[graft] def datasetTable(spark: SparkSession, path: String): DataFrame =
+  private def datasetTable(spark: SparkSession, path: String): DataFrame =
     try spark.read.schema(datasetSchema(spark, path)).parquet(path)
     catch { case _: java.io.IOException => spark.read.parquet(path) }
 

@@ -136,12 +136,6 @@ object Graph {
     counts.orderBy(col("doc_id"))
   }
 
-  /** Fixture wiring (q102): triangle census of the near-dup graph —
-    * dense triangle neighborhoods are template families (a curation
-    * signal distinct from PageRank's centrality), and the count doubles
-    * as the clustering-coefficient numerator. Shares the session pair
-    * frame with the other six consumers.
-    */
   /** Degree assortativity of an undirected pair graph: the Pearson
     * correlation of endpoint degrees over all directed edge instances —
     * positive means hubs link to hubs (one dense dup cluster), negative
@@ -167,6 +161,12 @@ object Graph {
         Relational.pearson("m").as("assortativity"))
   }
 
+  /** Fixture wiring (q102): triangle census of the near-dup graph —
+    * dense triangle neighborhoods are template families (a curation
+    * signal distinct from PageRank's centrality), and the count doubles
+    * as the clustering-coefficient numerator. Shares the session pair
+    * frame with the other six consumers.
+    */
   def docTriangles(spark: SparkSession, dir: String): DataFrame = {
     val docs = new graft.cube.Engine(spark, dir).table("documents")
     triangleCounts(Dedup.minhashPairsShared(docs, dir)

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.NumericType
 
+import graft.cube.CubeCatalog.netPrice
 import graft.cube.Engine
-import Relational.cents
+import Relational.{cents, dollars}
 
 /** Data-quality operators an ETL engine runs before publishing a table:
   * column profiling and declarative constraint audits. The reference
@@ -85,21 +86,6 @@ object Quality {
       .orderBy(col("constraint_name"))
   }
 
-  /** Population stability index (PSI) report between two cohorts of the
-    * event value distribution (user_id parity stands in for the
-    * reference/current model-serving windows): fixed decade bins,
-    * Laplace-smoothed shares, per-bin PSI contribution
-    * (p − q)·ln(p/q). The drift gate every feature pipeline runs before
-    * refreshing a model — PSI > 0.2 on a feature means the training
-    * distribution no longer matches serving.
-    *
-    * Scale shape: one pass bins and splits (map-side combined counts per
-    * (bin)), totals ride in as a 1-row broadcast; the ln runs on shares
-    * DERIVED THE SAME WAY on both engines (integer counts → one double
-    * divide each) so IEEE rounding stays in lockstep. floor() — not an
-    * int cast — buckets the double (cast truncation conventions differ
-    * between engines; floor is defined identically).
-    */
   /** Winsorization report: clamp the value column to its per-type
     * [P5, P95] band and report the robust mean plus how much mass the
     * clamp moved — the outlier-tolerant normalization every feature
@@ -130,6 +116,21 @@ object Quality {
       .orderBy(col("event_type"))
   }
 
+  /** Population stability index (PSI) report between two cohorts of the
+    * event value distribution (user_id parity stands in for the
+    * reference/current model-serving windows): fixed decade bins,
+    * Laplace-smoothed shares, per-bin PSI contribution
+    * (p − q)·ln(p/q). The drift gate every feature pipeline runs before
+    * refreshing a model — PSI > 0.2 on a feature means the training
+    * distribution no longer matches serving.
+    *
+    * Scale shape: one pass bins and splits (map-side combined counts per
+    * (bin)), totals ride in as a 1-row broadcast; the ln runs on shares
+    * DERIVED THE SAME WAY on both engines (integer counts → one double
+    * divide each) so IEEE rounding stays in lockstep. floor() — not an
+    * int cast — buckets the double (cast truncation conventions differ
+    * between engines; floor is defined identically).
+    */
   def psiReport(spark: SparkSession, dir: String): DataFrame = {
     val bins = 10
     val ev = new Engine(spark, dir).table("events")
@@ -169,8 +170,7 @@ object Quality {
     val en = new Engine(spark, dir)
     val lines = en.table("lineitem")
       .groupBy(col("l_orderkey"))
-      .agg(sum(cents(col("l_extendedprice") * (lit(1) - col("l_discount")) *
-        (lit(1) + col("l_tax")))).as("line_cents"))
+      .agg(sum(cents(netPrice * (lit(1) + col("l_tax")))).as("line_cents"))
     en.table("orders")
       .join(lines, col("o_orderkey") === col("l_orderkey"), "left")
       .withColumn("diff_cents", coalesce(col("line_cents"), lit(0L)) -
@@ -180,7 +180,7 @@ object Quality {
         sum(when(abs(col("diff_cents")) > 1, 1L).otherwise(0L))
           .as("n_mismatch"),
         max(abs(col("diff_cents"))).as("max_abs_diff_cents"),
-        round(avg(abs(col("diff_cents")).cast("double")) / 100.0, 6)
+        dollars(avg(abs(col("diff_cents")).cast("double")), 6)
           .as("avg_abs_diff_usd"))
       .orderBy(col("o_orderstatus"))
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+import graft.cube.CubeCatalog.netPrice
 import graft.cube.Engine
 
 /** Relational operators over the TPC-H star and the event log, beyond the
@@ -13,10 +14,15 @@ import graft.cube.Engine
   * statistics, and the data-quality audits (SURVEY §2.5-2.7 — absent in
   * the reference, provided as first-class engine ops).
   *
-  * Two conventions keep every result hash-equal to the oracle:
+  * The TPC-H star is read through [[graft.cube.Engine.joined]], the trade
+  * cube's declared dimension graph (its keys, inner joins and broadcast
+  * dims); a join spelled out here differs from the graph in kind (semi,
+  * anti or outer), in its broadcast choice, or in joining a derived frame.
+  *
+  * These conventions keep every result hash-equal to the oracle:
   *  - Money sums in exact integer cents ([[cents]]): a sum of BIGINT cents
   *    does not depend on partial-aggregation order, a sum of doubles does.
-  *    Dollars come back only at the end, as `cents / 100.0` rounded to 2dp.
+  *    Dollars come back only at the end, through [[dollars]].
   *  - Calendar buckets surface as `TIMESTAMP_NTZ` ([[ntzBucket]]): Spark's
   *    `date_trunc` returns a session-zone TIMESTAMP, the oracle's a naive
   *    one; the cast keeps the naive wall clock (the session runs in UTC).
@@ -36,6 +42,11 @@ object Relational {
 
   /** A money amount in exact integer cents (BIGINT). */
   private[graft] def cents(c: Column): Column = round(c * 100, 0).cast("long")
+
+  /** Cents `c` back as dollars, rounded to `digits` decimals (2 for whole
+    * cents; a mean of cents keeps more). */
+  private[graft] def dollars(c: Column, digits: Int = 2): Column =
+    round(c.cast("double") / 100.0, digits)
 
   /** The `unit` calendar bucket of `c` as a `TIMESTAMP_NTZ`. */
   private[graft] def ntzBucket(unit: String, c: Column): Column =
@@ -113,13 +124,9 @@ object Relational {
     */
   def topCustomers(spark: SparkSession, dir: String): DataFrame = {
     val en = e(spark, dir)
-    en.table("lineitem")
-      .join(en.table("orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(en.table("customer"), col("o_custkey") === col("c_custkey"))
+    en.joined("trade", "lineitem", "customer")
       .groupBy(col("c_custkey"), col("c_name"))
-      .agg(round(sum(cents(col("l_extendedprice") *
-          (lit(1) - col("l_discount")))).cast("double") / 100.0, 2)
-        .as("revenue"))
+      .agg(dollars(sum(cents(netPrice))).as("revenue"))
       .orderBy(col("revenue").desc, col("c_custkey"))
       .limit(10)
   }
@@ -129,11 +136,7 @@ object Relational {
     */
   def nationRankInRegion(spark: SparkSession, dir: String): DataFrame = {
     val en = e(spark, dir)
-    val agg = en.table("lineitem")
-      .join(en.table("orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(en.table("customer"), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(en.table("nation")), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(en.table("region")), col("n_regionkey") === col("r_regionkey"))
+    val agg = en.joined("trade", "lineitem", "region")
       .groupBy(col("r_name"), col("n_name"))
       .agg(round(sum(col("l_extendedprice")), 2).as("revenue"))
     val w = Window.partitionBy(col("r_name")).orderBy(col("revenue").desc, col("n_name"))
@@ -169,12 +172,9 @@ object Relational {
   /** Nations that appear via customers UNION via suppliers — set op. */
   def activeNations(spark: SparkSession, dir: String): DataFrame = {
     val en = e(spark, dir)
-    val nation = en.table("nation")
-    val viaCust = en.table("customer")
-      .join(broadcast(nation), col("c_nationkey") === col("n_nationkey"))
-      .select(col("n_name"))
+    val viaCust = en.joined("trade", "customer", "nation").select(col("n_name"))
     val viaSupp = en.table("supplier")
-      .join(broadcast(nation), col("s_nationkey") === col("n_nationkey"))
+      .join(broadcast(en.table("nation")), col("s_nationkey") === col("n_nationkey"))
       .select(col("n_name"))
     viaCust.union(viaSupp).distinct()
       .withColumnRenamed("n_name", "nation").orderBy(col("nation"))
@@ -185,8 +185,7 @@ object Relational {
     */
   def segmentPriorityCube(spark: SparkSession, dir: String): DataFrame = {
     val en = e(spark, dir)
-    en.table("orders")
-      .join(en.table("customer"), col("o_custkey") === col("c_custkey"))
+    en.joined("trade", "orders", "customer")
       .cube(col("c_mktsegment"), col("o_orderpriority"))
       .agg(count(lit(1)).as("order_count"),
         round(sum(col("o_totalprice")), 2).as("total_price"),
@@ -201,9 +200,7 @@ object Relational {
     */
   def approxCustomerCounts(spark: SparkSession, dir: String): DataFrame = {
     val en = e(spark, dir)
-    en.table("orders")
-      .join(en.table("customer"), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(en.table("nation")), col("c_nationkey") === col("n_nationkey"))
+    en.joined("trade", "orders", "nation")
       .groupBy(col("n_name"))
       .agg(approx_count_distinct(col("o_custkey")).as("approx_customers"),
         countDistinct(col("o_custkey")).as("exact_customers"))
@@ -575,13 +572,9 @@ object Relational {
     */
   def revenueQuartiles(spark: SparkSession, dir: String): DataFrame = {
     val en = e(spark, dir)
-    val rev = en.table("lineitem")
-      .join(en.table("orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(en.table("customer"), col("o_custkey") === col("c_custkey"))
+    val rev = en.joined("trade", "lineitem", "customer")
       .groupBy(col("c_custkey"))
-      .agg(round(sum(cents(col("l_extendedprice") *
-          (lit(1) - col("l_discount")))).cast("double") / 100.0, 2)
-        .as("revenue"))
+      .agg(dollars(sum(cents(netPrice))).as("revenue"))
     Ranks.globalRowNumber(rev, Seq(col("revenue").desc, col("c_custkey")),
         "__rank", totalCol = Some("__n"))
       // ntile(4) semantics: the first (n % 4) buckets hold ceil(n/4) rows
@@ -907,10 +900,7 @@ object Relational {
     */
   def shipDelayByPriority(spark: SparkSession, dir: String): DataFrame = {
     val en = e(spark, dir)
-    en.table("lineitem")
-      .select(col("l_orderkey"), col("l_shipdate"))
-      .join(en.table("orders").select(col("o_orderkey"), col("o_orderdate"),
-        col("o_orderpriority")), col("l_orderkey") === col("o_orderkey"))
+    en.joined("trade", "lineitem", "orders")
       .select(col("o_orderpriority"),
         datediff(col("l_shipdate"), col("o_orderdate")).cast("long")
           .as("delay_days"))
@@ -1210,7 +1200,7 @@ object Relational {
           .otherwise("C"))
       .groupBy(col("abc_class"))
       .agg(count(lit(1)).as("n_brands"),
-        round(sum(col("cents")) / 100.0, 2).as("class_revenue"))
+        dollars(sum(col("cents"))).as("class_revenue"))
       .orderBy(col("abc_class"))
   }
 
@@ -1332,7 +1322,7 @@ object Relational {
       .filter(col("cents") * col("n_sup") * lit(100L) >
         lit(105L) * col("total_cents"))
       .select(col("s_suppkey"), col("s_name"),
-        round(col("cents") / 100.0, 2).as("revenue"),
+        dollars(col("cents")).as("revenue"),
         round(col("cents").cast("double") / col("total_cents").cast("double"),
           6).as("share"))
       .orderBy(col("revenue").desc, col("s_suppkey"))
@@ -1463,10 +1453,7 @@ object Relational {
     */
   def segmentPriorityMi(spark: SparkSession, dir: String): DataFrame = {
     val en = e(spark, dir)
-    val joined = en.table("orders")
-      .join(en.table("customer")
-        .select(col("c_custkey"), col("c_mktsegment")),
-        col("o_custkey") === col("c_custkey"))
+    val joined = en.joined("trade", "orders", "customer")
       .select(col("c_mktsegment").as("seg"),
         col("o_orderpriority").as("prio"))
     val cells = joined.groupBy(col("seg"), col("prio"))
@@ -1558,10 +1545,7 @@ object Relational {
     */
   def segmentPriorityChisq(spark: SparkSession, dir: String): DataFrame = {
     val en = e(spark, dir)
-    val cells = en.table("orders")
-      .join(en.table("customer")
-        .select(col("c_custkey"), col("c_mktsegment")),
-        col("o_custkey") === col("c_custkey"))
+    val cells = en.joined("trade", "orders", "customer")
       .groupBy(col("c_mktsegment").as("seg"),
         col("o_orderpriority").as("prio"))
       .agg(count(lit(1)).as("observed"))
@@ -1707,7 +1691,7 @@ object Relational {
       .filter(col("bal_cents") * col("seg_n") > col("seg_cents"))
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_customers"),
-        round(sum(col("bal_cents")) / 100.0, 2).as("total_balance"))
+        dollars(sum(col("bal_cents"))).as("total_balance"))
       .orderBy(col("c_mktsegment"))
   }
 
@@ -1754,8 +1738,8 @@ object Relational {
         sum(col("l_quantity").cast("long") * col("retail_cents"))
           .as("retail_value_cents"))
       .select(col("p_brand"), col("n_items"),
-        round(col("rev_cents") / 100.0, 2).as("revenue"),
-        round(col("retail_value_cents") / 100.0, 2).as("retail_value"),
+        dollars(col("rev_cents")).as("revenue"),
+        dollars(col("retail_value_cents")).as("retail_value"),
         round(col("rev_cents").cast("double") /
           col("retail_value_cents").cast("double"), 6)
           .as("realized_ratio"))
@@ -1818,9 +1802,7 @@ object Relational {
     */
   def supplierConsistency(spark: SparkSession, dir: String): DataFrame = {
     val en = e(spark, dir)
-    val delays = en.table("lineitem")
-      .join(en.table("orders").select(col("o_orderkey"), col("o_orderdate")),
-        col("l_orderkey") === col("o_orderkey"))
+    val delays = en.joined("trade", "lineitem", "orders")
       .select(col("l_suppkey"),
         datediff(col("l_shipdate"), col("o_orderdate")).cast("long").as("d"))
     delays.groupBy(col("l_suppkey"))
@@ -1849,20 +1831,13 @@ object Relational {
       .join(broadcast(en.table("nation")),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("n_name").as("supp_nation")))
-    val custNation = en.table("customer")
-      .join(broadcast(en.table("nation")),
-        col("c_nationkey") === col("n_nationkey"))
+    val custNation = en.joined("trade", "customer", "nation")
       .select(col("c_custkey"), col("n_name").as("cust_nation"))
-    en.table("lineitem")
-      .join(en.table("orders").select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
+    en.joined("trade", "lineitem", "orders")
       .join(broadcast(custNation), col("o_custkey") === col("c_custkey"))
       .join(supNation, col("l_suppkey") === col("s_suppkey"))
       .groupBy(col("supp_nation"), col("cust_nation"))
-      .agg(count(lit(1)).as("n_items"),
-        round(sum(cents(col("l_extendedprice") *
-            (lit(1) - col("l_discount")))).cast("double") / 100.0, 2)
-          .as("revenue"))
+      .agg(count(lit(1)).as("n_items"), dollars(sum(cents(netPrice))).as("revenue"))
       .orderBy(col("supp_nation"), col("cust_nation"))
   }
 
@@ -2105,8 +2080,8 @@ object Relational {
           .as("new_cents"),
         sum(col("cents")).as("all_cents"))
       .select(col("month"), col("n_new"), col("n_returning"),
-        round(col("new_cents") / 100.0, 2).as("new_revenue"),
-        round(col("all_cents") / 100.0, 2).as("total_revenue"),
+        dollars(col("new_cents")).as("new_revenue"),
+        dollars(col("all_cents")).as("total_revenue"),
         round(col("new_cents").cast("double") /
           col("all_cents").cast("double"), 6).as("new_share"))
       .orderBy(col("month"))
@@ -2226,15 +2201,7 @@ object Relational {
     */
   def percentOfParent(spark: SparkSession, dir: String): DataFrame = {
     val en = e(spark, dir)
-    val byNation = en.table("lineitem")
-      .join(en.table("orders").select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .join(en.table("customer").select(col("c_custkey"), col("c_nationkey")),
-        col("o_custkey") === col("c_custkey"))
-      .join(broadcast(en.table("nation")),
-        col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(en.table("region")),
-        col("n_regionkey") === col("r_regionkey"))
+    val byNation = en.joined("trade", "lineitem", "region")
       .groupBy(col("r_name").as("region"), col("n_name").as("nation"))
       .agg(cents(sum(col("l_extendedprice")))
         .as("cents"))
@@ -2244,7 +2211,7 @@ object Relational {
       .withColumn("region_cents", sum(col("cents")).over(wRegion))
       .withColumn("total_cents", sum(col("cents")).over(wAll))
       .select(col("region"), col("nation"),
-        round(col("cents") / 100.0, 2).as("revenue"),
+        dollars(col("cents")).as("revenue"),
         round(col("cents").cast("double") /
           col("region_cents").cast("double"), 6).as("pct_of_region"),
         round(col("region_cents").cast("double") /
@@ -2284,9 +2251,7 @@ object Relational {
     */
   def brandCorrMatrix(spark: SparkSession, dir: String): DataFrame = {
     val en = e(spark, dir)
-    val monthly = en.table("lineitem")
-      .join(en.table("orders").select(col("o_orderkey"), col("o_orderdate")),
-        col("l_orderkey") === col("o_orderkey"))
+    val monthly = en.joined("trade", "lineitem", "orders")
       .transform(withBrand(en))
       .groupBy(col("p_brand"),
         date_trunc("month", col("o_orderdate")).as("month"))
@@ -2393,9 +2358,7 @@ object Relational {
         col("l_suppkey") === col("s_suppkey"))
       .join(en.table("customer").select(col("c_custkey"), col("c_nationkey")),
         col("o_custkey") === col("c_custkey"))
-      .select(col("s_nationkey"), col("c_nationkey"),
-        cents(col("l_extendedprice") * (lit(1) - col("l_discount")))
-          .as("cents"))
+      .select(col("s_nationkey"), col("c_nationkey"), cents(netPrice).as("cents"))
     // one pass: each line contributes to its supplier nation's exports
     // and its customer nation's imports via a 2-row role explode
     val flows = li.select(explode(array(
@@ -2414,10 +2377,9 @@ object Relational {
         .select(col("n_nationkey"), col("n_name"))),
         col("nk") === col("n_nationkey"))
       .select(col("n_name"),
-        round(col("exp_c").cast("double") / 100.0, 2).as("exports_usd"),
-        round(col("imp_c").cast("double") / 100.0, 2).as("imports_usd"),
-        round((col("exp_c") - col("imp_c")).cast("double") / 100.0, 2)
-          .as("balance_usd"))
+        dollars(col("exp_c")).as("exports_usd"),
+        dollars(col("imp_c")).as("imports_usd"),
+        dollars(col("exp_c") - col("imp_c")).as("balance_usd"))
       .orderBy(col("n_name"))
   }
 
@@ -2444,7 +2406,7 @@ object Relational {
       .agg(count(lit(1)).as("n_brands"), sum(col("cents")).as("c"))
       .crossJoin(broadcast(total))
       .select(col("bucket"), col("n_brands"),
-        round(col("c").cast("double") / 100.0, 2).as("revenue_usd"),
+        dollars(col("c")).as("revenue_usd"),
         round(col("c").cast("double") / col("tot").cast("double"), 6)
           .as("revenue_share"))
       .orderBy(col("revenue_usd").desc, col("bucket"))
@@ -2459,9 +2421,7 @@ object Relational {
     */
   def brandRankMovers(spark: SparkSession, dir: String): DataFrame = {
     val en = e(spark, dir)
-    val byYear = en.table("lineitem")
-      .join(en.table("orders").select(col("o_orderkey"), col("o_orderdate")),
-        col("l_orderkey") === col("o_orderkey"))
+    val byYear = en.joined("trade", "lineitem", "orders")
       .transform(withBrand(en))
       .groupBy(year(col("o_orderdate")).as("yr"), col("p_brand"))
       .agg(sum(cents(col("l_extendedprice"))).as("cents"))
@@ -2589,7 +2549,7 @@ object Relational {
     val denom = strata.agg(sum(col("nh_sigma")).as("d"))
     strata.crossJoin(broadcast(denom))
       .select(col("o_orderpriority"), col("n_h"),
-        round(col("sigma") / 100.0, 2).as("sigma_usd"),
+        dollars(col("sigma")).as("sigma_usd"),
         round(col("nh_sigma") / col("d"), 6).as("neyman_share"),
         expr(s"CAST(round($budget * (nh_sigma / d), 0) AS BIGINT)")
           .as("alloc_rows"))
@@ -2631,7 +2591,7 @@ object Relational {
   def whaleCurve(spark: SparkSession, dir: String): DataFrame =
     revenueDeciles(spark, dir)
       .select(col("decile"), col("n_customers"),
-        round(col("c").cast("double") / 100.0, 2).as("revenue_usd"),
+        dollars(col("c")).as("revenue_usd"),
         round(col("c").cast("double") / col("tot").cast("double"), 6)
           .as("revenue_share"),
         round(col("cum").cast("double") / col("tot").cast("double"), 6)
@@ -2652,9 +2612,7 @@ object Relational {
     */
   def laspeyresPriceIndex(spark: SparkSession, dir: String): DataFrame = {
     val en = e(spark, dir)
-    val py = en.table("lineitem")
-      .join(en.table("orders").select(col("o_orderkey"), col("o_orderdate")),
-        col("l_orderkey") === col("o_orderkey"))
+    val py = en.joined("trade", "lineitem", "orders")
       .groupBy(year(col("o_orderdate")).as("yr"), col("l_partkey"))
       .agg(sum(cents(col("l_extendedprice")))
           .as("cents"),
@@ -3030,10 +2988,7 @@ object Relational {
     */
   def orderCycleByMonth(spark: SparkSession, dir: String): DataFrame = {
     val en = e(spark, dir)
-    en.table("lineitem")
-      .select(col("l_orderkey"), col("l_shipdate"))
-      .join(en.table("orders").select(col("o_orderkey"), col("o_orderdate")),
-        col("l_orderkey") === col("o_orderkey"))
+    en.joined("trade", "lineitem", "orders")
       .withColumn("d", datediff(col("l_shipdate").cast("date"),
         col("o_orderdate").cast("date")).cast("long"))
       .groupBy(ntzBucket("month", col("o_orderdate")).as("month"))
@@ -3065,9 +3020,7 @@ object Relational {
     */
   def priceVolumeMix(spark: SparkSession, dir: String): DataFrame = {
     val en = e(spark, dir)
-    val by = en.table("lineitem")
-      .join(en.table("orders").select(col("o_orderkey"), col("o_orderdate")),
-        col("l_orderkey") === col("o_orderkey"))
+    val by = en.joined("trade", "lineitem", "orders")
       .transform(withBrand(en))
       .filter(year(col("o_orderdate")).isin(BaseYear, BaseYear + 1))
       .groupBy(col("p_brand"),
@@ -3081,14 +3034,14 @@ object Relational {
       .select(col("p_brand"), col("cents").as("r1"), col("qty").as("q1"))
     b0.join(b1, "p_brand")
       .select(col("p_brand"),
-        round(col("r0").cast("double") / 100, 2).as("rev0"),
-        round(col("r1").cast("double") / 100, 2).as("rev1"),
-        round((col("r1") - col("r0")).cast("double") / 100, 2).as("delta"),
-        round((col("r1").cast("double") / col("q1") -
-          col("r0").cast("double") / col("q0")) * col("q1") / 100, 2)
+        dollars(col("r0")).as("rev0"),
+        dollars(col("r1")).as("rev1"),
+        dollars(col("r1") - col("r0")).as("delta"),
+        dollars((col("r1").cast("double") / col("q1") -
+          col("r0").cast("double") / col("q0")) * col("q1"))
           .as("price_effect"),
-        round(col("r0").cast("double") / col("q0") *
-          (col("q1") - col("q0")) / 100, 2).as("volume_effect"))
+        dollars(col("r0").cast("double") / col("q0") *
+          (col("q1") - col("q0"))).as("volume_effect"))
       .orderBy(col("p_brand"))
   }
 }

@@ -49,9 +49,8 @@ object RuntimeFilter {
     * ANSI semi join: the bloom is exact by construction.
     */
   def bloomNationLineitems(spark: SparkSession, dir: String): DataFrame = {
-    val li = graft.cube.Engine.datasetTable(spark, s"$dir/lineitem.parquet")
-    val sup = graft.cube.Engine.datasetTable(spark, s"$dir/supplier.parquet")
-    val nat = graft.cube.Engine.datasetTable(spark, s"$dir/nation.parquet")
+    val en = new graft.cube.Engine(spark, dir)
+    val (li, sup, nat) = (en.table("lineitem"), en.table("supplier"), en.table("nation"))
     val germanSup = sup.join(nat, sup("s_nationkey") === nat("n_nationkey"))
       .filter(col("n_name") === "NATION_7")
       .select(col("s_suppkey"))

@@ -49,14 +49,14 @@ object EventsStream {
     * ([[streamTable]]), which [[drain]] sizes the state width by.
     */
   private def streamingEvents(spark: SparkSession, dir: String): (DataFrame, Long) = {
-    val stored = graft.cube.Engine.datasetSchema(spark, s"$dir/events.parquet")
-    val (raw, bytes) = streamTable(spark, dir, "events", stored)
+    val (raw, bytes) = streamTable(spark, dir, "events")
     (graft.cube.Engine.adaptTs(raw).withColumn("ts", col("ts").cast(TimestampType)),
       bytes)
   }
 
-  /** Stream a fixture table, handling both physical layouts a parquet
-    * table ships in: a single FILE `$dir/<table>.parquet` (the fixture
+  /** Stream a fixture table, schema from its parquet footer, handling
+    * both physical layouts a table ships in at
+    * [[graft.cube.Engine.tablePath]]: a single FILE (the fixture
     * generator's shape — file stream sources take directories, so the
     * file is selected with pathGlobFilter against its parent) and a
     * DIRECTORY of part files (the layout every distributed writer
@@ -73,20 +73,21 @@ object EventsStream {
     * silently collapsing the state width to its floor); 0 when the path
     * cannot be read.
     */
-  private def streamTable(spark: SparkSession, dir: String, table: String,
-      schema: StructType): (DataFrame, Long) = {
-    val path = s"$dir/$table.parquet"
-    val reader = spark.readStream.schema(schema)
+  private def streamTable(spark: SparkSession, dir: String, table: String)
+      : (DataFrame, Long) = {
+    val path = graft.cube.Engine.tablePath(dir, table)
+    val p = new org.apache.hadoop.fs.Path(path)
+    // footer-only driver read at plan time; the stream reads the data
+    val reader = spark.readStream.schema(graft.cube.Engine.datasetSchema(spark, path))
     spark.conf.getOption("spark.graft.streaming.maxFilesPerTrigger")
       .foreach(reader.option("maxFilesPerTrigger", _))
     val (isDir, bytes) =
       try {
-        val p = new org.apache.hadoop.fs.Path(path)
         val fs = hadoopFs(spark, path)
         (fs.getFileStatus(p).isDirectory, fs.getContentSummary(p).getLength)
       } catch { case _: Throwable => (false, 0L) }
     if (isDir) (reader.parquet(path), bytes)
-    else (reader.option("pathGlobFilter", s"$table.parquet").parquet(dir), bytes)
+    else (reader.option("pathGlobFilter", p.getName).parquet(p.getParent.toString), bytes)
   }
 
   /** Ephemeral checkpoint dir for a drain. Drains are synchronous
@@ -488,9 +489,7 @@ object EventsStream {
     import graft.operators.Similarity
     val corpus = new graft.cube.Engine(spark, dir).table("embeddings")
     Similarity.ivfIndex(corpus, dir, nlist = 8) // warm: batches probe only
-    // footer-only driver read at plan time; the stream reads the data
-    val schema = graft.cube.Engine.datasetSchema(spark, s"$dir/embeddings.parquet")
-    val (stream, bytes) = streamTable(spark, dir, "embeddings", schema)
+    val (stream, bytes) = streamTable(spark, dir, "embeddings")
     drain(stream.filter(col("vec_id") < 5), bytes, "ann", OutputMode.Append(),
       PerBatch(Similarity.ivfKnnJoin(corpus, _, k = 3,
         nlist = 8, nprobe = 8, datasetKey = dir)))
@@ -524,8 +523,7 @@ object EventsStream {
     // warm: the corpus is shingled + signed once per (session, dataset);
     // triggers probe the checkpointed frames
     val idx = Dedup.minhashJoinIndexShared(corpus, s"$dir#gate-corpus-50")
-    val schema = graft.cube.Engine.datasetSchema(spark, s"$dir/documents.parquet")
-    val (stream, bytes) = streamTable(spark, dir, "documents", schema)
+    val (stream, bytes) = streamTable(spark, dir, "documents")
     def gate(batch: DataFrame): DataFrame = {
       val hits = Dedup.minhashJoinProbe(batch, idx)
       batch.select(col("doc_id"))
@@ -736,12 +734,11 @@ object EventsStream {
     * reads batch data.
     */
   def purchaseAttributionOuter(spark: SparkSession, dir: String): DataFrame = {
-    // typed timestamp math end-to-end: adaptTs normalizes whatever the
-    // fixture physically stored, `micros` reads it back — no
+    // typed timestamp math end-to-end: Engine.table normalizes whatever
+    // the fixture physically stored, `micros` reads it back — no
     // physical-type assumption (the old getLong-of-nanos math broke when
     // the fixture moved to timestamp[us])
-    val cutoffMicros = graft.cube.Engine
-      .adaptTs(graft.cube.Engine.datasetTable(spark, s"$dir/events.parquet"))
+    val cutoffMicros = new graft.cube.Engine(spark, dir).table("events")
       .agg(least(
         max(when(col("event_type") === "click", micros(col("ts")))),
         max(when(col("event_type") === "purchase", micros(col("ts"))))))

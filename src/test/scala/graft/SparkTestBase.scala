@@ -34,4 +34,14 @@ abstract class SparkFunSuite extends AnyFunSuite {
   def withKey[T](prefix: String)(body: String => T): T =
     try body(s"${prefix}_${System.nanoTime()}")
     finally graft.operators.Scratch.invalidate(spark)
+
+  /** Runs `body` on a fresh temp directory whose name starts with
+    * `prefix`, then deletes the directory tree, also when `body` throws.
+    * The one place tests make a temp directory.
+    */
+  def withTempDir[T](prefix: String)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir.toString)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
 }

@@ -39,63 +39,67 @@ class TsEncodingSpec extends SparkFunSuite {
     outDir.delete()
   }
 
-  private def writeFixtures(): (String, String) = {
+  /** The micros- and nanos-encoded fixture dirs, for `body` only. */
+  private def withFixtures[T](body: (String, String) => T): T = {
     val s: SS = spark
     import s.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ts_enc").toString
-    val base = Seq(
-      // (event_id, wall-clock micros string, user_id, type, value)
-      (1L, "2024-03-01 10:00:00.123456", 7L, "click", 1.5),
-      (2L, "2024-03-01 10:59:59.999999", 7L, "purchase", 20.0),
-      (3L, "2024-03-01 12:30:00.000001", 9L, "click", 0.25))
-      .toDF("event_id", "tss", "user_id", "event_type", "value")
-    val micros = base
-      .withColumn("ts",
-        to_timestamp_ntz(col("tss"), lit("yyyy-MM-dd HH:mm:ss.SSSSSS")))
-      .select("event_id", "ts", "user_id", "event_type", "value")
-    writeSingleFile(micros, s"$tmp/micros/events.parquet")
-    // legacy surface: epoch-NANOS as long, with sub-microsecond residue on
-    // one row — `div 1000` must floor it away, not round or shift
-    val nanos = micros
-      .withColumn("ts",
-        unix_micros(col("ts").cast(TimestampType)) * 1000L +
-          when(col("event_id") === 3L, 999L).otherwise(0L))
-      .select("event_id", "ts", "user_id", "event_type", "value")
-    writeSingleFile(nanos, s"$tmp/nanos/events.parquet")
-    (s"$tmp/micros", s"$tmp/nanos")
+    withTempDir("graft_ts_enc") { tmp =>
+      val base = Seq(
+        // (event_id, wall-clock micros string, user_id, type, value)
+        (1L, "2024-03-01 10:00:00.123456", 7L, "click", 1.5),
+        (2L, "2024-03-01 10:59:59.999999", 7L, "purchase", 20.0),
+        (3L, "2024-03-01 12:30:00.000001", 9L, "click", 0.25))
+        .toDF("event_id", "tss", "user_id", "event_type", "value")
+      val micros = base
+        .withColumn("ts",
+          to_timestamp_ntz(col("tss"), lit("yyyy-MM-dd HH:mm:ss.SSSSSS")))
+        .select("event_id", "ts", "user_id", "event_type", "value")
+      writeSingleFile(micros, s"$tmp/micros/events.parquet")
+      // legacy surface: epoch-NANOS as long, with sub-microsecond residue on
+      // one row — `div 1000` must floor it away, not round or shift
+      val nanos = micros
+        .withColumn("ts",
+          unix_micros(col("ts").cast(TimestampType)) * 1000L +
+            when(col("event_id") === 3L, 999L).otherwise(0L))
+        .select("event_id", "ts", "user_id", "event_type", "value")
+      writeSingleFile(nanos, s"$tmp/nanos/events.parquet")
+      body(s"$tmp/micros", s"$tmp/nanos")
+    }
   }
 
   test("Engine.table yields identical NTZ rows from micros- and nanos-encoded events") {
-    val (microsDir, nanosDir) = writeFixtures()
-    // precondition: the two fixtures really scan with different physical surfaces
-    assert(spark.read.parquet(s"$microsDir/events.parquet")
-      .schema("ts").dataType == TimestampNTZType)
-    assert(spark.read.parquet(s"$nanosDir/events.parquet")
-      .schema("ts").dataType == LongType)
+    withFixtures { (microsDir, nanosDir) =>
+      // precondition: the two fixtures really scan with different physical surfaces
+      assert(spark.read.parquet(s"$microsDir/events.parquet")
+        .schema("ts").dataType == TimestampNTZType)
+      assert(spark.read.parquet(s"$nanosDir/events.parquet")
+        .schema("ts").dataType == LongType)
 
-    val a = new Engine(spark, microsDir).table("events")
-    val b = new Engine(spark, nanosDir).table("events")
-    assert(a.schema("ts").dataType == TimestampNTZType)
-    assert(b.schema("ts").dataType == TimestampNTZType)
-    val rowsA = a.orderBy("event_id").collect().toSeq
-    val rowsB = b.orderBy("event_id").collect().toSeq
-    assert(rowsA == rowsB)
-    // and the wall-clock values are the literal ones written, to the micro
-    assert(rowsA.map(_.getAs[java.time.LocalDateTime]("ts").toString) ==
-      Seq("2024-03-01T10:00:00.123456", "2024-03-01T10:59:59.999999",
-        "2024-03-01T12:30:00.000001"))
+      val a = new Engine(spark, microsDir).table("events")
+      val b = new Engine(spark, nanosDir).table("events")
+      assert(a.schema("ts").dataType == TimestampNTZType)
+      assert(b.schema("ts").dataType == TimestampNTZType)
+      val rowsA = a.orderBy("event_id").collect().toSeq
+      val rowsB = b.orderBy("event_id").collect().toSeq
+      assert(rowsA == rowsB)
+      // and the wall-clock values are the literal ones written, to the micro
+      assert(rowsA.map(_.getAs[java.time.LocalDateTime]("ts").toString) ==
+        Seq("2024-03-01T10:00:00.123456", "2024-03-01T10:59:59.999999",
+          "2024-03-01T12:30:00.000001"))
+    }
   }
 
   test("streaming reads adapt per-encoding too (hourlyRollup equal on both fixtures)") {
-    val (microsDir, nanosDir) = writeFixtures()
-    def canon(df: DataFrame): Seq[Row] = df.collect().toSeq
-    val a = canon(streaming.EventsStream.hourlyRollup(spark, microsDir))
-    val b = canon(streaming.EventsStream.hourlyRollup(spark, nanosDir))
-    assert(a == b)
-    // 3 events over 3 distinct (hour, type) buckets — absolute counts, so
-    // a unit-scale timestamp error (the round-9 silent failure mode)
-    // cannot pass as "same shape"
-    assert(a.size == 3)
-    assert(a.map(_.getAs[Long]("event_count")).sum == 3L)
+    withFixtures { (microsDir, nanosDir) =>
+      def canon(df: DataFrame): Seq[Row] = df.collect().toSeq
+      val a = canon(streaming.EventsStream.hourlyRollup(spark, microsDir))
+      val b = canon(streaming.EventsStream.hourlyRollup(spark, nanosDir))
+      assert(a == b)
+      // 3 events over 3 distinct (hour, type) buckets — absolute counts, so
+      // a unit-scale timestamp error (the round-9 silent failure mode)
+      // cannot pass as "same shape"
+      assert(a.size == 3)
+      assert(a.map(_.getAs[Long]("event_count")).sum == 3L)
+    }
   }
 }

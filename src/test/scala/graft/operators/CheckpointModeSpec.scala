@@ -43,23 +43,18 @@ class CheckpointModeSpec extends SparkFunSuite {
     val sReliable = spark.newSession()
     assert(spark.sparkContext.getCheckpointDir.isEmpty)
     val viaLocal = run(sLocal)
-    val dir = Files.createTempDirectory("graft-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    try {
-      val viaReliable = run(sReliable)
-      assert(viaLocal == viaReliable)
-      assert(viaLocal.nonEmpty)
-      // the reliable run must have actually written durable state
-      val wrote = Files.walk(Paths.get(dir)).iterator().asScala
-        .exists(p => Files.isRegularFile(p))
-      assert(wrote, "reliable mode left no files in the checkpoint dir")
-      Scratch.releaseAll(sLocal); Scratch.releaseAll(sReliable)
-    } finally {
-      // the shared context outlives this suite: leave no dir behind
-      spark.sparkContext.setCheckpointDir(null)
-      val tmp = Paths.get(dir)
-      Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+    withTempDir("graft-ckpt") { dir =>
+      spark.sparkContext.setCheckpointDir(dir)
+      try {
+        val viaReliable = run(sReliable)
+        assert(viaLocal == viaReliable)
+        assert(viaLocal.nonEmpty)
+        // the reliable run must have actually written durable state
+        val wrote = Files.walk(Paths.get(dir)).iterator().asScala
+          .exists(p => Files.isRegularFile(p))
+        assert(wrote, "reliable mode left no files in the checkpoint dir")
+        Scratch.releaseAll(sLocal); Scratch.releaseAll(sReliable)
+      } finally spark.sparkContext.setCheckpointDir(null)
     }
   }
 
@@ -76,27 +71,23 @@ class CheckpointModeSpec extends SparkFunSuite {
       Seq(1).toDF("x") }
     assert(ck2.count() == 1)
     Scratch.releaseAll(s3)
-    val dir = Files.createTempDirectory("graft-ckpt-shared").toString
-    val s2 = spark.newSession()
-    spark.sparkContext.setCheckpointDir(dir)
-    try {
-      import s2.implicits._
-      val ck = Scratch.stageShared(Seq(1, 2, 3).toDF("x"))
-      val rdds = ck.queryExecution.logical.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }
-      assert(rdds.nonEmpty, "stageShared must return a checkpointed frame")
-      assert(rdds.forall(_.getStorageLevel !=
-          org.apache.spark.storage.StorageLevel.NONE),
-        "reliable-mode shared frames must be block-cached for " +
-          "multi-consumer reads")
-      assert(ck.count() == 3)
-      rdds.foreach(_.unpersist(blocking = false))
-    } finally {
-      spark.sparkContext.setCheckpointDir(null)
-      val tmp = Paths.get(dir)
-      Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+    withTempDir("graft-ckpt-shared") { dir =>
+      val s2 = spark.newSession()
+      spark.sparkContext.setCheckpointDir(dir)
+      try {
+        import s2.implicits._
+        val ck = Scratch.stageShared(Seq(1, 2, 3).toDF("x"))
+        val rdds = ck.queryExecution.logical.collect {
+          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+        }
+        assert(rdds.nonEmpty, "stageShared must return a checkpointed frame")
+        assert(rdds.forall(_.getStorageLevel !=
+            org.apache.spark.storage.StorageLevel.NONE),
+          "reliable-mode shared frames must be block-cached for " +
+            "multi-consumer reads")
+        assert(ck.count() == 3)
+        rdds.foreach(_.unpersist(blocking = false))
+      } finally spark.sparkContext.setCheckpointDir(null)
     }
   }
 
@@ -104,29 +95,25 @@ class CheckpointModeSpec extends SparkFunSuite {
     // a reliable checkpoint lives in files; unpersisting a frame that was
     // never block-cached frees nothing, so the drain itself must delete
     // them or every harness run leaves rdd-* dirs on shared storage
-    val dir = Files.createTempDirectory("graft-ckpt-reclaim").toString
-    def rddDirs: Seq[String] = Files.walk(Paths.get(dir)).iterator().asScala
-      .map(_.getFileName.toString).filter(_.startsWith("rdd-")).toSeq
-    val s = spark.newSession()
-    spark.sparkContext.setCheckpointDir(dir)
-    try {
-      import s.implicits._
-      val scratch = Scratch.staged(Seq(1, 2, 3).toDF("x"))
-      assert(scratch.count() == 3)
-      assert(rddDirs.nonEmpty, "reliable staging wrote no rdd-* dir")
-      assert(Scratch.releaseAll(s) == 1)
-      assert(rddDirs.isEmpty, s"releaseAll left $rddDirs")
-      val shared = Scratch.memo(s, "checkpointModeSpec", "reclaim")(
-        Scratch.stageShared(Seq(4, 5).toDF("y")))
-      assert(shared.count() == 2)
-      assert(rddDirs.nonEmpty, "reliable stageShared wrote no rdd-* dir")
-      assert(Scratch.invalidate(s) == 1)
-      assert(rddDirs.isEmpty, s"invalidate left $rddDirs")
-    } finally {
-      spark.sparkContext.setCheckpointDir(null)
-      val tmp = Paths.get(dir)
-      Files.walk(tmp).iterator().asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+    withTempDir("graft-ckpt-reclaim") { dir =>
+      def rddDirs: Seq[String] = Files.walk(Paths.get(dir)).iterator().asScala
+        .map(_.getFileName.toString).filter(_.startsWith("rdd-")).toSeq
+      val s = spark.newSession()
+      spark.sparkContext.setCheckpointDir(dir)
+      try {
+        import s.implicits._
+        val scratch = Scratch.staged(Seq(1, 2, 3).toDF("x"))
+        assert(scratch.count() == 3)
+        assert(rddDirs.nonEmpty, "reliable staging wrote no rdd-* dir")
+        assert(Scratch.releaseAll(s) == 1)
+        assert(rddDirs.isEmpty, s"releaseAll left $rddDirs")
+        val shared = Scratch.memo(s, "checkpointModeSpec", "reclaim")(
+          Scratch.stageShared(Seq(4, 5).toDF("y")))
+        assert(shared.count() == 2)
+        assert(rddDirs.nonEmpty, "reliable stageShared wrote no rdd-* dir")
+        assert(Scratch.invalidate(s) == 1)
+        assert(rddDirs.isEmpty, s"invalidate left $rddDirs")
+      } finally spark.sparkContext.setCheckpointDir(null)
     }
   }
 }

@@ -271,20 +271,21 @@ class IvfSpec extends SparkFunSuite {
   }
 
   test("index layouts honor spark.graft.indexDir and the probe still answers") {
-    val root = java.nio.file.Files.createTempDirectory("graft_idx_root").toString
-    spark.conf.set("spark.graft.indexDir", root)
-    try {
-      Scratch.invalidate(spark)
-      val path = Similarity.lshIndex(clustered, "lshspec-configured-root",
-        planes = 4, dim = 16, tables = 2).path
-      assert(path.startsWith(root),
-        s"index must live under the configured root: $path")
-      val got = Similarity.lshTopK(clustered, 0L, 5, planes = 4, dim = 16,
-        tables = 2, datasetKey = "lshspec-configured-root").collect()
-      assert(got.nonEmpty, "probe against the configured root returned nothing")
-    } finally {
-      spark.conf.unset("spark.graft.indexDir")
-      Scratch.invalidate(spark)
+    withTempDir("graft_idx_root") { root =>
+      spark.conf.set("spark.graft.indexDir", root)
+      try {
+        Scratch.invalidate(spark)
+        val path = Similarity.lshIndex(clustered, "lshspec-configured-root",
+          planes = 4, dim = 16, tables = 2).path
+        assert(path.startsWith(root),
+          s"index must live under the configured root: $path")
+        val got = Similarity.lshTopK(clustered, 0L, 5, planes = 4, dim = 16,
+          tables = 2, datasetKey = "lshspec-configured-root").collect()
+        assert(got.nonEmpty, "probe against the configured root returned nothing")
+      } finally {
+        spark.conf.unset("spark.graft.indexDir")
+        Scratch.invalidate(spark)
+      }
     }
   }
 

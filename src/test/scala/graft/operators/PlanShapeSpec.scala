@@ -540,6 +540,18 @@ class PlanShapeSpec extends SparkFunSuite {
     assert(pushedToScan, "cut predicate did not reach the parquet scan")
   }
 
+  test("a star join rooted at orders joins only the dims below it, scans no lineitem") {
+    import graft.cube.CubeCatalog
+    assert(CubeCatalog.trade.requiredAliases("orders", Set("nation")).map(_.alias) ==
+      Seq("customer", "nation"))
+    val df = new graft.cube.Engine(spark, sf).joined("trade", "orders", "nation")
+    df.collect()
+    val reads = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")
+      .head.linesIterator.filter(_.contains("FileScan")).toSeq
+    assert(reads.size == 3 && !reads.exists(_.contains("lineitem")),
+      s"expected orders, customer and nation scans only:\n${reads.mkString("\n")}")
+  }
+
   test("bucketed rollup tables join with no exchange on the join keys") {
     // q144's layout contract: after the bucketed write, a join on the
     // bucket keys reads both sides pre-shuffled — the exchange was paid

@@ -46,25 +46,27 @@ class SkewSinkSpec extends SparkFunSuite {
   }
 
   test("partitioned sink writes hive-style dirs and partition-prunes reads") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    Sink.writePartitioned(li, s"$dir/li", Seq("l_returnflag"), Seq("l_shipdate"))
-    val dirs = new java.io.File(s"$dir/li").listFiles().map(_.getName)
-      .filter(_.startsWith("l_returnflag=")).sorted
-    assert(dirs.toSeq == Seq("l_returnflag=A", "l_returnflag=N", "l_returnflag=R"))
-    val back = spark.read.parquet(s"$dir/li").filter(col("l_returnflag") === "A")
-    assert(back.count() == li.filter(col("l_returnflag") === "A").count())
-    // the partition filter must reach the scan (pruned read, not post-filter)
-    assert(back.queryExecution.executedPlan.toString.contains("PartitionFilters"))
+    withTempDir("graft_sink") { dir =>
+      Sink.writePartitioned(li, s"$dir/li", Seq("l_returnflag"), Seq("l_shipdate"))
+      val dirs = new java.io.File(s"$dir/li").listFiles().map(_.getName)
+        .filter(_.startsWith("l_returnflag=")).sorted
+      assert(dirs.toSeq == Seq("l_returnflag=A", "l_returnflag=N", "l_returnflag=R"))
+      val back = spark.read.parquet(s"$dir/li").filter(col("l_returnflag") === "A")
+      assert(back.count() == li.filter(col("l_returnflag") === "A").count())
+      // the partition filter must reach the scan (pruned read, not post-filter)
+      assert(back.queryExecution.executedPlan.toString.contains("PartitionFilters"))
+    }
   }
 
   test("key-clustered sink round-trips and clusters by key") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    Sink.writeKeyClustered(orders, s"$dir/o", "o_custkey", buckets = 4)
-    val back = spark.read.parquet(s"$dir/o")
-    assert(back.count() == orders.count())
-    val files = new java.io.File(s"$dir/o").listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(files == 4)
+    withTempDir("graft_sink") { dir =>
+      Sink.writeKeyClustered(orders, s"$dir/o", "o_custkey", buckets = 4)
+      val back = spark.read.parquet(s"$dir/o")
+      assert(back.count() == orders.count())
+      val files = new java.io.File(s"$dir/o").listFiles()
+        .count(_.getName.endsWith(".parquet"))
+      assert(files == 4)
+    }
   }
 
   test("bucketed tables sort-merge-join without a shuffle exchange") {
@@ -107,39 +109,40 @@ class SkewSinkSpec extends SparkFunSuite {
   test("training shards: deterministic membership, sorted files, record cap honored") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("lang"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_shards").toString
+    withTempDir("graft_shards") { dir =>
 
-    graft.sources.Sink.writeTrainingShards(docs, s"$dir/a", "doc_id",
-      shards = 4, maxRecordsPerFile = 100)
-    val files = new java.io.File(s"$dir/a").listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-    // 500 docs over 4 hash shards, each file capped at 100 records
-    assert(files.length >= 5)
-    files.foreach { f =>
-      val rows = spark.read.parquet(f.getPath).select("doc_id")
-        .collect().map(_.getLong(0)).toSeq
-      assert(rows.length <= 100)
-      assert(rows == rows.sorted) // sortWithinPartitions survived the write
+      graft.sources.Sink.writeTrainingShards(docs, s"$dir/a", "doc_id",
+        shards = 4, maxRecordsPerFile = 100)
+      val files = new java.io.File(s"$dir/a").listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+      // 500 docs over 4 hash shards, each file capped at 100 records
+      assert(files.length >= 5)
+      files.foreach { f =>
+        val rows = spark.read.parquet(f.getPath).select("doc_id")
+          .collect().map(_.getLong(0)).toSeq
+        assert(rows.length <= 100)
+        assert(rows == rows.sorted) // sortWithinPartitions survived the write
+      }
+      // round trip is lossless
+      assert(spark.read.parquet(s"$dir/a").count() == 500)
+
+      // re-writing from a differently-partitioned input yields identical
+      // shard membership (hash membership, not partition accident)
+      graft.sources.Sink.writeTrainingShards(docs.repartition(7), s"$dir/b",
+        "doc_id", shards = 4, maxRecordsPerFile = 100)
+      def membership(p: String): Map[Long, Int] =
+        new java.io.File(p).listFiles().filter(_.getName.endsWith(".parquet"))
+          .flatMap { f =>
+            // part-NNNNN-uuid… — NNNNN is the writing task's partition id,
+            // i.e. the shard (cap splits stay within one task)
+            val shard = f.getName.stripPrefix("part-").take(5).toInt
+            spark.read.parquet(f.getPath).select("doc_id")
+              .collect().map(r => r.getLong(0) -> shard)
+          }.toMap
+      val a = membership(s"$dir/a")
+      val b = membership(s"$dir/b")
+      assert(a == b)
     }
-    // round trip is lossless
-    assert(spark.read.parquet(s"$dir/a").count() == 500)
-
-    // re-writing from a differently-partitioned input yields identical
-    // shard membership (hash membership, not partition accident)
-    graft.sources.Sink.writeTrainingShards(docs.repartition(7), s"$dir/b",
-      "doc_id", shards = 4, maxRecordsPerFile = 100)
-    def membership(p: String): Map[Long, Int] =
-      new java.io.File(p).listFiles().filter(_.getName.endsWith(".parquet"))
-        .flatMap { f =>
-          // part-NNNNN-uuid… — NNNNN is the writing task's partition id,
-          // i.e. the shard (cap splits stay within one task)
-          val shard = f.getName.stripPrefix("part-").take(5).toInt
-          spark.read.parquet(f.getPath).select("doc_id")
-            .collect().map(r => r.getLong(0) -> shard)
-        }.toMap
-    val a = membership(s"$dir/a")
-    val b = membership(s"$dir/b")
-    assert(a == b)
   }
 
   test("z-ordered sink bounds BOTH columns' per-file span; plain sort does not") {
@@ -147,54 +150,56 @@ class SkewSinkSpec extends SparkFunSuite {
     // 256x256 uniform grid — every (x, y) occurs exactly once
     val grid = spark.range(65536)
       .select((col("id") % 256).as("x"), (col("id") / 256).cast("long").as("y"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+    withTempDir("graft_zorder") { dir =>
 
-    Sink.writeZOrdered(grid, s"$dir/z", "x", "y", files = 16)
-    grid.repartitionByRange(16, col("x")).sortWithinPartitions(col("x"))
-      .write.parquet(s"$dir/plain")
+      Sink.writeZOrdered(grid, s"$dir/z", "x", "y", files = 16)
+      grid.repartitionByRange(16, col("x")).sortWithinPartitions(col("x"))
+        .write.parquet(s"$dir/plain")
 
-    def meanSpan(path: String, c: String): Double = {
-      val spans = new java.io.File(path).listFiles()
-        .filter(_.getName.endsWith(".parquet"))
-        .map { f =>
-          val r = spark.read.parquet(f.getPath)
-            .agg(min(col(c)), max(col(c))).head()
-          (r.getLong(1) - r.getLong(0)).toDouble
-        }
-      spans.sum / spans.length
+      def meanSpan(path: String, c: String): Double = {
+        val spans = new java.io.File(path).listFiles()
+          .filter(_.getName.endsWith(".parquet"))
+          .map { f =>
+            val r = spark.read.parquet(f.getPath)
+              .agg(min(col(c)), max(col(c))).head()
+            (r.getLong(1) - r.getLong(0)).toDouble
+          }
+        spans.sum / spans.length
+      }
+
+      // 16 z-files over a 256x256 grid ≈ 4x4 blocks: ideal span is 25% of
+      // range per column; sampled range-partition boundaries can straddle
+      // adjacent z-blocks, so gate at 50% — still a 2x skip factor on BOTH
+      // columns where a single-column sort gives one column nothing.
+      assert(meanSpan(s"$dir/z", "x") < 0.5 * 255)
+      assert(meanSpan(s"$dir/z", "y") < 0.5 * 255)
+      // the single-column sort leaves y unclustered (~full range per file)
+      assert(meanSpan(s"$dir/plain", "y") > 0.9 * 255)
+      // and the z-write is lossless
+      assert(spark.read.parquet(s"$dir/z").count() == 65536)
     }
-
-    // 16 z-files over a 256x256 grid ≈ 4x4 blocks: ideal span is 25% of
-    // range per column; sampled range-partition boundaries can straddle
-    // adjacent z-blocks, so gate at 50% — still a 2x skip factor on BOTH
-    // columns where a single-column sort gives one column nothing.
-    assert(meanSpan(s"$dir/z", "x") < 0.5 * 255)
-    assert(meanSpan(s"$dir/z", "y") < 0.5 * 255)
-    // the single-column sort leaves y unclustered (~full range per file)
-    assert(meanSpan(s"$dir/plain", "y") > 0.9 * 255)
-    // and the z-write is lossless
-    assert(spark.read.parquet(s"$dir/z").count() == 65536)
   }
 
   test("compact rewrites a fragmented directory to the byte-targeted file count, losslessly") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("lang"), col("n_chars"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_spec").toString
-    docs.repartition(64).write.mode("overwrite").parquet(s"$dir/frag")
-    val (before, bytes, after) =
-      Sink.compact(spark, s"$dir/frag", s"$dir/out", targetBytes = 256L * 1024)
-    assert(before == 64, "fragmented input has one file per partition")
-    val expected = math.max(1L, (bytes + 256L * 1024 - 1) / (256L * 1024)).toInt
-    assert(after == expected, s"byte-targeted count: $after vs $expected")
-    assert(after < before, "compaction must reduce the file count")
-    // lossless: the relation is untouched
-    val a = docs.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sorted.toSeq
-    val b = spark.read.parquet(s"$dir/out").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sorted.toSeq
-    assert(a == b)
-    // a huge target collapses to a single file
-    val (_, _, one) = Sink.compact(spark, s"$dir/frag", s"$dir/one",
-      targetBytes = Long.MaxValue)
-    assert(one == 1)
+    withTempDir("graft_compact_spec") { dir =>
+      docs.repartition(64).write.mode("overwrite").parquet(s"$dir/frag")
+      val (before, bytes, after) =
+        Sink.compact(spark, s"$dir/frag", s"$dir/out", targetBytes = 256L * 1024)
+      assert(before == 64, "fragmented input has one file per partition")
+      val expected = math.max(1L, (bytes + 256L * 1024 - 1) / (256L * 1024)).toInt
+      assert(after == expected, s"byte-targeted count: $after vs $expected")
+      assert(after < before, "compaction must reduce the file count")
+      // lossless: the relation is untouched
+      val a = docs.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sorted.toSeq
+      val b = spark.read.parquet(s"$dir/out").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sorted.toSeq
+      assert(a == b)
+      // a huge target collapses to a single file
+      val (_, _, one) = Sink.compact(spark, s"$dir/frag", s"$dir/one",
+        targetBytes = Long.MaxValue)
+      assert(one == 1)
+    }
   }
 }

@@ -83,27 +83,28 @@ class StreamSemanticsSpec extends SparkFunSuite {
   }
 
   test("parquet file sink resumes from checkpoint exactly-once") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fsink").toString
-    val input = MemoryStream[(Long, Double)](spark)
-    def start() = input.toDF().toDF("id", "v").writeStream
-      .format("parquet")
-      .option("path", s"$dir/out")
-      .option("checkpointLocation", s"$dir/cp")
-      .outputMode(OutputMode.Append()).start()
+    withTempDir("graft_fsink") { dir =>
+      val input = MemoryStream[(Long, Double)](spark)
+      def start() = input.toDF().toDF("id", "v").writeStream
+        .format("parquet")
+        .option("path", s"$dir/out")
+        .option("checkpointLocation", s"$dir/cp")
+        .outputMode(OutputMode.Append()).start()
 
-    val q1 = start()
-    input.addData((1L, 1.0), (2L, 2.0))
-    q1.processAllAvailable(); q1.stop()
+      val q1 = start()
+      input.addData((1L, 1.0), (2L, 2.0))
+      q1.processAllAvailable(); q1.stop()
 
-    // restart from the same checkpoint: only the new batch is written —
-    // the committed offsets prevent re-emission of batch 1
-    val q2 = start()
-    input.addData((3L, 3.0))
-    q2.processAllAvailable(); q2.stop()
+      // restart from the same checkpoint: only the new batch is written —
+      // the committed offsets prevent re-emission of batch 1
+      val q2 = start()
+      input.addData((3L, 3.0))
+      q2.processAllAvailable(); q2.stop()
 
-    val ids = spark.read.parquet(s"$dir/out")
-      .collect().map(_.getLong(0)).sorted.toSeq
-    assert(ids == Seq(1L, 2L, 3L)) // all present, none duplicated
+      val ids = spark.read.parquet(s"$dir/out")
+        .collect().map(_.getLong(0)).sorted.toSeq
+      assert(ids == Seq(1L, 2L, 3L)) // all present, none duplicated
+    }
   }
 
   test("stream-stream interval join matches only within the time bound across batches") {
@@ -511,53 +512,56 @@ class StreamSemanticsSpec extends SparkFunSuite {
     // a session no earlier test has run a drain in, so a conf key any
     // drain leaves behind shows up as a difference
     val fresh = spark.newSession()
-    val scratch = java.nio.file.Files.createTempDirectory("graft_drain_scratch")
-    val progress =
-      new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-        progress.add(e.progress)
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    withTempDir("graft_drain_scratch") { scratch =>
+      val progress =
+        new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
+      val listener = new StreamingQueryListener {
+        override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+        override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+          progress.add(e.progress)
+        override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      }
+      fresh.conf.set("spark.graft.streaming.scratchDir", scratch)
+      fresh.streams.addListener(listener)
+      try {
+        for (q <- stateful ++ perBatch) {
+          val before = fresh.conf.getAll
+          graft.SparkEntry.queries(q)(fresh, sf).collect()
+          assert(fresh.conf.getAll == before, s"$q left session conf changed")
+          assert(fresh.streams.active.isEmpty, s"$q left a stream running")
+          val left = java.nio.file.Files.list(java.nio.file.Paths.get(scratch))
+            .iterator().asScala.map(_.getFileName.toString)
+            .filter(_.startsWith("graft_ckpt_")).toSeq
+          assert(left.isEmpty, s"$q left checkpoints $left")
+        }
+        org.apache.spark.graftplans.ListenerBus.drain(fresh)
+        val byQuery = progress.asScala.toSeq.groupBy(_.name)
+        val withState = byQuery.filter(_._2.exists(_.stateOperators.nonEmpty)).keySet
+        assert(withState == Set("graft_stream_hourly", "graft_stream_users",
+          "graft_stream_attrib", "graft_stream_tws", "graft_stream_nation",
+          "graft_stream_attrib_outer", "graft_stream_debounce",
+          "graft_stream_trending", "graft_stream_wau", "graft_stream_cdc"))
+        for ((name, ps) <- byQuery; p <- ps; op <- p.stateOperators) {
+          assert(op.numShufflePartitions == 4, s"$name state width")
+          assert(op.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb")),
+            s"$name state store is not RocksDB: ${op.customMetrics.keySet}")
+        }
+      } finally fresh.streams.removeListener(listener)
     }
-    fresh.conf.set("spark.graft.streaming.scratchDir", scratch.toString)
-    fresh.streams.addListener(listener)
-    try {
-      for (q <- stateful ++ perBatch) {
-        val before = fresh.conf.getAll
-        graft.SparkEntry.queries(q)(fresh, sf).collect()
-        assert(fresh.conf.getAll == before, s"$q left session conf changed")
-        assert(fresh.streams.active.isEmpty, s"$q left a stream running")
-        val left = java.nio.file.Files.list(scratch).iterator().asScala
-          .map(_.getFileName.toString).filter(_.startsWith("graft_ckpt_")).toSeq
-        assert(left.isEmpty, s"$q left checkpoints $left")
-      }
-      org.apache.spark.graftplans.ListenerBus.drain(fresh)
-      val byQuery = progress.asScala.toSeq.groupBy(_.name)
-      val withState = byQuery.filter(_._2.exists(_.stateOperators.nonEmpty)).keySet
-      assert(withState == Set("graft_stream_hourly", "graft_stream_users",
-        "graft_stream_attrib", "graft_stream_tws", "graft_stream_nation",
-        "graft_stream_attrib_outer", "graft_stream_debounce",
-        "graft_stream_trending", "graft_stream_wau", "graft_stream_cdc"))
-      for ((name, ps) <- byQuery; p <- ps; op <- p.stateOperators) {
-        assert(op.numShufflePartitions == 4, s"$name state width")
-        assert(op.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb")),
-          s"$name state store is not RocksDB: ${op.customMetrics.keySet}")
-      }
-    } finally fresh.streams.removeListener(listener)
   }
 
   test("overwrite drains over a zero-row source keep the populated run's schema") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_empty_events").toString
-    spark.read.parquet(s"$sf/events.parquet").limit(0)
-      .write.parquet(s"$dir/events.parquet")
-    def columns(df: org.apache.spark.sql.DataFrame) =
-      df.schema.map(f => f.name -> f.dataType)
-    for (q <- Seq("q163_stream_wau", "q175_stream_cdc")) {
-      val populated = columns(graft.SparkEntry.queries(q)(spark, sf))
-      val empty = graft.SparkEntry.queries(q)(spark, dir)
-      assert(empty.collect().isEmpty, q)
-      assert(columns(empty) == populated, q)
+    withTempDir("graft_empty_events") { dir =>
+      spark.read.parquet(s"$sf/events.parquet").limit(0)
+        .write.parquet(s"$dir/events.parquet")
+      def columns(df: org.apache.spark.sql.DataFrame) =
+        df.schema.map(f => f.name -> f.dataType)
+      for (q <- Seq("q163_stream_wau", "q175_stream_cdc")) {
+        val populated = columns(graft.SparkEntry.queries(q)(spark, sf))
+        val empty = graft.SparkEntry.queries(q)(spark, dir)
+        assert(empty.collect().isEmpty, q)
+        assert(columns(empty) == populated, q)
+      }
     }
   }
 
